@@ -58,7 +58,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     files = _docs_as_files(_t(spark, SF_DEFAULT, "documents"))
     cfg = DedupConfig(shingle_k=7, num_perm=64, bands=16, jaccard_threshold=0.8)
-    res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+    res = dedup_files(spark, files, cfg, quality=False)
     return res.clusters.select("sha", "cluster_id", "cnt")
 
 

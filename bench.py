@@ -65,7 +65,7 @@ def bench_pipeline_docs(spark):
     files = entrymod._docs_as_files(entrymod._t(spark, SF_DIR, "documents"))
     n = files.count()
     cfg = DedupConfig(shingle_k=7, jaccard_threshold=0.8)  # shipped defaults: 256-bin sketch, 128-bin banding
-    res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+    res = dedup_files(spark, files, cfg, quality=False)
     n_out = res.deduped.count()
     return {"files_in": n, "rows": n_out}
 
@@ -74,7 +74,7 @@ def bench_pipeline_corpus(spark):
     files = generate_files(spark, CORPUS_FILES, seed=42).localCheckpoint(eager=True)
     n = files.count()
     cfg = DedupConfig(shingle_k=7, jaccard_threshold=0.6)  # shipped defaults: 256-bin sketch, 128-bin banding
-    res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+    res = dedup_files(spark, files, cfg, quality=False)
     n_out = res.deduped.count()
     return {"files_in": n, "rows": n_out}
 

@@ -42,14 +42,14 @@ def main() -> None:
         files = entrymod._docs_as_files(entrymod._t(spark, SF_DIR, "documents"))
         n = files.count()
         cfg = DedupConfig(shingle_k=7, jaccard_threshold=0.8)
-        res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+        res = dedup_files(spark, files, cfg, quality=False)
         return {"files_in": n, "rows": res.deduped.count()}
 
     def corpus():
         files = generate_files(spark, CORPUS_FILES, seed=42).localCheckpoint(eager=True)
         n = files.count()
         cfg = DedupConfig(shingle_k=7, jaccard_threshold=0.6)
-        res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+        res = dedup_files(spark, files, cfg, quality=False)
         return {"files_in": n, "rows": res.deduped.count()}
 
     out: dict = {"queries": {}, "detail": {}}

@@ -31,51 +31,60 @@ import time
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from fastqdedup_spark.config import DedupConfig
 
 
 class MetricsCollector:
+    """(stage, metric, value) rows. Counts ride jobs that already run:
+    `observe` attaches them to a plan via Dataset.observe, and they are
+    read once that plan has been materialized."""
+
     def __init__(self) -> None:
         self.rows: list[tuple[str, str, float]] = []
-        self._lazy: list[tuple[str, str, Callable[[], float | None]]] = []
+        self._pending: list[tuple[Observation, dict[str, str]]] = []
 
     def add(self, stage: str, metric: str, value: float) -> None:
         self.rows.append((stage, metric, float(value)))
-
-    def add_lazy(
-        self, stage: str, metric: str, resolve: Callable[[], float | None]
-    ) -> None:
-        """Metric whose value rides a NOT-YET-RUN job (Dataset.observe):
-        `resolve` is called when the metrics are read and must return
-        None (skip, job never ran) or the value — it must NOT block.
-        This is how per-stage counters cost zero extra Spark jobs."""
-        self._lazy.append((stage, metric, resolve))
 
     def add_row(self, stage: str, row: dict) -> None:
         for k, v in row.items():
             if v is not None:
                 self.add(stage, k, v)
 
-    def _resolved(self) -> list[tuple[str, str, float]]:
-        out = list(self.rows)
-        for stage, metric, fn in self._lazy:
-            try:
-                v = fn()
-            except Exception:
-                v = None
-            if v is not None:
-                out.append((stage, metric, float(v)))
-        return out
+    def observe(self, df: DataFrame, metrics: dict[str, Column]) -> DataFrame:
+        """`df` with `metrics` ("stage.metric" -> aggregate Column)
+        computed by whatever action materializes it: zero extra Spark
+        jobs. The values land in this collector when metrics are next
+        read, so the returned DataFrame MUST be materialized first —
+        Observation.get, the only public way to read an observation,
+        blocks until the observed plan has run. StageCheckpointer.stage
+        keeps that contract for observations made while building a
+        stage: it reads them right after materializing the stage and
+        discards them when the stage fuses into its consumer. A resumed
+        stage never builds, so nothing is observed; its persisted
+        _metrics stand in."""
+        obs = Observation()
+        names = {f"m{i}": key for i, key in enumerate(metrics)}
+        cols = [c.alias(a) for a, c in zip(names, metrics.values())]
+        self._pending.append((obs, names))
+        return df.observe(obs, *cols)
 
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            self._resolved(), "stage string, metric string, value double"
-        )
+    def _settle(self, since: int = 0) -> None:
+        """Read the observations registered since mark `since` (their
+        plans have been materialized) into rows."""
+        for obs, names in self._pending[since:]:
+            got = obs.get
+            for alias, key in names.items():
+                if got[alias] is not None:
+                    stage, metric = key.split(".", 1)
+                    self.add(stage, metric, got[alias])
+        del self._pending[since:]
 
     def as_dict(self) -> dict:
-        return {f"{s}.{m}": v for s, m, v in self._resolved()}
+        self._settle()
+        return {f"{s}.{m}": v for s, m, v in self.rows}
 
 
 class StageCheckpointer:
@@ -183,12 +192,12 @@ class StageCheckpointer:
 
     def _persisted_stage_metrics(self, stage: str) -> list[tuple[str, float]]:
         """Metrics persisted by a PREVIOUS run's write_metrics. Observed
-        counters (Dataset.observe + add_lazy) never fire on a resumed
+        counters (MetricsCollector.observe) never fire on a resumed
         stage — the observed plan is replaced by a parquet scan — so
-        without this reload the CLI's fallback-cluster warning would be
-        silently absent on resumed runs. Loaded once per checkpointer;
-        absent/partial _metrics (run killed before write_metrics) just
-        yields nothing."""
+        without this reload the CLI's fallback-cluster warning and
+        output count would be silently absent on resumed runs. Loaded
+        once per checkpointer; absent/partial _metrics (run killed
+        before write_metrics) just yields nothing."""
         if self._persisted is None:
             self._persisted = {}
             mpath = os.path.join(self.base, "_metrics")
@@ -219,7 +228,11 @@ class StageCheckpointer:
         DAG). `fuse=True` marks a stage consumed by exactly ONE
         downstream stage: with no durable dir it stays lazy and fuses
         into its consumer (one fewer pipeline barrier); with a durable
-        dir it still persists for resume."""
+        dir it still persists for resume.
+
+        Observations made during build() (MetricsCollector.observe) are
+        read right after the stage materializes; a fused stage's are
+        discarded unread, since its plan has not run yet."""
         t0 = time.monotonic()
         if self.has(name):
             df = self.spark.read.parquet(self._path(name))
@@ -244,14 +257,18 @@ class StageCheckpointer:
             # vanished from _metrics after the first resume)
             self.metrics.add(name, "seconds", time.monotonic() - t0)
             return df
+        mark = len(self.metrics._pending)
         df = build()
         if self.base:
             df.write.mode("overwrite").parquet(self._path(name))
             df = self.spark.read.parquet(self._path(name))
-            if self.cfg.lineage:
-                self._write_lineage(name, df)
         elif not fuse:
             df = df.localCheckpoint(eager=True)
+        else:
+            del self.metrics._pending[mark:]
+        self.metrics._settle(mark)
+        if self.base and self.cfg.lineage:
+            self._write_lineage(name, df)
         self.metrics.add(name, "seconds", time.monotonic() - t0)
         return df
 
@@ -261,10 +278,10 @@ class StageCheckpointer:
             # the reloaded copy and any freshly recomputed one of the
             # same counter — persisting the raw list would compound
             # duplicates across resume chains
-            dedup: dict[tuple[str, str], float] = {}
-            for stage, metric, value in self.metrics._resolved():
-                dedup[(stage, metric)] = value
-            rows = [(s, m, v) for (s, m), v in dedup.items()]
+            rows = [
+                (*key.split(".", 1), value)
+                for key, value in self.metrics.as_dict().items()
+            ]
             self.spark.createDataFrame(
                 rows, "stage string, metric string, value double"
             ).coalesce(1).write.mode("overwrite").parquet(

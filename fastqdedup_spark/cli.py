@@ -265,17 +265,13 @@ def main(argv: list[str] | None = None) -> None:
                     "--no-update-index requires an existing index: an empty "
                     f"--index {args.index} has nothing to dedup against"
                 )
-            result, _ = build_index(
-                spark, files, cfg, args.index,
-                batch_id=bid, collect_metrics=True,
-            )
+            result, _ = build_index(spark, files, cfg, args.index, batch_id=bid)
             deduped, metrics = result.deduped, result.metrics
             mode = "index-build"
         else:
             inc = dedup_files_incremental(
                 spark, files, cfg, index,
                 update_index=args.update_index, batch_id=bid,
-                collect_metrics=True,
             )
             deduped, metrics = inc.deduped, inc.metrics
             mode = "index-increment"

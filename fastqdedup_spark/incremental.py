@@ -80,6 +80,7 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from fastqdedup_spark.checkpoint import MetricsCollector
 from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.minhash import add_signature_columns, normalize_content
 from fastqdedup_spark.functions.quality import content_quality_filter
@@ -388,13 +389,12 @@ def build_index(
     path: str,
     quality: bool = True,
     batch_id: str = "base",
-    collect_metrics: bool = False,
 ) -> tuple[DedupResult, DedupIndex]:
     """Full batch dedup of `files` (pipeline.dedup_files), then persist
     its retained state as increment `batch_id` of a fresh index. Also
     the periodic-recluster path: rebuild into a new `path` from the
     union of store + recent increments to restore global single-linkage."""
-    res = dedup_files(spark, files, cfg, quality=quality, collect_metrics=collect_metrics)
+    res = dedup_files(spark, files, cfg, quality=quality)
     index = DedupIndex(spark, path, cfg)
     # res.deduped holds exactly one file row per surviving content
     # (first-wins rep), so signing it is one Arrow pass over survivors
@@ -485,10 +485,14 @@ def dedup_files_incremental(
     quality: bool = True,
     update_index: bool = True,
     batch_id: str | None = None,
-    collect_metrics: bool = False,
 ) -> IncrementalResult:
     """Dedup `new_files` against `index` (tiers 1-3, module docstring),
-    appending the batch's retained state when update_index=True."""
+    appending the batch's retained state when update_index=True.
+
+    The tier counts in `metrics` (incremental.dropped_exact,
+    dropped_near, kept) are file rows, observed on tables that are
+    materialized anyway: the batch's (sha, cnt) table, the signed fresh
+    contents, the near-dup shas and the tier-3 survivors."""
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
     if quality:
@@ -500,6 +504,11 @@ def dedup_files_incremental(
     bid = _batch_id(new_files, cfg, batch_id)
 
     # -- tier 1: exact, streaming the old fingerprints ONCE ----------------
+    # The batch's (sha, cnt) table is materialized ONCE, with its
+    # distinct count (the broadcast gate) and row count observed: it
+    # feeds the tier-1 probe and the append's fingerprints, so neither
+    # rescans the input.
+    #
     # hits = old shas that reappear in this batch: bounded by the
     # batch's distinct count, so it pins (localCheckpoint) into a small
     # table that both the semi and anti join below can broadcast —
@@ -510,13 +519,20 @@ def dedup_files_incremental(
     # not force multi-GB sha tables onto every executor (the hint
     # overrides Spark's own size guard), so oversized increments let
     # AQE pick the join strategy instead.
-    new_shas = new_files.select("sha").distinct()
-    n_batch = new_shas.count()
+    m = MetricsCollector()
+    batch_shas = m.observe(
+        new_files.groupBy("sha").agg(F.count(F.lit(1)).alias("cnt")),
+        {
+            "incremental.input_distinct": F.count(F.lit(1)),
+            "incremental.input_files": F.coalesce(F.sum("cnt"), F.lit(0)),
+        },
+    ).localCheckpoint(eager=True)
+    n_batch = m.as_dict()["incremental.input_distinct"]
     broadcast_new = n_batch <= cfg.incremental_broadcast_max_rows
     bcast = F.broadcast if broadcast_new else (lambda df: df)
     hits = (
         index.fingerprints(exclude=bid)
-        .join(bcast(new_shas), "sha", "left_semi")
+        .join(bcast(batch_shas.select("sha")), "sha", "left_semi")
         .localCheckpoint(eager=True)
     )
     dropped_exact = new_files.join(bcast(hits), "sha", "left_semi")
@@ -528,8 +544,14 @@ def dedup_files_incremental(
     distinct_new = fresh_files.groupBy("sha").agg(
         F.count(F.lit(1)).alias("cnt"), F.first("content").alias("content")
     )
-    signed_new = _sign_distinct(distinct_new, cfg, n_batch).localCheckpoint(eager=True)
-    n_new = signed_new.count()  # post-checkpoint: a metadata-cheap job
+    signed_new = m.observe(
+        _sign_distinct(distinct_new, cfg, n_batch),
+        {
+            "incremental.new_distinct": F.count(F.lit(1)),
+            "incremental.fresh_files": F.coalesce(F.sum("cnt"), F.lit(0)),
+        },
+    ).localCheckpoint(eager=True)
+    n_new = m.as_dict()["incremental.new_distinct"]
     old_index = index.signed_survivors(exclude=bid)
     cand = cross_candidate_pairs(old_index, signed_new, cfg, broadcast_new)
     # NOT bcast()-gated: this table holds OLD survivor nids hit by the
@@ -556,30 +578,27 @@ def dedup_files_incremental(
         cand, contents, cfg, id_col="nid", skip_est=est_ran,
         approx_rows=n_new, metadata_broadcast=False,
     )
-    near_shas = (
+    near_shas = m.observe(
         signed_new.join(
             verified.select(F.col("id_b").alias("nid")).distinct(), "nid", "left_semi"
-        )
-        .select("sha")
-        .localCheckpoint(eager=True)
-    )
+        ).select("sha", "cnt"),
+        {"incremental.dropped_near": F.coalesce(F.sum("cnt"), F.lit(0))},
+    ).localCheckpoint(eager=True)
     dropped_near = fresh_files.join(bcast(near_shas), "sha", "left_semi")
 
     # -- tier 3: within-batch recluster of the remainder --------------------
     remainder = fresh_files.join(bcast(near_shas), "sha", "left_anti")
-    batch = dedup_files(
-        spark, remainder, cfg, quality=False, collect_metrics=collect_metrics
-    )
+    batch = dedup_files(spark, remainder, cfg, quality=False)
 
-    metrics = {
-        "incremental.new_distinct": float(n_new),
+    metrics = m.as_dict()
+    metrics.update({
+        "incremental.dropped_exact": (
+            metrics["incremental.input_files"] - metrics["incremental.fresh_files"]
+        ),
+        "incremental.kept": batch.metrics["output.files"],
         "incremental.broadcast_new": float(broadcast_new),
         **{f"batch.{k}": v for k, v in batch.metrics.items()},
-    }
-    if collect_metrics:
-        metrics["incremental.dropped_exact"] = float(dropped_exact.count())
-        metrics["incremental.dropped_near"] = float(dropped_near.count())
-        metrics["incremental.kept"] = float(batch.deduped.count())
+    })
 
     if update_index:
         # batch survivors were already signed in signed_new — reuse it
@@ -587,9 +606,6 @@ def dedup_files_incremental(
         surv_signed = signed_new.join(
             batch.survivors.select(F.col("key").alias("sha")), "sha", "left_semi"
         )
-        index.append(
-            bid, fingerprints=new_files.select("sha").distinct(),
-            signed_survivors=surv_signed,
-        )
+        index.append(bid, fingerprints=batch_shas, signed_survivors=surv_signed)
 
     return IncrementalResult(batch.deduped, dropped_exact, dropped_near, batch, metrics)

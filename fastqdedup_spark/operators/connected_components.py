@@ -89,16 +89,16 @@ def connected_components(
     # the same materialization job — measured at 192k files, the python
     # verify ran back-to-back as two ~1000 core-s stages. explode keeps
     # the symmetrization single-scan regardless of how lazy the input is.
-    from pyspark.sql import Observation
+    from fastqdedup_spark.checkpoint import MetricsCollector
 
-    # the edge count (tier decision below) rides the symmetrization's
-    # own materialization via Dataset.observe — localCheckpoint is a
-    # withAction, so CollectMetrics fires during the checkpoint job and
-    # the separate count() job disappears (same zero-job pattern as the
-    # dissect fallback counter and the pipeline's distinct count)
-    n_obs = Observation()
+    # the edge count (tier decision below, and the pipeline's edges.n)
+    # rides the symmetrization's own materialization via Dataset.observe
+    # — localCheckpoint is a withAction, so CollectMetrics fires during
+    # the checkpoint job and no separate count() job runs
+    metrics = checkpointer.metrics if checkpointer is not None else MetricsCollector()
     sym = (
-        edges.select(
+        metrics.observe(edges, {"edges.n": F.count(F.lit(1))})
+        .select(
             F.explode(
                 F.array(
                     F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
@@ -107,11 +107,10 @@ def connected_components(
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .observe(n_obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    n_edges = n_obs.get["n"]
+    n_edges = 2 * int(metrics.as_dict()["edges.n"])
     # small graphs: the iterative loop's per-round driver latency (3-5
     # Spark jobs x O(100ms) x rounds) dwarfs the actual work — run exact
     # union-find on the driver instead. Same labels, zero rounds. The

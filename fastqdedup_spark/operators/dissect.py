@@ -62,8 +62,9 @@ def dissect_clusters(
     packed row weight (code mode carries full normalized content per
     member). Clusters above either bound fall back to `canonical` — a
     documented semantic deviation, counted via `metrics` (a
-    MetricsCollector) when provided, never silent. Both knobs are
-    plumbed from DedupConfig / the CLI.
+    MetricsCollector, read after the result is materialized) when
+    provided, never silent. Both knobs are plumbed from DedupConfig /
+    the CLI.
     """
     if method == "highest_count":
         # survivor = max (cnt, key) tuple per cluster; ties -> greatest key
@@ -129,28 +130,15 @@ def dissect_clusters(
         "cluster_id", F.col("_minkey").alias("key")
     )
     if metrics is not None:
-        # the fallback counter rides the final materialization via
-        # Dataset.observe on the fallback branch itself (its row count
-        # IS the cluster count) — counting it used to cost an extra
-        # eager .count() action per dissect call (VERDICT r3 #3).
-        # add_lazy resolves it non-blockingly when metrics are read.
-        # (It cannot ride `sizes` anymore: sizes now feeds three plan
-        # branches, and a CollectMetrics node duplicated across
-        # branches trips the analyzer's duplicate-observation check.)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        big_out = big_out.observe(
-            obs, F.count(F.lit(1)).alias("fallback_clusters")
+        # the fallback counter rides the final materialization via an
+        # observation on the fallback branch itself (its row count IS
+        # the cluster count), so it costs no Spark job. It cannot ride
+        # `sizes`: sizes feeds three plan branches, and a CollectMetrics
+        # node duplicated across branches trips the analyzer's
+        # duplicate-observation check.
+        big_out = metrics.observe(
+            big_out, {"dissect.fallback_clusters": F.count(F.lit(1))}
         )
-
-        def _fallback_count():
-            jrow = obs._jo.getRowOrEmpty()
-            if jrow is None or (hasattr(jrow, "isEmpty") and jrow.isEmpty()):
-                return None
-            return float(obs.get["fallback_clusters"] or 0)
-
-        metrics.add_lazy("dissect", "fallback_clusters", _fallback_count)
         metrics.add("dissect", "max_cluster_size", max_cluster_size)
     small = clusters.join(
         sizes.filter((F.col("_csize") > 1) & ~oversized).select("cluster_id"),

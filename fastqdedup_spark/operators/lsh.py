@@ -67,13 +67,13 @@ def _pairs_from_bands(
         if cap is not None
         else F.lit(0)
     )
-    # KNOWN COST, collect_metrics mode only: collecting this df
-    # re-derives bands+sizes (one explode + shuffle) for 3 scalars.
-    # The Dataset.observe ride (dissect.py pattern) was considered and
-    # deliberately NOT wired: it would insert a CollectMetrics node
-    # into the pair-stage plan, whose exchange-reuse shape the scaling
-    # work tuned — a plan risk on the hot path to save a job that only
-    # metrics-collecting runs pay.
+    # KNOWN COST for whoever collects this df: it re-derives
+    # bands+sizes (one explode + shuffle) for 3 scalars. dedup_keys
+    # collects it (the FASTQ path's bands.* metrics); dedup_files does
+    # not, so the code-domain CLI reports no bands.*. The
+    # MetricsCollector.observe ride was considered and deliberately NOT
+    # wired: it would insert a CollectMetrics node into the pair-stage
+    # plan, whose exchange-reuse shape the scaling work tuned.
     metrics = sizes.agg(
         F.count(F.lit(1)).alias("n_bands"),
         F.max("band_size").alias("max_band_size"),

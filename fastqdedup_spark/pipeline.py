@@ -119,13 +119,19 @@ def dedup_files(
     files: DataFrame,
     cfg: DedupConfig,
     quality: bool = True,
-    collect_metrics: bool = True,
 ) -> DedupResult:
     """Code-domain near-dup clustering per BASELINE.json north_rule.
 
     Input: files(id?, repo, path, commit, lang, content). Output keeps
     the per-row sha256 invariant: `deduped` rows carry the `sha` of
     their untouched `content` (equality testable end-to-end).
+
+    Every metric rides a stage materialization that runs anyway
+    (MetricsCollector.observe): input.files and distinct.contents on
+    distinct_contents, edges.n on the connected-components input,
+    output.files and dissect.* on survivors. A resumed stage reports
+    the previous run's persisted values instead (none if the previous
+    run died before persisting them).
     """
     from fastqdedup_spark.sources import FILES_COLUMNS
 
@@ -161,35 +167,31 @@ def dedup_files(
         if c not in ("repo", "path", "commit", "content", "sha")
     ]
     # The distinct-contents count sizes two static plan choices below
-    # (est_broadcast gate, Arrow-stage task cap). It rides the stage's
-    # own materialization via Dataset.observe (CollectMetrics fires on
-    # BOTH materialization paths: localCheckpoint is a withAction and
-    # so is the durable parquet write) — zero extra jobs on a fresh
-    # run. A resumed checkpoint knows it from the previous run's
-    # persisted metrics; the count() fallback only remains for a
-    # no-metrics resume, where it is a cheap scan of the materialized
-    # stage (no recompute, no plan barrier).
-    from pyspark.sql import Observation
-
-    n_obs = Observation()
+    # (est_broadcast gate, Arrow-stage task cap). It and the input row
+    # count ride the stage's own materialization via Dataset.observe
+    # (CollectMetrics fires on BOTH materialization paths:
+    # localCheckpoint is a withAction and so is the durable parquet
+    # write) — zero extra jobs on a fresh run. A resumed stage reloads
+    # both from the previous run's persisted metrics; only a resume
+    # whose _metrics are missing (the previous run died before
+    # write_metrics) counts the materialized stage, a cheap parquet
+    # scan with no recompute.
     distinct = ck.stage(
         "distinct_contents",
-        lambda: files.groupBy("sha").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.first("content").alias("content"),  # identical per sha
-            F.min(F.struct("repo", "path", "commit", *rep_rest)).alias("rep"),
-        ).observe(n_obs, F.count(F.lit(1)).alias("n")),
-        # distinct.contents (persisted by a metrics-mode run) rides this
-        # stage's resume: it feeds the est_broadcast auto-gate below
-        reload_metrics=("distinct",),
+        lambda: ck.metrics.observe(
+            files.groupBy("sha").agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.first("content").alias("content"),  # identical per sha
+                F.min(F.struct("repo", "path", "commit", *rep_rest)).alias("rep"),
+            ),
+            {
+                "distinct.contents": F.count(F.lit(1)),
+                "input.files": F.coalesce(F.sum("cnt"), F.lit(0)),
+            },
+        ),
+        reload_metrics=("distinct", "input"),
     )
     n_distinct = ck.metrics.as_dict().get("distinct.contents")
-    if n_distinct is None:
-        # non-blocking probe (the add_lazy pattern): empty iff the
-        # stage was resumed, so build()/the observation never ran
-        jrow = n_obs._jo.getRowOrEmpty()
-        if jrow is not None and not (hasattr(jrow, "isEmpty") and jrow.isEmpty()):
-            n_distinct = n_obs.get["n"]
     if n_distinct is None:
         n_distinct = distinct.count()
     # AUTO est_broadcast resolution (static per run): past
@@ -236,7 +238,7 @@ def dedup_files(
     # where 64 bits had P ~ 0.03 — and a collision here is NOT benign
     # (the nid->sha fan-out join would attach verified edges to both
     # shas and falsely merge unrelated clusters).
-    pairs_lazy, band_metrics = minhash_candidate_pairs(
+    pairs_lazy, _ = minhash_candidate_pairs(
         signed, cfg_run, id_col="nid", keep_est=cfg.est_autoaccept
     )
     # minhash_candidate_pairs runs the est prefilter only when a packed
@@ -247,10 +249,9 @@ def dedup_files(
     est_ran_upstream = "sig_packed" in signed.columns and cfg.est_margin > 0
     # pairs feeds only the verify stage and edges feed only the CC
     # sym-checkpoint: both fuse into their consumer (one fewer pipeline
-    # barrier each) — unless metrics mode counts them or a durable
-    # checkpoint dir wants them persisted for resume
-    fuse = not collect_metrics
-    pairs = ck.stage("pairs", lambda: pairs_lazy, fuse=fuse)
+    # barrier each) unless a durable checkpoint dir persists them for
+    # resume
+    pairs = ck.stage("pairs", lambda: pairs_lazy, fuse=True)
 
     def _build_edges() -> DataFrame:
         cand = pairs
@@ -261,7 +262,7 @@ def dedup_files(
             # bound symmetric to the prefilter's false-drop bound, see
             # DedupConfig.est_autoaccept); only the borderline band
             # pays for the exact Arrow-side Jaccard.
-            if fuse:
+            if not ck.base:
                 # the split filters cand TWICE (certain + borderline);
                 # a fused (lazy) pair plan would re-run its reduce side
                 # for each branch — same class of double-scan the CC
@@ -286,7 +287,7 @@ def dedup_files(
         ).select("id_a", "id_b")
         return verified if certain is None else certain.unionByName(verified)
 
-    edges_nid = ck.stage("edges", _build_edges, fuse=fuse)
+    edges_nid = ck.stage("edges", _build_edges, fuse=True)
     # connected components run in compact nid space (16-byte binary vs
     # 64-char sha strings — 4x less through every CC round and through
     # the driver fast path). nid is the sha's hex prefix, so byte order
@@ -343,15 +344,18 @@ def dedup_files(
         }
     surv_kwargs["max_cluster_size"] = cfg.max_cluster_size
     surv_kwargs["max_cluster_bytes"] = cfg.max_cluster_bytes
-    # always wired: the fallback counter rides the sizes job via
-    # Dataset.observe (zero extra actions), so default runs see the
-    # canonical-fallback signal too — collect_metrics only gates the
-    # count()-based totals below
+    # the fallback counter rides the survivors job via Dataset.observe
+    # (zero extra actions). survivors holds one row per surviving sha,
+    # and `deduped` below is exactly one file per survivor, so its row
+    # count is output.files
     surv_kwargs["metrics"] = ck.metrics
     survivors = ck.stage(
         "survivors",
-        lambda: dissect_clusters(surv_input, cfg.dissection, **surv_kwargs),
-        reload_metrics=("dissect",),
+        lambda: ck.metrics.observe(
+            dissect_clusters(surv_input, cfg.dissection, **surv_kwargs),
+            {"output.files": F.count(F.lit(1))},
+        ),
+        reload_metrics=("dissect", "output"),
     )
     # O13 survivor semi-join + first-wins: one surviving FILE per
     # surviving content, deterministic by (repo, path, commit). The
@@ -369,12 +373,6 @@ def dedup_files(
         ],
         "sha",
     )
-    if collect_metrics:
-        ck.metrics.add_row("bands", band_metrics.collect()[0].asDict())
-        ck.metrics.add("cc", "rounds", rounds)
-        ck.metrics.add("input", "files", files.count())
-        ck.metrics.add("distinct", "contents", n_distinct)
-        ck.metrics.add("edges", "n", edges_nid.count())
-        ck.metrics.add("output", "files", deduped.count())
+    ck.metrics.add("cc", "rounds", rounds)
     ck.write_metrics()
     return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict(), rounds)

@@ -28,7 +28,7 @@ def run_arm(spark, n_files, cfg):
     files.count()
     l0 = os.getloadavg()[0]
     t0 = time.monotonic()
-    res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+    res = dedup_files(spark, files, cfg, quality=False)
     n_out = res.deduped.count()
     wall = time.monotonic() - t0
     return {"wall": round(wall, 2), "rows": n_out, "load": round(l0, 1),

@@ -34,7 +34,7 @@ def run_q14(spark):
 def run_docs(spark):
     files = entrymod._docs_as_files(entrymod._t(spark, SF, "documents"))
     cfg = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.8)
-    return dedup_files(spark, files, cfg, quality=False, collect_metrics=False).deduped.count()
+    return dedup_files(spark, files, cfg, quality=False).deduped.count()
 
 
 def main():

@@ -44,7 +44,7 @@ def main():
     # the original calibration predated the chunked kernels, which cut
     # python-side work ~5x and shift the oversubscription balance.
     warm = DedupConfig(shingle_k=7, jaccard_threshold=0.6)
-    dedup_files(spark, files, warm, quality=False, collect_metrics=False).deduped.count()
+    dedup_files(spark, files, warm, quality=False).deduped.count()
 
     best = {}
     order = list(CAPS)
@@ -56,7 +56,7 @@ def main():
             )
             l0 = os.getloadavg()[0]
             t0 = time.monotonic()
-            res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+            res = dedup_files(spark, files, cfg, quality=False)
             n_out = res.deduped.count()
             wall = time.monotonic() - t0
             rec = {"cap": cap, "rep": rep, "wall": round(wall, 2), "rows": n_out,

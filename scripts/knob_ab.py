@@ -42,8 +42,7 @@ def main():
         "noorient": DedupConfig(**base, copartition_pairs=True, verify_orient=False),
         "legacy": DedupConfig(**base, copartition_pairs=False, verify_orient=False),
     }
-    dedup_files(spark, files, ARMS["copart"], quality=False,
-                collect_metrics=False).deduped.count()  # warm-up
+    dedup_files(spark, files, ARMS["copart"], quality=False).deduped.count()  # warm-up
 
     best = {}
     rows0 = None
@@ -52,8 +51,7 @@ def main():
         for arm in order:
             l0 = os.getloadavg()[0]
             t0 = time.monotonic()
-            res = dedup_files(spark, files, ARMS[arm], quality=False,
-                              collect_metrics=False)
+            res = dedup_files(spark, files, ARMS[arm], quality=False)
             n_out = res.deduped.count()
             wall = time.monotonic() - t0
             if rows0 is None:  # `or` skipped the check when arm 1 returned 0

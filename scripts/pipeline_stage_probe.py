@@ -67,14 +67,14 @@ def main():
         python_stage_partitions=max(2, cores // 2),
     )
     # warm-up: janino + HotSpot C2 + python worker spin-up
-    dedup_files(spark, files, cfg, quality=False, collect_metrics=False).deduped.count()
+    dedup_files(spark, files, cfg, quality=False).deduped.count()
 
     app_id = rest("/applications")[0]["id"]
     before = {s["stageId"] for s in rest(f"/applications/{app_id}/stages")}
 
     l0 = os.getloadavg()[0]
     t0 = time.monotonic()
-    res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+    res = dedup_files(spark, files, cfg, quality=False)
     n_out = res.deduped.count()
     wall = time.monotonic() - t0
     print(json.dumps({"cores": cores, "n_files": n_files,

@@ -50,7 +50,7 @@ def child(cores: int, n_files: int, cap: int | None = None) -> None:
     # HotSpot JIT, and python-worker spin-up (~2.5x the steady-state
     # wall). A 100 TB job amortizes that once across hours, so the
     # steady-state trials below are the throughput that scales.
-    dedup_files(spark, files, cfg, quality=False, collect_metrics=False).deduped.count()
+    dedup_files(spark, files, cfg, quality=False).deduped.count()
     best = None
     best_load = None
     # NOISY NEIGHBORS (BASELINE.md): identical configs vary up to 2x
@@ -62,7 +62,7 @@ def child(cores: int, n_files: int, cap: int | None = None) -> None:
         # self-load (a busy 32c job alone drives load1m toward 32)
         l0 = os.getloadavg()[0]
         t0 = time.monotonic()
-        res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+        res = dedup_files(spark, files, cfg, quality=False)
         n_out = res.deduped.count()
         dt = time.monotonic() - t0
         if best is None or dt < best:

@@ -167,7 +167,7 @@ def child_stages(cores: int, n_files: int) -> None:
     best = None
     for _ in range(2):
         t0 = time.monotonic()
-        res = dedup_files(spark, files, cfg, quality=False, collect_metrics=True)
+        res = dedup_files(spark, files, cfg, quality=False)
         res.deduped.count()
         dt = time.monotonic() - t0
         st = {

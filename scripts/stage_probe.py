@@ -1,9 +1,9 @@
 """Per-stage executor-metrics probe for the scaling investigation.
 
-Runs the FUSED pipeline (collect_metrics=False — the scaling_bench gate
-path) once at the given core count, then pulls the Spark UI REST API
-for every completed stage: executorRunTime (task wall x tasks),
-executorCpuTime, GC, python-eval time, shuffle bytes, max task time.
+Runs the pipeline (the scaling_bench gate path) once at the given core
+count, then pulls the Spark UI REST API for every completed stage:
+executorRunTime (task wall x tasks), executorCpuTime, GC, python-eval
+time, shuffle bytes, max task time.
 Distinguishes, per stage:
 - compute-bound   runTime ~ wall x cores, cpu ~ runTime
 - straggler/skew  maxTask ~ stage wall
@@ -80,7 +80,7 @@ def main():
 
     l0 = os.getloadavg()[0]
     t0 = time.monotonic()
-    res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+    res = dedup_files(spark, files, cfg, quality=False)
     n_out = res.deduped.count()
     wall = time.monotonic() - t0
     print(json.dumps({"cores": cores, "n_files": n_files,

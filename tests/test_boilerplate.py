@@ -37,8 +37,8 @@ def test_pipeline_with_stripping_cuts_skew_keeps_recall(spark):
         shingle_k=7, num_perm=64, bands=16, jaccard_threshold=0.6,
         strip_boilerplate_frac=0.2,
     )
-    r1 = dedup_files(spark, files, base_cfg, quality=False, collect_metrics=False)
-    r2 = dedup_files(spark, files, strip_cfg, quality=False, collect_metrics=False)
+    r1 = dedup_files(spark, files, base_cfg, quality=False)
+    r2 = dedup_files(spark, files, strip_cfg, quality=False)
     # exact copies still collapse and near-dup families still cluster
     for r in (r1, r2):
         fam = r.deduped.filter(F.col("kind").isin("base", "exact")).groupBy(

@@ -45,7 +45,7 @@ def test_pipeline_code_mode_dissection(spark, method):
     cfg = DedupConfig(
         shingle_k=7, num_perm=64, bands=16, jaccard_threshold=0.6, dissection=method
     )
-    res = dedup_files(spark, files, cfg, quality=False, collect_metrics=False)
+    res = dedup_files(spark, files, cfg, quality=False)
     # every cluster yields at least one survivor; survivors' shas exist
     n_clusters = res.clusters.select("cluster_id").distinct().count()
     surv = res.survivors.collect()

@@ -88,6 +88,28 @@ def _incremental_oracle(
     return t1, t2, kept
 
 
+def _tier_rows(metrics: dict) -> tuple:
+    return tuple(
+        metrics[k] for k in (
+            "incremental.dropped_exact", "incremental.dropped_near",
+            "incremental.kept", "batch.input.files",
+        )
+    )
+
+
+def _oracle_tier_rows(new_contents: list[str], t1: set, t2: set, kept: set) -> tuple:
+    """(dropped_exact, dropped_near, kept, tier-3 input) as file rows:
+    tiers 1-2 drop every copy of a sha, tier 3 keeps one file per
+    surviving sha and sees every copy of the rest."""
+    shas = [_sha(c) for c in new_contents]
+    return (
+        sum(s in t1 for s in shas),
+        sum(s in t2 for s in shas),
+        len(kept),
+        sum(s not in t1 and s not in t2 for s in shas),
+    )
+
+
 @pytest.fixture(scope="module")
 def corpus(spark):
     return generate_files(spark, N_FILES, seed=11).localCheckpoint(eager=True)
@@ -127,6 +149,8 @@ def test_incremental_matches_python_oracle(spark, split, built):
     assert got_kept == kept
     # every tier produced work (otherwise the oracle equality is vacuous)
     assert t1 and t2 and kept
+    # the observed tier counts are the oracle tiers' FILE rows
+    assert _tier_rows(inc.metrics) == _oracle_tier_rows(new_contents, t1, t2, kept)
 
 
 def test_batch_oracle_matches_build(split, built):
@@ -184,6 +208,31 @@ def test_chaining_across_increments(spark, split, tmp_path):
     assert two.dropped_exact.join(
         near2.select(F.sha2("content", 256).alias("sha")), "sha", "left_semi"
     ).count() == 0
+
+
+# Spark jobs of one increment below (tier probes, tier-3 pipeline,
+# append), measured once every tier count rode an observation instead
+# of its own count() job. A new action on this path fails the guard.
+INCREMENT_JOB_FLOOR = 46
+
+
+def test_increment_job_floor(spark, split, tmp_path):
+    """Counts ride materializations that run anyway: no count() or
+    collect() comes back on the increment path unnoticed."""
+    old, new = split
+    _, idx = build_index(spark, old, CFG, str(tmp_path / "ix"), quality=False)
+    sc = spark.sparkContext
+    group = "test-increment-job-floor"
+    sc.setJobGroup(group, "one increment")
+    try:
+        inc = dedup_files_incremental(
+            spark, new, CFG, idx, quality=False, batch_id="b1"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert inc.metrics["incremental.kept"] > 0
+    assert n_jobs <= INCREMENT_JOB_FLOOR
 
 
 def test_model_mismatch_refused(spark, split, tmp_path):
@@ -333,14 +382,22 @@ def test_derived_batch_id_is_content_stable(spark, split):
     assert derived_batch_id(cfg2) == derived_batch_id(cfg2, a)
 
 
-def test_cli_index_build_then_increment(spark, split, tmp_path):
+def test_cli_index_build_then_increment(spark, split, tmp_path, monkeypatch):
     """End-to-end CLI surface: --index on an empty dir seeds it with the
     batch run's retained state; a second invocation with a new input
     dedups AGAINST it. Outputs pinned to the pure-python three-tier
     oracle over the same (quality-filtered) contents the CLI sees."""
+    from fastqdedup_spark import incremental
     from fastqdedup_spark.cli import main
     from fastqdedup_spark.functions.quality import content_quality_filter
 
+    increments = []
+
+    def observed(*args, **kwargs):
+        increments.append(dedup_files_incremental(*args, **kwargs))
+        return increments[-1]
+
+    monkeypatch.setattr(incremental, "dedup_files_incremental", observed)
     old, new = split
     old_p, new_p = str(tmp_path / "old"), str(tmp_path / "new")
     old.write.parquet(old_p)
@@ -363,7 +420,7 @@ def test_cli_index_build_then_increment(spark, split, tmp_path):
     ]
     assert {r["sha"] for r in spark.read.parquet(out1).select("sha").collect()} == \
         _batch_oracle(old_contents, CFG.shingle_k, CFG.jaccard_threshold)
-    _, _, kept = _incremental_oracle(
+    t1, t2, kept = _incremental_oracle(
         old_contents, new_contents, CFG.shingle_k, CFG.jaccard_threshold
     )
     assert {r["sha"] for r in spark.read.parquet(out2).select("sha").collect()} == kept
@@ -372,6 +429,10 @@ def test_cli_index_build_then_increment(spark, split, tmp_path):
     f1 = idx.fingerprints().count()
     main(["--input", new_p, "--output", out2, *common])
     assert idx.fingerprints().count() == f1
+    # the seed build is not an increment; the run and its rerun (same
+    # batch id, so the same as-of index view) report the oracle's rows
+    want = _oracle_tier_rows(new_contents, t1, t2, kept)
+    assert [_tier_rows(inc.metrics) for inc in increments] == [want, want]
 
 
 def test_retry_after_interleaved_batch_reproduces_first_run(spark, split, tmp_path):
