@@ -22,8 +22,10 @@ against a pure-Python oracle):
   tier 2 (near):   a remaining file whose normalized-content k-gram
                    Jaccard >= threshold against ANY index survivor is
                    dropped — `dropped_near`.
-  tier 3 (batch):  the remainder runs the full batch pipeline
-                   (pipeline.dedup_files) among themselves.
+  tier 3 (batch):  the remainder runs the batch pipeline's clustering
+                   tail (pipeline.cluster_signed) among themselves —
+                   the result of pipeline.dedup_files over the
+                   remainder, without re-aggregating or re-signing it.
   kept = tier-3 survivors; with update_index=True their signed state
   and the batch's fingerprints append to the index idempotently.
 
@@ -38,12 +40,20 @@ incremental mode at all (each run rebuilds its trie from scratch,
 graft-only capability mandated by the 100 TB regime, not a port.
 
 100 TB plan shape (the part that must survive 1000 executors):
+- the NEW side is aggregated by sha once and signed once: one
+  materialized batch table (sha, cnt, content, first-wins rep) feeds
+  tier 1, the signer (its fresh rows only), tier 3's output rows and
+  the append's fingerprints; the signed fresh contents feed the near
+  probe, tier 3's clustering and the append's survivor state.
 - the OLD side is never broadcast, never collected, and only ever
   SCANNED: the exact tier streams the fingerprint table once against a
-  broadcast of the new batch's shas; the near tier streams the index
-  twice (band explode, then candidate-content fetch) against
-  broadcasts of new-side tables. Zero shuffles of retained data when
-  the increment is broadcast-sized (the common case by construction).
+  broadcast of the new batch's shas; the near tier streams the index's
+  band columns once (the candidate pairs are materialized) against a
+  broadcast of the new side's bands, then its contents once, for the
+  candidates' old side only (every cross pair is (old, new), so the
+  new side's contents come from the signed batch). Zero shuffles of
+  retained data when the increment is broadcast-sized (the common
+  case by construction).
 - when an increment is too big to broadcast
   (cfg.incremental_broadcast_max_rows), the band join degrades to a
   shuffled equi-join on band_hash with AQE skew splitting — and past
@@ -78,16 +88,33 @@ import os
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from fastqdedup_spark.checkpoint import MetricsCollector
+from fastqdedup_spark.checkpoint import MetricsCollector, StageCheckpointer
 from fastqdedup_spark.config import DedupConfig
-from fastqdedup_spark.functions.minhash import add_signature_columns, normalize_content
 from fastqdedup_spark.functions.quality import content_quality_filter
 from fastqdedup_spark.operators.exact_dedup import with_sha256
-from fastqdedup_spark.pipeline import DedupResult, dedup_files
+from fastqdedup_spark.pipeline import (
+    DedupResult,
+    cluster_signed,
+    dedup_files,
+    distinct_contents,
+    sign_contents,
+)
 
-_INDEX_COLS = ["sha", "nid", "content_norm", "n_shingles", "band_hash", "sig_packed"]
+# The index tables' on-disk schemas: append() writes exactly these
+# columns and types, and the readers hand the same schemas to
+# spark.read, which then runs no schema-inference job.
+_INDEX_SCHEMA = T.StructType([
+    T.StructField("sha", T.StringType()),
+    T.StructField("nid", T.BinaryType()),
+    T.StructField("content_norm", T.StringType()),
+    T.StructField("n_shingles", T.IntegerType()),
+    T.StructField("band_hash", T.ArrayType(T.LongType())),
+    T.StructField("sig_packed", T.ArrayType(T.LongType())),
+])
+_FINGERPRINT_SCHEMA = T.StructType([T.StructField("sha", T.StringType())])
 
 
 def model_hash(cfg: DedupConfig) -> str:
@@ -298,15 +325,15 @@ class DedupIndex:
         dirs = self._batches("fingerprints", exclude)
         if not dirs:
             raise ValueError(f"empty index at {self.path}: run build_index first")
-        return self.spark.read.parquet(*dirs)
+        return self.spark.read.schema(_FINGERPRINT_SCHEMA).parquet(*dirs)
 
     def signed_survivors(self, exclude: str | None = None) -> DataFrame:
-        """Per-survivor MinHash state (_INDEX_COLS); `exclude` as in
+        """Per-survivor MinHash state (_INDEX_SCHEMA); `exclude` as in
         fingerprints()."""
         dirs = self._batches("index", exclude)
         if not dirs:
             raise ValueError(f"empty index at {self.path}: run build_index first")
-        return self.spark.read.parquet(*dirs)
+        return self.spark.read.schema(_INDEX_SCHEMA).parquet(*dirs)
 
     @property
     def is_empty(self) -> bool:
@@ -350,12 +377,13 @@ class DedupIndex:
         # batch visibility in _batches) flips true only when the
         # SECOND write's _SUCCESS lands, so readers never observe a
         # half-appended batch
-        signed_survivors.select(*_INDEX_COLS).write.mode("overwrite").parquet(
-            os.path.join(self.path, "index", batch_id)
-        )
-        fingerprints.select("sha").write.mode("overwrite").parquet(
-            os.path.join(self.path, "fingerprints", batch_id)
-        )
+        for sub, df, schema in (
+            ("index", signed_survivors, _INDEX_SCHEMA),
+            ("fingerprints", fingerprints, _FINGERPRINT_SCHEMA),
+        ):
+            df.select(
+                *[F.col(f.name).cast(f.dataType) for f in schema]
+            ).write.mode("overwrite").parquet(os.path.join(self.path, sub, batch_id))
         # durable append instant INSIDE the batch: the ledger-rebuild
         # fallback orders unledgered batches by this, not by fs mtime
         # (which copy/restore tooling rewrites — ADVICE r5)
@@ -367,19 +395,6 @@ class DedupIndex:
             f.write(repr(_time.time()))
         self._ensure_ledgered(batch_id)
         return True
-
-
-def _sign_distinct(
-    distinct: DataFrame, cfg: DedupConfig, approx_rows: float | None
-) -> DataFrame:
-    """distinct contents (sha, cnt, content) -> signed (_INDEX_COLS + cnt)."""
-    return add_signature_columns(
-        distinct.withColumn("content_norm", normalize_content("content")).select(
-            "sha", "cnt", "content_norm"
-        ),
-        cfg,
-        approx_rows=approx_rows,
-    ).withColumn("nid", F.unhex(F.substring("sha", 1, 32)))
 
 
 def build_index(
@@ -409,7 +424,7 @@ def build_index(
     wrote = index.append(
         batch_id,
         fingerprints=res.clusters.select("sha"),
-        signed_survivors=_sign_distinct(surv, cfg, None),
+        signed_survivors=sign_contents(surv, cfg, None),
     )
     if not wrote:
         # append() no-ops when `batch_id` already completed — correct
@@ -429,7 +444,7 @@ def build_index(
             ).collect()[0]
             return (row["n"], row["s"], row["lo"], row["hi"])
 
-        stored = spark.read.parquet(
+        stored = spark.read.schema(_FINGERPRINT_SCHEMA).parquet(
             os.path.join(path, "fingerprints", batch_id)
         )
         if _fp(stored) != _fp(res.clusters.select("sha")):
@@ -489,10 +504,20 @@ def dedup_files_incremental(
     """Dedup `new_files` against `index` (tiers 1-3, module docstring),
     appending the batch's retained state when update_index=True.
 
+    One aggregation and one signing pass per increment: the batch is
+    aggregated by sha once (pipeline.distinct_contents), only its fresh
+    rows are signed, once, and tier 3 clusters the signed contents
+    that tiers 1-2 let through with the batch pipeline's tail
+    (pipeline.cluster_signed). The near probe's band join runs once:
+    the candidate pairs are materialized, so the index's band columns
+    are scanned once and its contents once.
+
     The tier counts in `metrics` (incremental.dropped_exact,
     dropped_near, kept) are file rows, observed on tables that are
-    materialized anyway: the batch's (sha, cnt) table, the signed fresh
-    contents, the near-dup shas and the tier-3 survivors."""
+    materialized anyway: the batch table, the signed fresh contents,
+    tier 3's input (batch.input.files, batch.distinct.contents) and the
+    tier-3 survivors; dropped_near is fresh files minus tier 3's input.
+    incremental.cross_pairs rides the candidate table."""
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
     if quality:
@@ -504,15 +529,16 @@ def dedup_files_incremental(
     bid = _batch_id(new_files, cfg, batch_id)
 
     # -- tier 1: exact, streaming the old fingerprints ONCE ----------------
-    # The batch's (sha, cnt) table is materialized ONCE, with its
-    # distinct count (the broadcast gate) and row count observed: it
-    # feeds the tier-1 probe and the append's fingerprints, so neither
-    # rescans the input.
+    # The batch table (sha, cnt, content, rep) is materialized ONCE,
+    # with its distinct count (the broadcast gate) and row count
+    # observed: it feeds the tier-1 probe, the signer, tier 3's output
+    # rows and the append's fingerprints, so none of them rescans or
+    # re-aggregates the input.
     #
     # hits = old shas that reappear in this batch: bounded by the
     # batch's distinct count, so it pins (localCheckpoint) into a small
-    # table that both the semi and anti join below can broadcast —
-    # without the pin, each consumer would rescan the fingerprint store.
+    # table that every join below can broadcast — without the pin, each
+    # consumer would rescan the fingerprint store.
     #
     # EVERY new-side broadcast here is gated on the same knob as the
     # band join: an increment past incremental_broadcast_max_rows must
@@ -520,8 +546,8 @@ def dedup_files_incremental(
     # overrides Spark's own size guard), so oversized increments let
     # AQE pick the join strategy instead.
     m = MetricsCollector()
-    batch_shas = m.observe(
-        new_files.groupBy("sha").agg(F.count(F.lit(1)).alias("cnt")),
+    batch_table = m.observe(
+        distinct_contents(new_files),
         {
             "incremental.input_distinct": F.count(F.lit(1)),
             "incremental.input_files": F.coalesce(F.sum("cnt"), F.lit(0)),
@@ -532,20 +558,14 @@ def dedup_files_incremental(
     bcast = F.broadcast if broadcast_new else (lambda df: df)
     hits = (
         index.fingerprints(exclude=bid)
-        .join(bcast(batch_shas.select("sha")), "sha", "left_semi")
+        .join(bcast(batch_table.select("sha")), "sha", "left_semi")
         .localCheckpoint(eager=True)
     )
     dropped_exact = new_files.join(bcast(hits), "sha", "left_semi")
-    fresh_files = new_files.join(bcast(hits), "sha", "left_anti")
 
-    # -- tier 2: near, streaming the survivor index twice -------------------
-    # (bands for candidates, then contents for the candidates' verify;
-    # both against broadcast new-side tables)
-    distinct_new = fresh_files.groupBy("sha").agg(
-        F.count(F.lit(1)).alias("cnt"), F.first("content").alias("content")
-    )
+    # -- tier 2: near, one band scan and one content scan of the index ------
     signed_new = m.observe(
-        _sign_distinct(distinct_new, cfg, n_batch),
+        sign_contents(batch_table.join(bcast(hits), "sha", "left_anti"), cfg, n_batch),
         {
             "incremental.new_distinct": F.count(F.lit(1)),
             "incremental.fresh_files": F.coalesce(F.sum("cnt"), F.lit(0)),
@@ -553,47 +573,74 @@ def dedup_files_incremental(
     ).localCheckpoint(eager=True)
     n_new = m.as_dict()["incremental.new_distinct"]
     old_index = index.signed_survivors(exclude=bid)
-    cand = cross_candidate_pairs(old_index, signed_new, cfg, broadcast_new)
-    # NOT bcast()-gated: this table holds OLD survivor nids hit by the
-    # band join, whose size scales with how many index survivors match
-    # the increment — a small batch of boilerplate-heavy docs can hit
-    # millions of retained survivors, so a forced broadcast sized by
-    # n_batch would override Spark's own size guard and OOM. Left
-    # unhinted, AQE broadcasts it when it really is small (the common
-    # case) and shuffles otherwise.
+    # materialized: the old-hit fetch and verify below both read it
+    cand = m.observe(
+        cross_candidate_pairs(old_index, signed_new, cfg, broadcast_new),
+        {"incremental.cross_pairs": F.count(F.lit(1))},
+    ).localCheckpoint(eager=True)
+    # The id tables derived from cand (old hits, verified new ids) are
+    # NOT sized by n_batch: a small batch of boilerplate-heavy docs can
+    # hit millions of retained survivors. They are bounded by cand's
+    # observed row count instead, so the broadcast is gated on that
+    # count. Semi/anti joins ignore duplicate keys, so the ids broadcast
+    # without a distinct (no shuffle) and the index streams past them.
+    n_cross = m.as_dict()["incremental.cross_pairs"]
+    bcast_cross = (
+        F.broadcast
+        if n_cross <= cfg.incremental_broadcast_max_rows
+        else (lambda df: df)
+    )
     old_hit = old_index.join(
-        cand.select(F.col("id_a").alias("nid")).distinct(),
-        "nid",
-        "left_semi",
+        bcast_cross(cand.select(F.col("id_a").alias("nid"))), "nid", "left_semi"
     )
-    contents = old_hit.select("nid", "content_norm", "n_shingles", "sig_packed").unionByName(
-        signed_new.select("nid", "content_norm", "n_shingles", "sig_packed")
-    )
+    verify_cols = ["nid", "content_norm", "n_shingles", "sig_packed"]
     est_ran = cfg.est_margin > 0  # cross_candidate_pairs prefilters iff margin > 0
-    # metadata_broadcast=False: the size/sketch relations inside verify
-    # derive from `contents`, which includes old_hit — unbounded by the
-    # increment's size for the same reason old_hit itself is unhinted
+    # every cross pair is (old, new): id_a's contents come from old_hit,
+    # id_b's from the signed batch. metadata_broadcast=False: the
+    # size/sketch relations inside verify derive from old_hit, whose
+    # CONTENT is unbounded by the increment's size for the reason
     # above. Let AQE decide from the runtime size.
     verified = verify_pairs_jaccard(
-        cand, contents, cfg, id_col="nid", skip_est=est_ran,
+        cand, old_hit.select(*verify_cols), cfg, id_col="nid", skip_est=est_ran,
         approx_rows=n_new, metadata_broadcast=False,
+        contents_b=signed_new.select(*verify_cols),
     )
-    near_shas = m.observe(
+    # tier 3's input, materialized once: the signed batch minus the
+    # near-dup nids. An anti join keeps
+    # the signed batch's size estimate, so the tail below plans its
+    # joins as it would on the signatures stage. Its counts ride this
+    # job; dropped_near is the difference to the fresh counts.
+    ck = StageCheckpointer(spark, cfg)
+    remainder = ck.metrics.observe(
         signed_new.join(
-            verified.select(F.col("id_b").alias("nid")).distinct(), "nid", "left_semi"
-        ).select("sha", "cnt"),
-        {"incremental.dropped_near": F.coalesce(F.sum("cnt"), F.lit(0))},
+            bcast_cross(verified.select(F.col("id_b").alias("nid"))),
+            "nid",
+            "left_anti",
+        ),
+        {
+            "distinct.contents": F.count(F.lit(1)),
+            "input.files": F.coalesce(F.sum("cnt"), F.lit(0)),
+        },
     ).localCheckpoint(eager=True)
-    dropped_near = fresh_files.join(bcast(near_shas), "sha", "left_semi")
+    n_remainder = ck.metrics.as_dict()["distinct.contents"]
+    near_shas = signed_new.select("sha").join(
+        remainder.select("sha"), "sha", "left_anti"
+    )
+    dropped_near = new_files.join(bcast(near_shas), "sha", "left_semi")
 
-    # -- tier 3: within-batch recluster of the remainder --------------------
-    remainder = fresh_files.join(bcast(near_shas), "sha", "left_anti")
-    batch = dedup_files(spark, remainder, cfg, quality=False)
+    # -- tier 3: within-batch clustering of the remainder --------------------
+    batch = cluster_signed(
+        ck, cfg, batch_table, remainder, n_remainder,
+        [c for c in new_files.columns if c != "sha"],
+    )
 
     metrics = m.as_dict()
     metrics.update({
         "incremental.dropped_exact": (
             metrics["incremental.input_files"] - metrics["incremental.fresh_files"]
+        ),
+        "incremental.dropped_near": (
+            metrics["incremental.fresh_files"] - batch.metrics["input.files"]
         ),
         "incremental.kept": batch.metrics["output.files"],
         "incremental.broadcast_new": float(broadcast_new),
@@ -602,10 +649,10 @@ def dedup_files_incremental(
 
     if update_index:
         # batch survivors were already signed in signed_new — reuse it
-        # (zero extra Arrow passes; cnt from the batch-distinct agg)
-        surv_signed = signed_new.join(
+        # (zero extra Arrow passes; cnt from the batch aggregation)
+        surv_signed = remainder.join(
             batch.survivors.select(F.col("key").alias("sha")), "sha", "left_semi"
         )
-        index.append(bid, fingerprints=batch_shas, signed_survivors=surv_signed)
+        index.append(bid, fingerprints=batch_table, signed_survivors=surv_signed)
 
     return IncrementalResult(batch.deduped, dropped_exact, dropped_near, batch, metrics)

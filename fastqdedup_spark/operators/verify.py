@@ -25,13 +25,19 @@ from fastqdedup_spark.functions.minhash import (
 
 
 def _attach_pair_values(
-    pairs: DataFrame, values: DataFrame, id_col: str, value_col: str
+    pairs: DataFrame, values: DataFrame, id_col: str, value_col: str,
+    values_b: DataFrame | None = None,
 ) -> DataFrame:
     """(id_a, id_b) + (id, value) -> (id_a, id_b, value_a, value_b).
     Two equi-joins on the id; at scale both sides hash-partition on the
-    join key and AQE broadcasts `values` when it is small."""
+    join key and AQE broadcasts `values` when it is small. `values_b`,
+    when given, supplies id_b's values instead of `values` (pairs whose
+    two sides come from different tables: each side then reads only its
+    own table)."""
+    if values_b is None:
+        values_b = values
     va = values.select(F.col(id_col).alias("id_a"), F.col(value_col).alias("value_a"))
-    vb = values.select(F.col(id_col).alias("id_b"), F.col(value_col).alias("value_b"))
+    vb = values_b.select(F.col(id_col).alias("id_b"), F.col(value_col).alias("value_b"))
     return pairs.join(va, "id_a").join(vb, "id_b")
 
 
@@ -222,14 +228,15 @@ def est_jaccard_matches(
 
 def est_prefilter(
     pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig, id_col: str,
-    keep_est: bool = False,
+    keep_est: bool = False, sigs_b: DataFrame | None = None,
 ) -> DataFrame:
     """Estimated-Jaccard pre-filter (JVM-side): the semantic-skew pair
     flood (boilerplate headers -> quadratically many j~0.2 candidates)
     dies here before any shuffle, content, or Python is touched. The
     margin makes false drops statistically negligible (~4.6 sigma at
     j == threshold with 128 bins, P ~ 2e-6); the exact verify UDF keeps
-    precision exact. `sigs` must carry (id_col, sig_packed).
+    precision exact. `sigs` must carry (id_col, sig_packed); `sigs_b`,
+    when given, holds id_b's sketches instead.
 
     Map-side-ness is the point: with cfg.est_broadcast (default) the
     sketch table broadcasts EXPLICITLY, so the quadratic raw pair
@@ -239,7 +246,9 @@ def est_prefilter(
     contents flip it off and the joins run shuffled."""
     hint = F.broadcast if cfg.resolved_est_broadcast() else (lambda df: df)
     ga = sigs.select(F.col(id_col).alias("id_a"), F.col("sig_packed").alias("sig_a"))
-    gb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig_packed").alias("sig_b"))
+    gb = (sigs if sigs_b is None else sigs_b).select(
+        F.col(id_col).alias("id_b"), F.col("sig_packed").alias("sig_b")
+    )
     min_matches = est_min_matches(cfg, cfg.jaccard_threshold - cfg.est_margin)
     # The zero-valued NON-DETERMINISTIC term pins the filter ABOVE the
     # est projection: Catalyst never pushes non-deterministic predicates
@@ -312,9 +321,14 @@ def verify_pairs_jaccard(
     skip_est: bool = False,
     approx_rows: float | None = None,
     metadata_broadcast: bool | None = None,
+    contents_b: DataFrame | None = None,
 ) -> DataFrame:
     """Code-domain verification: exact Jaccard >= threshold on
     normalized content. Returns (id_a, id_b, jaccard).
+
+    `contents_b`, when given, holds id_b's rows and `contents` only
+    id_a's (the incremental probe: every pair is (old, new), so the
+    index side and the batch side are never unioned into one table).
 
     `metadata_broadcast` overrides cfg.resolved_est_broadcast() for the
     sketch/size relations derived from `contents`: pass False when the
@@ -347,10 +361,13 @@ def verify_pairs_jaccard(
         else metadata_broadcast
     )
     hint = F.broadcast if use_bcast else (lambda df: df)
+    if contents_b is None:
+        contents_b = contents
     est_ran = skip_est  # upstream candidate generation already filtered
     if not skip_est and "sig_packed" in contents.columns and cfg.est_margin > 0:
         pairs = est_prefilter(
-            pairs, contents.select(id_col, "sig_packed"), cfg, id_col
+            pairs, contents.select(id_col, "sig_packed"), cfg, id_col,
+            sigs_b=contents_b.select(id_col, "sig_packed"),
         )
         est_ran = True
     # The size bound jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|) is EXACT,
@@ -367,7 +384,7 @@ def verify_pairs_jaccard(
         sa = contents.select(
             F.col(id_col).alias("id_a"), F.col(size_col).alias("sz_a")
         )
-        sb = contents.select(
+        sb = contents_b.select(
             F.col(id_col).alias("id_b"), F.col(size_col).alias("sz_b")
         )
         pairs = (
@@ -438,7 +455,8 @@ def verify_pairs_jaccard(
         kcnt = pairs.groupBy("_key").agg(F.count(F.lit(1)).alias("_kcnt"))
         pairs = pairs.join(hint(kcnt), "_key")
     withv = _attach_pair_values(
-        pairs, contents.select(id_col, content_col), id_col, content_col
+        pairs, contents.select(id_col, content_col), id_col, content_col,
+        values_b=contents_b.select(id_col, content_col),
     )
     if orient:
         withv = withv.repartition(

@@ -13,6 +13,16 @@ Two entry points sharing the verify/CC/dissect tail:
   dissect -> survivor semi-join, with per-stage metrics and keyed
   checkpoints.
 
+`dedup_files` is a front plus a tail. The front aggregates the input
+by sha (`distinct_contents`: count, content and first-wins rep in one
+pass) and signs each distinct content once (`sign_contents`). The tail,
+`cluster_signed`, takes those two tables and runs pairs, edges,
+connected components, clusters, survivors and the first-wins output.
+The incremental path (incremental.py) builds the same two tables for
+its whole batch once, and its tier 3 calls the same tail on the signed
+contents that tiers 1-2 let through, so nothing is aggregated or
+signed twice.
+
 Stage graph (code mode), every arrow a Catalyst-planned exchange:
 
   files --filter--> quality --sha2--> exact groups (P9 pre-agg)
@@ -114,6 +124,52 @@ def dedup_keys(
     return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict(), rounds)
 
 
+def distinct_contents(files: DataFrame) -> DataFrame:
+    """files (with `sha`) -> one row per distinct content:
+    (sha, cnt, content, rep).
+
+    P9 pre-aggregation: exact duplicates collapse BEFORE signatures,
+    mirroring the trie's count-in-node (_triemodule.c:233-239). The
+    first-wins representative (min (repo, path, commit), O13) is
+    computed in the SAME aggregation so the survivor tail never
+    rescans the full input. The rep struct carries EVERY non-content
+    column (orderable types required; repo/path/commit lead, so the
+    first-wins order is unchanged): the final `deduped` output is
+    reconstructed from it directly, which both removes a full join of
+    the corpus and guarantees one output row per surviving sha — the
+    old join-back on (sha, repo, path, commit) matched every input copy
+    of the representative row, so a fully-duplicated input row (two
+    ingestion batches unioned) leaked duplicate output rows for one
+    distinct content."""
+    rep_rest = [
+        c for c in files.columns
+        if c not in ("repo", "path", "commit", "content", "sha")
+    ]
+    return files.groupBy("sha").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.first("content").alias("content"),  # identical per sha
+        F.min(F.struct("repo", "path", "commit", *rep_rest)).alias("rep"),
+    )
+
+
+def sign_contents(
+    distinct: DataFrame,
+    cfg: DedupConfig,
+    approx_rows: float | None,
+    source: str = "content",
+) -> DataFrame:
+    """(sha, cnt, <source>) -> (sha, cnt, content_norm, n_shingles,
+    band_hash, sig_packed, nid): one Arrow MinHash pass over the
+    normalized `source` column."""
+    return add_signature_columns(
+        distinct.withColumn("content_norm", normalize_content(source)).select(
+            "sha", "cnt", "content_norm"
+        ),
+        cfg,
+        approx_rows=approx_rows,
+    ).withColumn("nid", F.unhex(F.substring("sha", 1, 32)))
+
+
 def dedup_files(
     spark: SparkSession,
     files: DataFrame,
@@ -126,12 +182,13 @@ def dedup_files(
     the per-row sha256 invariant: `deduped` rows carry the `sha` of
     their untouched `content` (equality testable end-to-end).
 
-    Every metric rides a stage materialization that runs anyway
-    (MetricsCollector.observe): input.files and distinct.contents on
-    distinct_contents, edges.n on the connected-components input,
-    output.files and dissect.* on survivors. A resumed stage reports
-    the previous run's persisted values instead (none if the previous
-    run died before persisting them).
+    This is the front (the distinct_contents and signatures stages);
+    cluster_signed is the tail. Every metric rides a stage
+    materialization that runs anyway (MetricsCollector.observe):
+    input.files and distinct.contents on distinct_contents, the rest in
+    the tail. A resumed stage reports the previous run's persisted
+    values instead (none if the previous run died before persisting
+    them).
     """
     from fastqdedup_spark.sources import FILES_COLUMNS
 
@@ -149,41 +206,20 @@ def dedup_files(
         files = content_quality_filter(files)
     files = with_sha256(files)
 
-    # P9 pre-aggregation: exact duplicates collapse BEFORE signatures,
-    # mirroring the trie's count-in-node (_triemodule.c:233-239). The
-    # first-wins representative (min (repo, path, commit), O13) is
-    # computed in the SAME aggregation so the survivor tail never
-    # rescans the full input. The rep struct carries EVERY non-content
-    # column (orderable types required; repo/path/commit lead, so the
-    # first-wins order is unchanged): the final `deduped` output is
-    # reconstructed from it directly, which both removes a full join
-    # of the corpus and guarantees one output row per surviving sha —
-    # the old join-back on (sha, repo, path, commit) matched every
-    # input copy of the representative row, so a fully-duplicated
-    # input row (two ingestion batches unioned) leaked duplicate
-    # output rows for one distinct content.
-    rep_rest = [
-        c for c in files.columns
-        if c not in ("repo", "path", "commit", "content", "sha")
-    ]
-    # The distinct-contents count sizes two static plan choices below
-    # (est_broadcast gate, Arrow-stage task cap). It and the input row
-    # count ride the stage's own materialization via Dataset.observe
-    # (CollectMetrics fires on BOTH materialization paths:
-    # localCheckpoint is a withAction and so is the durable parquet
-    # write) — zero extra jobs on a fresh run. A resumed stage reloads
-    # both from the previous run's persisted metrics; only a resume
-    # whose _metrics are missing (the previous run died before
+    # The distinct-contents count sizes two static plan choices (the
+    # tail's est_broadcast gate, Arrow-stage task caps). It and the
+    # input row count ride the stage's own materialization via
+    # Dataset.observe (CollectMetrics fires on BOTH materialization
+    # paths: localCheckpoint is a withAction and so is the durable
+    # parquet write) — zero extra jobs on a fresh run. A resumed stage
+    # reloads both from the previous run's persisted metrics; only a
+    # resume whose _metrics are missing (the previous run died before
     # write_metrics) counts the materialized stage, a cheap parquet
     # scan with no recompute.
     distinct = ck.stage(
         "distinct_contents",
         lambda: ck.metrics.observe(
-            files.groupBy("sha").agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.first("content").alias("content"),  # identical per sha
-                F.min(F.struct("repo", "path", "commit", *rep_rest)).alias("rep"),
-            ),
+            distinct_contents(files),
             {
                 "distinct.contents": F.count(F.lit(1)),
                 "input.files": F.coalesce(F.sum("cnt"), F.lit(0)),
@@ -194,6 +230,51 @@ def dedup_files(
     n_distinct = ck.metrics.as_dict().get("distinct.contents")
     if n_distinct is None:
         n_distinct = distinct.count()
+
+    def _build_signatures() -> DataFrame:
+        if cfg.strip_boilerplate_frac <= 0:
+            return sign_contents(distinct, cfg, n_distinct)
+        # semantic-skew source removal: lines shared by more than
+        # strip_boilerplate_frac of documents (license headers,
+        # generated preambles) leave the shingle space entirely, so
+        # unrelated files stop sharing bands. The sha invariant is
+        # untouched — stripping only affects the similarity model.
+        from fastqdedup_spark.operators.boilerplate import (
+            common_lines,
+            strip_boilerplate,
+        )
+
+        boiler = common_lines(distinct, "content", cfg.strip_boilerplate_frac)
+        return sign_contents(
+            strip_boilerplate(distinct, boiler, "content"),
+            cfg,
+            n_distinct,
+            source="content_stripped",
+        )
+
+    signed = ck.stage("signatures", _build_signatures)
+    out_cols = [c for c in files.columns if c != "sha"]
+    return cluster_signed(ck, cfg, distinct, signed, n_distinct, out_cols)
+
+
+def cluster_signed(
+    ck: StageCheckpointer,
+    cfg: DedupConfig,
+    distinct: DataFrame,
+    signed: DataFrame,
+    n_distinct: int,
+    out_cols: list[str],
+) -> DedupResult:
+    """The clustering tail shared by dedup_files and the incremental
+    path's tier 3: candidate pairs, verified edges, connected
+    components, clusters, survivors and the first-wins output.
+
+    `signed` holds the contents to cluster (sign_contents' columns, one
+    row per sha, `n_distinct` rows); `distinct` is a distinct_contents
+    table covering at least those shas, and `out_cols` (the input's
+    columns minus `sha`) orders the rebuilt output rows. Metrics land
+    in `ck.metrics`: edges.n on the connected-components input,
+    output.files and dissect.* on survivors."""
     # AUTO est_broadcast resolution (static per run): past
     # est_broadcast_max_rows the sketch/size joins must run shuffled (a
     # forced broadcast there is a driver OOM at >50M distinct
@@ -203,32 +284,6 @@ def dedup_files(
     eff_broadcast = cfg.resolved_est_broadcast(n_distinct)
     ck.metrics.add("est", "broadcast", float(eff_broadcast))
     cfg_run = replace(cfg, est_broadcast=eff_broadcast)
-    def _build_signatures() -> DataFrame:
-        base = distinct
-        sig_source = "content"
-        if cfg.strip_boilerplate_frac > 0:
-            # semantic-skew source removal: lines shared by more than
-            # strip_boilerplate_frac of documents (license headers,
-            # generated preambles) leave the shingle space entirely, so
-            # unrelated files stop sharing bands. The sha invariant is
-            # untouched — stripping only affects the similarity model.
-            from fastqdedup_spark.operators.boilerplate import (
-                common_lines,
-                strip_boilerplate,
-            )
-
-            boiler = common_lines(distinct, "content", cfg.strip_boilerplate_frac)
-            base = strip_boilerplate(distinct, boiler, "content")
-            sig_source = "content_stripped"
-        return add_signature_columns(
-            base.withColumn("content_norm", normalize_content(sig_source)).select(
-                "sha", "cnt", "content_norm"
-            ),
-            cfg,
-            approx_rows=n_distinct,
-        ).withColumn("nid", F.unhex(F.substring("sha", 1, 32)))
-
-    signed = ck.stage("signatures", _build_signatures)
     # candidate generation runs on compact 16-byte binary ids (the first
     # 128 bits of the sha), not 64-char hex shas: the band self-join's
     # output is quadratic in band size and each row carries two ids, so
@@ -359,17 +414,16 @@ def dedup_files(
     )
     # O13 survivor semi-join + first-wins: one surviving FILE per
     # surviving content, deterministic by (repo, path, commit). The
-    # representative rides on the distinct_contents stage — no second
-    # full-input aggregation here, and no join back to `files` at all:
-    # the full row is rebuilt from the rep struct + the stage's
+    # representative rides on the distinct table — no second
+    # full-input aggregation here, and no join back to the input at
+    # all: the full row is rebuilt from the rep struct + the table's
     # content, so row-per-sha uniqueness is aggregation-guaranteed.
     deduped = distinct.join(
         survivors.select(F.col("key").alias("sha")), "sha", "left_semi"
     ).select(
         *[
             (F.col("content") if c == "content" else F.col(f"rep.{c}")).alias(c)
-            for c in files.columns
-            if c != "sha"
+            for c in out_cols
         ],
         "sha",
     )
