@@ -325,7 +325,7 @@ def q14_minhash_near_dup(spark, sf):
     signed = add_signature_columns(files, cfg).localCheckpoint(eager=True)
     pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="id")
     verified = verify_pairs_jaccard(
-        pairs, signed.select("id", "content_norm", "n_shingles", "sig_packed"), cfg, id_col="id", skip_est=True
+        pairs, signed.select("id", "content_norm", "n_shingles"), cfg, id_col="id", skip_est=True
     )
     return verified.select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")

@@ -3,7 +3,10 @@
 Mirrors the reference's argparse surface
 (/root/reference/src/fastqdedup/__init__.py:305-361) re-keyed for the
 code domain: input table, distance/threshold knobs, dissection method,
-plus the graft's shingle/signature/band and checkpoint knobs.
+plus the graft's shingle/signature/band and checkpoint knobs. Plan
+shapes are not flags: the band join has one form, the est sketch always
+rides the band shuffle, and the metadata broadcast, Arrow-task count
+and verify keying are sized from the row counts the run observes.
 
 Usage (zip built by scripts/make_pyfiles.py; smoke-tested end-to-end in
 tests/test_spark_submit.py):
@@ -64,25 +67,6 @@ def argument_parser() -> argparse.ArgumentParser:
                    help="accept sketch-certain candidate pairs without exact "
                         "verification (~3e-3 per-pair false-accept, amplified "
                         "transitively by clustering; off = verify every edge)")
-    p.add_argument("--est-transport", default="carry", choices=["probe", "carry"],
-                   help="how candidate pairs meet their est sketches: probe "
-                        "per-id sketch tables, or carry sig_packed through "
-                        "the band shuffle (zero per-pair hash probes)")
-    p.add_argument("--copartition-pairs", action="store_true",
-                   help="capped band self-joins reuse ONE band_hash "
-                        "exchange for both sides (halves the pair "
-                        "stage's shuffle bytes; for multi-node clusters "
-                        "where the exchange crosses a network — measured "
-                        "~30%% slower on a single box, so off by default)")
-    p.add_argument("--est-broadcast", default="auto",
-                   choices=["auto", "on", "off"],
-                   help="broadcast sketch/size metadata tables into the "
-                        "candidate/verify joins; auto resolves from the "
-                        "resumed distinct-contents count (off past 50M)")
-    p.add_argument("--python-stage-partitions", type=int, default=0,
-                   help="Arrow/python stage task count (0 = auto: half the "
-                        "task slots — each Arrow task is a python worker plus "
-                        "a JVM serialization thread)")
     p.add_argument("--index", default="",
                    help="persisted dedup-index directory (incremental mode): "
                         "when empty it is seeded with this run's retained "
@@ -211,10 +195,6 @@ def main(argv: list[str] | None = None) -> None:
         max_cluster_bytes=args.max_cluster_bytes,
         strip_boilerplate_frac=args.strip_boilerplate,
         est_autoaccept=args.est_autoaccept,
-        est_transport=args.est_transport,
-        copartition_pairs=args.copartition_pairs,
-        est_broadcast={"auto": None, "on": True, "off": False}[args.est_broadcast],
-        python_stage_partitions=args.python_stage_partitions,
         checkpoint_dir=args.checkpoint_dir,
         lineage=args.lineage,
         # bind checkpoints to THIS input: same knobs + different data

@@ -28,8 +28,8 @@ class DedupConfig:
     # candidate-recall math and band-table size) while the est
     # prefilter reads a 256-bin sketch whose sigma is 1/sqrt(2)
     # smaller, so est_margin shrinks 0.2 -> 0.141 at the SAME
-    # false-drop probability. Measured at 192k files (scripts/
-    # ab_num_perm.py + pair-count probe, BASELINE.md round 5): pairs
+    # false-drop probability. Measured at 192k files (pair-count probe,
+    # BASELINE.md round 5, "256-bin sketch over 128-bin banding"): pairs
     # surviving the JVM prefilter into the python exact-Jaccard stage
     # fell 1,077,966 -> 144,849 (7.4x) with identical final output —
     # the band flood is mostly sub-threshold boilerplate pairs whose
@@ -59,7 +59,6 @@ class DedupConfig:
     # more than ~this many candidate pairs (uniform task heights across
     # any band-size distribution)
     pairs_per_task: int = 2_000_000
-    pair_partitions: int = 0        # 0 = defaultParallelism
     # incremental mode (incremental.py): increments with at most this
     # many DISTINCT new contents stream the retained index through
     # broadcast hash joins (zero exchanges of old data). Sized by the
@@ -70,67 +69,36 @@ class DedupConfig:
     # degrade to the shuffled band equi-join automatically.
     incremental_broadcast_max_rows: int = 1_000_000
     # Arrow/python stage task count (OPH signer mapInPandas, exact-
-    # Jaccard verify): 0 = AUTO, half of defaultParallelism. Each
-    # concurrent Arrow task costs a python worker PLUS a JVM
+    # Jaccard verify) is AUTO: half of defaultParallelism for long
+    # stages, full width for short ones (see python_stage_tasks below).
+    # Each concurrent Arrow task costs a python worker PLUS a JVM
     # serialization thread, so running cores-many tasks oversubscribes
     # the box ~1.4x (measured: signer per-doc cost 0.17 -> 0.9 ms at
     # full width). Interleaved A/B of the fused pipeline at 192k files
-    # (scripts/cap_ab.py, BASELINE.md round 5): cores//2 won best-of at
-    # width 32 in both load regimes (32.4 vs 44.1 s quiet-ish, 35.1 vs
-    # 43.7 stormy; cap 24 worse than both) and at width 8 (56.0 vs
-    # 66.7; weaker evidence). Set explicitly to pin a task count.
-    # AUTO is additionally size-aware when the pipeline knows the
-    # stage's row count — see python_stage_tasks below.
-    python_stage_partitions: int = 0
+    # (BASELINE.md round 5, "Python-stage task cap"): cores//2 won
+    # best-of at width 32 in both load regimes (32.4 vs 44.1 s
+    # quiet-ish, 35.1 vs 43.7 stormy; cap 24 worse than both) and at
+    # width 8 (56.0 vs 66.7; weaker evidence).
+    #
     # AUTO cap threshold: stages with fewer rows than this per
     # FULL-WIDTH task stay at full width (a short Arrow stage never
     # builds the sustained python+JVM oversubscription the cap
     # relieves; capping it just idles half the cores). Calibrated
     # between the measured 24k-files loss (~300 rows/task, uncapped
-    # wins 15%) and 192k win (~2.3k rows/task, capped wins 25%).
+    # wins 15%) and 192k win (~2.3k rows/task, capped wins 25%). The
+    # same rule, on a KNOWN row count only, switches verify to
+    # hash-min cluster keying (operators/verify.py).
     python_stage_min_rows_per_task: int = 1000
-    # broadcast per-distinct-doc METADATA tables (packed est sketches,
-    # shingle sizes) into the candidate/verify joins so the skew flood
-    # dies map-side before any shuffle. ~150 B/doc: fine to ~50M distinct
+    # broadcast per-distinct-doc METADATA tables (shingle sizes, the
+    # hash-min verify labels) into the verify joins so pruning happens
+    # map-side before any shuffle. ~150 B/doc: fine to ~50M distinct
     # contents per executor heap; beyond that the same plans must run as
     # shuffled equi-joins (a wrong broadcast there is a driver OOM).
-    # None = AUTO (the default): resolved STATICALLY per run from the
-    # distinct-contents count — a resumed checkpoint's persisted metric,
-    # else one cheap count of the already-materialized distinct stage
-    # (dedup_files) — broadcast iff it is <= est_broadcast_max_rows.
-    # Callers with no count at all get broadcast (the safe small/medium
-    # default). The decision never forces a plan barrier. True/False
-    # pin the plan explicitly.
-    est_broadcast: bool | None = None
+    # Resolved STATICALLY per run from the distinct-contents count (see
+    # resolved_est_broadcast): a resumed checkpoint's persisted metric,
+    # else the count observed on the distinct stage's materialization.
+    # The decision never forces a plan barrier.
     est_broadcast_max_rows: int = 50_000_000
-    # Cluster-oriented verify partitioning: key each candidate pair by
-    # a ONE-ROUND hash-min label — label(v) = min(v, min neighbor of v)
-    # over the verified pair set, key(pair) = min(label(a), label(b)).
-    # Near-dup components are CLIQUES (planted dup groups, boilerplate
-    # families), and a clique's labels all collapse to its min id, so
-    # every pair of a component lands on one key and each member
-    # document is shingled ONCE per task. The legacy (id_a, salt-4) key
-    # left a 90% per-task shingle-cache MISS rate at 768k files (1.01M
-    # misses per run for 387k distinct docs, scripts/arrow_stage_probe
-    # + FASTQDEDUP_VERIFY_PROF, 2026-08-18): id_b appearances scatter
-    # across tasks and the unconditional 4-way salt quarters id_a
-    # locality too — and per-doc shingling is 90% of verify's python
-    # time. Degree-based orientation (partition by the higher-degree
-    # endpoint) was built and measured first: only -18% misses, wall a
-    # wash — cliques have no hubs. Hash-min keying measures 397k
-    # predicted misses at 768k/16 tasks, within 2.6% of the ideal.
-    # The key changes ONLY partitioning; output pairs are identical.
-    # Costs one ids-only lazy localCheckpoint (the label pass must not
-    # re-run the band join) + two small groupBys + map-side joins —
-    # machinery that only amortizes on LONG verify stages: interleaved
-    # 24k-corpus A/B (32 cores) measured the oriented pipeline ~10%
-    # SLOWER (best 10.98 vs 9.83 s; the label/count broadcasts dominate
-    # a short stage), while 768k measured ~2x FASTER (best 7.74 vs
-    # 14.4 s). None = AUTO: orient exactly when the same size rule that
-    # engages the Arrow-task cap says the stage is long
-    # (approx_rows/width >= python_stage_min_rows_per_task; unknown
-    # row count -> legacy keying). True/False pin it.
-    verify_orient: bool | None = None
     # Mega-component insurance: a key whose pair count exceeds this
     # splits into ceil(cnt/budget) subtasks salted by id_a (a 10k-doc
     # boilerplate clique is ~50M pairs — on ONE key that is the
@@ -139,21 +107,6 @@ class DedupConfig:
     # of python verify ~ 2.5 s per subtask. The 768k synthetic corpus
     # never triggers it (max 183 pairs/key).
     verify_pairs_per_key: int = 32768
-    # How pair candidates meet their est sketches: "carry" (default)
-    # ships sig_packed through the band shuffle as a payload column on
-    # BOTH join sides, so the est filter reads the streamed row — zero
-    # random hash probes per raw pair; "probe" joins the raw pair
-    # stream against per-id sketch tables (broadcast under
-    # est_broadcast, shuffled otherwise). With the 2-bit sketch the
-    # carried payload is 4 longs (~2.3x band-exchange growth, 166 ->
-    # 375 MB at 192k files — sequential, compressed), vs 9x for the old
-    # byte sketch that made probe win. Measured A/B (interleaved
-    # best-of-2, scripts/pair_probe.py): pair-stage cpuT 61.7 -> 23.4
-    # core-s at 8c and 223.2 -> 46.4 at 32c — the probe variant's two
-    # random lookups per raw pair were the stage's dominant cost and
-    # its 3.6x width inflation; carry also removes the broadcast
-    # ceiling from candidate generation entirely.
-    est_transport: str = "carry"
     # physical form of the band self-join: "shuffle_hash" pins the
     # co-located shuffled hash join (scale-invariant — the corpus-sized
     # band table can never broadcast at 100 TB); "" lets AQE pick
@@ -165,25 +118,6 @@ class DedupConfig:
     # 768k files at 32 partitions; 8g does not) or set "" / "merge"
     # when memory is the binding constraint.
     band_join_hint: str = "shuffle_hash"
-    # CAPPED band self-joins: True consumes ONE band_hash exchange for
-    # both join sides (the bucket salt _v stays in the JOIN KEY, not
-    # the partitioning; spark.sql.requireAllClusterKeysForCoPartition
-    # =false is set by the operator) — at 768k/32c the replaced salt
-    # repartitions wrote 2.66 GB, half the pair stage's shuffle
-    # traffic. False (DEFAULT) repartitions both sides explicitly on
-    # the salted key (uncapped exact schemes always do regardless).
-    # The default is the measured single-box winner: a same-JVM
-    # interleaved A/B at 768k files / 32 cores (scripts/knob_ab.py,
-    # both arm orders, BASELINE.md round 5) put the co-partitioned
-    # shape ~20-30 s (~30%) SLOWER per run — locally a shuffle is a
-    # page-cache copy, so halving exchange bytes buys little, while
-    # fusing both sides' hash builds + the est eval + the partial
-    # distinct into one task lifetime pressures execution memory. On
-    # a REAL multi-node cluster the same bytes cross a network, so
-    # flip this True when the exchange fabric, not executor memory,
-    # is the binding constraint — the plan is pinned either way and
-    # produces identical pairs (tests/test_lsh_salting.py).
-    copartition_pairs: bool = False
     # OPT-IN speed knob: accept candidate pairs whose estimated Jaccard
     # clears threshold + est_margin WITHOUT exact re-verification (the
     # borderline band [thr - margin, thr + margin) still verifies
@@ -232,11 +166,11 @@ class DedupConfig:
         return bb // self.bands
 
     def python_stage_tasks(self, sc, approx_rows: float | None = None) -> int:
-        """Resolved Arrow/python-stage task count: an explicit value
-        wins; AUTO (0) is half the cluster's task slots (min 2) — each
-        Arrow task is a python worker plus a JVM serialization thread,
-        so slot-many tasks oversubscribe ~1.4x (see
-        python_stage_partitions above for the measured A/B).
+        """Resolved Arrow/python-stage task count: half the cluster's
+        task slots (min 2) — each Arrow task is a python worker plus a
+        JVM serialization thread, so slot-many tasks oversubscribe
+        ~1.4x (see the python_stage_min_rows_per_task comment above for
+        the measured A/B).
 
         The cap is SIZE-AWARE when the caller knows the stage's row
         count: oversubscription only costs when python workers hold
@@ -246,8 +180,6 @@ class DedupConfig:
         cores. Interleaved A/B (fused pipeline, 32 pinned cores): cap
         won at 192k files (~2.3k distinct rows/task), LOST ~15% at 24k
         (~300 rows/task, best 9.7 s uncapped vs 11.5 capped)."""
-        if self.python_stage_partitions:
-            return self.python_stage_partitions
         width = sc.defaultParallelism
         if not self.python_stage_is_long(sc, approx_rows):
             return width
@@ -265,23 +197,12 @@ class DedupConfig:
             or approx_rows / width >= self.python_stage_min_rows_per_task
         )
 
-    def resolved_verify_orient(self, sc, approx_rows: float | None = None) -> bool:
-        """Static resolution of verify_orient's AUTO mode (see the field
-        comment): explicit True/False wins; AUTO orients exactly when
-        the stage is long AND the caller knows it (an unknown row count
-        stays legacy — q14-style direct operator calls are small)."""
-        if self.verify_orient is not None:
-            return self.verify_orient
-        return approx_rows is not None and self.python_stage_is_long(sc, approx_rows)
-
     def resolved_est_broadcast(self, known_distinct: float | None = None) -> bool:
-        """Static resolution of the est_broadcast AUTO mode: an explicit
-        True/False wins; otherwise broadcast iff the distinct-contents
-        count — when one is KNOWN without running a job (a resumed
-        checkpoint's persisted metric) — fits est_broadcast_max_rows.
+        """Static metadata-broadcast decision: broadcast iff the
+        distinct-contents count — when one is KNOWN without running a
+        job (a resumed checkpoint's persisted metric, or the count
+        observed on the distinct stage) — fits est_broadcast_max_rows.
         Unknown count -> broadcast (small/medium corpora default)."""
-        if self.est_broadcast is not None:
-            return self.est_broadcast
         return (
             known_distinct is None
             or known_distinct <= self.est_broadcast_max_rows

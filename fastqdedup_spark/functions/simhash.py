@@ -196,10 +196,11 @@ def simhash_near_dup_pairs(
     interleaved: probe 4.4-5.2 s vs carry 13.2 s). "carry" rides the
     8-byte signature through the band shuffle — the right shape once
     the signature table exceeds the broadcast ceiling (1e9 docs = 16
-    GB), where DedupConfig.est_transport's measured win applies.
-    Contrast: the minhash est sketch relation is 32 B/doc PACKED
-    (83 MB at 192k files — DRAM-resident), which is why carry wins
-    there and is its default.
+    GB), where the MinHash est sketch's measured carry win applies
+    (BASELINE.md round 5, "Pair-probe verdict"). Contrast: the minhash
+    est sketch relation is 32 B/doc PACKED (83 MB at 192k files —
+    DRAM-resident), which is why carry wins there and is its only
+    transport.
 
     Pigeonhole banding is EXACT, so — like operators/lsh.py's exact
     schemes — oversized bands are never dropped (that silently lost true

@@ -593,11 +593,11 @@ def dedup_files_incremental(
     old_hit = old_index.join(
         bcast_cross(cand.select(F.col("id_a").alias("nid"))), "nid", "left_semi"
     )
-    verify_cols = ["nid", "content_norm", "n_shingles", "sig_packed"]
+    verify_cols = ["nid", "content_norm", "n_shingles"]
     est_ran = cfg.est_margin > 0  # cross_candidate_pairs prefilters iff margin > 0
     # every cross pair is (old, new): id_a's contents come from old_hit,
     # id_b's from the signed batch. metadata_broadcast=False: the
-    # size/sketch relations inside verify derive from old_hit, whose
+    # size/label relations inside verify derive from old_hit, whose
     # CONTENT is unbounded by the increment's size for the reason
     # above. Let AQE decide from the runtime size.
     verified = verify_pairs_jaccard(

@@ -226,61 +226,31 @@ def est_jaccard_matches(
     return (out - F.lit(pad_bins)).cast("int")
 
 
-def est_prefilter(
-    pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig, id_col: str,
-    keep_est: bool = False, sigs_b: DataFrame | None = None,
+def est_filter_carried(
+    raw: DataFrame, cfg: DedupConfig, keep_est: bool = False,
 ) -> DataFrame:
     """Estimated-Jaccard pre-filter (JVM-side): the semantic-skew pair
     flood (boilerplate headers -> quadratically many j~0.2 candidates)
     dies here before any shuffle, content, or Python is touched. The
     margin makes false drops statistically negligible (~4.6 sigma at
     j == threshold with 128 bins, P ~ 2e-6); the exact verify UDF keeps
-    precision exact. `sigs` must carry (id_col, sig_packed); `sigs_b`,
-    when given, holds id_b's sketches instead.
+    precision exact.
 
-    Map-side-ness is the point: with cfg.est_broadcast (default) the
-    sketch table broadcasts EXPLICITLY, so the quadratic raw pair
-    stream is filtered inside the same stage that produced it — it
-    never hits an exchange. The knob is static configuration, not a
-    mid-plan count() (no action, no barrier); beyond ~50M distinct
-    contents flip it off and the joins run shuffled."""
-    hint = F.broadcast if cfg.resolved_est_broadcast() else (lambda df: df)
-    ga = sigs.select(F.col(id_col).alias("id_a"), F.col("sig_packed").alias("sig_a"))
-    gb = (sigs if sigs_b is None else sigs_b).select(
-        F.col(id_col).alias("id_b"), F.col("sig_packed").alias("sig_b")
-    )
+    `raw` already carries `sig_packed_a`/`sig_packed_b` as band-join
+    payload columns, so the filter is a pure streamed-row expression —
+    zero hash probes per raw pair (joining per-id sketch relations
+    instead paid two random lookups for every one of the ~60M raw
+    pairs at 192k files; BASELINE.md round 5, "Pair-probe verdict")."""
     min_matches = est_min_matches(cfg, cfg.jaccard_threshold - cfg.est_margin)
     # The zero-valued NON-DETERMINISTIC term pins the filter ABOVE the
     # est projection: Catalyst never pushes non-deterministic predicates
     # (and this one is a single comparison, so conjunct-splitting can't
     # peel a deterministic part off), so the est expression is evaluated
-    # in a Project instead of being alias-substituted into the broadcast
-    # join CONDITION (a join condition is generated as ONE inline blob).
+    # in a Project instead of being alias-substituted into the join
+    # CONDITION (a join condition is generated as ONE inline blob).
     # With the 2-bit sketch the expression is small enough that either
     # placement compiles and JITs; the pin stays as cheap insurance
     # against the blob regrowing (e.g. a num_perm bump).
-    nondet_zero = (F.rand(cfg.seed) * F.lit(0.0)).cast("int")
-    out = (
-        pairs.join(hint(ga), "id_a")
-        .join(hint(gb), "id_b")
-        .withColumn("est_matches", est_jaccard_matches(cfg))
-        .filter((F.col("est_matches") + nondet_zero) >= min_matches)
-    )
-    cols = ["id_a", "id_b"] + (["est_matches"] if keep_est else [])
-    return out.select(*cols)
-
-
-def est_filter_carried(
-    raw: DataFrame, cfg: DedupConfig, keep_est: bool = False,
-) -> DataFrame:
-    """est prefilter for cfg.est_transport == "carry": `raw` already
-    carries `sig_packed_a`/`sig_packed_b` as band-join payload columns,
-    so the filter is a pure streamed-row expression — zero hash probes
-    per raw pair (the probe variant pays two random lookups into the
-    sketch relations for every one of the ~60M raw pairs). Same
-    threshold math and the same non-deterministic pushdown pin as
-    est_prefilter."""
-    min_matches = est_min_matches(cfg, cfg.jaccard_threshold - cfg.est_margin)
     nondet_zero = (F.rand(cfg.seed) * F.lit(0.0)).cast("int")
     out = raw.withColumn(
         "est_matches", est_jaccard_matches(cfg, "sig_packed_a", "sig_packed_b")
@@ -320,7 +290,7 @@ def verify_pairs_jaccard(
     size_col: str | None = "n_shingles",
     skip_est: bool = False,
     approx_rows: float | None = None,
-    metadata_broadcast: bool | None = None,
+    metadata_broadcast: bool = True,
     contents_b: DataFrame | None = None,
 ) -> DataFrame:
     """Code-domain verification: exact Jaccard >= threshold on
@@ -330,55 +300,46 @@ def verify_pairs_jaccard(
     id_a's (the incremental probe: every pair is (old, new), so the
     index side and the batch side are never unioned into one table).
 
-    `metadata_broadcast` overrides cfg.resolved_est_broadcast() for the
-    sketch/size relations derived from `contents`: pass False when the
-    caller cannot bound that table (the incremental path's contents
-    include index survivors hit by the band join — unbounded by the
+    `metadata_broadcast` hints the size/label relations derived from
+    `contents` as broadcasts. The batch pipeline passes
+    cfg.resolved_est_broadcast(n_distinct); pass False when the caller
+    cannot bound that table (the incremental path's contents include
+    index survivors hit by the band join — unbounded by the
     increment's size), so AQE picks the join strategy from the REAL
     runtime size instead of a forced broadcast hint overriding Spark's
-    own size guard. None keeps the batch pipeline's static resolution.
+    own size guard.
 
-    When `size_col` (distinct-shingle counts from the signature stage)
-    is available, pairs are pruned JVM-side BEFORE content ships to
-    Python using the exact bound jaccard(A,B) <= min(|A|,|B|) /
-    max(|A|,|B|) — a true upper bound, so the surviving pair set is
-    identical, but skewed candidate floods (boilerplate bands) shrink
-    inside whole-stage codegen.
+    `skip_est=True` says the est prefilter already ran upstream (in
+    candidate generation); the exact size prune is then skipped. When
+    it is False and `size_col` (distinct-shingle counts from the
+    signature stage) is available, pairs are pruned JVM-side BEFORE
+    content ships to Python using the exact bound jaccard(A,B) <=
+    min(|A|,|B|) / max(|A|,|B|) — a true upper bound, so the surviving
+    pair set is identical, but skewed candidate floods (boilerplate
+    bands) shrink inside whole-stage codegen.
 
     The kernel re-shingles content per batch with a per-task cache and
     id_a co-partitioning (see make_jaccard_udf and the packed-kernel
     design note above)."""
     jac = make_jaccard_udf(cfg.shingle_k)
-    # Small per-doc METADATA (sketches, shingle sizes) broadcasts
-    # explicitly under cfg.est_broadcast so pruning happens map-side.
-    # The CONTENT table never broadcasts — it exceeds any broadcast
-    # budget at real scale and building the broadcast is driver-serial;
-    # its join stays a shuffled equi-join on id (the scan-shaped plan
-    # that survives 100x data).
-    use_bcast = (
-        cfg.resolved_est_broadcast()
-        if metadata_broadcast is None
-        else metadata_broadcast
-    )
-    hint = F.broadcast if use_bcast else (lambda df: df)
+    # Small per-doc METADATA (shingle sizes, verify labels) broadcasts
+    # under metadata_broadcast so pruning happens map-side. The CONTENT
+    # table never broadcasts — it exceeds any broadcast budget at real
+    # scale and building the broadcast is driver-serial; its join stays
+    # a shuffled equi-join on id (the scan-shaped plan that survives
+    # 100x data).
+    hint = F.broadcast if metadata_broadcast else (lambda df: df)
     if contents_b is None:
         contents_b = contents
-    est_ran = skip_est  # upstream candidate generation already filtered
-    if not skip_est and "sig_packed" in contents.columns and cfg.est_margin > 0:
-        pairs = est_prefilter(
-            pairs, contents.select(id_col, "sig_packed"), cfg, id_col,
-            sigs_b=contents_b.select(id_col, "sig_packed"),
-        )
-        est_ran = True
     # The size bound jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|) is EXACT,
     # but it only runs when NO est prefilter did: measured at sf0.1 with
-    # the JIT'd 2-bit est in place (scripts/ab_size_prune.py, best-of-2,
-    # prune_off arm under HIGHER external load), its two extra joins
-    # cost ~25-30% of the whole q14/docs-pipeline wall (4.18 -> 3.08 s,
-    # 7.39 -> 5.68 s) while the est margin already keeps the survivor
-    # stream too clean for the bound to earn its joins back.
+    # the JIT'd 2-bit est in place (round-5 A/B, best-of-2, prune_off
+    # arm under HIGHER external load), its two extra joins cost ~25-30%
+    # of the whole q14/docs-pipeline wall (4.18 -> 3.08 s, 7.39 ->
+    # 5.68 s) while the est margin already keeps the survivor stream
+    # too clean for the bound to earn its joins back.
     have_sizes = (
-        not est_ran and size_col is not None and size_col in contents.columns
+        not skip_est and size_col is not None and size_col in contents.columns
     )
     if have_sizes:
         sa = contents.select(
@@ -409,7 +370,7 @@ def verify_pairs_jaccard(
     # grew ~linearly with the partition count (the stage's 8->32-core
     # scaling was FLAT).
     #
-    # Cluster orientation (cfg.verify_orient): key each pair by a
+    # Cluster orientation: key each pair by a
     # one-round hash-min label so each near-dup COMPONENT's pairs land
     # on one key (components are cliques; a clique's labels collapse to
     # its min id). The legacy (id_a, 4-way id_b salt) key measured a
@@ -426,9 +387,19 @@ def verify_pairs_jaccard(
     # id_a-salted subtasks (mega-clique straggler insurance; skew costs
     # the most exactly where parallelism is widest: 53 -> 94 s at 192k
     # when one hot task landed at full width).
+    #
+    # The machinery (an ids-only localCheckpoint, two small groupBys,
+    # map-side label joins) only amortizes on LONG verify stages:
+    # interleaved 24k-corpus A/B (32 cores) measured the oriented
+    # pipeline ~10% SLOWER (best 10.98 vs 9.83 s), 768k ~2x FASTER on
+    # the isolated stage (best 7.74 vs 14.4 s; BASELINE.md round 5,
+    # "Verify locality: hash-min cluster keying"). So orient exactly
+    # when the row count is KNOWN and the Arrow-task cap's size rule
+    # says the stage is long; an unknown count (q14-style direct
+    # operator calls, which are small) keeps the (id_a, salt-4) key.
     sc = pairs.sparkSession.sparkContext
     ptasks = cfg.python_stage_tasks(sc, approx_rows)
-    orient = cfg.resolved_verify_orient(sc, approx_rows)
+    orient = approx_rows is not None and cfg.python_stage_is_long(sc, approx_rows)
     if orient:
         pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
         nb = pairs.select(

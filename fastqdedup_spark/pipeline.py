@@ -33,7 +33,7 @@ Stage graph (code mode), every arrow a Catalyst-planned exchange:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -207,7 +207,7 @@ def dedup_files(
     files = with_sha256(files)
 
     # The distinct-contents count sizes two static plan choices (the
-    # tail's est_broadcast gate, Arrow-stage task caps). It and the
+    # tail's metadata-broadcast gate, Arrow-stage task caps). It and the
     # input row count ride the stage's own materialization via
     # Dataset.observe (CollectMetrics fires on BOTH materialization
     # paths: localCheckpoint is a withAction and so is the durable
@@ -275,15 +275,12 @@ def cluster_signed(
     columns minus `sha`) orders the rebuilt output rows. Metrics land
     in `ck.metrics`: edges.n on the connected-components input,
     output.files and dissect.* on survivors."""
-    # AUTO est_broadcast resolution (static per run): past
-    # est_broadcast_max_rows the sketch/size joins must run shuffled (a
-    # forced broadcast there is a driver OOM at >50M distinct
-    # contents). cfg itself stays untouched — config_hash (and so
-    # checkpoint keys) is computed from the user-provided config, not
-    # the resolved plan choice.
+    # Metadata-broadcast decision (static per run): past
+    # est_broadcast_max_rows verify's size/label joins must run shuffled
+    # (a forced broadcast there is a driver OOM at >50M distinct
+    # contents).
     eff_broadcast = cfg.resolved_est_broadcast(n_distinct)
     ck.metrics.add("est", "broadcast", float(eff_broadcast))
-    cfg_run = replace(cfg, est_broadcast=eff_broadcast)
     # candidate generation runs on compact 16-byte binary ids (the first
     # 128 bits of the sha), not 64-char hex shas: the band self-join's
     # output is quadratic in band size and each row carries two ids, so
@@ -294,7 +291,7 @@ def cluster_signed(
     # (the nid->sha fan-out join would attach verified edges to both
     # shas and falsely merge unrelated clusters).
     pairs_lazy, _ = minhash_candidate_pairs(
-        signed, cfg_run, id_col="nid", keep_est=cfg.est_autoaccept
+        signed, cfg, id_col="nid", keep_est=cfg.est_autoaccept
     )
     # minhash_candidate_pairs runs the est prefilter only when a packed
     # sketch exists AND est_margin > 0 — mirror that exact condition
@@ -331,10 +328,11 @@ def cluster_signed(
             cand = cand.filter(F.col("est_matches") < hi)
         verified = verify_pairs_jaccard(
             cand.select("id_a", "id_b"),
-            signed.select("nid", "content_norm", "n_shingles", "sig_packed"),
-            cfg_run,
+            signed.select("nid", "content_norm", "n_shingles"),
+            cfg,
             id_col="nid",
             skip_est=est_ran_upstream,
+            metadata_broadcast=eff_broadcast,
             # proxy for the (unknown) borderline-pair count: the
             # whole-pipeline cap A/Bs that calibrated the threshold
             # capped/uncapped both Arrow stages together

@@ -137,24 +137,17 @@ def get_spark(
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # let a child partitioned on a SUBSET of the join keys satisfy
-        # co-partitioning (pre-3.3 behavior): the capped band self-join
-        # salts inside the join key while both sides stay partitioned
-        # on band_hash alone, so AQE reuses one fat exchange instead of
-        # re-shuffling the payload-fat band table per side
-        # (operators/lsh.py — 2.66 GB of the pair stage's shuffle
-        # writes at 768k/32c were these per-side salt repartitions)
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Tungsten execution memory OFF-HEAP: the band self-join's hash
         # builds and the dedup aggregations allocate page arrays via
         # Unsafe instead of on-heap long[] — measured on the isolated
         # 768k/32c pair stage (interleaved, BASELINE.md round 5), the
-        # join stage's GC fell 781 -> 134 core-s (copart) and
-        # ~380-530 -> 64 (legacy) with identical output. The size is a
-        # cap, not a reservation; the on-heap heap can stay moderate
-        # (big heaps were a measured width tax).
+        # join stage's GC fell 781 -> 134 core-s (a co-partitioned
+        # shape) and ~380-530 -> 64 (the shipped salted shape) with
+        # identical output. The size is a cap, not a
+        # reservation; the on-heap heap can stay moderate (big heaps
+        # were a measured width tax).
         .config(
             "spark.memory.offHeap.enabled",
             "false" if os.environ.get("SPARK_GRAFT_OFFHEAP") == "0" else "true",

@@ -20,7 +20,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def child(cores: int, n_files: int, cap: int | None = None) -> None:
+def child(cores: int, n_files: int) -> None:
     import time
 
     from fastqdedup_spark.config import DedupConfig
@@ -32,20 +32,10 @@ def child(cores: int, n_files: int, cap: int | None = None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     files = generate_files(spark, n_files, seed=42).cache()
     files.count()
-    if cap is None:
-        # Arrow/python-stage task cap (scripts/cap_ab.py, BASELINE.md
-        # round 5): each Arrow task is a python worker plus a JVM
-        # serialization thread, so cores-many tasks oversubscribe
-        # ~1.4x. cores//2 won best-of at width 32 in both load regimes
-        # (32.4 vs 44.1 quiet-ish, 35.1 vs 43.7 stormy) and at width 8
-        # (56.0 vs 66.7; weaker — reps split 1-1).
-        cap = max(2, cores // 2)
     # shipped defaults (256-bin est sketch banded over its first 128
-    # bins): the gate measures the pipeline a user actually gets
-    cfg = DedupConfig(
-        shingle_k=7, jaccard_threshold=0.6,
-        python_stage_partitions=cap,
-    )
+    # bins, AUTO Arrow-stage task count): the gate measures the
+    # pipeline a user actually gets
+    cfg = DedupConfig(shingle_k=7, jaccard_threshold=0.6)
     # full warm-up run: the first run in a JVM pays janino compilation,
     # HotSpot JIT, and python-worker spin-up (~2.5x the steady-state
     # wall). A 100 TB job amortizes that once across hours, so the
@@ -69,13 +59,14 @@ def child(cores: int, n_files: int, cap: int | None = None) -> None:
             best, best_load = dt, l0
     print(json.dumps({"cores": cores, "n_files": n_files, "sec": round(best, 2),
                       "files_per_sec": round(n_files / best, 1), "files_out": n_out,
-                      "cap": cap, "load1m": round(best_load, 1)}))
+                      "python_stage_tasks": cfg.python_stage_tasks(
+                          spark.sparkContext, n_files),
+                      "load1m": round(best_load, 1)}))
 
 
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--child":
-        child(int(sys.argv[2]), int(sys.argv[3]),
-              int(sys.argv[4]) if len(sys.argv) > 4 else None)
+        child(int(sys.argv[2]), int(sys.argv[3]))
         return
     n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 24000
     results = {}

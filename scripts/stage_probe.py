@@ -36,7 +36,6 @@ def get_spark_ui(cores: int) -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
@@ -58,8 +57,6 @@ def rest(path: str):
 def main():
     cores = int(sys.argv[1])
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 192_000
-    # optional Arrow/python-stage task cap (scaling_bench uses cores//2)
-    cap = int(sys.argv[3]) if len(sys.argv) > 3 else 0
 
     from fastqdedup_spark.config import DedupConfig
     from fastqdedup_spark.corpus import generate_files
@@ -72,8 +69,7 @@ def main():
     spark.range(cores * 10).repartition(cores).mapInPandas(
         lambda it: it, "id long"
     ).count()
-    cfg = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6,
-                      python_stage_partitions=cap)
+    cfg = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6)
 
     app_id = rest("/applications")[0]["id"]
     before = {s["stageId"] for s in rest(f"/applications/{app_id}/stages")}
@@ -85,6 +81,10 @@ def main():
     wall = time.monotonic() - t0
     print(json.dumps({"cores": cores, "n_files": n_files,
                       "pipeline_wall": round(wall, 2), "files_out": n_out,
+                      # the AUTO Arrow-stage task count for this input size
+                      # (the pipeline sizes it from the distinct count)
+                      "python_stage_tasks": cfg.python_stage_tasks(
+                          spark.sparkContext, n_files),
                       "load_before": round(l0, 1),
                       "load_after": round(os.getloadavg()[0], 1)}),
           flush=True)

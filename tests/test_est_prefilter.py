@@ -16,9 +16,9 @@ from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.minhash import minhash_batch
 from fastqdedup_spark.operators.verify import (
     est_bin_match_prob,
+    est_filter_carried,
     est_jaccard_matches,
     est_min_matches,
-    est_prefilter,
 )
 
 
@@ -68,7 +68,9 @@ def test_threshold_mapping_corrects_quarter_bias():
 
 def test_prefilter_keeps_true_pairs_drops_background(spark):
     """End-to-end through real signatures: planted near-dups (j ~ 0.9)
-    survive; unrelated texts (j ~ 0) are dropped."""
+    survive; unrelated texts (j ~ 0) are dropped. The pairs carry both
+    sketches as payload columns, the shape the band join hands to
+    est_filter_carried."""
     cfg = DedupConfig(shingle_k=5, num_perm=128, jaccard_threshold=0.8, est_margin=0.2)
     rng = np.random.default_rng(11)
     base = [
@@ -78,65 +80,37 @@ def test_prefilter_keeps_true_pairs_drops_background(spark):
     texts = base + near
     sig = minhash_batch(texts, cfg.shingle_k, cfg.num_perm, cfg.seed)
     packed = _pack_2bit(sig, cfg.num_perm)
-    sigs = spark.createDataFrame(
-        [(i, packed[i].tolist()) for i in range(len(texts))],
-        "id long, sig_packed array<bigint>",
-    )
     true_pairs = [(i, i + 20) for i in range(20)]
     bg_pairs = [(i, j) for i in range(20) for j in range(i + 1, 20)]
-    pairs = spark.createDataFrame(true_pairs + bg_pairs, "id_a long, id_b long")
+    raw = spark.createDataFrame(
+        [(a, b, packed[a].tolist(), packed[b].tolist())
+         for a, b in true_pairs + bg_pairs],
+        "id_a long, id_b long, "
+        "sig_packed_a array<bigint>, sig_packed_b array<bigint>",
+    )
     kept = {
         (r["id_a"], r["id_b"])
-        for r in est_prefilter(pairs, sigs, cfg, "id").collect()
+        for r in est_filter_carried(raw, cfg).collect()
     }
     assert set(true_pairs) <= kept
     assert not (set(bg_pairs) & kept)
 
 
 def test_est_broadcast_auto_resolution():
-    """AUTO (None) broadcasts only while the known distinct count fits
-    est_broadcast_max_rows; unknown count broadcasts; an explicit
-    True/False always wins (VERDICT r4 #7)."""
-    auto = DedupConfig()
-    assert auto.est_broadcast is None
-    assert auto.resolved_est_broadcast() is True                  # unknown
-    assert auto.resolved_est_broadcast(1_000_000) is True
-    assert auto.resolved_est_broadcast(60_000_000) is False       # > 50M
-    pinned_on = DedupConfig(est_broadcast=True)
-    assert pinned_on.resolved_est_broadcast(60_000_000) is True
-    pinned_off = DedupConfig(est_broadcast=False)
-    assert pinned_off.resolved_est_broadcast(10) is False
+    """The metadata broadcast holds only while the known distinct count
+    fits est_broadcast_max_rows; an unknown count broadcasts
+    (VERDICT r4 #7)."""
+    cfg = DedupConfig()
+    assert cfg.resolved_est_broadcast() is True                  # unknown
+    assert cfg.resolved_est_broadcast(1_000_000) is True
+    assert cfg.resolved_est_broadcast(50_000_000) is True         # == max
+    assert cfg.resolved_est_broadcast(60_000_000) is False        # > 50M
 
 
-def test_est_broadcast_off_plans_shuffled_joins(spark):
-    """est_broadcast=False must remove every BroadcastExchange from the
-    prefilter plan (the >50M-distinct-contents shape: sketch joins run
-    as shuffled equi-joins instead of a driver-OOM broadcast)."""
-    rows = [(i, [0, 0, 0, 0]) for i in range(8)]
-    sigs = spark.createDataFrame(rows, "id long, sig_packed array<bigint>")
-    pairs = spark.createDataFrame(
-        [(a, a + 1) for a in range(7)], "id_a long, id_b long"
-    )
-    # disable the size-based auto-broadcast so the plan shows only the
-    # EXPLICIT hint decision (tiny test tables would otherwise
-    # broadcast either way; at >50M rows the statistics do this)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        on = est_prefilter(pairs, sigs, DedupConfig(est_broadcast=True), "id")
-        off = est_prefilter(pairs, sigs, DedupConfig(est_broadcast=False), "id")
-        on_plan = on._jdf.queryExecution().executedPlan().toString()
-        off_plan = off._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "BroadcastExchange" in on_plan
-    assert "BroadcastExchange" not in off_plan
-
-
-def test_carry_transport_matches_probe(spark):
-    """est_transport="carry" (sketch rides the band shuffle) must yield
-    the IDENTICAL candidate pair set and est_matches values as "probe"
-    (sketch joined per id) — transport is a physical choice only."""
+def test_carried_est_matches_numpy(spark):
+    """The sketch rides the band shuffle as a payload column: every
+    candidate pair's carried est_matches must equal the matching-bin
+    count recomputed in numpy from the two docs' 2-bit sketches."""
     from fastqdedup_spark.corpus import generate_files
     from fastqdedup_spark.functions.minhash import (
         add_signature_columns,
@@ -153,20 +127,26 @@ def test_carry_transport_matches_probe(spark):
         .withColumn("content_norm", normalize_content("content"))
         .select("sha", "content_norm")
     )
-    base = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6)
-    signed = add_signature_columns(distinct, base).localCheckpoint(eager=True)
-    got = {}
-    for mode in ("probe", "carry"):
-        cfg = DedupConfig(
-            shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6,
-            est_transport=mode,
-        )
-        pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="sha", keep_est=True)
-        got[mode] = sorted(
-            (r.id_a, r.id_b, r.est_matches) for r in pairs.collect()
-        )
-    assert len(got["probe"]) > 0
-    assert got["probe"] == got["carry"]
+    cfg = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6)
+    signed = add_signature_columns(distinct, cfg).localCheckpoint(eager=True)
+    sketch = {
+        r.sha: np.array(r.sig_packed, dtype=np.int64).view(np.uint64)
+        for r in signed.select("sha", "sig_packed").collect()
+    }
+
+    def matches(a, b):
+        x = sketch[a] ^ sketch[b]
+        lane = (x | (x >> np.uint64(1))) & np.uint64(0x5555555555555555)
+        diff = sum(bin(int(w)).count("1") for w in lane)
+        return cfg.num_perm - diff
+
+    pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="sha", keep_est=True)
+    rows = pairs.collect()
+    assert len(rows) > 0
+    for r in rows:
+        assert r.est_matches == matches(r.id_a, r.id_b), (r.id_a, r.id_b)
+    floor = est_min_matches(cfg, cfg.jaccard_threshold - cfg.est_margin)
+    assert min(r.est_matches for r in rows) >= floor
 
 
 def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
@@ -225,7 +205,7 @@ def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
 
 
 def test_margin_zero_drops_carried_sketch_from_band_plan(spark):
-    """est_margin=0 disables the prefilter, so the carry transport must
+    """est_margin=0 disables the prefilter, so candidate generation must
     NOT ship the 8-long sketch through the band exchange (a ~2.3x
     fattening nothing reads). The executed plan's band explode should
     carry sig_packed only when the prefilter will consume it."""
@@ -249,7 +229,7 @@ def test_margin_zero_drops_carried_sketch_from_band_plan(spark):
     def band_plan(margin):
         cfg = DedupConfig(
             shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6,
-            est_transport="carry", est_margin=margin,
+            est_margin=margin,
         )
         signed = add_signature_columns(distinct, cfg)
         pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="sha")

@@ -40,53 +40,18 @@ def test_salting_handles_all_pairs_across_buckets(spark):
     assert len({(r.id_a, r.id_b) for r in rows}) == len(rows)
 
 
-def test_copartitioned_band_join_single_exchange(spark):
-    """Capped schemes join CO-PARTITIONED on band_hash with the bucket
-    salt _v in the JOIN KEY only: the executed plan must contain NO
-    exchange keyed on _v (the payload-fat band table crosses the wire
-    once; sizes travel on a thin band_hash-only shuffle), no sort (the
-    windowless sizes join replaced the window), and the second side
-    must reuse the first side's exchanges. The legacy path
-    (copartition_pairs=False) must produce the identical pair set
-    through its two explicit salt repartitions."""
+def test_default_band_join_uses_salted_exchanges(spark):
+    """The capped-scheme plan is the salted shape: both sides
+    repartitioned explicitly on the salted (band_hash, _v) key — the
+    measured single-box winner (BASELINE.md round 5, "Knob A/B: the
+    copart pair stage pays ~30% on-box": co-partitioning was ~30%
+    slower end-to-end at 768k/32c). Salting must still yield every pair
+    of the bands under the cap."""
     bands = _band_rows(spark, [(1, 60), (2, 3), (4, 40)])
-    cfg = DedupConfig(
-        pairs_per_task=300, band_freq_cap=100, copartition_pairs=True
-    )  # S>1 for bands 1,4; copart opted in (cluster-scale knob, off by default)
-    legacy_cfg = DedupConfig(
-        pairs_per_task=300, band_freq_cap=100, copartition_pairs=False
-    )
+    cfg = DedupConfig(pairs_per_task=300, band_freq_cap=100)  # S>1 for bands 1,4
     pairs, _ = _pairs_from_bands(bands, "key", cfg, cap=cfg.band_freq_cap)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    legacy, _ = _pairs_from_bands(
-        bands, "key", legacy_cfg, cap=legacy_cfg.band_freq_cap
-    )
-    assert got == {(r.id_a, r.id_b) for r in legacy.collect()}
     assert len(got) == 60 * 59 // 2 + 3 + 40 * 39 // 2
-
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    # the adaptive dump appends the pre-execution "Initial Plan" (which
-    # always shows both exchanges) — assert on the executed Final Plan
-    plan = plan.split("== Initial Plan ==")[0]
-    import re
-
-    assert not re.search(r"Exchange hashpartitioning\([^)]*_v", plan), plan
-    assert plan.count("ReusedExchange") >= 2, plan
-    assert "Window" not in plan and not re.search(r"\bSort\b", plan), plan
-
-
-def test_default_band_join_uses_salted_exchanges(spark):
-    """The DEFAULT capped-scheme plan is the legacy shape: both sides
-    repartitioned explicitly on the salted (band_hash, _v) key — the
-    measured single-box winner (scripts/knob_ab.py, BASELINE.md round
-    5: co-partitioning was ~30% slower end-to-end at 768k/32c). This
-    pins the default so a future copart re-adoption must be explicit
-    (and re-measured)."""
-    bands = _band_rows(spark, [(1, 60), (4, 40)])
-    cfg = DedupConfig(pairs_per_task=300, band_freq_cap=100)
-    assert not cfg.copartition_pairs
-    pairs, _ = _pairs_from_bands(bands, "key", cfg, cap=cfg.band_freq_cap)
-    pairs.collect()
     import re
 
     plan = pairs._jdf.queryExecution().executedPlan().toString()

@@ -105,8 +105,6 @@ def test_python_stage_tasks_auto_is_half_the_slots(spark):
     sc = spark.sparkContext
     auto = DedupConfig().python_stage_tasks(sc)
     assert auto == max(2, sc.defaultParallelism // 2)
-    pinned = DedupConfig(python_stage_partitions=7).python_stage_tasks(sc)
-    assert pinned == 7
 
 
 def test_python_stage_tasks_cap_is_size_aware(spark):
@@ -127,19 +125,14 @@ def test_python_stage_tasks_cap_is_size_aware(spark):
     )
     # unknown size -> conservative cap (status quo)
     assert cfg.python_stage_tasks(sc, approx_rows=None) == max(2, width // 2)
-    # an explicit pin always wins
-    assert (
-        DedupConfig(python_stage_partitions=7).python_stage_tasks(sc, approx_rows=1)
-        == 7
-    )
 
 
 def test_verify_metadata_broadcast_override(spark):
     """metadata_broadcast=False (the incremental path: contents include
     index survivors, unbounded by the increment) must leave the size
     relations UNHINTED so AQE sizes the join at runtime — a forced
-    broadcast hint overrides Spark's own size guard. None keeps the
-    batch pipeline's static auto-broadcast."""
+    broadcast hint overrides Spark's own size guard. The default (True)
+    hints them as broadcasts."""
     from fastqdedup_spark.config import DedupConfig
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 

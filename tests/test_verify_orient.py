@@ -1,7 +1,12 @@
-"""Cluster-oriented (hash-min) verify partitioning (cfg.verify_orient)
-changes the partitioning KEY only: the verified pair set and jaccard
-values must be byte-identical to the legacy (id_a, salt-4) layout,
-including when a key crosses the verify_pairs_per_key salt budget."""
+"""Cluster-oriented (hash-min) verify partitioning changes the
+partitioning KEY only: the verified pair set and jaccard values must be
+byte-identical to the legacy (id_a, salt-4) layout, including when a key
+crosses the verify_pairs_per_key salt budget.
+
+Orientation is AUTO: it engages when the caller passes a known row
+count that the Arrow-task size rule calls long. The tests reach the
+oriented side with python_stage_min_rows_per_task=1 plus a known
+approx_rows, and the legacy side with approx_rows=None."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -31,17 +36,26 @@ def _pairs(spark, ids):
     return spark.createDataFrame(rows, "id_a long, id_b long")
 
 
-def _run(spark, corpus, orient: bool, hot_degree: int = 4096):
+def _verify(spark, corpus, pairs, orient: bool, hot_degree: int = 4096):
     cfg = DedupConfig(
         shingle_k=5, jaccard_threshold=0.5, est_margin=0.0,
-        verify_orient=orient, verify_pairs_per_key=hot_degree,
-        python_stage_partitions=5,
+        verify_pairs_per_key=hot_degree, python_stage_min_rows_per_task=1,
     )
-    ids = [r.id for r in corpus.select("id").collect()]
     out = verify_pairs_jaccard(
-        _pairs(spark, ids), corpus, cfg,
+        pairs, corpus, cfg,
         id_col="id", content_col="content_norm", size_col=None,
+        # one row per full-width task is "long" at min_rows_per_task=1
+        approx_rows=spark.sparkContext.defaultParallelism if orient else None,
     )
+    # the hash-min key exists only on the oriented plan
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert ("_key" in plan) == orient, plan
+    return out
+
+
+def _run(spark, corpus, orient: bool, hot_degree: int = 4096):
+    ids = [r.id for r in corpus.select("id").collect()]
+    out = _verify(spark, corpus, _pairs(spark, ids), orient, hot_degree)
     return sorted(
         (r.id_a, r.id_b, round(r.jaccard, 12)) for r in out.collect()
     )
@@ -63,13 +77,9 @@ def test_orient_mega_key_salted_same_result(spark, hub_corpus):
 
 
 def test_orient_empty_pairs(spark):
-    cfg = DedupConfig(shingle_k=5, jaccard_threshold=0.5, est_margin=0.0,
-                      verify_orient=True, python_stage_partitions=2)
     corpus = _mk(spark, [(1, "alpha beta"), (2, "gamma delta")])
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    out = verify_pairs_jaccard(pairs, corpus, cfg, id_col="id",
-                               content_col="content_norm", size_col=None)
-    assert out.count() == 0
+    assert _verify(spark, corpus, pairs, orient=True).count() == 0
 
 
 def test_mega_key_salt_varies_on_star_hubs(spark):
