@@ -323,7 +323,7 @@ def q14_minhash_near_dup(spark, sf):
     # (~0.7 s driver gap per fresh plan). Mirrors the pipeline, which
     # checkpoints its signatures stage for the same reason.
     signed = add_signature_columns(files, cfg).localCheckpoint(eager=True)
-    pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="id")
+    pairs = minhash_candidate_pairs(signed, cfg, id_col="id")
     verified = verify_pairs_jaccard(
         pairs, signed.select("id", "content_norm", "n_shingles"), cfg, id_col="id", skip_est=True
     )

@@ -48,11 +48,6 @@ class MetricsCollector:
     def add(self, stage: str, metric: str, value: float) -> None:
         self.rows.append((stage, metric, float(value)))
 
-    def add_row(self, stage: str, row: dict) -> None:
-        for k, v in row.items():
-            if v is not None:
-                self.add(stage, k, v)
-
     def observe(self, df: DataFrame, metrics: dict[str, Column]) -> DataFrame:
         """`df` with `metrics` ("stage.metric" -> aggregate Column)
         computed by whatever action materializes it: zero extra Spark

@@ -262,7 +262,7 @@ def simhash_near_dup_pairs(
 
     # hamming is deterministic per pair, so carrying it through the
     # distinct leaves the pair set unchanged
-    pairs, _ = _pairs_from_bands(
+    pairs = _pairs_from_bands(
         bands, "nid", cfg, cap=None, prefilter=verify_inline,
         extra_cols=["hamming"],
         payload_cols=["simhash"] if carry else None,

@@ -20,11 +20,11 @@ explode -> self-equi-join shape:
 Skew handling (north_rule: explicit salting/repartition for hot bands):
 - MinHash mega-bands (shared license boilerplate) are frequency-capped:
   a band with f members emits f^2/2 pairs, so bands above
-  `band_freq_cap` are dropped and COUNTED in the metrics rather than
-  silently exploding the shuffle; their members still pair through
-  their other b-1 bands. The EXACT schemes (pigeonhole/deletion) are
-  NEVER capped — dropping a band there loses true pairs — oversized
-  exact bands are salted across bucket pairs instead.
+  `band_freq_cap` are dropped rather than exploding the shuffle; their
+  members still pair through their other b-1 bands. The EXACT schemes
+  (pigeonhole/deletion) are NEVER capped — dropping a band there loses
+  true pairs — oversized exact bands are salted across bucket pairs
+  instead.
 - every scheme's band self-join has ONE shape: band sizes attach via a
   count-over-partition window on the band_hash partitioning, each band
   splits into size-adaptive salt buckets, and both join sides
@@ -50,9 +50,9 @@ def _pairs_from_bands(
     bands: DataFrame, id_col: str, cfg: DedupConfig, prefilter=None,
     cap: int | None = None, extra_cols: list[str] | None = None,
     payload_cols: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(id, band_hash) -> distinct (id_a, id_b) with id_a < id_b, plus a
-    one-row metrics DataFrame. The generic tail of all three schemes.
+) -> DataFrame:
+    """(id, band_hash) -> distinct (id_a, id_b) with id_a < id_b. The
+    generic tail of all three schemes.
     `prefilter` (raw pairs -> pairs) runs BEFORE the distinct, while the
     pair stream is still map-side.
 
@@ -68,24 +68,6 @@ def _pairs_from_bands(
     `payload_cols` names columns of `bands` to carry through the band
     shuffle onto both join sides (as `<col>_a` / `<col>_b`), so a
     prefilter can read them straight off the streamed join output."""
-    sizes = bands.groupBy("band_hash").agg(F.count(F.lit(1)).alias("band_size"))
-    capped_expr = (
-        F.sum(F.when(F.col("band_size") > cap, 1).otherwise(0))
-        if cap is not None
-        else F.lit(0)
-    )
-    # KNOWN COST for whoever collects this df: it re-derives
-    # bands+sizes (one explode + shuffle) for 3 scalars. dedup_keys
-    # collects it (the FASTQ path's bands.* metrics); dedup_files does
-    # not, so the code-domain CLI reports no bands.*. The
-    # MetricsCollector.observe ride was considered and deliberately NOT
-    # wired: it would insert a CollectMetrics node into the pair-stage
-    # plan, whose exchange-reuse shape the scaling work tuned.
-    metrics = sizes.agg(
-        F.count(F.lit(1)).alias("n_bands"),
-        F.max("band_size").alias("max_band_size"),
-        capped_expr.alias("capped_bands"),
-    )
     npart = bands.sparkSession.sparkContext.defaultParallelism
     # SIZE-ADAPTIVE bucket-pair salting (north_rule skew handling): a
     # band with f members emits f^2/2 pairs in ONE reducer under a plain
@@ -158,13 +140,13 @@ def _pairs_from_bands(
     if prefilter is not None:
         raw = prefilter(raw)
     out_cols = ["id_a", "id_b"] + (extra_cols or [])
-    return raw.select(*out_cols).distinct(), metrics
+    return raw.select(*out_cols).distinct()
 
 
 def minhash_candidate_pairs(
     signed: DataFrame, cfg: DedupConfig, id_col: str = "sha",
     keep_est: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """`signed` must carry `band_hash: array<bigint>` (from
     functions.minhash.add_signature_columns). Band index is already
     baked into the hash's high bits, so a flat explode suffices.
@@ -207,23 +189,21 @@ def minhash_candidate_pairs(
         # collapse the expression into a Filter/join-condition blob that
         # HotSpot refuses to JIT (see est_jaccard_matches) — measured
         # 15x slower on the corpus pair stage.
-        pairs, metrics = _pairs_from_bands(
+        pairs = _pairs_from_bands(
             bands, id_col, cfg,
             prefilter=lambda raw: est_filter_carried(raw, cfg, keep_est=True),
             cap=cfg.band_freq_cap,
             extra_cols=["est_matches"],
             payload_cols=["sig_packed"],
         )
-        if not keep_est:
-            pairs = pairs.drop("est_matches")
-        return pairs, metrics
+        return pairs if keep_est else pairs.drop("est_matches")
     bands = signed.select(*band_cols)
     return _pairs_from_bands(bands, id_col, cfg, cap=cfg.band_freq_cap)
 
 
 def pigeonhole_candidate_pairs(
     keys: DataFrame, cfg: DedupConfig, key_col: str = "key", id_col: str = "key"
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Exact Hamming-<=d banding. All JVM-side (no UDF): chunk
     boundaries come from integer arithmetic on length(key); the band
     hash is xxhash64(chunk_index, chunk, length) so unequal-length keys
@@ -244,13 +224,12 @@ def pigeonhole_candidate_pairs(
         F.col("_id"),
         F.xxhash64("c.bi", "c.chunk", "_len").alias("band_hash"),
     )
-    pairs, metrics = _pairs_from_bands(bands.withColumnRenamed("_id", id_col), id_col, cfg)
-    return pairs, metrics
+    return _pairs_from_bands(bands.withColumnRenamed("_id", id_col), id_col, cfg)
 
 
 def deletion_candidate_pairs(
     keys: DataFrame, cfg: DedupConfig, key_col: str = "key", id_col: str = "key"
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Exact edit-<=d banding via the deletion neighborhood (SymSpell):
     explode every string reachable by deleting up to d characters.
     JVM-side for d<=2 via nested transforms; the variant set is

@@ -231,7 +231,7 @@ def cosine_dup_pairs(
     # bucket here is a genuine mass-duplicate cluster whose pairs are
     # real, so it is salted across reducers rather than dropped
     cfg = DedupConfig()
-    candidates, _ = _pairs_from_bands(bands, id_col, cfg, cap=None)
+    candidates = _pairs_from_bands(bands, id_col, cfg, cap=None)
     return _pairwise_cosine_filter(candidates, vecs, threshold, id_col, vec_col)
 
 

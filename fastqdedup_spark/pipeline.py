@@ -1,6 +1,10 @@
 """End-to-end near-duplicate pipelines (SURVEY.md §3 graft lifecycle).
 
-Two entry points sharing the verify/CC/dissect tail:
+Two entry points built from the same operators (banded candidate
+pairs, verify, connected components, dissect) and the same stage
+shapes: candidate pairs and verified edges fuse into the
+connected-components input unless a durable checkpoint dir persists
+them, and every metric rides a materialization that runs anyway.
 
 - `dedup_keys`    — reference-parity mode: short fixed-alphabet keys,
   EXACT Hamming/edit-radius clustering via pigeonhole / deletion
@@ -12,6 +16,11 @@ Two entry points sharing the verify/CC/dissect tail:
   band join -> exact-Jaccard verify -> connected components ->
   dissect -> survivor semi-join, with per-stage metrics and keyed
   checkpoints.
+
+`dedup_keys` and `cluster_signed` below stay two tails rather than one
+function with a caller switch: they differ in id translation (nid ->
+sha), verifier (radius UDF vs exact Jaccard), dissection inputs and
+the output rebuild.
 
 `dedup_files` is a front plus a tail. The front aggregates the input
 by sha (`distinct_contents`: count, content and first-wins rep in one
@@ -81,7 +90,12 @@ def dedup_keys(
     """Reference-parity clustering over a one-row-per-occurrence key
     table. Candidate generation is EXACT (pigeonhole for Hamming,
     deletion neighborhood for edit distance) so recall vs the reference
-    is 1.0 by construction; the verify stage keeps precision exact."""
+    is 1.0 by construction; the verify stage keeps precision exact.
+
+    Stage shapes match cluster_signed's: `counted_keys` materializes,
+    `pairs` and `edges` fuse into the connected-components input (a
+    durable checkpoint dir still persists both), and metrics ride those
+    materializations (edges.n, dissect.*)."""
     ck = StageCheckpointer(spark, cfg)
     counted = ck.stage(
         "counted_keys",
@@ -90,10 +104,9 @@ def dedup_keys(
         ),
     )
     gen = deletion_candidate_pairs if cfg.use_edit_distance else pigeonhole_candidate_pairs
-    pairs_lazy, band_metrics = gen(counted, cfg)
-    pairs = ck.stage("pairs", lambda: pairs_lazy)
+    pairs = ck.stage("pairs", lambda: gen(counted, cfg), fuse=True)
     edges = ck.stage(
-        "edges", lambda: verify_pairs_distance(pairs, counted, cfg)
+        "edges", lambda: verify_pairs_distance(pairs, counted, cfg), fuse=True
     )
     labels, rounds = connected_components(
         edges, cfg.cc_max_iterations, checkpointer=ck
@@ -118,7 +131,6 @@ def dedup_keys(
     deduped = keys.join(
         surv, on=keys[key_col] == surv["__surv_key"], how="left_semi"
     )
-    ck.metrics.add_row("bands", band_metrics.collect()[0].asDict())
     ck.metrics.add("cc", "rounds", rounds)
     ck.write_metrics()
     return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict(), rounds)
@@ -290,7 +302,7 @@ def cluster_signed(
     # where 64 bits had P ~ 0.03 — and a collision here is NOT benign
     # (the nid->sha fan-out join would attach verified edges to both
     # shas and falsely merge unrelated clusters).
-    pairs_lazy, _ = minhash_candidate_pairs(
+    pairs_lazy = minhash_candidate_pairs(
         signed, cfg, id_col="nid", keep_est=cfg.est_autoaccept
     )
     # minhash_candidate_pairs runs the est prefilter only when a packed

@@ -1,15 +1,19 @@
 """FASTQ source + mate zip (reference O1/O2) and the full
 reference-equivalent dedup pipeline over real FASTQ files.
 
-- O1 scan: `read_fastq` parses (possibly gzipped) FASTQ into a
+- O1 scan: `read_fastq` parses (possibly gzipped) FASTQ into a lazy
   DataFrame (record_idx, name, sequence, qualities). Files are the unit
   of parallelism (one task per file via binaryFiles) — the natural
   Spark shape, since FASTQ has no splittable record boundaries when
   gzipped. Ref: file_to_fastq_reader, __init__.py:54-57.
 - O2 zip + mate validation: `zip_fastq` joins R1/R2/UMI tables on
-  record_idx and validates mate names (same name up to a trailing
-  /1 /2 or read-number field). Ref: fastq_files_to_records,
-  __init__.py:170-186 (raises on non-mates).
+  record_idx and materializes the zipped table once, so each input is
+  gunzipped and parsed once per operation: the key counting and the
+  first-wins emission both read that table. The one-file-per-table and
+  mate-name checks (same name up to a trailing /1 /2 or read-number
+  field) are observations on that materialization, raised right after
+  it. Ref: fastq_files_to_records, __init__.py:170-186 (raises on
+  non-mates).
 - `deduplicate_fastq` = the whole reference CLI pipeline
   (__init__.py:209-288): quality filter -> key projection -> cluster ->
   dissect -> survivor first-wins emission, returning surviving records.
@@ -23,7 +27,7 @@ import os
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.quality import average_error_rate_udf
@@ -83,25 +87,32 @@ def _mate_root(name_col: str) -> F.Column:
     return F.regexp_replace(first, r"/[123]$", "")
 
 
-def zip_fastq(tables: list[DataFrame], validate: bool = True) -> DataFrame:
+def zip_fastq(tables: list[DataFrame]) -> DataFrame:
     """Positional zip of parallel FASTQ tables -> one row per record
-    tuple with columns name_i/sequence_i/qualities_i. Raises ValueError
-    if any tuple's names are not mates (ref __init__.py:181-185).
+    tuple with columns name_i/sequence_i/qualities_i, materialized once
+    (eager localCheckpoint): every downstream pass reads it instead of
+    re-parsing the inputs. Raises ValueError, after that
+    materialization and before anything is written, if any tuple's
+    names are not mates (ref __init__.py:181-185).
 
     The positional join key is record_idx, which is only meaningful when
     each table comes from exactly ONE file — a glob-read table repeats
     record_idx per file and would cross-match records — so multi-file
-    tables are rejected up front."""
+    tables are rejected. Both checks are observations on the one
+    materialization (Dataset.observe), not extra scans: min/max
+    file_name on each per-file scan, before the join (so a multi-file
+    table is caught even though the join pairs its records with the
+    wrong mates), and the lowest mismatching tuple on the joined
+    table."""
+    file_obs = []
     out = None
     for i, df in enumerate(tables):
         if "file_name" in df.columns:
-            nf = df.select("file_name").distinct().limit(2).collect()
-            if len(nf) > 1:
-                raise ValueError(
-                    f"zip_fastq table {i} spans multiple files "
-                    f"({nf[0].file_name!r}, {nf[1].file_name!r}, ...); pass "
-                    f"one file per table — record_idx is per-file."
-                )
+            obs = Observation()
+            df = df.observe(
+                obs, F.min("file_name").alias("lo"), F.max("file_name").alias("hi")
+            )
+            file_obs.append((i, obs))
         renamed = df.select(
             "record_idx",
             F.col("name").alias(f"name_{i}"),
@@ -110,7 +121,8 @@ def zip_fastq(tables: list[DataFrame], validate: bool = True) -> DataFrame:
         )
         out = renamed if out is None else out.join(renamed, "record_idx", "inner")
     assert out is not None
-    if validate and len(tables) > 1:
+    mate_obs = None
+    if len(tables) > 1:
         # ANY mate mismatching flags the tuple (OR, not chained AND
         # filters — those only kept rows where EVERY mate mismatched,
         # so a 3-file zip with file 3 out of sync but files 1-2 in
@@ -120,10 +132,25 @@ def zip_fastq(tables: list[DataFrame], validate: bool = True) -> DataFrame:
         for i in range(1, len(tables)):
             c = ~_mate_root("name_0").eqNullSafe(_mate_root(f"name_{i}"))
             mismatch = c if mismatch is None else (mismatch | c)
-        bad = out.filter(mismatch).select("record_idx", "name_0").limit(1).collect()
-        if bad:
+        mate_obs = Observation()
+        out = out.observe(
+            mate_obs,
+            F.min(F.when(mismatch, F.struct("record_idx", "name_0"))).alias("bad"),
+        )
+    out = out.localCheckpoint(eager=True)
+    for i, obs in file_obs:
+        got = obs.get
+        if got["lo"] != got["hi"]:
             raise ValueError(
-                f"records at index {bad[0].record_idx} are not mates: {bad[0].name_0!r}"
+                f"zip_fastq table {i} spans multiple files "
+                f"({got['lo']!r}, {got['hi']!r}, ...); pass "
+                f"one file per table — record_idx is per-file."
+            )
+    if mate_obs is not None:
+        bad = mate_obs.get["bad"]
+        if bad is not None:
+            raise ValueError(
+                f"records at index {bad.record_idx} are not mates: {bad.name_0!r}"
             )
     return out
 
@@ -138,7 +165,8 @@ def deduplicate_fastq(
     """The reference CLI pipeline end-to-end (deduplicate_cluster,
     __init__.py:209-288): returns the surviving record tuples.
 
-    1. zip + validate (O2)
+    1. zip + validate (O2), materialized once: steps 2-5 all read the
+       zipped table
     2. quality filter on the concat of ALL mates' qualities, sliced by
        the same check_slices as the dedup key (O3; ref __init__.py:243-250
        builds `joinfunc(record.qualities for record in record_tuple)` and

@@ -41,7 +41,7 @@ def main():
     ).localCheckpoint(eager=True)
     print(json.dumps({"n_distinct": signed.count()}), flush=True)
 
-    pairs_lazy, _ = minhash_candidate_pairs(signed, cfg, id_col="nid")
+    pairs_lazy = minhash_candidate_pairs(signed, cfg, id_col="nid")
     pairs = pairs_lazy.localCheckpoint(eager=True)
     print(json.dumps({"n_pairs": pairs.count()}), flush=True)
 

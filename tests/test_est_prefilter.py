@@ -140,7 +140,7 @@ def test_carried_est_matches_numpy(spark):
         diff = sum(bin(int(w)).count("1") for w in lane)
         return cfg.num_perm - diff
 
-    pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="sha", keep_est=True)
+    pairs = minhash_candidate_pairs(signed, cfg, id_col="sha", keep_est=True)
     rows = pairs.collect()
     assert len(rows) > 0
     for r in rows:
@@ -186,8 +186,8 @@ def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
         shingle_k=7, num_perm=256, bands=32, band_bins=128,
         jaccard_threshold=0.6, est_margin=0.0,
     )
-    kept, _ = minhash_candidate_pairs(signed, cfg, id_col="sha")
-    raw, _ = minhash_candidate_pairs(signed, unfiltered_cfg, id_col="sha")
+    kept = minhash_candidate_pairs(signed, cfg, id_col="sha")
+    raw = minhash_candidate_pairs(signed, unfiltered_cfg, id_col="sha")
     kept_set = {(r.id_a, r.id_b) for r in kept.collect()}
     raw_rows = raw.collect()
     assert kept_set <= {(r.id_a, r.id_b) for r in raw_rows}
@@ -232,7 +232,7 @@ def test_margin_zero_drops_carried_sketch_from_band_plan(spark):
             est_margin=margin,
         )
         signed = add_signature_columns(distinct, cfg)
-        pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="sha")
+        pairs = minhash_candidate_pairs(signed, cfg, id_col="sha")
         # optimized plan: column pruning has run, so an unread
         # sig_packed survives only in the signer's FIXED MapInPandas
         # output schema (a UDF's schema cannot be pruned) — any other

@@ -243,3 +243,59 @@ def test_deduplicate_fastq_checkpoints_bind_to_input(spark, tmp_path):
     # A at max_distance=1: read1/read2/read4 cluster (Hamming 1, count
     # 2 for ACGTACGT wins), read3 and read5 stand alone
     assert seqs_a == {"ACGTACGT", "TTTTCCCC", "GGGGGGGG"}
+
+
+# Spark jobs one parity CLI run launches on the gz R1/R2 fixture. The
+# zipped table is materialized once (both mate checks ride it as
+# observations) and pairs/edges fuse into connected components, so a
+# validation collect() or a re-parse coming back shows up here.
+FASTQ_JOB_FLOOR = 26
+
+
+def test_fastq_job_floor(spark, tmp_path):
+    from fastqdedup_spark.cli import parity_main
+
+    _write_fastq(tmp_path / "in1.fastq.gz", R1, compress=True)
+    _write_fastq(tmp_path / "in2.fastq.gz", R2, compress=True)
+    o1, o2 = str(tmp_path / "out1.fastq.gz"), str(tmp_path / "out2.fastq.gz")
+    sc = spark.sparkContext
+    group = "test-fastq-job-floor"
+    sc.setJobGroup(group, "one parity run")
+    try:
+        parity_main([
+            str(tmp_path / "in1.fastq.gz"), str(tmp_path / "in2.fastq.gz"),
+            "-o", o1, "-o", o2, "-d", "1", "-c", "directional",
+        ])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    with gzip.open(o1, "rt") as f:
+        assert f.read().count("\n") == 3 * 4
+    assert n_jobs <= FASTQ_JOB_FLOOR
+
+
+@pytest.mark.parametrize("case", ["not mates", "multiple files"])
+def test_parity_cli_failed_check_writes_nothing(spark, tmp_path, case):
+    """The mate checks fire after the zipped table materializes, but
+    still before write_fastq opens any output."""
+    from fastqdedup_spark.cli import parity_main
+
+    if case == "not mates":
+        _write_fastq(tmp_path / "r1.fastq.gz", R1, compress=True)
+        _write_fastq(
+            tmp_path / "r2.fastq.gz", [("OTHER/2", "ACGT", "IIII")] + R2[1:],
+            compress=True,
+        )
+        r1 = str(tmp_path / "r1.fastq.gz")
+    else:
+        _write_fastq(tmp_path / "r1a.fastq.gz", R1[:2], compress=True)
+        _write_fastq(tmp_path / "r1b.fastq.gz", R1[2:4], compress=True)
+        _write_fastq(tmp_path / "r2.fastq.gz", R2[:2], compress=True)
+        r1 = str(tmp_path / "r1*.fastq.gz")
+    o1, o2 = tmp_path / "out1.fastq.gz", tmp_path / "out2.fastq.gz"
+    with pytest.raises(ValueError, match=case):
+        parity_main([
+            r1, str(tmp_path / "r2.fastq.gz"), "-o", str(o1), "-o", str(o2),
+            "-d", "1",
+        ])
+    assert not o1.exists() and not o2.exists()

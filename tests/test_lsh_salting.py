@@ -18,8 +18,8 @@ def test_salted_pairs_equal_plain_pairs(spark):
     bands = _band_rows(spark, [(1, 150), (2, 3), (3, 500)])
     plain_cfg = DedupConfig(pairs_per_task=10**9, band_freq_cap=200)  # S=1 everywhere
     salted_cfg = DedupConfig(pairs_per_task=500, band_freq_cap=200)   # S=45 for band 1
-    plain, _ = _pairs_from_bands(bands, "key", plain_cfg, cap=plain_cfg.band_freq_cap)
-    salted, _ = _pairs_from_bands(bands, "key", salted_cfg, cap=salted_cfg.band_freq_cap)
+    plain = _pairs_from_bands(bands, "key", plain_cfg, cap=plain_cfg.band_freq_cap)
+    salted = _pairs_from_bands(bands, "key", salted_cfg, cap=salted_cfg.band_freq_cap)
     p = {(r.id_a, r.id_b) for r in plain.collect()}
     q = {(r.id_a, r.id_b) for r in salted.collect()}
     assert p == q
@@ -34,7 +34,7 @@ def test_salting_handles_all_pairs_across_buckets(spark):
     final distinct, no losses) even when bucket(a) > bucket(b)."""
     bands = _band_rows(spark, [(7, 80)])
     cfg = DedupConfig(pairs_per_task=1000, band_freq_cap=100)  # S=7
-    pairs, _ = _pairs_from_bands(bands, "key", cfg, cap=cfg.band_freq_cap)
+    pairs = _pairs_from_bands(bands, "key", cfg, cap=cfg.band_freq_cap)
     rows = pairs.collect()
     assert len(rows) == 80 * 79 // 2
     assert len({(r.id_a, r.id_b) for r in rows}) == len(rows)
@@ -49,7 +49,7 @@ def test_default_band_join_uses_salted_exchanges(spark):
     of the bands under the cap."""
     bands = _band_rows(spark, [(1, 60), (2, 3), (4, 40)])
     cfg = DedupConfig(pairs_per_task=300, band_freq_cap=100)  # S>1 for bands 1,4
-    pairs, _ = _pairs_from_bands(bands, "key", cfg, cap=cfg.band_freq_cap)
+    pairs = _pairs_from_bands(bands, "key", cfg, cap=cfg.band_freq_cap)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert len(got) == 60 * 59 // 2 + 3 + 40 * 39 // 2
     import re
@@ -66,9 +66,8 @@ def test_exact_schemes_never_capped(spark):
     survives."""
     bands = _band_rows(spark, [(3, 500)])  # 500 members >> cap of 200
     cfg = DedupConfig(pairs_per_task=20_000, band_freq_cap=200)  # S=13
-    pairs, metrics = _pairs_from_bands(bands, "key", cfg)  # cap=None default
+    pairs = _pairs_from_bands(bands, "key", cfg)  # cap=None default
     assert pairs.count() == 500 * 499 // 2
-    assert metrics.collect()[0].capped_bands == 0
 
 
 def test_pigeonhole_recall_above_cap(spark):
@@ -82,7 +81,7 @@ def test_pigeonhole_recall_above_cap(spark):
             "ATAA", "AACA", "AAGA", "AATA", "AAAC", "AAAG"]
     df = spark.createDataFrame([(k,) for k in keys], "key string")
     cfg = DedupConfig(max_distance=1, band_freq_cap=3, pairs_per_task=10)
-    pairs, _ = pigeonhole_candidate_pairs(df, cfg)
+    pairs = pigeonhole_candidate_pairs(df, cfg)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     # candidate recall: every true Hamming<=1 pair must be present
     from fastqdedup_spark.oracle import oracle_pairs
