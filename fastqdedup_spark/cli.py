@@ -35,8 +35,12 @@ logger = logging.getLogger("fastqdedup_spark")
 
 def argument_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="fastqdedup-spark")
-    p.add_argument("--input", required=True, help="Iceberg table or parquet path")
-    p.add_argument("--output", required=True)
+    p.add_argument("--input", required=True,
+                   help="parquet path (anything containing '/') or Iceberg "
+                        "table identifier")
+    p.add_argument("--output", required=True,
+                   help="parquet path (anything containing '/') or Iceberg "
+                        "table identifier")
     p.add_argument("--shingle-k", type=int, default=7)
     p.add_argument("--num-perm", type=int, default=256)
     p.add_argument("--bands", type=int, default=32)

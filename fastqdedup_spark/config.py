@@ -87,7 +87,10 @@ class DedupConfig:
     # between the measured 24k-files loss (~300 rows/task, uncapped
     # wins 15%) and 192k win (~2.3k rows/task, capped wins 25%). The
     # same rule, on a KNOWN row count only, switches verify to
-    # hash-min cluster keying (operators/verify.py).
+    # hash-min cluster keying (operators/verify.py). It also gates the
+    # fan-out itself: an Arrow stage whose KNOWN row count is below one
+    # task's worth (this many rows) skips the repartition and runs in
+    # the partitions its input already has (python_stage_fans_out).
     python_stage_min_rows_per_task: int = 1000
     # broadcast per-distinct-doc METADATA tables (shingle sizes, the
     # hash-min verify labels) into the verify joins so pruning happens
@@ -195,6 +198,17 @@ class DedupConfig:
         return (
             approx_rows is None
             or approx_rows / width >= self.python_stage_min_rows_per_task
+        )
+
+    def python_stage_fans_out(self, approx_rows: float | None = None) -> bool:
+        """Should an Arrow stage repartition to python_stage_tasks
+        before it runs? Not when its known row count is below one
+        task's worth (python_stage_min_rows_per_task): the exchange and
+        the python workers it feeds then cost more than the rows. An
+        unknown count keeps the fan-out."""
+        return (
+            approx_rows is None
+            or approx_rows >= self.python_stage_min_rows_per_task
         )
 
     def resolved_est_broadcast(self, known_distinct: float | None = None) -> bool:

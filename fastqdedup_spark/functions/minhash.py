@@ -244,7 +244,8 @@ def add_signature_columns(
     itself is folded straight into band hashes — the full signature
     array never ships through a shuffle unless requested.
     `approx_rows` (when the caller knows it) sizes the Arrow-stage
-    task cap — see DedupConfig.python_stage_tasks."""
+    task cap — see DedupConfig.python_stage_tasks — and, below one
+    task's worth of rows, skips the fan-out (python_stage_fans_out)."""
     in_cols = df.columns
     if "content_norm" not in in_cols:
         df = df.withColumn("content_norm", normalize_content("content"))
@@ -256,10 +257,12 @@ def add_signature_columns(
     band_bins = cfg.resolved_band_bins  # leading bins folded into bands
     # CPU-bound Python stage: AQE coalesces by BYTES and would starve it
     # down to a few cores — fan back out to the python-stage task count
-    # first (half the slots by default, see DedupConfig).
-    df = df.repartition(
-        cfg.python_stage_tasks(df.sparkSession.sparkContext, approx_rows)
-    )
+    # first (half the slots by default, see DedupConfig). A known-short
+    # stage signs in the partitions it already has.
+    if cfg.python_stage_fans_out(approx_rows):
+        df = df.repartition(
+            cfg.python_stage_tasks(df.sparkSession.sparkContext, approx_rows)
+        )
 
     def sign_chunk(texts):
         """shingle -> OPH -> n_unique for a CACHE-RESIDENT row chunk."""

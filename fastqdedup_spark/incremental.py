@@ -45,6 +45,13 @@ graft-only capability mandated by the 100 TB regime, not a port.
   tier 1, the signer (its fresh rows only), tier 3's output rows and
   the append's fingerprints; the signed fresh contents feed the near
   probe, tier 3's clustering and the append's survivor state.
+- plan shapes follow the counts the increment has already observed:
+  the tier-1 hits (old shas seen again) are not pinned but broadcast
+  inside the signer's plan, the semi-joins that keep tier-3 survivors
+  (the output rows, the append's survivor state) broadcast the
+  survivor keys when the observed survivor count fits
+  cfg.incremental_broadcast_max_rows, and Arrow stages whose known
+  row count is under one task's worth skip their fan-out exchange.
 - the OLD side is never broadcast, never collected, and only ever
   SCANNED: the exact tier streams the fingerprint table once against a
   broadcast of the new batch's shas; the near tier streams the index's
@@ -101,6 +108,7 @@ from fastqdedup_spark.pipeline import (
     dedup_files,
     distinct_contents,
     sign_contents,
+    survivor_shas,
 )
 
 # The index tables' on-disk schemas: append() writes exactly these
@@ -160,14 +168,20 @@ def derived_batch_id(cfg: DedupConfig, files: DataFrame | None = None) -> str:
         return hashlib.sha256(cfg.input_id.encode()).hexdigest()[:16]
     if files is None:
         raise ValueError("derived_batch_id needs cfg.input_id or the batch itself")
-    row = files.agg(
+    key = "|".join(str(v) for v in sha_fingerprint(files))
+    return hashlib.sha256(key.encode()).hexdigest()[:16]
+
+
+def sha_fingerprint(df: DataFrame) -> tuple:
+    """Order-insensitive content fingerprint of a `sha` column: (count,
+    crc32-sum, min, max), one aggregation job over `df`."""
+    row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.crc32("sha")).alias("s"),
         F.min("sha").alias("lo"),
         F.max("sha").alias("hi"),
     ).collect()[0]
-    key = f"{row['n']}|{row['s']}|{row['lo']}|{row['hi']}"
-    return hashlib.sha256(key.encode()).hexdigest()[:16]
+    return (row["n"], row["s"], row["lo"], row["hi"])
 
 
 def _batch_id(files: DataFrame, cfg: DedupConfig, explicit: str | None) -> str:
@@ -180,6 +194,10 @@ def _batch_id(files: DataFrame, cfg: DedupConfig, explicit: str | None) -> str:
 @dataclass
 class IncrementalResult:
     deduped: DataFrame        # kept new files (tier-3 survivors, full rows + sha)
+    # dropped_exact and dropped_near are lazy plans over the new files:
+    # every action on either re-reads and re-hashes the input, and one
+    # on dropped_exact also rescans the index fingerprints (nothing
+    # pins the tier-1 hits), so collect them once if they are reused
     dropped_exact: DataFrame  # new files dropped by tier 1 (sha seen before)
     dropped_near: DataFrame   # new files dropped by tier 2 (>= thr vs an index survivor)
     batch: DedupResult        # the within-batch (tier 3) result over the remainder
@@ -417,13 +435,17 @@ def build_index(
     # res.clusters: one row per DISTINCT quality-passed sha, already
     # computed by the pipeline's distinct_contents stage — re-deriving
     # them from `files` would re-scan and re-sha256 the entire corpus
-    # a second time (at 100 TB, the costliest op in the build).
+    # a second time (at 100 TB, the costliest op in the build). The
+    # clusters stage fuses into survivors, so without a checkpoint dir
+    # each read of it re-runs its two label joins over the pinned
+    # signatures: cheap, and accepted over widening DedupResult.
     surv = res.deduped.groupBy("sha").agg(
         F.count(F.lit(1)).alias("cnt"), F.first("content").alias("content")
     )
+    fingerprints = res.clusters.select("sha")
     wrote = index.append(
         batch_id,
-        fingerprints=res.clusters.select("sha"),
+        fingerprints=fingerprints,
         signed_survivors=sign_contents(surv, cfg, None),
     )
     if not wrote:
@@ -435,19 +457,10 @@ def build_index(
         # stored batch's fingerprints against this run's with the same
         # order-insensitive aggregate derived_batch_id uses (one scan
         # of ONE batch's sha table, never the corpus).
-        def _fp(df: DataFrame) -> tuple:
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.crc32("sha")).alias("s"),
-                F.min("sha").alias("lo"),
-                F.max("sha").alias("hi"),
-            ).collect()[0]
-            return (row["n"], row["s"], row["lo"], row["hi"])
-
         stored = spark.read.schema(_FINGERPRINT_SCHEMA).parquet(
             os.path.join(path, "fingerprints", batch_id)
         )
-        if _fp(stored) != _fp(res.clusters.select("sha")):
+        if sha_fingerprint(stored) != sha_fingerprint(fingerprints):
             raise ValueError(
                 f"index at {path} already holds a batch {batch_id!r} built "
                 "from DIFFERENT content; pass a distinct batch_id (or a "
@@ -510,7 +523,11 @@ def dedup_files_incremental(
     that tiers 1-2 let through with the batch pipeline's tail
     (pipeline.cluster_signed). The near probe's band join runs once:
     the candidate pairs are materialized, so the index's band columns
-    are scanned once and its contents once.
+    are scanned once and its contents once. The tier-1 hits are not
+    pinned: they broadcast inside the signer's plan. The survivor
+    semi-joins (the output rows and the append's survivor state)
+    broadcast the survivor keys when the observed survivor count fits
+    cfg.incremental_broadcast_max_rows.
 
     The tier counts in `metrics` (incremental.dropped_exact,
     dropped_near, kept) are file rows, observed on tables that are
@@ -536,9 +553,11 @@ def dedup_files_incremental(
     # re-aggregates the input.
     #
     # hits = old shas that reappear in this batch: bounded by the
-    # batch's distinct count, so it pins (localCheckpoint) into a small
-    # table that every join below can broadcast — without the pin, each
-    # consumer would rescan the fingerprint store.
+    # batch's distinct count, so it broadcasts. It is NOT pinned: its
+    # one materialized consumer is the signer's anti join, where it runs
+    # as a nested broadcast (one fingerprint scan inside the signing
+    # job). dropped_exact stays lazy, so each action on it rescans the
+    # fingerprints.
     #
     # EVERY new-side broadcast here is gated on the same knob as the
     # band join: an increment past incremental_broadcast_max_rows must
@@ -556,10 +575,8 @@ def dedup_files_incremental(
     n_batch = m.as_dict()["incremental.input_distinct"]
     broadcast_new = n_batch <= cfg.incremental_broadcast_max_rows
     bcast = F.broadcast if broadcast_new else (lambda df: df)
-    hits = (
-        index.fingerprints(exclude=bid)
-        .join(bcast(batch_table.select("sha")), "sha", "left_semi")
-        .localCheckpoint(eager=True)
+    hits = index.fingerprints(exclude=bid).join(
+        bcast(batch_table.select("sha")), "sha", "left_semi"
     )
     dropped_exact = new_files.join(bcast(hits), "sha", "left_semi")
 
@@ -651,7 +668,9 @@ def dedup_files_incremental(
         # batch survivors were already signed in signed_new — reuse it
         # (zero extra Arrow passes; cnt from the batch aggregation)
         surv_signed = remainder.join(
-            batch.survivors.select(F.col("key").alias("sha")), "sha", "left_semi"
+            survivor_shas(cfg, batch.survivors, batch.metrics.get("output.files")),
+            "sha",
+            "left_semi",
         )
         index.append(bid, fingerprints=batch_table, signed_survivors=surv_signed)
 

@@ -433,7 +433,10 @@ def verify_pairs_jaccard(
         withv = withv.repartition(
             ptasks, F.col("_key"), mega_key_salt(cfg.verify_pairs_per_key)
         )
-    else:
+    elif cfg.python_stage_fans_out(approx_rows):
+        # a known-short stage (fewer documents than one Arrow task's
+        # worth) verifies in the partitions its pairs already have: the
+        # exchange and its extra python workers cost more than the rows
         withv = withv.repartition(
             ptasks, "id_a", F.pmod(F.xxhash64("id_b"), F.lit(4))
         )

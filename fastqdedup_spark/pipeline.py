@@ -269,6 +269,23 @@ def dedup_files(
     return cluster_signed(ck, cfg, distinct, signed, n_distinct, out_cols)
 
 
+def survivor_shas(
+    cfg: DedupConfig, survivors: DataFrame, n_survivors: float | None
+) -> DataFrame:
+    """The survivors stage's keys as a `sha` column, for the semi-joins
+    that keep one row per survivor. Both sides of those joins are
+    pinned tables with no usable size statistics, so Spark would plan
+    a sort-merge join with two exchanges. When the observed survivor
+    count (output.files) fits incremental_broadcast_max_rows, the same
+    gate the incremental path's new-side broadcasts use, the keys
+    broadcast instead; an unknown count (a resume without persisted
+    metrics) leaves the strategy to AQE."""
+    keys = survivors.select(F.col("key").alias("sha"))
+    if n_survivors is not None and n_survivors <= cfg.incremental_broadcast_max_rows:
+        return F.broadcast(keys)
+    return keys
+
+
 def cluster_signed(
     ck: StageCheckpointer,
     cfg: DedupConfig,
@@ -370,7 +387,10 @@ def cluster_signed(
     # the distinct stage — and only the min-nid->min-sha translation
     # remains as a second join (label-sized output; unmatched
     # singletons keep their own sha via the coalesce, exactly
-    # _fill_singletons' semantics).
+    # _fill_singletons' semantics). Its one consumer is the survivors
+    # stage, so it fuses into that stage's plan (a durable checkpoint
+    # dir still persists it); DedupResult.clusters is that lazy plan
+    # over the pinned signatures and labels.
     clusters = ck.stage(
         "clusters",
         lambda: signed.select("nid", "sha", "cnt")
@@ -385,6 +405,7 @@ def cluster_signed(
         .select(
             "sha", "cnt", F.coalesce("cluster_sha", F.col("sha")).alias("cluster_id")
         ),
+        fuse=True,
     )
     if cfg.dissection in ("canonical", "highest_count"):
         surv_input = clusters.select("cluster_id", F.col("sha").alias("key"), "cnt")
@@ -429,7 +450,9 @@ def cluster_signed(
     # all: the full row is rebuilt from the rep struct + the table's
     # content, so row-per-sha uniqueness is aggregation-guaranteed.
     deduped = distinct.join(
-        survivors.select(F.col("key").alias("sha")), "sha", "left_semi"
+        survivor_shas(cfg, survivors, ck.metrics.as_dict().get("output.files")),
+        "sha",
+        "left_semi",
     ).select(
         *[
             (F.col("content") if c == "content" else F.col(f"rep.{c}")).alias(c)

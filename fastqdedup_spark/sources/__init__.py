@@ -1,9 +1,12 @@
 """Source/sink helpers.
 
-The north_rule input is an Iceberg table of source-code files; the
-Iceberg runtime jars are not in this image, so `read_files_table`
-degrades gracefully: try the Iceberg catalog format first, fall back to
-parquet-at-path (same schema contract either way). Writers mirror that.
+The north_rule input is an Iceberg table of source-code files. A
+location is routed by its form, never by trial and error: a filesystem
+path or URI (anything containing `/`) is parquet at that path, and a
+bare table identifier (`db.table`) goes through the Iceberg catalog,
+whose errors propagate. A failed Iceberg write therefore never turns
+into a local parquet directory named after the table. The schema
+contract is the same either way.
 """
 
 from __future__ import annotations
@@ -56,12 +59,19 @@ def input_fingerprint(location: str, spark: "SparkSession | None" = None) -> str
     return f"{location}|{n}|{total}"
 
 
+def _is_path(location: str) -> bool:
+    """True for a filesystem path or URI (`/` or `://` in it), which
+    reads and writes as parquet; False for a bare catalog identifier,
+    which goes through Iceberg."""
+    return "/" in location
+
+
 def read_files_table(spark: SparkSession, location: str) -> DataFrame:
-    """Iceberg table name or parquet path -> files DataFrame."""
-    try:
-        df = spark.read.format("iceberg").load(location)
-    except Exception:
+    """Iceberg table identifier or parquet path -> files DataFrame."""
+    if _is_path(location):
         df = spark.read.parquet(location)
+    else:
+        df = spark.read.format("iceberg").load(location)
     missing = set(FILES_COLUMNS) - set(df.columns)
     if missing:
         raise ValueError(f"files table at {location} missing columns: {missing}")
@@ -71,16 +81,17 @@ def read_files_table(spark: SparkSession, location: str) -> DataFrame:
 
 
 def write_table(df: DataFrame, location: str, mode: str = "overwrite") -> None:
-    """`mode` must hold on BOTH paths: the Iceberg writeTo API has no
-    mode() — createOrReplace() always replaces, so an "append" request
-    routed through it would silently drop the table's existing rows."""
-    try:
-        if mode == "append":
-            df.writeTo(location).append()
-        else:
-            df.writeTo(location).createOrReplace()
-    except Exception:
+    """Parquet at a path, or an Iceberg table for a bare identifier
+    (see _is_path). `mode` must hold on BOTH paths: the Iceberg writeTo
+    API has no mode() — createOrReplace() always replaces, so an
+    "append" request routed through it would silently drop the table's
+    existing rows."""
+    if _is_path(location):
         df.write.mode(mode).parquet(location)
+    elif mode == "append":
+        df.writeTo(location).append()
+    else:
+        df.writeTo(location).createOrReplace()
 
 
 def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,0 +1,157 @@
+"""Spark jobs and seconds per fastqdedup_spark call site, for one
+perfbench workload.
+
+Usage (from the root of a repository checkout):
+
+    python3 scripts/job_sites.py --workload code-incremental --seed 1 --ops 3
+
+Builds the workload exactly as perfbench/run.py does (its `_isolate`
+session sizing and `WORKLOADS` inputs, set-up and warm-up), then runs
+`--ops` operations, each under its own Spark job group. The classic
+DataFrame actions (`localCheckpoint`, `collect`, `count`, `toPandas`,
+`isEmpty`, `toLocalIterator`) and parquet reads and writes are wrapped:
+every job the group gains during a wrapped call is attributed, with the
+call's wall time, to the innermost stack frame inside the
+fastqdedup_spark package. Jobs launched outside a wrapped call are
+reported as `(unattributed)`; `toLocalIterator` launches the jobs for
+its later partitions while the caller iterates, after the wrapped call
+has returned, so those land there too. Nothing under perfbench/ is
+edited; the work directory is removed at exit.
+
+Output: one line per call site with jobs and seconds per operation,
+then the total jobs per operation and the per-operation job counts.
+"""
+
+from __future__ import annotations
+
+import argparse
+import collections
+import functools
+import os
+import shutil
+import sys
+import time
+import traceback
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "fastqdedup_spark") + os.sep
+
+
+class SiteCounter:
+    """Attributes the current job group's new jobs to package call sites."""
+
+    def __init__(self, sc) -> None:
+        self.sc = sc
+        self.group: str | None = None
+        self.jobs: collections.Counter = collections.Counter()
+        self.seconds: collections.Counter = collections.Counter()
+        self._depth = 0
+
+    def _group_jobs(self) -> int:
+        if self.group is None:
+            return 0
+        return len(self.sc.statusTracker().getJobIdsForGroup(self.group))
+
+    @staticmethod
+    def _site() -> str:
+        for frame in reversed(traceback.extract_stack()):
+            if frame.filename.startswith(PKG):
+                rel = os.path.relpath(frame.filename, ROOT)
+                return f"{rel}:{frame.lineno} ({frame.name})"
+        return "(outside the package)"
+
+    def wrap(self, owner, name: str) -> None:
+        fn = getattr(owner, name)
+
+        @functools.wraps(fn)
+        def wrapped(*args, **kwargs):
+            if self._depth or self.group is None:
+                return fn(*args, **kwargs)
+            self._depth += 1
+            before, t0 = self._group_jobs(), time.perf_counter()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                self._depth -= 1
+                site = self._site()
+                self.jobs[site] += self._group_jobs() - before
+                self.seconds[site] += time.perf_counter() - t0
+
+        setattr(owner, name, wrapped)
+
+
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(prog="job_sites")
+    p.add_argument("--workload", default="code-incremental",
+                   help="a perfbench workload name")
+    p.add_argument("--seed", type=int, default=1, help="perfbench input seed")
+    p.add_argument("--ops", type=int, default=3,
+                   help="operations to count after the warm-up")
+    args = p.parse_args(argv)
+
+    sys.path.insert(0, ROOT)
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    from run import CORES, _isolate, _stop_session
+    from workloads import WORKLOADS
+
+    work = os.path.join(ROOT, ".bench_work", f"job-sites-{os.getpid()}")
+    os.makedirs(work)
+    spark = None
+    try:
+        _isolate(work)
+        from pyspark.sql.classic.dataframe import DataFrame
+        from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+        from fastqdedup_spark.session import get_spark
+
+        spark = get_spark(master=f"local[{CORES}]")
+        sc = spark.sparkContext
+        counter = SiteCounter(sc)
+        for name in ("localCheckpoint", "collect", "count", "toPandas",
+                     "isEmpty", "toLocalIterator"):
+            counter.wrap(DataFrame, name)
+        counter.wrap(DataFrameReader, "parquet")
+        counter.wrap(DataFrameWriter, "parquet")
+
+        wl = WORKLOADS[args.workload](spark, work, args.seed)
+        wl.prepare()
+        wl.warm_up_op()
+        wl.warm_up_check()
+        per_op = []
+        for i in range(args.ops):
+            if not wl.has_op(i):
+                break
+            group = f"job-sites-op{i}"
+            counter.group = group
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            try:
+                wl.op(i)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                counter.group = None
+            op_s = time.perf_counter() - t0
+            n = len(sc.statusTracker().getJobIdsForGroup(group))
+            per_op.append((n, op_s))
+            wl.check(i)
+        n_ops = max(len(per_op), 1)
+        total = sum(n for n, _ in per_op)
+        counter.jobs["(unattributed)"] = total - sum(counter.jobs.values())
+        print(f"{args.workload} seed {args.seed}: {len(per_op)} operations")
+        print(f"{'jobs/op':>8} {'s/op':>7}  call site")
+        for site, jobs in sorted(counter.jobs.items(), key=lambda kv: -kv[1]):
+            if jobs or counter.seconds[site]:
+                print(f"{jobs / n_ops:8.2f} {counter.seconds[site] / n_ops:7.3f}  {site}")
+        print(f"total jobs per operation: {total / n_ops:.2f}")
+        print("per operation (jobs, s): "
+              + " ".join(f"({n}, {s:.2f})" for n, s in per_op))
+    finally:
+        if spark is not None:
+            _stop_session(spark)
+        os.chdir(ROOT)
+        shutil.rmtree(work, ignore_errors=True)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

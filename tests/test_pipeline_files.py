@@ -189,6 +189,39 @@ def test_missing_columns_raises_value_error(spark):
         dedup_files(spark, bad, CFG)
 
 
+def test_table_locations_route_by_form(spark, tmp_path):
+    """A location containing '/' is parquet at that path; a bare
+    identifier is an Iceberg table. With no Iceberg catalog in the
+    session, a bare identifier raises on read and write, and the write
+    leaves no parquet directory named after the table behind (the old
+    catch-all fallback wrote one silently)."""
+    import os
+    import shutil
+    import uuid
+
+    from fastqdedup_spark.sources import read_files_table, write_table
+
+    files = generate_files(spark, 5, seed=1)
+    path = str(tmp_path / "files")
+    write_table(files, path)
+    assert read_files_table(spark, path).count() == 5
+
+    name = f"fqd_table_{uuid.uuid4().hex[:8]}"
+    jvm_cwd = spark.sparkContext._jvm.java.lang.System.getProperty("user.dir")
+    leftovers = [os.path.join(d, name) for d in (jvm_cwd, os.getcwd())]
+    try:
+        with pytest.raises(Exception):
+            write_table(files, name)
+        with pytest.raises(Exception):
+            write_table(files, name, mode="append")
+        with pytest.raises(Exception):
+            read_files_table(spark, name)
+        assert not any(os.path.exists(p) for p in leftovers)
+    finally:
+        for p in leftovers:
+            shutil.rmtree(p, ignore_errors=True)
+
+
 def test_fully_duplicated_input_rows_emit_one_survivor(spark):
     """A literally duplicated input row (same repo/path/commit/content
     twice — two ingestion batches unioned) must still yield EXACTLY one

@@ -148,3 +148,75 @@ def test_verify_metadata_broadcast_override(spark):
     )
     assert hinted["broadcast_joins"] >= 2      # sz_a + sz_b relations
     assert unhinted["broadcast_joins"] == 0    # AQE decides at runtime
+
+
+def _survivor_semi_join_audit(spark, max_rows: int) -> tuple[dict, float]:
+    from dataclasses import replace
+
+    from fastqdedup_spark.config import DedupConfig
+    from fastqdedup_spark.corpus import generate_files
+    from fastqdedup_spark.pipeline import dedup_files
+
+    cfg = replace(
+        DedupConfig(shingle_k=5, jaccard_threshold=0.6),
+        incremental_broadcast_max_rows=max_rows,
+    )
+    res = dedup_files(spark, generate_files(spark, 60, seed=5), cfg, quality=False)
+    return plan_audit(res.deduped), res.metrics["output.files"]
+
+
+def test_survivor_semi_join_broadcasts_on_observed_count(spark):
+    """The survivors semi-join joins two pinned tables: under the
+    default directional dissection the survivors come out of a Python
+    stage and carry no size estimate, so Spark alone would plan a
+    sort-merge join. The survivor keys broadcast when the observed
+    output.files fits incremental_broadcast_max_rows, and the join
+    stays shuffled (strategy left to AQE) when the gate is below it."""
+    small, n_out = _survivor_semi_join_audit(spark, 1_000_000)
+    assert 0 < n_out <= 1_000_000
+    assert small["broadcast_joins"] == 1 and small["sort_merge_joins"] == 0
+    big, n_out_big = _survivor_semi_join_audit(spark, int(n_out) - 1)
+    assert n_out_big == n_out
+    assert big["broadcast_joins"] == 0 and big["sort_merge_joins"] == 1
+
+
+def _fan_out_exchanges(df) -> int:
+    return formatted_plan(df).count("REPARTITION_BY_NUM")
+
+
+@pytest.mark.parametrize("known", ["short", "unknown", "long"])
+def test_arrow_stages_fan_out_unless_known_short(spark, known):
+    """The signer and the non-oriented verify repartition to the Arrow
+    task count before running, except when the caller passes a known
+    row count below python_stage_min_rows_per_task: then they run in
+    the partitions their input already has. An unknown count, or one
+    at the threshold (still short of the oriented verify keying at
+    this width), keeps the exchange."""
+    from fastqdedup_spark.config import DedupConfig
+    from fastqdedup_spark.functions.minhash import add_signature_columns
+    from fastqdedup_spark.operators.verify import verify_pairs_jaccard
+
+    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.5, est_margin=0.0)
+    approx = {
+        "short": cfg.python_stage_min_rows_per_task - 1,
+        "unknown": None,
+        "long": cfg.python_stage_min_rows_per_task,
+    }[known]
+    assert not cfg.python_stage_is_long(
+        spark.sparkContext, cfg.python_stage_min_rows_per_task
+    )
+    contents = spark.createDataFrame(
+        [(i, f"doc number {i} alpha beta") for i in range(20)],
+        "id long, content_norm string",
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)], "id_a long, id_b long"
+    )
+    signed = add_signature_columns(contents, cfg, approx_rows=approx)
+    verified = verify_pairs_jaccard(
+        pairs, contents, cfg, id_col="id", size_col=None, skip_est=True,
+        approx_rows=approx,
+    )
+    want = 0 if known == "short" else 1
+    assert _fan_out_exchanges(signed) == want
+    assert _fan_out_exchanges(verified) == want
