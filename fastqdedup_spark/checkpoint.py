@@ -267,6 +267,39 @@ class StageCheckpointer:
         self.metrics.add(name, "seconds", time.monotonic() - t0)
         return df
 
+    def counted_stage(
+        self,
+        name: str,
+        build: Callable[[], DataFrame],
+        counts: dict[str, Column],
+        **stage_kwargs,
+    ) -> tuple[DataFrame, dict[str, float]]:
+        """stage() plus `counts` ("stage.metric" -> aggregate Column)
+        over its rows. A fresh build observes them (zero extra jobs); a
+        resumed stage takes them from the persisted _metrics, else (the
+        previous run died before write_metrics) from one aggregation
+        over the resumed stage. Either way the same counts are reported."""
+        df = self.stage(name, lambda: self.metrics.observe(build(), counts), **stage_kwargs)
+        got = self.metrics.as_dict()
+        missing = []
+        for key in counts:
+            if key in got:
+                continue
+            stage, metric = key.split(".", 1)
+            persisted = dict(self._persisted_stage_metrics(stage))
+            if metric in persisted:
+                self.metrics.add(stage, metric, persisted[metric])
+            else:
+                missing.append(key)
+        if missing:
+            row = df.agg(
+                *[counts[k].alias(f"m{i}") for i, k in enumerate(missing)]
+            ).collect()[0]
+            for i, key in enumerate(missing):
+                self.metrics.add(*key.split(".", 1), row[f"m{i}"])
+        got = self.metrics.as_dict()
+        return df, {k: got[k] for k in counts}
+
     def write_metrics(self) -> None:
         if self.base:
             # last-wins per (stage, metric): a resumed run holds both

@@ -29,6 +29,17 @@ against a pure-Python oracle):
   kept = tier-3 survivors; with update_index=True their signed state
   and the batch's fingerprints append to the index idempotently.
 
+There is one way into the index. An index with no batches in the
+as-of view reads as empty tables, so the seed build (`build_index`,
+the CLI's first `--index` run) is an increment against an empty
+index: tiers 1-2 drop nothing, tier 3 is the batch pipeline's tail
+over the whole input, and the append is the increment's append.
+The batch table and the signing pass are StageCheckpointer stages
+(`distinct_contents`, `signatures`): with a checkpoint dir they are
+durable and lineage-verified, and their checkpoint key covers the
+index path, the batch id and the batches in its as-of view, so a run
+never resumes stages computed against another view.
+
 Deviation from a full recluster, stated rather than hidden: matching
 is against SURVIVORS, so similarity does not chain through files the
 index already dropped (new B ~ dropped A ~ survivor S does not drop B
@@ -92,24 +103,29 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from dataclasses import dataclass
+import time
+from dataclasses import dataclass, replace
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from fastqdedup_spark.checkpoint import MetricsCollector, StageCheckpointer
+from fastqdedup_spark.checkpoint import StageCheckpointer
 from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.quality import content_quality_filter
 from fastqdedup_spark.operators.exact_dedup import with_sha256
 from fastqdedup_spark.pipeline import (
     DedupResult,
     cluster_signed,
-    dedup_files,
     distinct_contents,
+    require_files_columns,
     sign_contents,
     survivor_shas,
 )
+
+# not called here: perfbench/tracing.py wraps `incremental.dedup_files`
+# by attribute name, so the name stays importable from this module
+from fastqdedup_spark.pipeline import dedup_files  # noqa: F401
 
 # The index tables' on-disk schemas: append() writes exactly these
 # columns and types, and the readers hand the same schemas to
@@ -145,25 +161,13 @@ def model_hash(cfg: DedupConfig) -> str:
 
 def derived_batch_id(cfg: DedupConfig, files: DataFrame | None = None) -> str:
     """The batch id dedup_files_incremental derives when no explicit id
-    is given: from cfg.input_id when set (the pipeline's input
-    fingerprint convention), else from a content fingerprint of the
-    batch itself — an order-insensitive (count, crc32-sum, min, max)
-    aggregate over the sha column. The content fallback costs one scan
-    of the NEW batch (never the index), but it is stable across
-    sessions: a plan-string hash was not (logical plans embed Spark
-    expression ids that differ per session), which broke the
-    crash-resume contract — the retry of a crashed-after-append run
-    derived a fresh id, failed to exclude its own first append, and
-    dropped the whole batch as dup_exact. `files` must already carry
-    `sha` (with_sha256).
-
-    A TIMESTAMPED input_id (input_fingerprint's `|unfingerprintable|`
-    fallback for remote inputs whose listing failed) is treated as
-    absent: it embeds time_ns, so deriving a batch id from it gives
-    every run a fresh id — the exact instability this function exists
-    to prevent (the rerun would dedup the batch against its own
-    previous append). Those runs fall through to the content
-    fingerprint."""
+    is given: from cfg.input_id when set, else from sha_fingerprint of
+    the batch itself (one scan of the NEW batch, never the index). Both
+    are stable across sessions, so a rerun of a batch reads the as-of
+    view of its first run. A TIMESTAMPED input_id (input_fingerprint's
+    `|unfingerprintable|` fallback for remote inputs whose listing
+    failed) would give every run a fresh id, so it counts as absent.
+    `files` must already carry `sha` (with_sha256)."""
     if cfg.input_id and "|unfingerprintable|" not in cfg.input_id:
         return hashlib.sha256(cfg.input_id.encode()).hexdigest()[:16]
     if files is None:
@@ -184,13 +188,6 @@ def sha_fingerprint(df: DataFrame) -> tuple:
     return (row["n"], row["s"], row["lo"], row["hi"])
 
 
-def _batch_id(files: DataFrame, cfg: DedupConfig, explicit: str | None) -> str:
-    """Deterministic id for an increment: the caller's name when given,
-    else derived_batch_id. Reusing the id makes the append idempotent —
-    a re-run of the same increment skips the write."""
-    return explicit or derived_batch_id(cfg, files)
-
-
 @dataclass
 class IncrementalResult:
     deduped: DataFrame        # kept new files (tier-3 survivors, full rows + sha)
@@ -205,9 +202,20 @@ class IncrementalResult:
 
 
 class DedupIndex:
-    """Persisted dedup state; see the module docstring for layout."""
+    """Persisted dedup state; see the module docstring for layout.
+    `path` is a local directory (a `file://` URI is accepted): the
+    index's bookkeeping uses the driver's filesystem calls, so another
+    scheme is refused instead of being created as a local directory
+    named after the URI."""
 
     def __init__(self, spark: SparkSession, path: str, cfg: DedupConfig):
+        if path.startswith("file://"):
+            path = path[len("file://"):]
+        elif "://" in path:
+            raise ValueError(
+                f"index location {path!r} is not a local directory; "
+                "incremental indexes live on the driver's filesystem"
+            )
         if cfg.strip_boilerplate_frac > 0:
             # boilerplate stripping derives its line set from the BATCH
             # being processed — two batches would shingle under
@@ -309,12 +317,11 @@ class DedupIndex:
     def _batches(self, sub: str, exclude: str | None = None) -> list[str]:
         # only COMPLETE batches (both fingerprints and index landed)
         # are visible to readers — a crash between append()'s two
-        # writes must leave the half-appended batch invisible, or the
-        # CLI's is_empty dispatch wedges: it would see a non-empty
-        # index, route to the incremental path, and die forever in the
-        # other read with "run build_index first" while refusing to
-        # rebuild. Incomplete batches are overwritten by the retry
-        # (has_batch is false for them), so the crash self-heals.
+        # writes must leave the half-appended batch invisible: its
+        # survivor state without its fingerprints (or the reverse) is
+        # an index no run produced. Incomplete batches are overwritten
+        # by the retry (has_batch is false for them), so the crash
+        # self-heals.
         #
         # `exclude` is AS-OF, not a single-id mask: a rerun of batch b
         # must see the index exactly as b's first run did, and if
@@ -334,41 +341,31 @@ class DedupIndex:
             if d != exclude and os.path.exists(os.path.join(root, d, "_SUCCESS"))
         ]
 
+    def _read(self, sub: str, schema: T.StructType, exclude: str | None) -> DataFrame:
+        dirs = self._batches(sub, exclude)
+        if not dirs:
+            # an empty as-of view is an empty table, not an error: the
+            # seed build is an increment against it
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*dirs)
+
     def fingerprints(self, exclude: str | None = None) -> DataFrame:
         """(sha) of every file ever presented to this index. `exclude`
         names a batch whose own state must not be read — a RERUN of
         increment b must see the index exactly as b's first run did, or
         b's previously-appended fingerprints would match every one of
         its own files and the resume would return an empty batch."""
-        dirs = self._batches("fingerprints", exclude)
-        if not dirs:
-            raise ValueError(f"empty index at {self.path}: run build_index first")
-        return self.spark.read.schema(_FINGERPRINT_SCHEMA).parquet(*dirs)
+        return self._read("fingerprints", _FINGERPRINT_SCHEMA, exclude)
 
     def signed_survivors(self, exclude: str | None = None) -> DataFrame:
         """Per-survivor MinHash state (_INDEX_SCHEMA); `exclude` as in
         fingerprints()."""
-        dirs = self._batches("index", exclude)
-        if not dirs:
-            raise ValueError(f"empty index at {self.path}: run build_index first")
-        return self.spark.read.schema(_INDEX_SCHEMA).parquet(*dirs)
+        return self._read("index", _INDEX_SCHEMA, exclude)
 
     @property
     def is_empty(self) -> bool:
-        """True until the first completed (_SUCCESS-marked) batch lands —
-        the CLI's build-vs-increment dispatch."""
+        """True until the first completed (_SUCCESS-marked) batch lands."""
         return not self._batches("fingerprints")
-
-    def batch_ids(self) -> list[str]:
-        """Ids of every COMPLETED batch (both _SUCCESS markers), sorted.
-        The CLI's re-run dispatch: when this equals [its own derived
-        id], the index holds nothing but this run's previous append —
-        re-running the seed build reproduces run 1 instead of deduping
-        the input against itself."""
-        root = os.path.join(self.path, "fingerprints")
-        if not os.path.isdir(root):
-            return []
-        return sorted(d for d in os.listdir(root) if self.has_batch(d))
 
     def has_batch(self, batch_id: str) -> bool:
         return os.path.exists(
@@ -384,8 +381,22 @@ class DedupIndex:
         """Idempotent append of one increment's state: a batch dir that
         already has its _SUCCESS marker is never rewritten (a re-run of
         the same increment is a no-op, mirroring StageCheckpointer).
-        Returns True when something was written."""
+        Returns True when something was written. A completed batch id
+        given DIFFERENT content (sha_fingerprint of the stored and the
+        given fingerprints, one scan of one batch's sha table each)
+        raises instead: a no-op would keep the old state in the index
+        while the caller holds the new batch's result."""
         if self.has_batch(batch_id):
+            stored = self.spark.read.schema(_FINGERPRINT_SCHEMA).parquet(
+                os.path.join(self.path, "fingerprints", batch_id)
+            )
+            if sha_fingerprint(stored) != sha_fingerprint(fingerprints):
+                raise ValueError(
+                    f"index at {self.path} already holds a batch {batch_id!r} "
+                    "built from DIFFERENT content; pass a distinct batch id "
+                    "(or a fresh index) instead of silently keeping the old "
+                    "state"
+                )
             # ledger repair: a crash between the second _SUCCESS and
             # the ledger write leaves a completed-but-unledgered batch;
             # the retry lands here and records it
@@ -405,12 +416,10 @@ class DedupIndex:
         # durable append instant INSIDE the batch: the ledger-rebuild
         # fallback orders unledgered batches by this, not by fs mtime
         # (which copy/restore tooling rewrites — ADVICE r5)
-        import time as _time
-
         with open(
             os.path.join(self.path, "fingerprints", batch_id, "_appended"), "w"
         ) as f:
-            f.write(repr(_time.time()))
+            f.write(repr(time.time()))
         self._ensure_ledgered(batch_id)
         return True
 
@@ -423,50 +432,16 @@ def build_index(
     quality: bool = True,
     batch_id: str = "base",
 ) -> tuple[DedupResult, DedupIndex]:
-    """Full batch dedup of `files` (pipeline.dedup_files), then persist
-    its retained state as increment `batch_id` of a fresh index. Also
+    """Seed the index at `path` with `files` as batch `batch_id`: an
+    increment against an empty index, so its tier-3 result is the batch
+    pipeline's result over the whole input (pipeline.dedup_files). Also
     the periodic-recluster path: rebuild into a new `path` from the
     union of store + recent increments to restore global single-linkage."""
-    res = dedup_files(spark, files, cfg, quality=quality)
     index = DedupIndex(spark, path, cfg)
-    # res.deduped holds exactly one file row per surviving content
-    # (first-wins rep), so signing it is one Arrow pass over survivors
-    # only — never the full corpus. Fingerprints come from
-    # res.clusters: one row per DISTINCT quality-passed sha, already
-    # computed by the pipeline's distinct_contents stage — re-deriving
-    # them from `files` would re-scan and re-sha256 the entire corpus
-    # a second time (at 100 TB, the costliest op in the build). The
-    # clusters stage fuses into survivors, so without a checkpoint dir
-    # each read of it re-runs its two label joins over the pinned
-    # signatures: cheap, and accepted over widening DedupResult.
-    surv = res.deduped.groupBy("sha").agg(
-        F.count(F.lit(1)).alias("cnt"), F.first("content").alias("content")
+    inc = dedup_files_incremental(
+        spark, files, cfg, index, quality=quality, batch_id=batch_id
     )
-    fingerprints = res.clusters.select("sha")
-    wrote = index.append(
-        batch_id,
-        fingerprints=fingerprints,
-        signed_survivors=sign_contents(surv, cfg, None),
-    )
-    if not wrote:
-        # append() no-ops when `batch_id` already completed — correct
-        # for the idempotent seed rerun (same corpus), a silent
-        # disaster for a DIFFERENT corpus under a reused id: the
-        # caller would hold B's dedup result while the index still
-        # serves A's state to every future increment. Compare the
-        # stored batch's fingerprints against this run's with the same
-        # order-insensitive aggregate derived_batch_id uses (one scan
-        # of ONE batch's sha table, never the corpus).
-        stored = spark.read.schema(_FINGERPRINT_SCHEMA).parquet(
-            os.path.join(path, "fingerprints", batch_id)
-        )
-        if sha_fingerprint(stored) != sha_fingerprint(fingerprints):
-            raise ValueError(
-                f"index at {path} already holds a batch {batch_id!r} built "
-                "from DIFFERENT content; pass a distinct batch_id (or a "
-                "fresh path) instead of silently keeping the old state"
-            )
-    return res, index
+    return inc.batch, index
 
 
 def cross_candidate_pairs(
@@ -534,16 +509,29 @@ def dedup_files_incremental(
     materialized anyway: the batch table, the signed fresh contents,
     tier 3's input (batch.input.files, batch.distinct.contents) and the
     tier-3 survivors; dropped_near is fresh files minus tier 3's input.
-    incremental.cross_pairs rides the candidate table."""
+    incremental.cross_pairs rides the candidate table. A resumed front
+    stage reports the counts a fresh run observes
+    (StageCheckpointer.counted_stage)."""
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
+    require_files_columns(new_files)
     if quality:
         new_files = content_quality_filter(new_files)
     new_files = with_sha256(new_files)
     # resolved up front: index reads below EXCLUDE this batch's own
     # previously-appended state, so a resume of a crashed-after-append
     # increment reproduces its first run bit-for-bit
-    bid = _batch_id(new_files, cfg, batch_id)
+    bid = batch_id or derived_batch_id(cfg, new_files)
+    # the checkpoint key covers the as-of view (the visible batch dirs):
+    # the same input under another batch id, in another index, or after
+    # a batch landed between a crash before this append and its retry,
+    # reads other index state, so it must never resume these stages
+    as_of = [os.path.abspath(d) for d in index._batches("fingerprints", bid)]
+    ck = StageCheckpointer(spark, replace(
+        cfg,
+        input_id=f"{cfg.input_id}|index={os.path.abspath(index.path)}"
+                 f"|batch={bid}|as_of={as_of}",
+    ))
 
     # -- tier 1: exact, streaming the old fingerprints ONCE ----------------
     # The batch table (sha, cnt, content, rep) is materialized ONCE,
@@ -564,15 +552,15 @@ def dedup_files_incremental(
     # not force multi-GB sha tables onto every executor (the hint
     # overrides Spark's own size guard), so oversized increments let
     # AQE pick the join strategy instead.
-    m = MetricsCollector()
-    batch_table = m.observe(
-        distinct_contents(new_files),
+    batch_table, counts = ck.counted_stage(
+        "distinct_contents",
+        lambda: distinct_contents(new_files),
         {
             "incremental.input_distinct": F.count(F.lit(1)),
             "incremental.input_files": F.coalesce(F.sum("cnt"), F.lit(0)),
         },
-    ).localCheckpoint(eager=True)
-    n_batch = m.as_dict()["incremental.input_distinct"]
+    )
+    n_batch = counts["incremental.input_distinct"]
     broadcast_new = n_batch <= cfg.incremental_broadcast_max_rows
     bcast = F.broadcast if broadcast_new else (lambda df: df)
     hits = index.fingerprints(exclude=bid).join(
@@ -581,17 +569,20 @@ def dedup_files_incremental(
     dropped_exact = new_files.join(bcast(hits), "sha", "left_semi")
 
     # -- tier 2: near, one band scan and one content scan of the index ------
-    signed_new = m.observe(
-        sign_contents(batch_table.join(bcast(hits), "sha", "left_anti"), cfg, n_batch),
+    signed_new, counts = ck.counted_stage(
+        "signatures",
+        lambda: sign_contents(
+            batch_table.join(bcast(hits), "sha", "left_anti"), cfg, n_batch
+        ),
         {
             "incremental.new_distinct": F.count(F.lit(1)),
             "incremental.fresh_files": F.coalesce(F.sum("cnt"), F.lit(0)),
         },
-    ).localCheckpoint(eager=True)
-    n_new = m.as_dict()["incremental.new_distinct"]
+    )
+    n_new = counts["incremental.new_distinct"]
     old_index = index.signed_survivors(exclude=bid)
     # materialized: the old-hit fetch and verify below both read it
-    cand = m.observe(
+    cand = ck.metrics.observe(
         cross_candidate_pairs(old_index, signed_new, cfg, broadcast_new),
         {"incremental.cross_pairs": F.count(F.lit(1))},
     ).localCheckpoint(eager=True)
@@ -601,7 +592,7 @@ def dedup_files_incremental(
     # observed row count instead, so the broadcast is gated on that
     # count. Semi/anti joins ignore duplicate keys, so the ids broadcast
     # without a distinct (no shuffle) and the index streams past them.
-    n_cross = m.as_dict()["incremental.cross_pairs"]
+    n_cross = ck.metrics.as_dict()["incremental.cross_pairs"]
     bcast_cross = (
         F.broadcast
         if n_cross <= cfg.incremental_broadcast_max_rows
@@ -627,7 +618,6 @@ def dedup_files_incremental(
     # the signed batch's size estimate, so the tail below plans its
     # joins as it would on the signatures stage. Its counts ride this
     # job; dropped_near is the difference to the fresh counts.
-    ck = StageCheckpointer(spark, cfg)
     remainder = ck.metrics.observe(
         signed_new.join(
             bcast_cross(verified.select(F.col("id_b").alias("nid"))),
@@ -651,24 +641,25 @@ def dedup_files_incremental(
         [c for c in new_files.columns if c != "sha"],
     )
 
-    metrics = m.as_dict()
-    metrics.update({
+    # the tier counts stay incremental.*; every other metric of the one
+    # checkpointer (the stages' and the tail's) reads as batch.*
+    m = batch.metrics
+    metrics = {
+        **{k: v for k, v in m.items() if k.startswith("incremental.")},
         "incremental.dropped_exact": (
-            metrics["incremental.input_files"] - metrics["incremental.fresh_files"]
+            m["incremental.input_files"] - m["incremental.fresh_files"]
         ),
-        "incremental.dropped_near": (
-            metrics["incremental.fresh_files"] - batch.metrics["input.files"]
-        ),
-        "incremental.kept": batch.metrics["output.files"],
+        "incremental.dropped_near": m["incremental.fresh_files"] - m["input.files"],
+        "incremental.kept": m["output.files"],
         "incremental.broadcast_new": float(broadcast_new),
-        **{f"batch.{k}": v for k, v in batch.metrics.items()},
-    })
+        **{f"batch.{k}": v for k, v in m.items() if not k.startswith("incremental.")},
+    }
 
     if update_index:
         # batch survivors were already signed in signed_new — reuse it
         # (zero extra Arrow passes; cnt from the batch aggregation)
         surv_signed = remainder.join(
-            survivor_shas(cfg, batch.survivors, batch.metrics.get("output.files")),
+            survivor_shas(cfg, batch.survivors, m["output.files"]),
             "sha",
             "left_semi",
         )

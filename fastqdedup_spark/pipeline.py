@@ -64,6 +64,7 @@ from fastqdedup_spark.operators.verify import (
     verify_pairs_distance,
     verify_pairs_jaccard,
 )
+from fastqdedup_spark.sources import FILES_COLUMNS
 
 
 @dataclass
@@ -72,7 +73,6 @@ class DedupResult:
     survivors: DataFrame   # (cluster_id, key-or-sha)
     deduped: DataFrame     # surviving input rows
     metrics: dict
-    cc_rounds: int
 
 
 def _fill_singletons(counted: DataFrame, labels: DataFrame, id_col: str) -> DataFrame:
@@ -133,7 +133,14 @@ def dedup_keys(
     )
     ck.metrics.add("cc", "rounds", rounds)
     ck.write_metrics()
-    return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict(), rounds)
+    return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict())
+
+
+def require_files_columns(files: DataFrame) -> None:
+    """Raise when `files` lacks a column of the files-table contract."""
+    missing = set(FILES_COLUMNS) - set(files.columns)
+    if missing:
+        raise ValueError(f"files table missing columns: {sorted(missing)}")
 
 
 def distinct_contents(files: DataFrame) -> DataFrame:
@@ -199,14 +206,11 @@ def dedup_files(
     materialization that runs anyway (MetricsCollector.observe):
     input.files and distinct.contents on distinct_contents, the rest in
     the tail. A resumed stage reports the previous run's persisted
-    values instead (none if the previous run died before persisting
-    them).
+    values instead; the counts that size plans (these two and
+    output.files) are recounted on the resumed stage when the previous
+    run died before persisting them.
     """
-    from fastqdedup_spark.sources import FILES_COLUMNS
-
-    missing = set(FILES_COLUMNS) - set(files.columns)
-    if missing:
-        raise ValueError(f"files table missing columns: {sorted(missing)}")
+    require_files_columns(files)
     ck = StageCheckpointer(spark, cfg)
     # a tiny single-row-group input scans as 1-2 partitions, so the
     # quality regexes + sha256 + the distinct stage's partial agg would
@@ -223,25 +227,17 @@ def dedup_files(
     # input row count ride the stage's own materialization via
     # Dataset.observe (CollectMetrics fires on BOTH materialization
     # paths: localCheckpoint is a withAction and so is the durable
-    # parquet write) — zero extra jobs on a fresh run. A resumed stage
-    # reloads both from the previous run's persisted metrics; only a
-    # resume whose _metrics are missing (the previous run died before
-    # write_metrics) counts the materialized stage, a cheap parquet
-    # scan with no recompute.
-    distinct = ck.stage(
+    # parquet write) — zero extra jobs on a fresh run; a resumed stage
+    # reports them as StageCheckpointer.counted_stage describes.
+    distinct, counts = ck.counted_stage(
         "distinct_contents",
-        lambda: ck.metrics.observe(
-            distinct_contents(files),
-            {
-                "distinct.contents": F.count(F.lit(1)),
-                "input.files": F.coalesce(F.sum("cnt"), F.lit(0)),
-            },
-        ),
-        reload_metrics=("distinct", "input"),
+        lambda: distinct_contents(files),
+        {
+            "distinct.contents": F.count(F.lit(1)),
+            "input.files": F.coalesce(F.sum("cnt"), F.lit(0)),
+        },
     )
-    n_distinct = ck.metrics.as_dict().get("distinct.contents")
-    if n_distinct is None:
-        n_distinct = distinct.count()
+    n_distinct = counts["distinct.contents"]
 
     def _build_signatures() -> DataFrame:
         if cfg.strip_boilerplate_frac <= 0:
@@ -270,18 +266,17 @@ def dedup_files(
 
 
 def survivor_shas(
-    cfg: DedupConfig, survivors: DataFrame, n_survivors: float | None
+    cfg: DedupConfig, survivors: DataFrame, n_survivors: float
 ) -> DataFrame:
     """The survivors stage's keys as a `sha` column, for the semi-joins
     that keep one row per survivor. Both sides of those joins are
     pinned tables with no usable size statistics, so Spark would plan
-    a sort-merge join with two exchanges. When the observed survivor
-    count (output.files) fits incremental_broadcast_max_rows, the same
-    gate the incremental path's new-side broadcasts use, the keys
-    broadcast instead; an unknown count (a resume without persisted
-    metrics) leaves the strategy to AQE."""
+    a sort-merge join with two exchanges. When the survivor count
+    (output.files) fits incremental_broadcast_max_rows, the same gate
+    the incremental path's new-side broadcasts use, the keys broadcast
+    instead; a larger count leaves the strategy to AQE."""
     keys = survivors.select(F.col("key").alias("sha"))
-    if n_survivors is not None and n_survivors <= cfg.incremental_broadcast_max_rows:
+    if n_survivors <= cfg.incremental_broadcast_max_rows:
         return F.broadcast(keys)
     return keys
 
@@ -435,13 +430,11 @@ def cluster_signed(
     # and `deduped` below is exactly one file per survivor, so its row
     # count is output.files
     surv_kwargs["metrics"] = ck.metrics
-    survivors = ck.stage(
+    survivors, counts = ck.counted_stage(
         "survivors",
-        lambda: ck.metrics.observe(
-            dissect_clusters(surv_input, cfg.dissection, **surv_kwargs),
-            {"output.files": F.count(F.lit(1))},
-        ),
-        reload_metrics=("dissect", "output"),
+        lambda: dissect_clusters(surv_input, cfg.dissection, **surv_kwargs),
+        {"output.files": F.count(F.lit(1))},
+        reload_metrics=("dissect",),
     )
     # O13 survivor semi-join + first-wins: one surviving FILE per
     # surviving content, deterministic by (repo, path, commit). The
@@ -450,7 +443,7 @@ def cluster_signed(
     # all: the full row is rebuilt from the rep struct + the table's
     # content, so row-per-sha uniqueness is aggregation-guaranteed.
     deduped = distinct.join(
-        survivor_shas(cfg, survivors, ck.metrics.as_dict().get("output.files")),
+        survivor_shas(cfg, survivors, counts["output.files"]),
         "sha",
         "left_semi",
     ).select(
@@ -462,4 +455,4 @@ def cluster_signed(
     )
     ck.metrics.add("cc", "rounds", rounds)
     ck.write_metrics()
-    return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict(), rounds)
+    return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict())

@@ -258,24 +258,40 @@ def test_chaining_across_increments(spark, split, tmp_path):
 # fused into survivors, no fan-out for short Arrow stages). A new
 # action on this path fails the guard.
 INCREMENT_JOB_FLOOR = 27
+# Spark jobs of the seed build (build_index into an empty index): the
+# same path, whose tier-1/2 reads are empty tables but whose near-probe
+# pins still run.
+BUILD_JOB_FLOOR = 25
+
+
+def _jobs_of(spark, group: str, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_increment_job_floor(spark, split, tmp_path):
     """Counts ride materializations that run anyway: no count() or
-    collect() comes back on the increment path unnoticed."""
+    collect() comes back on the seed build or the increment unnoticed."""
     old, new = split
-    _, idx = build_index(spark, old, CFG, str(tmp_path / "ix"), quality=False)
-    sc = spark.sparkContext
-    group = "test-increment-job-floor"
-    sc.setJobGroup(group, "one increment")
-    try:
-        inc = dedup_files_incremental(
+    (res, idx), n_build = _jobs_of(
+        spark, "test-build-job-floor",
+        lambda: build_index(spark, old, CFG, str(tmp_path / "ix"), quality=False),
+    )
+    inc, n_jobs = _jobs_of(
+        spark, "test-increment-job-floor",
+        lambda: dedup_files_incremental(
             spark, new, CFG, idx, quality=False, batch_id="b1"
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        ),
+    )
+    assert res.metrics["output.files"] > 0
     assert inc.metrics["incremental.kept"] > 0
+    assert n_build <= BUILD_JOB_FLOOR
     assert n_jobs <= INCREMENT_JOB_FLOOR
 
 
@@ -348,10 +364,9 @@ def test_oversized_increment_path_agrees(spark, split, built):
 
 def test_half_appended_batch_is_invisible_and_self_heals(spark, split, tmp_path):
     """A crash between append()'s two writes must leave the batch
-    invisible (is_empty stays True for a partial base build — the CLI
-    would otherwise route to the incremental path and die forever in
-    signed_survivors with an unfollowable 'run build_index first') and
-    a retry must rebuild over the debris."""
+    invisible (is_empty stays True for a partial base build and both
+    reads are empty: half a batch is an index no run produced) and a
+    retry must rebuild over the debris."""
     old, _ = split
     path = str(tmp_path / "ix")
     # simulate both partial states: index-only (the new write order's
@@ -363,8 +378,9 @@ def test_half_appended_batch_is_invisible_and_self_heals(spark, split, tmp_path)
             open(os.path.join(p, "_SUCCESS"), "w").close()
         idx = DedupIndex(spark, path, CFG)
         assert idx.is_empty
-        with pytest.raises(ValueError, match="empty index"):
-            idx.fingerprints()
+        # the partial batch is not read: the index reads as empty tables
+        assert idx.fingerprints().count() == 0
+        assert idx.signed_survivors().count() == 0
     # the retry overwrites the debris and completes
     res, idx = build_index(spark, old, CFG, path, quality=False)
     assert not idx.is_empty and idx.has_batch("base")
@@ -404,7 +420,7 @@ def test_cli_seed_build_rerun_reproduces_run_one(spark, split, tmp_path):
     s1 = sorted(r["sha"] for r in spark.read.parquet(out1).select("sha").collect())
     s2 = sorted(r["sha"] for r in spark.read.parquet(out2).select("sha").collect())
     assert s1 == s2 and s1
-    assert len(DedupIndex(spark, ix, CFG).batch_ids()) == 1  # no double append
+    assert len(DedupIndex(spark, ix, CFG)._ledger()) == 1  # no double append
 
 
 def test_derived_batch_id_is_content_stable(spark, split):
@@ -473,10 +489,14 @@ def test_cli_index_build_then_increment(spark, split, tmp_path, monkeypatch):
     f1 = idx.fingerprints().count()
     main(["--input", new_p, "--output", out2, *common])
     assert idx.fingerprints().count() == f1
-    # the seed build is not an increment; the run and its rerun (same
-    # batch id, so the same as-of index view) report the oracle's rows
+    # the seed build is an increment against an empty index: tiers 1-2
+    # drop nothing and tier 3 sees every file. The increment and its
+    # rerun (same batch id, so the same as-of index view) report the
+    # oracle's rows
+    seed_kept = _batch_oracle(old_contents, CFG.shingle_k, CFG.jaccard_threshold)
+    seed_rows = (0, 0, len(seed_kept), len(old_contents))
     want = _oracle_tier_rows(new_contents, t1, t2, kept)
-    assert [_tier_rows(inc.metrics) for inc in increments] == [want, want]
+    assert [_tier_rows(inc.metrics) for inc in increments] == [seed_rows, want, want]
 
 
 def test_retry_after_interleaved_batch_reproduces_first_run(spark, split, tmp_path):
@@ -516,7 +536,134 @@ def test_build_index_same_id_different_content_refused(spark, split, tmp_path):
         build_index(spark, new, CFG, path, quality=False)
     # same-corpus rerun stays a clean no-op
     res, idx = build_index(spark, old, CFG, path, quality=False)
-    assert len(idx.batch_ids()) == 1
+    assert len(idx._ledger()) == 1
+
+
+def test_increment_same_id_different_content_refused(spark, split, tmp_path):
+    """An increment that reuses a batch id with different content must
+    raise at the append instead of keeping the old batch in the index
+    while its caller writes the new batch's output."""
+    old, new = split
+    _, idx = build_index(spark, old, CFG, str(tmp_path / "ix"), quality=False)
+    dedup_files_incremental(spark, new, CFG, idx, quality=False, batch_id="b1")
+    other = new.filter(F.col("id") % 2 == 0)
+    with pytest.raises(ValueError, match="DIFFERENT content"):
+        dedup_files_incremental(spark, other, CFG, idx, quality=False, batch_id="b1")
+    assert idx._ledger() == ["base", "b1"]
+
+
+def test_cli_seed_rerun_after_increment_reproduces_run_one(spark, split, tmp_path):
+    """The seed-build command rerun after an increment landed sees the
+    index as its first run did (empty), so it reproduces run 1's output
+    rows and appends nothing."""
+    from fastqdedup_spark.cli import main
+
+    old, new = split
+    old_p, new_p = str(tmp_path / "old"), str(tmp_path / "new")
+    old.write.parquet(old_p)
+    new.write.parquet(new_p)
+    ix = str(tmp_path / "ix")
+    common = ["--index", ix, "--shingle-k", "7", "--threshold", "0.8",
+              "-c", "canonical", "-q"]
+    main(["--input", old_p, "--output", str(tmp_path / "o1"), *common])
+    main(["--input", new_p, "--output", str(tmp_path / "o2"), *common])
+    idx = DedupIndex(spark, ix, CFG)
+    ledger, n_fp = idx._ledger(), idx.fingerprints().count()
+    main(["--input", old_p, "--output", str(tmp_path / "o3"), *common])
+
+    def rows(d):
+        return sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / d)).collect())
+
+    assert rows("o3") == rows("o1") and rows("o1")
+    assert idx._ledger() == ledger and len(ledger) == 2
+    assert idx.fingerprints().count() == n_fp
+
+
+def test_durable_increment_resumes(spark, split, tmp_path):
+    """An increment with a checkpoint dir, rerun under the same batch id
+    (and again with the persisted _metrics deleted), resumes its front
+    stages and reproduces the first run: the same rows, each with
+    sha256(content) == sha, and the same tier counts. The checkpoint key
+    covers the batch id: the same input under another id resumes
+    nothing."""
+    import glob
+    import shutil
+    from dataclasses import replace as _replace
+
+    old, new = split
+    _, idx = build_index(spark, old, CFG, str(tmp_path / "ix"), quality=False)
+    ckdir = str(tmp_path / "ck")
+    cfg = _replace(CFG, checkpoint_dir=ckdir)
+    cols = ["sha", "repo", "path", "commit", "content"]
+
+    def run(bid="b1", update_index=True):
+        inc = dedup_files_incremental(
+            spark, new, cfg, idx, quality=False, batch_id=bid,
+            update_index=update_index,
+        )
+        return inc, sorted(tuple(r) for r in inc.deduped.select(*cols).collect())
+
+    one, rows1 = run()
+    assert rows1 and all(_sha(r[4]) == r[0] for r in rows1)
+    assert "batch.distinct_contents.resumed" not in one.metrics
+    (metrics_dir,) = glob.glob(os.path.join(ckdir, "*", "_metrics"))
+    for drop_metrics in (False, True):
+        if drop_metrics:
+            shutil.rmtree(metrics_dir)
+        again, rows = run()
+        assert again.metrics["batch.distinct_contents.resumed"] == 1
+        assert again.metrics["batch.signatures.resumed"] == 1
+        assert rows == rows1
+        assert _tier_rows(again.metrics) == _tier_rows(one.metrics)
+    other, rows = run("b2", update_index=False)
+    assert "batch.distinct_contents.resumed" not in other.metrics
+    assert idx._ledger() == ["base", "b1"]
+
+
+def test_durable_retry_after_interleaved_batch_recomputes(spark, split, tmp_path):
+    """A checkpointed increment that died before its append must not
+    resume once another batch landed before its retry: its stages were
+    computed against another as-of view. The retry equals a run without
+    checkpoints against the index as it now stands."""
+    from dataclasses import replace as _replace
+
+    old, new = split
+    _, idx = build_index(spark, old, CFG, str(tmp_path / "ix"), quality=False)
+    cfg = _replace(CFG, checkpoint_dir=str(tmp_path / "ck"))
+    # b1 dies before its append: its stages persist, the index does not grow
+    dedup_files_incremental(
+        spark, new, cfg, idx, quality=False, batch_id="b1", update_index=False
+    )
+    # b2 lands first, holding copies of half of b1's files
+    copies = new.filter(F.col("id") % 2 == 0).withColumn(
+        "path", F.concat("path", F.lit(".copy"))
+    )
+    dedup_files_incremental(spark, copies, CFG, idx, quality=False, batch_id="b2")
+    want = dedup_files_incremental(
+        spark, new, CFG, idx, quality=False, batch_id="b1", update_index=False
+    )
+    retry = dedup_files_incremental(spark, new, cfg, idx, quality=False, batch_id="b1")
+    assert "batch.signatures.resumed" not in retry.metrics
+    assert _tier_rows(retry.metrics) == _tier_rows(want.metrics)
+    assert sorted(r["sha"] for r in retry.deduped.select("sha").collect()) == sorted(
+        r["sha"] for r in want.deduped.select("sha").collect()
+    )
+
+
+def test_non_local_index_refused(spark, tmp_path, monkeypatch):
+    """The index's bookkeeping is driver-local: a URI of another scheme
+    raises and creates nothing in the working directory, and a file://
+    URI is the local directory it names."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    for uri in ("s3a://bucket/ix", "hdfs://nn/ix"):
+        with pytest.raises(ValueError, match="not a local directory"):
+            DedupIndex(spark, uri, CFG)
+    assert os.listdir(cwd) == []
+    idx = DedupIndex(spark, f"file://{tmp_path}/ix", CFG)
+    assert idx.is_empty and os.path.exists(tmp_path / "ix" / "_meta.json")
+    assert os.listdir(cwd) == []
 
 
 def test_missing_ledger_rebuilt_from_batch_dirs(spark, split, tmp_path):
