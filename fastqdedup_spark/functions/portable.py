@@ -8,15 +8,14 @@ numpy (engine side) and in plain SQL (oracle side):
 
     token/gram hash:  h = 7; for c in codepoints: h = (h*127 + c) % P
     simhash bit j:    ((h * (2j+3) + 5j+1) % P) & 1
-    hyperplane(j,d):  ((1103515245*(j*dim+d) + 12345) % P) / P - 0.5
 
 with P = 2147483647 (2^31 - 1). Hash quality is lower than splitmix64
 but irrelevant for correctness: both engines compute the SAME values,
 so pair sets compare exactly; collisions at 2^31 only cost a little
 semantic precision, identically on both sides.
 
-The SQL twins of these formulas live in __spark_entry__.oracle_sql()
-(q15/q16/q17) — keep the constants in sync.
+The SQL twins of these formulas live in tests/test_oracle_sql.py
+(q15/q16) and tests/test_portable.py — keep the constants in sync.
 """
 
 from __future__ import annotations
@@ -26,8 +25,6 @@ import numpy as np
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 B = 127
 H0 = 7
-PLANE_A = 1_103_515_245
-PLANE_C = 12_345
 
 
 def _codepoints(texts: "list[str]") -> tuple[np.ndarray, np.ndarray]:
@@ -135,12 +132,3 @@ def portable_window_hashes(
             H[max(lo, 0) : hi] = _SENTINEL
     return H, starts, counts
 
-
-def portable_planes(dim: int, n_bits: int) -> np.ndarray:
-    """(dim, n_bits) float64 hyperplanes, uniform in [-0.5, 0.5], from
-    the integer formula ((PLANE_A*(j*dim + d) + PLANE_C) % P) / P - 0.5
-    — bit-identical to the SQL twin (exact-integer division in double)."""
-    j = np.arange(n_bits, dtype=np.int64)[None, :]
-    d = np.arange(dim, dtype=np.int64)[:, None]
-    v = (PLANE_A * (j * dim + d) + PLANE_C) % P
-    return v.astype(np.float64) / P - 0.5

@@ -30,8 +30,6 @@ from pyspark.sql import DataFrame
 
 from fastqdedup_spark.oracle import CLUSTER_DISSECTION_METHODS
 
-_AGG_METHODS = {"highest_count", "canonical"}
-
 
 def dissect_clusters(
     clusters: DataFrame,

@@ -68,16 +68,3 @@ def exact_dedup(df: DataFrame) -> DataFrame:
         if c != "sha"
     ]
     return out.select(*cols, "sha", "exact_count")
-
-
-def exact_dup_metrics(df: DataFrame) -> DataFrame:
-    """O14 analog: per-stage introspection counts as a small DataFrame."""
-    counts = df.groupBy("sha").agg(F.count(F.lit(1)).alias("cnt"))
-    return counts.agg(
-        F.count(F.lit(1)).alias("distinct_contents"),
-        F.sum("cnt").alias("total_files"),
-        F.sum(F.when(F.col("cnt") > 1, F.col("cnt") - 1).otherwise(0)).alias(
-            "exact_duplicate_files"
-        ),
-        F.max("cnt").alias("largest_exact_group"),
-    )

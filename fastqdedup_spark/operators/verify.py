@@ -84,14 +84,8 @@ def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):
 
     @F.pandas_udf(T.DoubleType())
     def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        import os as _os
-        import time as _time
-
-        _prof = _os.environ.get("FASTQDEDUP_VERIFY_PROF")
-        _t0 = _time.monotonic()
         both = pd.concat([a.fillna(""), b.fillna("")], ignore_index=True)
         codes, uniques = pd.factorize(both)
-        _t1 = _time.monotonic()
         missing = []
         for u in uniques:
             v = cache.pop(u, None)
@@ -113,7 +107,6 @@ def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):
                     arr = np.unique(H[starts[i] : starts[i] + counts[i]])
                     cache[missing[lo + i]] = arr
                     cache_bytes[0] += arr.nbytes
-        _t2 = _time.monotonic()
         sets = [cache[u] for u in uniques]
         n = len(a)
         ca, cb = codes[:n], codes[n:]
@@ -139,14 +132,6 @@ def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):
             for key in list(cache)[: max(len(cache) // 2, 1)]:
                 cache_bytes[0] -= cache[key].nbytes
                 del cache[key]
-        if _prof:
-            _t3 = _time.monotonic()
-            with open(_prof, "a") as f:
-                f.write(
-                    f"{_os.getpid()} n={n} uniq={len(uniques)} "
-                    f"miss={len(missing)} fact={_t1 - _t0:.3f} "
-                    f"shingle={_t2 - _t1:.3f} inter={_t3 - _t2:.3f}\n"
-                )
         return pd.Series(out)
 
     # asNondeterministic = "evaluate exactly once, where declared".
@@ -196,7 +181,7 @@ def est_jaccard_matches(
     2-bit lane is zero iff the bin agreed.
 
     Codegen history (do not relearn — measured, Spark 4.1, 20M pairs x
-    local[8], scripts/codegen_lab.py):
+    local[8], BASELINE.md rounds 2 and 4):
     - byte-packed sketch, flat 128 comparison terms: the expression
       inlines into the host consume method (bhj_doConsume /
       hashAgg_doAggregateWithoutKey), ~20k generated lines -> janino
@@ -376,7 +361,7 @@ def verify_pairs_jaccard(
     # its min id). The legacy (id_a, 4-way id_b salt) key measured a
     # 90% per-task cache MISS rate at 768k files — 1.01M misses for
     # 387k distinct docs — and shingling misses are 90% of verify's
-    # python time (398 of 444 core-s, FASTQDEDUP_VERIFY_PROF). Degree
+    # python time (398 of 444 core-s, BASELINE.md "Verify locality"). Degree
     # orientation (higher-degree endpoint as key) was measured first
     # and is NOT it: -18% misses, wall a wash — cliques have no hubs.
     # Hash-min keying predicts 397k misses, 2.6% off the ideal. The

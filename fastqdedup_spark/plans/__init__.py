@@ -37,17 +37,3 @@ def plan_audit(df: DataFrame) -> dict:
         "broadcast_joins": len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)),
         "sort_merge_joins": len(re.findall(r"\(\d+\) SortMergeJoin", plan)),
     }
-
-
-def assert_pushdown(df: DataFrame, column: str) -> None:
-    """Raises if NO parquet scan in the plan pushes a filter on
-    `column`. Checks every PushedFilters group (a join plan has one per
-    scan; the filtered scan is not necessarily first) and matches the
-    column as a whole field name — a bare substring test would let
-    'id' false-pass against IsNotNull(doc_id)."""
-    plan = formatted_plan(df)
-    pat = re.compile(rf"[(\[,]\s*{re.escape(column)}[,)\]]")
-    for g in re.findall(r"PushedFilters: \[([^\]]*)\]", plan):
-        if pat.search(g):
-            return
-    raise AssertionError(f"no pushed filter on {column}; plan:\n{plan[:2000]}")

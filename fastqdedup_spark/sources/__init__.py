@@ -92,7 +92,3 @@ def write_table(df: DataFrame, location: str, mode: str = "overwrite") -> None:
         df.writeTo(location).append()
     else:
         df.writeTo(location).createOrReplace()
-
-
-def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

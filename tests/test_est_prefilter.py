@@ -4,8 +4,8 @@ expression, threshold mapping, and recall-neutrality of the filter.
 The est expression must stay O(num_perm/32) nodes — the byte-packed
 128-term ancestor overflowed janino's 64 KB method limit inside the
 broadcast-join consume function and the whole pair stage silently ran
-without whole-stage codegen (VERDICT r3 #1; scripts/codegen_lab.py has
-the measured post-mortem).
+without whole-stage codegen (VERDICT r3 #1; BASELINE.md rounds 2 and 4
+record the measured post-mortem).
 """
 
 import numpy as np

@@ -1,6 +1,6 @@
 """Cross-engine kernel equality: the portable (SQL-replicable) hash
 kernels in functions/portable.py must produce bit-identical values to
-their DuckDB SQL twins (used by the q15/q16/q17 oracles)."""
+their DuckDB SQL twins (used by the q15/q16 oracles in test_oracle_sql.py)."""
 
 import duckdb
 import numpy as np
@@ -8,7 +8,6 @@ import pytest
 
 from fastqdedup_spark.functions.portable import (
     P,
-    portable_planes,
     portable_simhash_batch,
     portable_token_hashes,
     portable_window_hashes,
@@ -91,14 +90,3 @@ def test_token_hash_bounds():
     assert len(set(h.tolist()[:3])) == 3
     assert h[3] == 7  # empty token = initial constant
 
-
-def test_planes_match_sql(con):
-    dim, nb = 8, 6
-    pl = portable_planes(dim, nb)
-    rows = con.sql(f"""
-        SELECT j, d, ((1103515245*(j*{dim} + d) + 12345) % 2147483647)
-               / 2147483647.0 - 0.5
-        FROM unnest(range(0,{nb})) t(j), unnest(range(0,{dim})) u(d)
-    """).fetchall()
-    for j, d, v in rows:
-        assert pl[d, j] == v  # exact float equality (exact-int division)

@@ -4,10 +4,10 @@ workers regardless of the launch cwd.
 Every pandas/Arrow UDF pickles by reference, so workers import
 `fastqdedup_spark` by name — but they only inherit the launch
 environment, not the driver's sys.path. Before round 6's fix, any
-driver script launched from OUTSIDE the repo (e.g. `python
-/root/repo/bench.py` with cwd=/tmp and no PYTHONPATH) died on its
-first UDF task with ModuleNotFoundError; get_spark now exports the
-package root on PYTHONPATH before the gateway JVM spawns.
+driver script launched from OUTSIDE the repo (a script that puts the
+repo on its own sys.path, run from another cwd with no PYTHONPATH)
+died on its first UDF task with ModuleNotFoundError; get_spark now
+exports the package root on PYTHONPATH before the gateway JVM spawns.
 """
 
 import os
@@ -18,7 +18,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _DRIVER = """\
 import sys
-sys.path.insert(0, {repo!r})          # driver-side import only (bench.py does this)
+sys.path.insert(0, {repo!r})          # driver-side import only
 from fastqdedup_spark.session import get_spark
 from fastqdedup_spark.corpus import generate_files
 spark = get_spark(master="local[2]", shuffle_partitions=2)
