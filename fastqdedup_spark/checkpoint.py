@@ -31,9 +31,23 @@ import time
 from typing import Callable
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from fastqdedup_spark.config import DedupConfig
+from fastqdedup_spark.session import driver_table
+
+_LINEAGE_SCHEMA = T.StructType([
+    T.StructField("file", T.StringType()),
+    T.StructField("rows", T.LongType()),
+    T.StructField("xor_fp", T.LongType()),
+    T.StructField("sum_fp", T.LongType()),
+])
+_METRICS_SCHEMA = T.StructType([
+    T.StructField("stage", T.StringType()),
+    T.StructField("metric", T.StringType()),
+    T.StructField("value", T.DoubleType()),
+])
 
 
 class MetricsCollector:
@@ -150,9 +164,8 @@ class StageCheckpointer:
 
     def _write_lineage(self, stage: str, df: DataFrame) -> None:
         rows = self._lineage_rows(df)
-        self.spark.createDataFrame(
-            rows, "file string, rows long, xor_fp long, sum_fp long"
-        ).coalesce(1).write.mode("overwrite").parquet(self._lineage_path(stage))
+        table = driver_table(self.spark, _LINEAGE_SCHEMA, list(zip(*rows)))
+        table.coalesce(1).write.mode("overwrite").parquet(self._lineage_path(stage))
         self.metrics.add(stage, "lineage_files", len(rows))
 
     def _verify_lineage(self, stage: str, df: DataFrame) -> None:
@@ -256,7 +269,8 @@ class StageCheckpointer:
         df = build()
         if self.base:
             df.write.mode("overwrite").parquet(self._path(name))
-            df = self.spark.read.parquet(self._path(name))
+            # the written schema, not an inference job over the files
+            df = self.spark.read.schema(df.schema).parquet(self._path(name))
         elif not fuse:
             df = df.localCheckpoint(eager=True)
         else:
@@ -310,8 +324,7 @@ class StageCheckpointer:
                 (*key.split(".", 1), value)
                 for key, value in self.metrics.as_dict().items()
             ]
-            self.spark.createDataFrame(
-                rows, "stage string, metric string, value double"
-            ).coalesce(1).write.mode("overwrite").parquet(
+            table = driver_table(self.spark, _METRICS_SCHEMA, list(zip(*rows)))
+            table.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.base, "_metrics")
             )

@@ -122,6 +122,7 @@ from fastqdedup_spark.pipeline import (
     sign_contents,
     survivor_shas,
 )
+from fastqdedup_spark.session import driver_table
 
 # not called here: perfbench/tracing.py wraps `incremental.dedup_files`
 # by attribute name, so the name stays importable from this module
@@ -346,7 +347,7 @@ class DedupIndex:
         if not dirs:
             # an empty as-of view is an empty table, not an error: the
             # seed build is an increment against it
-            return self.spark.createDataFrame([], schema)
+            return driver_table(self.spark, schema, [])
         return self.spark.read.schema(schema).parquet(*dirs)
 
     def fingerprints(self, exclude: str | None = None) -> DataFrame:

@@ -25,7 +25,10 @@ Scale design:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from fastqdedup_spark.session import driver_table
 
 
 def _driver_union_find(sym: DataFrame) -> DataFrame:
@@ -55,16 +58,12 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     # find() roots are union-by-min, so root == component minimum
-    import pandas as pd
-    import pyspark.sql.types as T
-
     nodes = list(seen)
-    lab_pdf = pd.DataFrame({"id": nodes, "cluster_id": [find(v) for v in nodes]})
     id_type = sym.schema[0].dataType
     schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("cluster_id", id_type)]
     )
-    return sym.sparkSession.createDataFrame(lab_pdf, schema)
+    return driver_table(sym.sparkSession, schema, [nodes, [find(v) for v in nodes]])
 
 
 def connected_components(

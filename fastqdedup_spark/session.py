@@ -4,13 +4,95 @@ Single place that pins the configs the pipeline relies on: AQE (skew
 join splitting for hot LSH bands), Arrow for every pandas UDF, UTC so
 DuckDB oracle comparison is stable, shuffle partitions sized to cores
 for local mode (a real cluster would set ~2-3x total cores).
+
+The session is sized for the machine it starts on (`session_size`):
+`local[N]` with N the CPUs this process may run on, at most 32, and a
+driver heap of a quarter of the memory it may use (physical memory or
+the cgroup limit, whichever is smaller), between 1g and 8g.
+`SPARK_GRAFT_CPUS` and `SPARK_DRIVER_MEMORY` override either. There is
+no off-heap arena: Tungsten's execution memory lives on that heap.
+
+`driver_table` builds the small tables the driver computes (lineage,
+metrics, union-find labels, empty index views) from Arrow, so that no
+Python worker starts for them.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+MAX_CORES = 32
+MIN_DRIVER_MB, MAX_DRIVER_MB = 1024, 8 * 1024
+_MEMINFO = "/proc/meminfo"
+# cgroup v2, then v1; an unlimited v1 group reads as a huge number
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _memory_limit_bytes() -> int | None:
+    """The smaller of physical memory and this process's cgroup memory
+    limit; None when neither can be read."""
+    limits = []
+    try:
+        with open(_MEMINFO) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                value = f.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():
+            limits.append(int(value))
+    return min(limits) if limits else None
+
+
+def session_size(env: Mapping[str, str] = os.environ) -> tuple[int, str]:
+    """(cores, driver heap) for a session on this machine.
+
+    Cores: the CPUs this process may run on, at most MAX_CORES. Heap: a
+    quarter of `_memory_limit_bytes()` (the JVM's own default share),
+    within [MIN_DRIVER_MB, MAX_DRIVER_MB] — the rest stays free for the
+    Python workers and the page cache, and a second session on the same
+    machine fits. Spark refuses a driver heap below ~450 MB, hence the
+    floor; MAX_DRIVER_MB when memory cannot be read.
+    `SPARK_GRAFT_CPUS` and `SPARK_DRIVER_MEMORY` override."""
+    if hasattr(os, "sched_getaffinity"):
+        machine_cpus = len(os.sched_getaffinity(0))
+    else:  # macOS
+        machine_cpus = os.cpu_count() or 1
+    cpus = int(env.get("SPARK_GRAFT_CPUS") or min(machine_cpus, MAX_CORES))
+    heap = env.get("SPARK_DRIVER_MEMORY")
+    if not heap:
+        mem = _memory_limit_bytes()
+        mb = MAX_DRIVER_MB if mem is None else mem // 4 // 2**20
+        heap = f"{max(MIN_DRIVER_MB, min(MAX_DRIVER_MB, mb))}m"
+    return cpus, heap
+
+
+def driver_table(
+    spark: SparkSession, schema: StructType, columns: Sequence[Sequence]
+) -> DataFrame:
+    """A DataFrame of driver-side `columns` (one sequence per field of
+    `schema`, in order; empty for a table with no rows). It travels to
+    the JVM as one Arrow table, which starts no Python worker. A list
+    of rows, and a pandas frame with zero rows, go through a Python RDD
+    instead, and the first such job starts a second pool of Python
+    workers beside the one the Arrow UDFs use, held for the session."""
+    import pyarrow as pa
+
+    arrays = [pa.array(c) for c in columns] or [pa.array([])] * len(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema.names), schema)
 
 
 def get_spark(
@@ -18,7 +100,7 @@ def get_spark(
     app_name: str = "fastqdedup-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_memory = session_size()
     # Under spark-submit the gateway JVM already carries --master (the
     # PythonRunner launches this process with PYSPARK_GATEWAY_PORT set);
     # forcing a local[] default there would silently override the
@@ -74,31 +156,11 @@ def get_spark(
         # 1.3 s with the floor lowered). 64 KB keeps parallelism-first
         # coalescing effective down to small exchanges; large shuffles
         # (bytes/core above the floor) are unaffected at any scale.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # Tungsten execution memory OFF-HEAP: the band self-join's hash
-        # builds and the dedup aggregations allocate page arrays via
-        # Unsafe instead of on-heap long[] — measured on the isolated
-        # 768k/32c pair stage (interleaved, BASELINE.md round 5), the
-        # join stage's GC fell 781 -> 134 core-s (a co-partitioned
-        # shape) and ~380-530 -> 64 (the shipped salted shape) with
-        # identical output. The size is a cap, not a
-        # reservation; the on-heap heap can stay moderate (big heaps
-        # were a measured width tax).
-        .config(
-            "spark.memory.offHeap.enabled",
-            "false" if os.environ.get("SPARK_GRAFT_OFFHEAP") == "0" else "true",
-        )
-        .config(
-            "spark.memory.offHeap.size",
-            os.environ.get("SPARK_GRAFT_OFFHEAP", "8g") or "8g",
-        )
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         # no console progress bars: they redraw on stderr for every
         # stage (kilobytes per CLI run), interleave with the package's

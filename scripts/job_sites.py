@@ -18,8 +18,15 @@ its later partitions while the caller iterates, after the wrapped call
 has returned, so those land there too. Nothing under perfbench/ is
 edited; the work directory is removed at exit.
 
-Output: one line per call site with jobs and seconds per operation,
-then the total jobs per operation and the per-operation job counts.
+After each operation it also prints the process tree's memory, read
+from /proc: the RSS now and the peak RSS (VmHWM) in MB of the JVM, of
+the Python driver, and of each `pyspark.daemon` pool (the daemon and
+the workers it forked, with the worker count). A change that starts a
+second Python worker pool shows here.
+
+Output: one memory line per operation, one line per call site with
+jobs and seconds per operation, then the total jobs per operation and
+the per-operation job counts.
 """
 
 from __future__ import annotations
@@ -35,6 +42,59 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "fastqdedup_spark") + os.sep
+
+
+def _status(pid: int) -> dict[str, str]:
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            return dict(line.split(":", 1) for line in f if ":" in line)
+    except OSError:
+        return {}
+
+
+def _cmdline(pid: int) -> str:
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            return f.read().replace(b"\0", b" ").decode(errors="replace")
+    except OSError:
+        return ""
+
+
+def rss_split() -> str:
+    """One line: (RSS now / peak RSS) in MB per part of this process's
+    tree: the JVM, the Python driver, each pyspark.daemon pool (daemon +
+    forked workers) and anything else."""
+    from probes import descendants
+
+    def mb(status: dict[str, str], key: str) -> float:
+        return int(status.get(key, "0 kB").split()[0]) / 1024
+
+    parts: dict[str, list[float]] = collections.defaultdict(lambda: [0.0, 0.0])
+    workers: collections.Counter = collections.Counter()
+    procs = {pid: (_status(pid), _cmdline(pid)) for pid in descendants(os.getpid())}
+    for pid, (status, cmd) in procs.items():
+        if not status:
+            continue
+        if pid == os.getpid():
+            part = "python driver"
+        elif "pyspark.daemon" in cmd:
+            # a worker is forked from its pool's daemon: same command line
+            ppid = int(status["PPid"])
+            is_worker = "pyspark.daemon" in procs.get(ppid, ({}, ""))[1]
+            part = f"pyspark.daemon pool {ppid if is_worker else pid}"
+            workers[part] += is_worker
+        elif status.get("Name", "").strip() == "java":
+            part = "jvm"
+        else:
+            part = "other"
+        parts[part][0] += mb(status, "VmRSS")
+        parts[part][1] += mb(status, "VmHWM")
+    now = sum(v[0] for v in parts.values())
+    return f"rss MB (now/peak): total {now:.0f}; " + "; ".join(
+        (f"{part} ({workers[part]} workers)" if part.startswith("pyspark") else part)
+        + f" {v[0]:.0f}/{v[1]:.0f}"
+        for part, v in sorted(parts.items())
+    )
 
 
 class SiteCounter:
@@ -133,6 +193,7 @@ def main(argv: list[str] | None = None) -> int:
             op_s = time.perf_counter() - t0
             n = len(sc.statusTracker().getJobIdsForGroup(group))
             per_op.append((n, op_s))
+            print(f"op {i}: {rss_split()}", flush=True)
             wl.check(i)
         n_ops = max(len(per_op), 1)
         total = sum(n for n, _ in per_op)

@@ -121,3 +121,43 @@ def test_resumed_stage_reemits_seconds(spark, tmp_path):
         if m_ == "seconds"
     ]
     assert len(rows) == 1
+
+
+def test_empty_stage_writes_typed_empty_lineage_and_resumes(spark, tmp_path):
+    """A durable stage with no rows (the seed build's `pairs` and
+    `edges` on a corpus without near-duplicates) persists an empty
+    lineage table of the exact lineage schema, and its resume verifies
+    against it."""
+    empty = spark.range(0).select(
+        F.col("id").alias("id_a"), F.col("id").alias("id_b")
+    )
+    ck1 = _ck(spark, tmp_path)
+    assert ck1.stage("stage_e", lambda: empty).count() == 0
+    lin = ck1.read_lineage("stage_e")
+    assert lin.schema.simpleString() == (
+        "struct<file:string,rows:bigint,xor_fp:bigint,sum_fp:bigint>"
+    )
+    assert lin.count() == 0
+    assert ck1.metrics.as_dict()["stage_e.lineage_files"] == 0
+
+    ck2 = _ck(spark, tmp_path)
+    out = ck2.stage("stage_e", lambda: (_ for _ in ()).throw(AssertionError))
+    assert out.count() == 0
+    m = ck2.metrics.as_dict()
+    assert m["stage_e.resumed"] == 1
+    assert m["stage_e.lineage_verified"] == 1
+
+
+def test_write_metrics_round_trips(spark, tmp_path):
+    """write_metrics persists every (stage, metric, value) that a later
+    checkpointer over the same directory reloads."""
+    ck1 = _ck(spark, tmp_path)
+    ck1.metrics.add("stage_r", "files", 3)
+    ck1.metrics.add("stage_r", "ratio", 0.25)
+    ck1.metrics.add("other", "n", 0)
+    ck1.write_metrics()
+    ck2 = _ck(spark, tmp_path)
+    assert sorted(ck2._persisted_stage_metrics("stage_r")) == [
+        ("files", 3.0), ("ratio", 0.25),
+    ]
+    assert ck2._persisted_stage_metrics("other") == [("n", 0.0)]

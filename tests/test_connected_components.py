@@ -4,7 +4,10 @@ iteration cap."""
 
 import pyspark.sql.functions as F
 
-from fastqdedup_spark.operators.connected_components import connected_components
+from fastqdedup_spark.operators.connected_components import (
+    _driver_union_find,
+    connected_components,
+)
 
 
 def _labels(df):
@@ -93,3 +96,18 @@ def test_driver_fast_path_equals_distributed(spark):
     slow, _ = connected_components(edges, driver_max_edges=0)
     assert r0 == 0
     assert _labels(fast) == _labels(slow)
+
+
+def test_driver_union_find_no_edges(spark):
+    """Zero edges (a corpus without near-duplicates) label nothing: an
+    empty table whose columns keep the edge id type."""
+    for id_type in ("bigint", "string"):
+        sym = spark.range(0).select(
+            F.col("id").cast(id_type).alias("src"),
+            F.col("id").cast(id_type).alias("dst"),
+        )
+        labels = _driver_union_find(sym)
+        assert labels.schema.simpleString() == (
+            f"struct<id:{id_type},cluster_id:{id_type}>"
+        )
+        assert labels.count() == 0

@@ -255,13 +255,15 @@ def test_chaining_across_increments(spark, split, tmp_path):
 # index read with its known schema and the near probe's band join
 # materialized once, and with the plan shapes chosen from observed
 # counts (broadcast survivor semi-joins, `hits` unpinned, `clusters`
-# fused into survivors, no fan-out for short Arrow stages). A new
-# action on this path fails the guard.
-INCREMENT_JOB_FLOOR = 27
+# fused into survivors, no fan-out for short Arrow stages), and with
+# the union-find labels built from Arrow (`survivors` 5 -> 2 jobs). A
+# new action on this path fails the guard.
+INCREMENT_JOB_FLOOR = 24
 # Spark jobs of the seed build (build_index into an empty index): the
-# same path, whose tier-1/2 reads are empty tables but whose near-probe
-# pins still run.
-BUILD_JOB_FLOOR = 25
+# same path, whose tier-1/2 reads are empty tables built from Arrow.
+# Spark prunes the near-probe plans over them: `cand` runs no job and
+# `remainder` one.
+BUILD_JOB_FLOOR = 18
 
 
 def _jobs_of(spark, group: str, fn):
@@ -293,6 +295,45 @@ def test_increment_job_floor(spark, split, tmp_path):
     assert inc.metrics["incremental.kept"] > 0
     assert n_build <= BUILD_JOB_FLOOR
     assert n_jobs <= INCREMENT_JOB_FLOOR
+
+
+def test_no_python_rdd_on_build_or_increment(spark, tmp_path, monkeypatch):
+    """The driver-side tables (lineage, _metrics, the union-find labels,
+    the empty as-of view) travel to the JVM as Arrow: no Python RDD is
+    built, so no second pool of Python workers starts beside the UDFs'.
+    A corpus without near-duplicates makes the durable seed build write
+    the empty `pairs` and `edges` stages and run union-find over zero
+    edges, the cases that used to build one."""
+    from dataclasses import replace as _replace
+
+    import pyspark.rdd
+
+    def files(lo, hi):
+        return spark.range(lo, hi, 1, 2).select(
+            F.lit("r").alias("repo"),
+            F.concat(F.lit("p"), F.col("id")).alias("path"),
+            F.lit("c").alias("commit"),
+            F.lit("py").alias("lang"),
+            F.concat_ws(
+                " ", *(F.sha2(F.concat(F.lit(s), F.col("id")), 512) for s in "ab")
+            ).alias("content"),
+        ).localCheckpoint(eager=True)
+
+    old, new = files(0, 40), files(40, 60)
+    built = []
+    init = pyspark.rdd.PipelinedRDD.__init__
+
+    def counting(self, *args, **kwargs):
+        built.append(self)
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(pyspark.rdd.PipelinedRDD, "__init__", counting)
+    durable = _replace(CFG, checkpoint_dir=str(tmp_path / "ck"))
+    res, idx = build_index(spark, old, durable, str(tmp_path / "ix"), quality=False)
+    inc = dedup_files_incremental(spark, new, CFG, idx, quality=False, batch_id="b1")
+    assert res.metrics["output.files"] == 40
+    assert inc.metrics["incremental.kept"] == 20
+    assert built == []
 
 
 def test_model_mismatch_refused(spark, split, tmp_path):

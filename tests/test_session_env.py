@@ -1,5 +1,6 @@
-"""get_spark must make the package importable on executor python
-workers regardless of the launch cwd.
+"""get_spark sizes the session for the machine, and must make the
+package importable on executor python workers regardless of the
+launch cwd.
 
 Every pandas/Arrow UDF pickles by reference, so workers import
 `fastqdedup_spark` by name — but they only inherit the launch
@@ -13,6 +14,8 @@ exports the package root on PYTHONPATH before the gateway JVM spawns.
 import os
 import subprocess
 import sys
+
+from fastqdedup_spark import session
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -46,3 +49,34 @@ def test_udf_job_from_foreign_cwd(tmp_path):
     )
     assert proc.returncode == 0, f"driver failed:\n{proc.stderr[-3000:]}"
     assert "WORKER_IMPORT_OK" in proc.stdout
+
+
+def test_session_size_follows_the_machine(tmp_path, monkeypatch):
+    """Cores: the affinity CPU count, at most 32. Heap: a quarter of
+    the smaller of physical memory and the cgroup limit, within
+    [1g, 8g]; 8g when neither can be read. SPARK_GRAFT_CPUS and
+    SPARK_DRIVER_MEMORY override. No Spark: the machine is faked."""
+    meminfo, cgroup = tmp_path / "meminfo", tmp_path / "memory.max"
+    monkeypatch.setattr(session, "_MEMINFO", str(meminfo))
+    monkeypatch.setattr(session, "_CGROUP_LIMITS", (str(cgroup),))
+
+    def machine(cpus: int, mem_gib: int, cgroup_limit: str, env=None):
+        monkeypatch.setattr(
+            os, "sched_getaffinity", lambda pid: set(range(cpus)), raising=False
+        )
+        meminfo.write_text(
+            f"MemTotal:       {mem_gib * 2**20} kB\nMemFree:        1024 kB\n"
+        )
+        cgroup.write_text(cgroup_limit)
+        return session.session_size(env or {})
+
+    assert machine(4, 16, "max\n") == (4, "4096m")
+    assert machine(64, 256, "max\n") == (32, "8192m")
+    assert machine(8, 64, f"{6 * 2**30}\n") == (8, "1536m")
+    assert machine(2, 2, "max\n") == (2, "1024m")
+    assert machine(
+        4, 16, "max\n", {"SPARK_GRAFT_CPUS": "3", "SPARK_DRIVER_MEMORY": "2g"}
+    ) == (3, "2g")
+    meminfo.unlink()
+    cgroup.unlink()
+    assert session.session_size({}) == (4, "8192m")
