@@ -1,9 +1,11 @@
 """SparkSession factory with scale-minded defaults.
 
-Single place that pins the configs the pipeline relies on: AQE (skew
-join splitting for hot LSH bands), Arrow for every pandas UDF, UTC so
-DuckDB oracle comparison is stable, shuffle partitions sized to cores
-for local mode (a real cluster would set ~2-3x total cores).
+Single place that pins the configs the pipeline relies on: AQE's
+partition-coalescing floor, Arrow for every pandas UDF, UTC so DuckDB
+oracle comparison is stable, shuffle partitions sized to cores for
+local mode (a real cluster would set ~2-3x total cores). AQE itself,
+its coalescing and its skew-join splitting (for hot LSH bands) are
+Spark's defaults since 3.2, so they are not pinned.
 
 The session is sized for the machine it starts on (`session_size`):
 `local[N]` with N the CPUs this process may run on, at most 32, and a
@@ -146,8 +148,6 @@ def get_spark(
         )
     builder = (
         builder
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalesces reduce stages by BYTES with a 1 MB floor, which
         # starves CPU-bound stages whose input is small but whose work
         # is not: the dissection kernel's pack exchange is ~4 MB at
@@ -157,7 +157,6 @@ def get_spark(
         # coalescing effective down to small exchanges; large shuffles
         # (bytes/core above the floor) are unaffected at any scale.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_memory)

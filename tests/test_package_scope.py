@@ -1,6 +1,8 @@
 """The package is the two CLIs: every module under `fastqdedup_spark/`
 must be reachable from `fastqdedup_spark.cli` by static imports, unless
-it is named below with the reason it stays. No Spark needed."""
+it is named below with the reason it stays. And no module reaches into
+Spark's private Python-to-JVM handles beyond the sites named below.
+No Spark needed."""
 
 import ast
 from pathlib import Path
@@ -17,16 +19,27 @@ ALLOWED_UNREACHED = {
         "substring oracle checks"
     ),
     # Families the paper does not name that still carry their own tests.
-    # They are retired a few at a time (ROADMAP item 6) so that no one
+    # They are retired a few at a time (ROADMAP item 8) so that no one
     # change deletes more than a couple of dozen tests.
     "fastqdedup_spark.functions.text": "text stats; retirement pending",
-    "fastqdedup_spark.functions.scrub": "PII scrub; retirement pending",
     "fastqdedup_spark.functions.repetition": "repetition gates; retirement pending",
-    "fastqdedup_spark.operators.pack": "shard packing; retirement pending",
-    "fastqdedup_spark.operators.segment_dedup": "segment dedup; retirement pending",
-    "fastqdedup_spark.streaming": "streaming dedup package; retirement pending",
-    "fastqdedup_spark.streaming.dedup": "streaming exact dedup; retirement pending",
-    "fastqdedup_spark.streaming.near_dup": "streaming near-dup; retirement pending",
+}
+
+# Private PySpark attributes that reach the JVM directly. They are not
+# API and can change in any Spark release, so each site is named here
+# with its reason; a new one fails the test.
+PRIVATE_SPARK_ATTRS = {"_jvm", "_jsc", "_jdf", "_jo"}
+PRIVATE_SPARK_SITES = {
+    "fastqdedup_spark.checkpoint": (
+        "the remote `_SUCCESS` probe (Hadoop FileSystem.exists)"
+    ),
+    "fastqdedup_spark.sources": (
+        "the Iceberg-or-parquet probe (Hadoop FileSystem.exists)"
+    ),
+    "fastqdedup_spark.functions.partitioning": (
+        "the guarded optimizer size estimate of a plan"
+    ),
+    "fastqdedup_spark.plans": "the formatted plan dump the plan tests read",
 }
 
 
@@ -79,3 +92,15 @@ def test_every_module_is_reached_from_the_cli_or_allowlisted():
     # exists, is stale
     assert not set(ALLOWED_UNREACHED) & seen
     assert set(ALLOWED_UNREACHED) <= set(mods)
+
+
+def test_private_spark_api_only_at_named_sites():
+    sites = {}
+    for name, path in _modules().items():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in PRIVATE_SPARK_ATTRS:
+                sites.setdefault(name, []).append(f"{node.attr}:{node.lineno}")
+    unnamed = {m: s for m, s in sites.items() if m not in PRIVATE_SPARK_SITES}
+    assert not unnamed, f"private Spark API outside the named sites: {unnamed}"
+    # a named site whose module no longer touches the private API is stale
+    assert set(PRIVATE_SPARK_SITES) <= set(sites)

@@ -1,6 +1,6 @@
-"""get_spark sizes the session for the machine, and must make the
-package importable on executor python workers regardless of the
-launch cwd.
+"""get_spark sizes the session for the machine, leaves AQE on by
+Spark's defaults, and must make the package importable on executor
+python workers regardless of the launch cwd.
 
 Every pandas/Arrow UDF pickles by reference, so workers import
 `fastqdedup_spark` by name — but they only inherit the launch
@@ -26,6 +26,14 @@ from fastqdedup_spark.session import get_spark
 from fastqdedup_spark.corpus import generate_files
 spark = get_spark(master="local[2]", shuffle_partitions=2)
 spark.sparkContext.setLogLevel("ERROR")
+# get_spark leaves AQE, its coalescing and its skew-join splitting to
+# Spark's defaults; all three must resolve to on
+for key in (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.adaptive.skewJoin.enabled",
+):
+    assert spark.conf.get(key) == "true", (key, spark.conf.get(key))
 n = generate_files(spark, 16, seed=1).count()   # mapInPandas -> worker import
 assert n == 16, n
 print("WORKER_IMPORT_OK")
