@@ -15,13 +15,16 @@ Metrics: each stage appends rows (stage, metric, value) — the analog of
 the reference's trie stats / per-stage timing
 (/root/reference/src/fastqdedup/__init__.py:133-157, 410-412).
 
-Lineage: every materialized stage also persists a per-partition-file
+Lineage: every durable stage also persists a per-partition-file
 fingerprint table (`<base>/_lineage/<stage>`: file, rows, xor/sum-folded
-xxhash64 of all hashable columns). A resume recomputes the fingerprints
-from the stage it is about to trust and fails loudly on mismatch —
-"resumes idempotently" is verified, not assumed: a half-overwritten or
-bit-rotted stage cannot silently flow downstream past the _SUCCESS
-marker.
+xxhash64 of all hashable columns). Every resume recomputes the
+fingerprints from the stage it is about to trust and fails loudly on
+mismatch — "resumes idempotently" is verified, not assumed: a
+half-overwritten or bit-rotted stage cannot silently flow downstream
+past the _SUCCESS marker. Only a checkpoint written before
+lineage existed resumes unverified (`lineage_verified` 0). Persisted
+`_metrics` that carry a _SUCCESS marker but cannot be read fail loudly
+too.
 """
 
 from __future__ import annotations
@@ -101,7 +104,6 @@ class StageCheckpointer:
 
     def __init__(self, spark: SparkSession, cfg: DedupConfig) -> None:
         self.spark = spark
-        self.cfg = cfg
         self.base = (
             os.path.join(cfg.checkpoint_dir, cfg.config_hash())
             if cfg.checkpoint_dir
@@ -174,7 +176,7 @@ class StageCheckpointer:
         corrupted part file fails loudly instead of flowing downstream.
         Checkpoints from before lineage existed just skip (metric 0)."""
         lpath = self._lineage_path(stage)
-        if not self.cfg.lineage or not self._success_exists(lpath):
+        if not self._success_exists(lpath):
             self.metrics.add(stage, "lineage_verified", 0)
             return
         stored = sorted(
@@ -204,19 +206,26 @@ class StageCheckpointer:
         stage — the observed plan is replaced by a parquet scan — so
         without this reload the CLI's fallback-cluster warning and
         output count would be silently absent on resumed runs. Loaded
-        once per checkpointer; absent/partial _metrics (run killed
-        before write_metrics) just yields nothing."""
+        once per checkpointer. A run killed before write_metrics left no
+        _SUCCESS marker, which yields nothing; a marked table that
+        cannot be read fails loudly, as a lineage mismatch does, since
+        the resumed run would otherwise drop its dissect.* counters and
+        then overwrite the evidence."""
         if self._persisted is None:
             self._persisted = {}
             mpath = os.path.join(self.base, "_metrics")
             if self.base and self._success_exists(mpath):
                 try:
-                    for r in self.spark.read.parquet(mpath).collect():
-                        self._persisted.setdefault(r["stage"], []).append(
-                            (r["metric"], r["value"])
-                        )
-                except Exception:
-                    pass
+                    rows = self.spark.read.parquet(mpath).collect()
+                except Exception as e:
+                    raise RuntimeError(
+                        f"persisted checkpoint metrics at {mpath} cannot be "
+                        f"read ({type(e).__name__}). Delete it to rebuild."
+                    ) from e
+                for r in rows:
+                    self._persisted.setdefault(r["stage"], []).append(
+                        (r["metric"], r["value"])
+                    )
         return self._persisted.get(stage, [])
 
     def has(self, stage: str) -> bool:
@@ -276,7 +285,7 @@ class StageCheckpointer:
         else:
             del self.metrics._pending[mark:]
         self.metrics._settle(mark)
-        if self.base and self.cfg.lineage:
+        if self.base:
             self._write_lineage(name, df)
         self.metrics.add(name, "seconds", time.monotonic() - t0)
         return df

@@ -2,8 +2,12 @@
 
 Mirrors the reference's argparse surface
 (/root/reference/src/fastqdedup/__init__.py:305-361) re-keyed for the
-code domain: input table, distance/threshold knobs, dissection method,
-plus the graft's shingle/signature/band and checkpoint knobs. Plan
+code domain: input table, Jaccard threshold, dissection method, plus
+the graft's shingle/signature/band, index and checkpoint knobs. The
+reference's Hamming/edit radius (`-d`, `--edit`) belongs to the parity
+driver only: code-domain clustering is exact Jaccard. There is one
+clustering path: every candidate edge is verified exactly, and with a
+checkpoint dir every durable stage is lineage-checked on resume. Plan
 shapes are not flags: the band join has one form, the est sketch always
 rides the band shuffle, and the metadata broadcast, Arrow-task count
 and verify keying are sized from the row counts the run observes.
@@ -53,8 +57,6 @@ def argument_parser() -> argparse.ArgumentParser:
                         " - margin (0 disables); scale ~1/sqrt(num-perm)")
     p.add_argument("--threshold", type=float, default=0.8,
                    help="exact-Jaccard verify cutoff")
-    p.add_argument("-d", "--max-distance", type=int, default=1)
-    p.add_argument("--edit", action="store_true", dest="use_edit_distance")
     p.add_argument("-c", "--cluster-dissection", default="canonical",
                    choices=["canonical", "highest_count", "adjacency", "directional"])
     p.add_argument("--band-freq-cap", type=int, default=2000)
@@ -64,12 +66,6 @@ def argument_parser() -> argparse.ArgumentParser:
                         "(counted in metrics, warned on)")
     p.add_argument("--max-cluster-bytes", type=int, default=256 << 20,
                    help="byte-size analog of --max-cluster-size")
-    p.add_argument("--strip-boilerplate", type=float, default=0.0, metavar="FRAC",
-                   help="strip lines present in more than FRAC of files before shingling")
-    p.add_argument("--est-autoaccept", action="store_true",
-                   help="accept sketch-certain candidate pairs without exact "
-                        "verification (~3e-3 per-pair false-accept, amplified "
-                        "transitively by clustering; off = verify every edge)")
     p.add_argument("--index", default="",
                    help="persisted dedup-index directory on the local "
                         "filesystem (incremental mode; file:// accepted, "
@@ -90,10 +86,6 @@ def argument_parser() -> argparse.ArgumentParser:
                    help="with --index on a non-empty index: dedup against it "
                         "without appending this batch's retained state")
     p.add_argument("--checkpoint-dir", default="")
-    p.add_argument("--no-lineage", action="store_false", dest="lineage",
-                   help="skip per-partition-file lineage fingerprints on "
-                        "durable stages (saves one scan per stage write; "
-                        "resumes are no longer content-verified)")
     p.add_argument("--master", default=None)
     p.add_argument("-q", "--quiet", action="store_true")
     return p
@@ -194,16 +186,11 @@ def main(argv: list[str] | None = None) -> None:
         band_bins=args.band_bins,
         est_margin=args.est_margin,
         jaccard_threshold=args.threshold,
-        max_distance=args.max_distance,
-        use_edit_distance=args.use_edit_distance,
         dissection=args.cluster_dissection,
         band_freq_cap=args.band_freq_cap,
         max_cluster_size=args.max_cluster_size,
         max_cluster_bytes=args.max_cluster_bytes,
-        strip_boilerplate_frac=args.strip_boilerplate,
-        est_autoaccept=args.est_autoaccept,
         checkpoint_dir=args.checkpoint_dir,
-        lineage=args.lineage,
         # bind checkpoints to THIS input: same knobs + different data
         # must never resume from a previous dataset's stages; --index
         # batch ids derive from the same fingerprint (idempotent appends)

@@ -2,10 +2,10 @@
 
 Mirrors the reference CLI surface (`argument_parser`,
 /root/reference/src/fastqdedup/__init__.py:305-361): max distance `-d`,
-edit-vs-hamming `--edit`, dissection method `-c`, quality filter `-e` —
-plus the graft-only MinHash/LSH knobs mandated by BASELINE.json
-north_rule (shingle size k, signature length, bands x rows, skew caps,
-checkpoint dir).
+edit-vs-hamming `--edit` (both read by the parity path only),
+dissection method `-c`, quality filter `-e` — plus the graft-only
+MinHash/LSH knobs mandated by BASELINE.json north_rule (shingle size
+k, signature length, bands x rows, skew caps, checkpoint dir).
 """
 
 from __future__ import annotations
@@ -53,7 +53,6 @@ class DedupConfig:
     max_cluster_bytes: int = 256 << 20
     # -- skew / scale -------------------------------------------------------
     band_freq_cap: int = 2000       # drop bands with more members (f^2 pair blowup)
-    strip_boilerplate_frac: float = 0.0  # >0: strip lines present in more than this doc fraction before shingling
     # size-adaptive band salting: each band splits its self-join into
     # ceil(size^2 / pairs_per_task) bucket pairs so no task produces
     # more than ~this many candidate pairs (uniform task heights across
@@ -121,32 +120,8 @@ class DedupConfig:
     # 768k files at 32 partitions; 8g does not) or set "" / "merge"
     # when memory is the binding constraint.
     band_join_hint: str = "shuffle_hash"
-    # OPT-IN speed knob: accept candidate pairs whose estimated Jaccard
-    # clears threshold + est_margin WITHOUT exact re-verification (the
-    # borderline band [thr - margin, thr + margin) still verifies
-    # exactly). The per-pair false-accept bound is symmetric to the
-    # prefilter's false-drop bound — with the 2-bit-lane sketch a
-    # Jaccard margin m maps to only 0.75*m in bin-match-probability
-    # space (est_bin_match_prob: j -> j + (1-j)/4), so the Hoeffding
-    # bound is P[true j < thr | est >= thr + margin]
-    # <= exp(-2*num_perm*(0.75*margin)^2) ~ 3e-3 at the defaults
-    # (num_perm=256, margin=0.141) — and cuts the Python verify stage
-    # ~10x on near-dup-heavy corpora. BUT connected components
-    # amplifies it TRANSITIVELY: one false edge merges two whole
-    # clusters, so the per-OUTPUT error is bounded by (candidate
-    # pairs) x 3e-3 cluster-merge events, not 3e-3 per pair.
-    # Default False: the default pipeline verifies every edge exactly
-    # (same semantics as the reference); enable explicitly
-    # (--est-autoaccept) when approximate clustering is acceptable.
-    est_autoaccept: bool = False
     # -- execution ----------------------------------------------------------
     checkpoint_dir: str = ""        # empty = localCheckpoint only, no resume
-    # per-partition-file lineage fingerprints on durable stages: written
-    # with each stage (one map-side-combine scan, one row out per part
-    # file), re-derived and compared on every resume so a corrupted or
-    # half-overwritten stage fails loudly instead of flowing downstream.
-    # The write-side scan is the cost knob at very large stage sizes.
-    lineage: bool = True
     input_id: str = ""              # identifies the INPUT dataset (path + cheap
                                     # fingerprint); folded into config_hash so a
                                     # rerun on different data never resumes from

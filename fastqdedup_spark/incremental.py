@@ -217,16 +217,6 @@ class DedupIndex:
                 f"index location {path!r} is not a local directory; "
                 "incremental indexes live on the driver's filesystem"
             )
-        if cfg.strip_boilerplate_frac > 0:
-            # boilerplate stripping derives its line set from the BATCH
-            # being processed — two batches would shingle under
-            # different normalizations, so cross-batch Jaccard would be
-            # meaningless. Refuse rather than silently mis-compare.
-            raise ValueError(
-                "incremental indexes require strip_boilerplate_frac=0 "
-                "(stripping is batch-relative; cross-batch signatures "
-                "would disagree on the shingle space)"
-            )
         self.spark = spark
         self.path = path
         self.cfg = cfg

@@ -168,9 +168,9 @@ def minhash_candidate_pairs(
 
     `keep_est=True` carries the matching-bin count through as an
     `est_matches` column (deterministic per pair, so the distinct is
-    unaffected) — the pipeline uses it to split candidates into
-    est-certain accepts and a borderline band that alone needs the
-    exact (Python) verify."""
+    unaffected). No pipeline reads it: every candidate is verified
+    exactly. tests/test_est_prefilter.py reads it to check the carried
+    count against the sketch."""
     band_cols = [F.col(id_col), F.explode("band_hash").alias("band_hash")]
     # est_margin=0 disables the prefilter entirely, so carrying the
     # 8-long sketch through the band exchange would fatten it ~2.3x

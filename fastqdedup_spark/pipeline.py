@@ -59,11 +59,7 @@ from fastqdedup_spark.operators.lsh import (
     minhash_candidate_pairs,
     pigeonhole_candidate_pairs,
 )
-from fastqdedup_spark.operators.verify import (
-    est_min_matches,
-    verify_pairs_distance,
-    verify_pairs_jaccard,
-)
+from fastqdedup_spark.operators.verify import verify_pairs_distance, verify_pairs_jaccard
 from fastqdedup_spark.sources import FILES_COLUMNS
 
 
@@ -172,16 +168,13 @@ def distinct_contents(files: DataFrame) -> DataFrame:
 
 
 def sign_contents(
-    distinct: DataFrame,
-    cfg: DedupConfig,
-    approx_rows: float | None,
-    source: str = "content",
+    distinct: DataFrame, cfg: DedupConfig, approx_rows: float | None
 ) -> DataFrame:
-    """(sha, cnt, <source>) -> (sha, cnt, content_norm, n_shingles,
+    """(sha, cnt, content) -> (sha, cnt, content_norm, n_shingles,
     band_hash, sig_packed, nid): one Arrow MinHash pass over the
-    normalized `source` column."""
+    normalized content."""
     return add_signature_columns(
-        distinct.withColumn("content_norm", normalize_content(source)).select(
+        distinct.withColumn("content_norm", normalize_content("content")).select(
             "sha", "cnt", "content_norm"
         ),
         cfg,
@@ -239,28 +232,9 @@ def dedup_files(
     )
     n_distinct = counts["distinct.contents"]
 
-    def _build_signatures() -> DataFrame:
-        if cfg.strip_boilerplate_frac <= 0:
-            return sign_contents(distinct, cfg, n_distinct)
-        # semantic-skew source removal: lines shared by more than
-        # strip_boilerplate_frac of documents (license headers,
-        # generated preambles) leave the shingle space entirely, so
-        # unrelated files stop sharing bands. The sha invariant is
-        # untouched — stripping only affects the similarity model.
-        from fastqdedup_spark.operators.boilerplate import (
-            common_lines,
-            strip_boilerplate,
-        )
-
-        boiler = common_lines(distinct, "content", cfg.strip_boilerplate_frac)
-        return sign_contents(
-            strip_boilerplate(distinct, boiler, "content"),
-            cfg,
-            n_distinct,
-            source="content_stripped",
-        )
-
-    signed = ck.stage("signatures", _build_signatures)
+    signed = ck.stage(
+        "signatures", lambda: sign_contents(distinct, cfg, n_distinct)
+    )
     out_cols = [c for c in files.columns if c != "sha"]
     return cluster_signed(ck, cfg, distinct, signed, n_distinct, out_cols)
 
@@ -314,9 +288,7 @@ def cluster_signed(
     # where 64 bits had P ~ 0.03 — and a collision here is NOT benign
     # (the nid->sha fan-out join would attach verified edges to both
     # shas and falsely merge unrelated clusters).
-    pairs_lazy = minhash_candidate_pairs(
-        signed, cfg, id_col="nid", keep_est=cfg.est_autoaccept
-    )
+    pairs_lazy = minhash_candidate_pairs(signed, cfg, id_col="nid")
     # minhash_candidate_pairs runs the est prefilter only when a packed
     # sketch exists AND est_margin > 0 — mirror that exact condition
     # instead of hardcoding skip_est=True, so an est_margin=0 run still
@@ -329,42 +301,24 @@ def cluster_signed(
     # resume
     pairs = ck.stage("pairs", lambda: pairs_lazy, fuse=True)
 
-    def _build_edges() -> DataFrame:
-        cand = pairs
-        certain = None
-        if cfg.est_autoaccept and "est_matches" in cand.columns:
-            # est-certainty split: pairs whose sketch estimate clears
-            # threshold + margin are accepted outright (false-accept
-            # bound symmetric to the prefilter's false-drop bound, see
-            # DedupConfig.est_autoaccept); only the borderline band
-            # pays for the exact Arrow-side Jaccard.
-            if not ck.base:
-                # the split filters cand TWICE (certain + borderline);
-                # a fused (lazy) pair plan would re-run its reduce side
-                # for each branch — same class of double-scan the CC
-                # self-union had
-                cand = cand.localCheckpoint(eager=True)
-            hi = min(
-                est_min_matches(cfg, cfg.jaccard_threshold + cfg.est_margin) + 1,
-                cfg.num_perm,
-            )
-            certain = cand.filter(F.col("est_matches") >= hi).select("id_a", "id_b")
-            cand = cand.filter(F.col("est_matches") < hi)
-        verified = verify_pairs_jaccard(
-            cand.select("id_a", "id_b"),
+    # every candidate pair is verified exactly: connected components
+    # would spread one false edge across two whole clusters
+    edges_nid = ck.stage(
+        "edges",
+        lambda: verify_pairs_jaccard(
+            pairs.select("id_a", "id_b"),
             signed.select("nid", "content_norm", "n_shingles"),
             cfg,
             id_col="nid",
             skip_est=est_ran_upstream,
             metadata_broadcast=eff_broadcast,
-            # proxy for the (unknown) borderline-pair count: the
+            # proxy for the (unknown) candidate-pair count: the
             # whole-pipeline cap A/Bs that calibrated the threshold
             # capped/uncapped both Arrow stages together
             approx_rows=n_distinct,
-        ).select("id_a", "id_b")
-        return verified if certain is None else certain.unionByName(verified)
-
-    edges_nid = ck.stage("edges", _build_edges, fuse=True)
+        ).select("id_a", "id_b"),
+        fuse=True,
+    )
     # connected components run in compact nid space (16-byte binary vs
     # 64-char sha strings — 4x less through every CC round and through
     # the driver fast path). nid is the sha's hex prefix, so byte order

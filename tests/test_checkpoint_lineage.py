@@ -161,3 +161,26 @@ def test_write_metrics_round_trips(spark, tmp_path):
         ("files", 3.0), ("ratio", 0.25),
     ]
     assert ck2._persisted_stage_metrics("other") == [("n", 0.0)]
+
+
+def test_unreadable_persisted_metrics_fail_loudly(spark, tmp_path):
+    """A `_metrics` table whose _SUCCESS marker exists but whose part
+    file is garbage must stop the resume: reading on without it would
+    drop the resumed stages' dissect.* counters (and the CLI's
+    fallback-cluster warning), and the run's own write_metrics would
+    then overwrite the evidence."""
+    import glob
+    import os
+
+    ck1 = _ck(spark, tmp_path)
+    ck1.stage("stage_g", lambda: spark.range(0, 20))
+    ck1.metrics.add("dissect", "fallback_clusters", 1)
+    ck1.write_metrics()
+    parts = glob.glob(os.path.join(ck1.base, "_metrics", "part-*"))
+    assert parts
+    for p in parts:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file")
+    ck2 = _ck(spark, tmp_path)
+    with pytest.raises(RuntimeError, match="Delete it to rebuild"):
+        ck2.stage("stage_g", lambda: spark.range(0, 20))

@@ -344,12 +344,6 @@ def test_model_mismatch_refused(spark, split, tmp_path):
         DedupIndex(spark, str(tmp_path / "ix"), other)
 
 
-def test_strip_boilerplate_refused(spark, tmp_path):
-    cfg = DedupConfig(strip_boilerplate_frac=0.5)
-    with pytest.raises(ValueError, match="strip_boilerplate_frac"):
-        DedupIndex(spark, str(tmp_path / "ix"), cfg)
-
-
 def test_broadcast_and_shuffled_paths_agree(spark, split, built):
     """The two physical forms of the cross band join (broadcast-new vs
     shuffled equi-join) must emit identical candidate pairs, and the

@@ -1,8 +1,8 @@
 """The package is the two CLIs: every module under `fastqdedup_spark/`
 must be reachable from `fastqdedup_spark.cli` by static imports, unless
-it is named below with the reason it stays. And no module reaches into
-Spark's private Python-to-JVM handles beyond the sites named below.
-No Spark needed."""
+it is named below with the reason it stays. No module reaches into
+Spark's private Python-to-JVM handles beyond the sites named below. And
+every `DedupConfig` field has a reader. No Spark needed."""
 
 import ast
 from pathlib import Path
@@ -18,11 +18,6 @@ ALLOWED_UNREACHED = {
         "SQL-replicable kernels: the reference path of the SimHash and "
         "substring oracle checks"
     ),
-    # Families the paper does not name that still carry their own tests.
-    # They are retired a few at a time (ROADMAP item 8) so that no one
-    # change deletes more than a couple of dozen tests.
-    "fastqdedup_spark.functions.text": "text stats; retirement pending",
-    "fastqdedup_spark.functions.repetition": "repetition gates; retirement pending",
 }
 
 # Private PySpark attributes that reach the JVM directly. They are not
@@ -104,3 +99,32 @@ def test_private_spark_api_only_at_named_sites():
     assert not unnamed, f"private Spark API outside the named sites: {unnamed}"
     # a named site whose module no longer touches the private API is stale
     assert set(PRIVATE_SPARK_SITES) <= set(sites)
+
+
+def _config_fields() -> list[str]:
+    tree = ast.parse((PKG / "config.py").read_text())
+    (cls,) = [
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "DedupConfig"
+    ]
+    return [
+        n.target.id for n in cls.body
+        if isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name)
+    ]
+
+
+def test_every_config_field_is_read():
+    """A `DedupConfig` field that no package module reads as an
+    attribute (`<expr>.<field>`) is a knob that changes nothing but the
+    checkpoint key. config.py's own methods count as readers; its field
+    declarations and `asdict` do not, since neither is an attribute
+    read."""
+    fields = _config_fields()
+    assert len(fields) > 10
+    read = set()
+    for path in _modules().values():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                read.add(node.attr)
+    unread = [f for f in fields if f not in read]
+    assert not unread, f"DedupConfig fields no package module reads: {unread}"

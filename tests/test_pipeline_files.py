@@ -250,44 +250,16 @@ def test_fully_duplicated_input_rows_emit_one_survivor(spark):
     assert len(out) == len({r.sha for r in out}) == 2
 
 
-def test_cli_est_autoaccept_matches_exact_verify(spark, tmp_path, monkeypatch):
-    """--est-autoaccept accepts sketch-certain candidate pairs without
-    the exact verify. On the 600-file corpus (seed 11, CLI defaults)
-    some pairs skip the exact verify, yet no accepted pair is false:
-    the run reports the same edges and survivors as the exact run, the
-    same sha set, and every output row keeps sha256(content) == sha."""
-    from fastqdedup_spark import cli, pipeline
+def test_code_cli_has_no_parity_only_flags():
+    """The reference's Hamming/edit radius (`-d`, `--edit`) drives the
+    parity CLI's key clustering only; code-domain clustering is exact
+    Jaccard, so the code CLI refuses those flags instead of ignoring
+    them. No Spark needed."""
+    from fastqdedup_spark import cli
 
-    runs, verify_inputs = [], []
-
-    def observed_dedup(*args, **kwargs):
-        runs.append((args[2], dedup_files(*args, **kwargs)))
-        return runs[-1][1]
-
-    verify = pipeline.verify_pairs_jaccard
-
-    def observed_verify(pairs, *args, **kwargs):
-        verify_inputs.append(pairs.count())
-        return verify(pairs, *args, **kwargs)
-
-    monkeypatch.setattr(cli, "dedup_files", observed_dedup)
-    monkeypatch.setattr(pipeline, "verify_pairs_jaccard", observed_verify)
-    inp = str(tmp_path / "in")
-    generate_files(spark, 600, seed=11).write.parquet(inp)
-    outs = {}
-    for flag in ([], ["--est-autoaccept"]):
-        out = str(tmp_path / f"out{len(flag)}")
-        cli.main(["--input", inp, "--output", out, "-q", *flag])
-        rows = spark.read.parquet(out).select("sha", "content").collect()
-        assert all(
-            hashlib.sha256(r.content.encode()).hexdigest() == r.sha for r in rows
-        )
-        outs[bool(flag)] = {r.sha for r in rows}
-
-    (cfg_off, off), (cfg_on, on) = runs
-    assert (cfg_off.est_autoaccept, cfg_on.est_autoaccept) == (False, True)
-    # the certain band was accepted without the exact verify
-    assert verify_inputs[1] < verify_inputs[0]
-    assert on.metrics["edges.n"] == off.metrics["edges.n"] > 0
-    assert on.metrics["output.files"] == off.metrics["output.files"] == len(outs[False])
-    assert outs[True] == outs[False]
+    base = ["--input", "in/", "--output", "out/"]
+    for flags in (["-d", "2"], ["--edit"]):
+        with pytest.raises(SystemExit):
+            cli.argument_parser().parse_args([*base, *flags])
+    args = cli.parity_argument_parser().parse_args(["r1.fq", "-d", "2", "--edit"])
+    assert (args.max_distance, args.edit) == (2, True)

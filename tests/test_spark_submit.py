@@ -3,6 +3,7 @@ the REAL submission path — a fresh JVM, the package imported from the
 --py-files zip (not the repo checkout), the CLI driver end-to-end on a
 tiny files table — and checks the deduped output."""
 
+import hashlib
 import os
 import shutil
 import subprocess
@@ -80,3 +81,9 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     got = sorted(out.column("content").to_pylist())
     # the exact dup pair collapsed, everything else survived
     assert got == sorted(set(contents))
+    # every output row carries the sha256 of its untouched content
+    assert all(
+        hashlib.sha256(c.encode()).hexdigest() == sha
+        for c, sha in zip(out.column("content").to_pylist(),
+                          out.column("sha").to_pylist())
+    )

@@ -1,4 +1,4 @@
-"""Text-analysis + SimHash operator tests."""
+"""SimHash operator tests."""
 
 import pyspark.sql.functions as F
 
@@ -8,60 +8,6 @@ from fastqdedup_spark.functions.simhash import (
     simhash_batch,
     simhash_near_dup_pairs,
 )
-from fastqdedup_spark.functions.text import (
-    bpe_ish_token_count,
-    doc_fingerprint,
-    lang_id,
-    quality_score,
-    token_count,
-)
-
-
-def test_token_count(spark):
-    df = spark.createDataFrame(
-        [("a b c",), ("  one   two  ",), ("",), ("   ",), ("single",)], "t string"
-    )
-    got = [r[0] for r in df.select(token_count("t")).collect()]
-    assert got == [3, 2, 0, 0, 1]
-
-
-def test_bpe_ish_token_count(spark):
-    df = spark.createDataFrame([("foo_bar(x1, y2)",), ("",)], "t string")
-    got = [r[0] for r in df.select(bpe_ish_token_count("t")).collect()]
-    # foo _ bar ( x 1 , y 2 ) -> 10
-    assert got == [10, 0]
-
-
-def test_lang_id(spark):
-    rows = [
-        ("the cat and the dog sat in the garden of the house", "en"),
-        ("der hund und die katze ist nicht in das haus", "de"),
-        ("le chat est dans la maison et les jardins", "fr"),
-        ("el perro es una mascota que vive con la familia", "es"),
-        ("zzzz qqqq xxxx", "und"),
-    ]
-    df = spark.createDataFrame([(t,) for t, _ in rows], "t string")
-    got = [r[0] for r in df.select(lang_id("t")).collect()]
-    assert got == [want for _, want in rows]
-
-
-def test_quality_score_bounds(spark):
-    df = spark.createDataFrame(
-        [("the quick brown fox jumps over the lazy dog and it is fine " * 5,),
-         ("!!!! ???? 1234",), ("",)],
-        "t string",
-    )
-    scores = [r[0] for r in df.select(quality_score("t")).collect()]
-    assert all(0.0 <= s <= 1.0 for s in scores)
-    assert scores[0] > scores[1] > scores[2]
-
-
-def test_doc_fingerprint_normalization(spark):
-    df = spark.createDataFrame(
-        [("Hello   World",), ("hello world",), ("different",)], "t string"
-    )
-    fps = [r[0] for r in df.select(doc_fingerprint("t")).collect()]
-    assert fps[0] == fps[1] != fps[2]
 
 
 def test_simhash_near_dup_properties():
