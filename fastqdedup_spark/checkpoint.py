@@ -21,10 +21,11 @@ xxhash64 of all hashable columns). Every resume recomputes the
 fingerprints from the stage it is about to trust and fails loudly on
 mismatch — "resumes idempotently" is verified, not assumed: a
 half-overwritten or bit-rotted stage cannot silently flow downstream
-past the _SUCCESS marker. Only a checkpoint written before
-lineage existed resumes unverified (`lineage_verified` 0). Persisted
-`_metrics` that carry a _SUCCESS marker but cannot be read fail loudly
-too.
+past the _SUCCESS marker. A stage counts as complete only once its
+lineage has landed too, so a run killed between the stage write and
+the lineage write rebuilds that stage instead of resuming it
+unverified. Persisted `_metrics` that carry a _SUCCESS marker but
+cannot be read fail loudly too.
 """
 
 from __future__ import annotations
@@ -174,14 +175,12 @@ class StageCheckpointer:
         """On resume, recompute the per-file fingerprints and compare to
         the ones persisted at write time — a partial overwrite or
         corrupted part file fails loudly instead of flowing downstream.
-        Checkpoints from before lineage existed just skip (metric 0)."""
-        lpath = self._lineage_path(stage)
-        if not self._success_exists(lpath):
-            self.metrics.add(stage, "lineage_verified", 0)
-            return
+        has() already required the lineage's _SUCCESS marker."""
         stored = sorted(
             (r["file"], r["rows"], r["xor_fp"], r["sum_fp"])
-            for r in self.spark.read.parquet(lpath).collect()
+            for r in self.spark.read.schema(_LINEAGE_SCHEMA)
+            .parquet(self._lineage_path(stage))
+            .collect()
         )
         current = self._lineage_rows(df)
         if stored != current:
@@ -198,7 +197,7 @@ class StageCheckpointer:
         lpath = self._lineage_path(stage)
         if not self._success_exists(lpath):
             return None
-        return self.spark.read.parquet(lpath)
+        return self.spark.read.schema(_LINEAGE_SCHEMA).parquet(lpath)
 
     def _persisted_stage_metrics(self, stage: str) -> list[tuple[str, float]]:
         """Metrics persisted by a PREVIOUS run's write_metrics. Observed
@@ -216,7 +215,11 @@ class StageCheckpointer:
             mpath = os.path.join(self.base, "_metrics")
             if self.base and self._success_exists(mpath):
                 try:
-                    rows = self.spark.read.parquet(mpath).collect()
+                    rows = (
+                        self.spark.read.schema(_METRICS_SCHEMA)
+                        .parquet(mpath)
+                        .collect()
+                    )
                 except Exception as e:
                     raise RuntimeError(
                         f"persisted checkpoint metrics at {mpath} cannot be "
@@ -229,7 +232,15 @@ class StageCheckpointer:
         return self._persisted.get(stage, [])
 
     def has(self, stage: str) -> bool:
-        return bool(self.base) and self._success_exists(self._path(stage))
+        """A durable stage is complete once its lineage has landed: the
+        stage's own _SUCCESS comes first, and a run killed before the
+        lineage write left a stage no resume could verify, so it is
+        rebuilt."""
+        return (
+            bool(self.base)
+            and self._success_exists(self._path(stage))
+            and self._success_exists(self._lineage_path(stage))
+        )
 
     def stage(
         self,

@@ -8,9 +8,11 @@ reference's Hamming/edit radius (`-d`, `--edit`) belongs to the parity
 driver only: code-domain clustering is exact Jaccard. There is one
 clustering path: every candidate edge is verified exactly, and with a
 checkpoint dir every durable stage is lineage-checked on resume. Plan
-shapes are not flags: the band join has one form, the est sketch always
-rides the band shuffle, and the metadata broadcast, Arrow-task count
-and verify keying are sized from the row counts the run observes.
+shapes are not flags: the band join has one form, the est prefilter
+always runs on the sketch that rides the band shuffle, with a floor
+derived from --num-perm and --threshold, and the metadata broadcast,
+Arrow-task count and verify keying are sized from the row counts the
+run observes.
 
 Usage (zip built by scripts/make_pyfiles.py; smoke-tested end-to-end in
 tests/test_spark_submit.py):
@@ -52,9 +54,6 @@ def argument_parser() -> argparse.ArgumentParser:
                         "(0 = all num-perm); the default 256/128 split "
                         "keeps 128-bin banding recall while the est "
                         "prefilter reads the tighter 256-bin sketch")
-    p.add_argument("--est-margin", type=float, default=0.141,
-                   help="JVM est-Jaccard prefilter keeps est >= threshold"
-                        " - margin (0 disables); scale ~1/sqrt(num-perm)")
     p.add_argument("--threshold", type=float, default=0.8,
                    help="exact-Jaccard verify cutoff")
     p.add_argument("-c", "--cluster-dissection", default="canonical",
@@ -184,7 +183,6 @@ def main(argv: list[str] | None = None) -> None:
         num_perm=args.num_perm,
         bands=args.bands,
         band_bins=args.band_bins,
-        est_margin=args.est_margin,
         jaccard_threshold=args.threshold,
         dissection=args.cluster_dissection,
         band_freq_cap=args.band_freq_cap,

@@ -5,7 +5,9 @@ Mirrors the reference CLI surface (`argument_parser`,
 edit-vs-hamming `--edit` (both read by the parity path only),
 dissection method `-c`, quality filter `-e` — plus the graft-only
 MinHash/LSH knobs mandated by BASELINE.json north_rule (shingle size
-k, signature length, bands x rows, skew caps, checkpoint dir).
+k, signature length, bands x rows, skew caps, checkpoint dir). The est
+prefilter's matching-bin floor is not a knob: operators.verify.est_floor
+derives it from num_perm and jaccard_threshold.
 """
 
 from __future__ import annotations
@@ -27,8 +29,11 @@ class DedupConfig:
     # 128-bin banding structure (32 bands x 4 rows -> identical
     # candidate-recall math and band-table size) while the est
     # prefilter reads a 256-bin sketch whose sigma is 1/sqrt(2)
-    # smaller, so est_margin shrinks 0.2 -> 0.141 at the SAME
-    # false-drop probability. Measured at 192k files (pair-count probe,
+    # smaller, so its derived floor (est_floor: a fixed number of
+    # binomial sigmas under the threshold's expected bin matches) sits
+    # closer to the threshold at the SAME false-drop probability (in
+    # jaccard terms, 0.8 - 0.141 instead of 0.8 - 0.2 at 128 bins).
+    # Measured at 192k files (pair-count probe,
     # BASELINE.md round 5, "256-bin sketch over 128-bin banding"): pairs
     # surviving the JVM prefilter into the python exact-Jaccard stage
     # fell 1,077,966 -> 144,849 (7.4x) with identical final output —
@@ -37,7 +42,6 @@ class DedupConfig:
     # binning (minor vs shingling) and an 8-long carried sketch vs 4.
     band_bins: int = 128
     jaccard_threshold: float = 0.8  # verify-stage exact Jaccard cutoff
-    est_margin: float = 0.141       # JVM est-Jaccard prefilter: keep est >= threshold - margin (0 disables)
     # -- reference-parity mode (fixed-length keys, Hamming/edit radius) ----
     max_distance: int = 1           # ref default: __init__.py:37
     use_edit_distance: bool = False
@@ -91,11 +95,12 @@ class DedupConfig:
     # task's worth (this many rows) skips the repartition and runs in
     # the partitions its input already has (python_stage_fans_out).
     python_stage_min_rows_per_task: int = 1000
-    # broadcast per-distinct-doc METADATA tables (shingle sizes, the
-    # hash-min verify labels) into the verify joins so pruning happens
-    # map-side before any shuffle. ~150 B/doc: fine to ~50M distinct
-    # contents per executor heap; beyond that the same plans must run as
-    # shuffled equi-joins (a wrong broadcast there is a driver OOM).
+    # broadcast per-distinct-doc METADATA tables (the hash-min verify
+    # labels and per-key pair counts) into the verify joins so keying
+    # happens map-side before any shuffle. ~150 B/doc: fine to ~50M
+    # distinct contents per executor heap; beyond that the same plans
+    # must run as shuffled equi-joins (a wrong broadcast there is a
+    # driver OOM).
     # Resolved STATICALLY per run from the distinct-contents count (see
     # resolved_est_broadcast): a resumed checkpoint's persisted metric,
     # else the count observed on the distinct stage's materialization.
@@ -198,12 +203,13 @@ class DedupConfig:
         )
 
     # Bump when the PERSISTED SHAPE of any checkpointed stage changes
-    # (e.g. round 5 widened distinct_contents' rep struct): a stale
+    # (e.g. round 5 widened distinct_contents' rep struct; version 3
+    # dropped the signatures stage's distinct-shingle count): a stale
     # checkpoint from older code must key differently so a resume
     # rebuilds it instead of failing on missing/renamed columns at
     # load time (ADVICE r5: config_hash did not version stage schemas,
     # so cross-upgrade resumes broke instead of rebuilding).
-    STAGE_SCHEMA_VERSION = 2
+    STAGE_SCHEMA_VERSION = 3
 
     def config_hash(self) -> str:
         """Stable hash identifying checkpoint compatibility (north_rule:

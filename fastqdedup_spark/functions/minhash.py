@@ -239,10 +239,10 @@ def shingle_set(text: str, k: int) -> set:
 def add_signature_columns(
     df: DataFrame, cfg: DedupConfig, approx_rows: float | None = None
 ) -> DataFrame:
-    """Appends `n_shingles:int`, `band_hash:array<long>` via one
-    mapInPandas pass over (id-ish cols + content_norm). Signature
-    itself is folded straight into band hashes — the full signature
-    array never ships through a shuffle unless requested.
+    """Appends `band_hash:array<long>` and the 2-bit est sketch
+    `sig_packed:array<long>` via one mapInPandas pass over (id-ish cols
+    + content_norm). Signature itself is folded straight into band
+    hashes — the full signature array never ships through a shuffle.
     `approx_rows` (when the caller knows it) sizes the Arrow-stage
     task cap — see DedupConfig.python_stage_tasks — and, below one
     task's worth of rows, skips the fan-out (python_stage_fans_out)."""
@@ -252,7 +252,7 @@ def add_signature_columns(
         in_cols = df.columns
     assert cfg.num_perm % 32 == 0, "2-bit sketch packs 32 bins/long"
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema) \
-        + ", n_shingles int, band_hash array<bigint>, sig_packed array<bigint>"
+        + ", band_hash array<bigint>, sig_packed array<bigint>"
     k, num_perm, bands, seed = cfg.shingle_k, cfg.num_perm, cfg.bands, cfg.seed
     band_bins = cfg.resolved_band_bins  # leading bins folded into bands
     # CPU-bound Python stage: AQE coalesces by BYTES and would starve it
@@ -265,18 +265,9 @@ def add_signature_columns(
         )
 
     def sign_chunk(texts):
-        """shingle -> OPH -> n_unique for a CACHE-RESIDENT row chunk."""
+        """shingle -> OPH for a CACHE-RESIDENT row chunk."""
         H, starts, counts = shingle_window_hashes(texts, k)
-        sig = oph_signatures(H, starts, counts, num_perm, seed).view(np.int64)
-        n_unique = np.fromiter(
-            (
-                len(np.unique(H[starts[i] : starts[i] + counts[i]]))
-                for i in range(len(starts))
-            ),
-            dtype=np.int32,
-            count=len(starts),
-        )
-        return sig, n_unique
+        return oph_signatures(H, starts, counts, num_perm, seed).view(np.int64)
 
     def gen(it):
         for pdf in it:
@@ -287,17 +278,14 @@ def add_signature_columns(
             # loop's python overhead is ~30 numpy calls per ~170 rows,
             # noise next to the kernels.
             lens = texts.str.len().to_numpy(dtype=np.int64)
-            sig_parts, nu_parts = [], []
-            for lo, hi in content_chunk_bounds(lens):
-                s, nu = sign_chunk(texts.iloc[lo:hi])
-                sig_parts.append(s)
-                nu_parts.append(nu)
+            sig_parts = [
+                sign_chunk(texts.iloc[lo:hi])
+                for lo, hi in content_chunk_bounds(lens)
+            ]
             if sig_parts:
                 sig = np.concatenate(sig_parts)
-                n_unique = np.concatenate(nu_parts)
             else:
                 sig = np.zeros((0, num_perm), dtype=np.int64)
-                n_unique = np.zeros(0, dtype=np.int32)
             bh = band_hashes_from_sig(sig[:, :band_bins], bands, seed)
             # pack the low 2 BITS of every bin: 128 bins -> 4 longs (32
             # bins/word). The est-Jaccard prefilter counts agreeing
@@ -308,15 +296,15 @@ def add_signature_columns(
             # needed 128 comparison terms and pushed the method past
             # both — the stage silently ran un-JITed, 4-40x slower).
             # Random bins agree with prob 1/4; the threshold math maps
-            # jaccard j -> bin-match prob j + (1-j)/4 (est_min_matches),
-            # so the bias is corrected exactly, not absorbed.
+            # jaccard j -> bin-match prob j + (1-j)/4 (est_bin_match_prob,
+            # which est_floor reads), so the bias is corrected exactly,
+            # not absorbed.
             bits = (sig.view(np.uint64) & np.uint64(3)).reshape(
                 len(pdf), num_perm // 32, 32
             )
             shifts = (np.uint64(2) * np.arange(32, dtype=np.uint64))[None, None, :]
             packed = np.bitwise_or.reduce(bits << shifts, axis=2).view(np.int64)
             pdf = pdf.copy()
-            pdf["n_shingles"] = n_unique  # distinct shingles: exact |set|
             pdf["band_hash"] = list(bh)
             pdf["sig_packed"] = list(packed)
             yield pdf

@@ -94,8 +94,11 @@ idempotent, JSON files written atomically via temp+rename):
                                     increments landed
   <path>/fingerprints/<batch>/      (sha)                    parquet
   <path>/index/<batch>/             (sha, nid, content_norm,
-                                     n_shingles, band_hash,
-                                     sig_packed)              parquet
+                                     band_hash, sig_packed)   parquet
+
+Index batches written by older code also hold a sixth column, the
+per-document distinct-shingle count; every read passes _INDEX_SCHEMA,
+so Spark reads those batches without it.
 """
 
 from __future__ import annotations
@@ -114,6 +117,7 @@ from fastqdedup_spark.checkpoint import StageCheckpointer
 from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.quality import content_quality_filter
 from fastqdedup_spark.operators.exact_dedup import with_sha256
+from fastqdedup_spark.operators.verify import est_filter_carried, verify_pairs_jaccard
 from fastqdedup_spark.pipeline import (
     DedupResult,
     cluster_signed,
@@ -135,7 +139,6 @@ _INDEX_SCHEMA = T.StructType([
     T.StructField("sha", T.StringType()),
     T.StructField("nid", T.BinaryType()),
     T.StructField("content_norm", T.StringType()),
-    T.StructField("n_shingles", T.IntegerType()),
     T.StructField("band_hash", T.ArrayType(T.LongType())),
     T.StructField("sig_packed", T.ArrayType(T.LongType())),
 ])
@@ -219,7 +222,6 @@ class DedupIndex:
             )
         self.spark = spark
         self.path = path
-        self.cfg = cfg
         meta_path = os.path.join(path, "_meta.json")
         if os.path.exists(meta_path):
             with open(meta_path) as f:
@@ -462,13 +464,7 @@ def cross_candidate_pairs(
         F.col("sig_packed").alias("sig_packed_b"),
     )
     raw = ob.join(F.broadcast(nb) if broadcast_new else nb, "band_hash")
-    if cfg.est_margin > 0:
-        from fastqdedup_spark.operators.verify import est_filter_carried
-
-        pairs = est_filter_carried(raw, cfg)
-    else:
-        pairs = raw.select("id_a", "id_b")
-    return pairs.distinct()
+    return est_filter_carried(raw, cfg).distinct()
 
 
 def dedup_files_incremental(
@@ -503,8 +499,6 @@ def dedup_files_incremental(
     incremental.cross_pairs rides the candidate table. A resumed front
     stage reports the counts a fresh run observes
     (StageCheckpointer.counted_stage)."""
-    from fastqdedup_spark.operators.verify import verify_pairs_jaccard
-
     require_files_columns(new_files)
     if quality:
         new_files = content_quality_filter(new_files)
@@ -592,15 +586,14 @@ def dedup_files_incremental(
     old_hit = old_index.join(
         bcast_cross(cand.select(F.col("id_a").alias("nid"))), "nid", "left_semi"
     )
-    verify_cols = ["nid", "content_norm", "n_shingles"]
-    est_ran = cfg.est_margin > 0  # cross_candidate_pairs prefilters iff margin > 0
+    verify_cols = ["nid", "content_norm"]
     # every cross pair is (old, new): id_a's contents come from old_hit,
-    # id_b's from the signed batch. metadata_broadcast=False: the
-    # size/label relations inside verify derive from old_hit, whose
-    # CONTENT is unbounded by the increment's size for the reason
-    # above. Let AQE decide from the runtime size.
+    # id_b's from the signed batch. metadata_broadcast=False: the label
+    # relations inside verify derive from the cross pairs, whose old
+    # side is unbounded by the increment's size for the reason above.
+    # Let AQE decide from the runtime size.
     verified = verify_pairs_jaccard(
-        cand, old_hit.select(*verify_cols), cfg, id_col="nid", skip_est=est_ran,
+        cand, old_hit.select(*verify_cols), cfg, id_col="nid",
         approx_rows=n_new, metadata_broadcast=False,
         contents_b=signed_new.select(*verify_cols),
     )

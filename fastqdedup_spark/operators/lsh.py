@@ -44,6 +44,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from fastqdedup_spark.config import DedupConfig
+from fastqdedup_spark.operators.verify import est_filter_carried
 
 
 def _pairs_from_bands(
@@ -147,16 +148,15 @@ def minhash_candidate_pairs(
     signed: DataFrame, cfg: DedupConfig, id_col: str = "sha",
     keep_est: bool = False,
 ) -> DataFrame:
-    """`signed` must carry `band_hash: array<bigint>` (from
-    functions.minhash.add_signature_columns). Band index is already
-    baked into the hash's high bits, so a flat explode suffices.
+    """`signed` must carry `band_hash: array<bigint>` and `sig_packed:
+    array<bigint>` (from functions.minhash.add_signature_columns). Band
+    index is already baked into the hash's high bits, so a flat explode
+    suffices.
 
-    When `sig_packed` is present and cfg.est_margin > 0, the
-    estimated-Jaccard prefilter runs INSIDE candidate generation —
-    between the band self-join and the pair `distinct` — so the
-    quadratic boilerplate-skew flood is cut before it ever hits an
-    exchange. Callers should then pass skip_est=True to the verify
-    stage.
+    The estimated-Jaccard prefilter (verify.est_filter_carried, floor
+    verify.est_floor) runs INSIDE candidate generation — between the
+    band self-join and the pair `distinct` — so the quadratic
+    boilerplate-skew flood is cut before it ever hits an exchange.
 
     The sketch rides the band shuffle as a payload column on both join
     sides, so the filter reads the streamed row. The 4-long (128-bin)
@@ -171,34 +171,26 @@ def minhash_candidate_pairs(
     unaffected). No pipeline reads it: every candidate is verified
     exactly. tests/test_est_prefilter.py reads it to check the carried
     count against the sketch."""
-    band_cols = [F.col(id_col), F.explode("band_hash").alias("band_hash")]
-    # est_margin=0 disables the prefilter entirely, so carrying the
-    # 8-long sketch through the band exchange would fatten it ~2.3x
-    # for a payload nothing downstream reads — gate on the same
-    # condition as the prefilter itself.
-    if "sig_packed" in signed.columns and cfg.est_margin > 0:
-        from fastqdedup_spark.operators.verify import est_filter_carried
-
-        bands = signed.select(*band_cols, F.col("sig_packed"))
-        # est_matches is ALWAYS carried through the pair distinct (it is
-        # deterministic per pair, so the distinct is unaffected) and only
-        # dropped afterwards: as an aggregate key the column is REQUIRED
-        # above, which pins the est expression in a Project — the only
-        # operator whose codegen splits big expressions into
-        # sub-JIT-limit methods. Dropping it pre-distinct lets Catalyst
-        # collapse the expression into a Filter/join-condition blob that
-        # HotSpot refuses to JIT (see est_jaccard_matches) — measured
-        # 15x slower on the corpus pair stage.
-        pairs = _pairs_from_bands(
-            bands, id_col, cfg,
-            prefilter=lambda raw: est_filter_carried(raw, cfg, keep_est=True),
-            cap=cfg.band_freq_cap,
-            extra_cols=["est_matches"],
-            payload_cols=["sig_packed"],
-        )
-        return pairs if keep_est else pairs.drop("est_matches")
-    bands = signed.select(*band_cols)
-    return _pairs_from_bands(bands, id_col, cfg, cap=cfg.band_freq_cap)
+    bands = signed.select(
+        F.col(id_col), F.explode("band_hash").alias("band_hash"), F.col("sig_packed")
+    )
+    # est_matches is ALWAYS carried through the pair distinct (it is
+    # deterministic per pair, so the distinct is unaffected) and only
+    # dropped afterwards: as an aggregate key the column is REQUIRED
+    # above, which pins the est expression in a Project — the only
+    # operator whose codegen splits big expressions into
+    # sub-JIT-limit methods. Dropping it pre-distinct lets Catalyst
+    # collapse the expression into a Filter/join-condition blob that
+    # HotSpot refuses to JIT (see est_jaccard_matches) — measured
+    # 15x slower on the corpus pair stage.
+    pairs = _pairs_from_bands(
+        bands, id_col, cfg,
+        prefilter=lambda raw: est_filter_carried(raw, cfg, keep_est=True),
+        cap=cfg.band_freq_cap,
+        extra_cols=["est_matches"],
+        payload_cols=["sig_packed"],
+    )
+    return pairs if keep_est else pairs.drop("est_matches")
 
 
 def pigeonhole_candidate_pairs(

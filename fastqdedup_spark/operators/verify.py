@@ -4,11 +4,16 @@ Re-grounds the reference's per-pair distance kernels
 (/root/reference/src/fastqdedup/distances.h:8-88, exposed as
 `within_distance`, _distancemodule.c:46-93) as Arrow-vectorized pandas
 UDFs over candidate-pair DataFrames. Cheap-to-expensive ordering
-mirrors the reference's fast-fail style: length prune, then vectorized
-Hamming, then banded DP / shingle intersection only for survivors.
+mirrors the reference's fast-fail style: for keys, length prune, then
+vectorized Hamming, then banded DP; for code content, the JVM-side
+2-bit est-sketch prefilter (est_filter_carried, run inside candidate
+generation with a floor derived from the sketch width and the
+threshold), then exact shingle intersection only for survivors.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -166,10 +171,23 @@ def est_bin_match_prob(j: float) -> float:
     return j + (1.0 - j) / 4.0
 
 
-def est_min_matches(cfg: DedupConfig, j: float) -> int:
-    """Matching-bin threshold equivalent to estimated-jaccard >= j
-    (floor: the conservative direction for a keep-if-above filter)."""
-    return int(est_bin_match_prob(j) * cfg.num_perm)
+# Guard of the est prefilter in binomial standard deviations: a pair
+# whose true jaccard sits exactly at the threshold is dropped with
+# P ~ 1e-6 (one-sided normal tail at 4.75 sigma).
+EST_FLOOR_Z = 4.75
+
+
+def est_floor(cfg: DedupConfig) -> int:
+    """Matching-bin floor of the est prefilter, derived from the sketch
+    width and the threshold: a pair at jaccard == threshold agrees on
+    each of num_perm bins independently with p = est_bin_match_prob, so
+    its count is Binomial(n, p) and the floor sits EST_FLOOR_Z standard
+    deviations below n*p. Rounded down, the conservative direction for a
+    keep-if-at-least filter. 190 at (0.8, 256 bins), 89 at (0.8, 128),
+    144 at (0.6, 256)."""
+    n = cfg.num_perm
+    p = est_bin_match_prob(cfg.jaccard_threshold)
+    return int(n * p - EST_FLOOR_Z * math.sqrt(n * p * (1.0 - p)))
 
 
 def est_jaccard_matches(
@@ -217,16 +235,17 @@ def est_filter_carried(
     """Estimated-Jaccard pre-filter (JVM-side): the semantic-skew pair
     flood (boilerplate headers -> quadratically many j~0.2 candidates)
     dies here before any shuffle, content, or Python is touched. The
-    margin makes false drops statistically negligible (~4.6 sigma at
-    j == threshold with 128 bins, P ~ 2e-6); the exact verify UDF keeps
-    precision exact.
+    floor (est_floor) keeps a pair at j == threshold with the same
+    EST_FLOOR_Z-sigma guard at every threshold and sketch width, so
+    false drops are statistically negligible; the exact verify UDF
+    keeps precision exact.
 
     `raw` already carries `sig_packed_a`/`sig_packed_b` as band-join
     payload columns, so the filter is a pure streamed-row expression —
     zero hash probes per raw pair (joining per-id sketch relations
     instead paid two random lookups for every one of the ~60M raw
     pairs at 192k files; BASELINE.md round 5, "Pair-probe verdict")."""
-    min_matches = est_min_matches(cfg, cfg.jaccard_threshold - cfg.est_margin)
+    min_matches = est_floor(cfg)
     # The zero-valued NON-DETERMINISTIC term pins the filter ABOVE the
     # est projection: Catalyst never pushes non-deterministic predicates
     # (and this one is a single comparison, so conjunct-splitting can't
@@ -272,79 +291,41 @@ def mega_key_salt(pairs_per_key: int):
 def verify_pairs_jaccard(
     pairs: DataFrame, contents: DataFrame, cfg: DedupConfig,
     id_col: str = "sha", content_col: str = "content_norm",
-    size_col: str | None = "n_shingles",
-    skip_est: bool = False,
     approx_rows: float | None = None,
     metadata_broadcast: bool = True,
     contents_b: DataFrame | None = None,
 ) -> DataFrame:
     """Code-domain verification: exact Jaccard >= threshold on
-    normalized content. Returns (id_a, id_b, jaccard).
+    normalized content. Returns (id_a, id_b, jaccard). Candidate
+    generation already ran the est prefilter (est_filter_carried), so
+    every pair that reaches here ships its content to the exact kernel.
 
     `contents_b`, when given, holds id_b's rows and `contents` only
     id_a's (the incremental probe: every pair is (old, new), so the
     index side and the batch side are never unioned into one table).
 
-    `metadata_broadcast` hints the size/label relations derived from
-    `contents` as broadcasts. The batch pipeline passes
-    cfg.resolved_est_broadcast(n_distinct); pass False when the caller
-    cannot bound that table (the incremental path's contents include
-    index survivors hit by the band join — unbounded by the
-    increment's size), so AQE picks the join strategy from the REAL
-    runtime size instead of a forced broadcast hint overriding Spark's
-    own size guard.
-
-    `skip_est=True` says the est prefilter already ran upstream (in
-    candidate generation); the exact size prune is then skipped. When
-    it is False and `size_col` (distinct-shingle counts from the
-    signature stage) is available, pairs are pruned JVM-side BEFORE
-    content ships to Python using the exact bound jaccard(A,B) <=
-    min(|A|,|B|) / max(|A|,|B|) — a true upper bound, so the surviving
-    pair set is identical, but skewed candidate floods (boilerplate
-    bands) shrink inside whole-stage codegen.
+    `metadata_broadcast` hints the oriented path's per-document label
+    and per-key count relations (below) as broadcasts. The batch
+    pipeline passes cfg.resolved_est_broadcast(n_distinct); pass False
+    when the caller cannot bound the pair set's documents (the
+    incremental path's pairs reach index survivors hit by the band join
+    — unbounded by the increment's size), so AQE picks the join
+    strategy from the REAL runtime size instead of a forced broadcast
+    hint overriding Spark's own size guard.
 
     The kernel re-shingles content per batch with a per-task cache and
     id_a co-partitioning (see make_jaccard_udf and the packed-kernel
     design note above)."""
     jac = make_jaccard_udf(cfg.shingle_k)
-    # Small per-doc METADATA (shingle sizes, verify labels) broadcasts
-    # under metadata_broadcast so pruning happens map-side. The CONTENT
-    # table never broadcasts — it exceeds any broadcast budget at real
-    # scale and building the broadcast is driver-serial; its join stays
-    # a shuffled equi-join on id (the scan-shaped plan that survives
-    # 100x data).
+    # Small per-doc METADATA (the verify labels and key counts)
+    # broadcasts under metadata_broadcast so keying happens map-side.
+    # The CONTENT table never broadcasts — it exceeds any broadcast
+    # budget at real scale and building the broadcast is driver-serial;
+    # its join stays a shuffled equi-join on id (the scan-shaped plan
+    # that survives 100x data).
     hint = F.broadcast if metadata_broadcast else (lambda df: df)
     if contents_b is None:
         contents_b = contents
-    # The size bound jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|) is EXACT,
-    # but it only runs when NO est prefilter did: measured at sf0.1 with
-    # the JIT'd 2-bit est in place (round-5 A/B, best-of-2, prune_off
-    # arm under HIGHER external load), its two extra joins cost ~25-30%
-    # of the whole q14/docs-pipeline wall (4.18 -> 3.08 s, 7.39 ->
-    # 5.68 s) while the est margin already keeps the survivor stream
-    # too clean for the bound to earn its joins back.
-    have_sizes = (
-        not skip_est and size_col is not None and size_col in contents.columns
-    )
-    if have_sizes:
-        sa = contents.select(
-            F.col(id_col).alias("id_a"), F.col(size_col).alias("sz_a")
-        )
-        sb = contents_b.select(
-            F.col(id_col).alias("id_b"), F.col(size_col).alias("sz_b")
-        )
-        pairs = (
-            pairs.join(hint(sa), "id_a")
-            .join(hint(sb), "id_b")
-            .filter(
-                (F.greatest("sz_a", "sz_b") == 0)
-                | (
-                    F.least("sz_a", "sz_b")
-                    >= cfg.jaccard_threshold * F.greatest("sz_a", "sz_b")
-                )
-            )
-            .select("id_a", "id_b")
-        )
     # CPU-bound verify: fan out to full parallelism (AQE's byte-based
     # coalescing would run the pair kernel on a handful of cores) — but
     # partition by DOCUMENT, not round-robin: near-dup pairs are

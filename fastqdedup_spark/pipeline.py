@@ -170,9 +170,9 @@ def distinct_contents(files: DataFrame) -> DataFrame:
 def sign_contents(
     distinct: DataFrame, cfg: DedupConfig, approx_rows: float | None
 ) -> DataFrame:
-    """(sha, cnt, content) -> (sha, cnt, content_norm, n_shingles,
-    band_hash, sig_packed, nid): one Arrow MinHash pass over the
-    normalized content."""
+    """(sha, cnt, content) -> (sha, cnt, content_norm, band_hash,
+    sig_packed, nid): one Arrow MinHash pass over the normalized
+    content."""
     return add_signature_columns(
         distinct.withColumn("content_norm", normalize_content("content")).select(
             "sha", "cnt", "content_norm"
@@ -274,7 +274,7 @@ def cluster_signed(
     in `ck.metrics`: edges.n on the connected-components input,
     output.files and dissect.* on survivors."""
     # Metadata-broadcast decision (static per run): past
-    # est_broadcast_max_rows verify's size/label joins must run shuffled
+    # est_broadcast_max_rows verify's label joins must run shuffled
     # (a forced broadcast there is a driver OOM at >50M distinct
     # contents).
     eff_broadcast = cfg.resolved_est_broadcast(n_distinct)
@@ -289,12 +289,6 @@ def cluster_signed(
     # (the nid->sha fan-out join would attach verified edges to both
     # shas and falsely merge unrelated clusters).
     pairs_lazy = minhash_candidate_pairs(signed, cfg, id_col="nid")
-    # minhash_candidate_pairs runs the est prefilter only when a packed
-    # sketch exists AND est_margin > 0 — mirror that exact condition
-    # instead of hardcoding skip_est=True, so an est_margin=0 run still
-    # gets the exact size-bound prune in verify (otherwise the full
-    # unfiltered pair flood would ship content to the Python kernel).
-    est_ran_upstream = "sig_packed" in signed.columns and cfg.est_margin > 0
     # pairs feeds only the verify stage and edges feed only the CC
     # sym-checkpoint: both fuse into their consumer (one fewer pipeline
     # barrier each) unless a durable checkpoint dir persists them for
@@ -307,10 +301,9 @@ def cluster_signed(
         "edges",
         lambda: verify_pairs_jaccard(
             pairs.select("id_a", "id_b"),
-            signed.select("nid", "content_norm", "n_shingles"),
+            signed.select("nid", "content_norm"),
             cfg,
             id_col="nid",
-            skip_est=est_ran_upstream,
             metadata_broadcast=eff_broadcast,
             # proxy for the (unknown) candidate-pair count: the
             # whole-pipeline cap A/Bs that calibrated the threshold

@@ -55,18 +55,35 @@ def test_lineage_mismatch_fails_loudly(spark, tmp_path):
         ck2.stage("stage_b", lambda: spark.range(0, 100))
 
 
-def test_pre_lineage_checkpoints_still_resume(spark, tmp_path):
-    """Checkpoints written before lineage existed (no _lineage dir)
-    resume with lineage_verified=0, not an error."""
-    ck1 = _ck(spark, tmp_path)
-    ck1.stage("stage_c", lambda: spark.range(0, 50))
+def test_stage_without_lineage_is_rebuilt(spark, tmp_path):
+    """A run killed after a stage's _SUCCESS landed but before its
+    lineage did leaves a stage no resume can verify: the rerun rebuilds
+    it (no `resumed` metric) and writes the lineage it was missing,
+    instead of resuming it unverified forever."""
     import shutil
 
+    ck1 = _ck(spark, tmp_path)
+    ck1.stage("stage_c", lambda: spark.range(0, 50))
     shutil.rmtree(ck1._lineage_path("stage_c"))
     ck2 = _ck(spark, tmp_path)
-    out = ck2.stage("stage_c", lambda: spark.range(0, 50))
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.range(0, 50)
+
+    out = ck2.stage("stage_c", build)
     assert out.count() == 50
-    assert ck2.metrics.as_dict()["stage_c.lineage_verified"] == 0
+    assert built == [1]
+    m = ck2.metrics.as_dict()
+    assert "stage_c.resumed" not in m
+    lin = ck2.read_lineage("stage_c")
+    assert lin is not None and sum(r["rows"] for r in lin.collect()) == 50
+    # and the next run resumes the rebuilt stage, verified
+    ck3 = _ck(spark, tmp_path)
+    ck3.stage("stage_c", lambda: (_ for _ in ()).throw(AssertionError))
+    m = ck3.metrics.as_dict()
+    assert m["stage_c.resumed"] == 1 and m["stage_c.lineage_verified"] == 1
 
 
 def test_persisted_metrics_stable_across_resume_chain(spark, tmp_path):

@@ -17,8 +17,8 @@ from fastqdedup_spark.functions.minhash import minhash_batch
 from fastqdedup_spark.operators.verify import (
     est_bin_match_prob,
     est_filter_carried,
+    est_floor,
     est_jaccard_matches,
-    est_min_matches,
 )
 
 
@@ -59,11 +59,30 @@ def test_est_expression_matches_numpy(spark, num_perm):
 
 
 def test_threshold_mapping_corrects_quarter_bias():
-    cfg = DedupConfig(num_perm=128, jaccard_threshold=0.8, est_margin=0.2)
     # est-jaccard >= 0.6 maps to bin-match prob 0.6 + 0.4/4 = 0.7
     assert est_bin_match_prob(0.6) == pytest.approx(0.7)
-    assert est_min_matches(cfg, 0.6) == 89  # floor(0.7 * 128)
-    assert est_min_matches(cfg, 1.0) == 128
+    assert est_bin_match_prob(1.0) == 1.0
+    # at threshold 0.8 the floor is the bin count of est-jaccard 0.6:
+    # floor(0.7 * 128), i.e. the quarter bias is corrected, not absorbed
+    cfg = DedupConfig(num_perm=128, jaccard_threshold=0.8)
+    assert est_floor(cfg) == 89
+
+
+def test_est_floor_keeps_a_uniform_guard():
+    """The floor is derived, not tuned: it equals the floors the two
+    tuned design points used (0.8 at 256 and 128 bins), and at every
+    threshold and sketch width it sits at least 4.7 binomial standard
+    deviations below a threshold pair's expected bin matches, never
+    above num_perm."""
+    assert est_floor(DedupConfig(num_perm=256, jaccard_threshold=0.8)) == 190
+    assert est_floor(DedupConfig(num_perm=128, jaccard_threshold=0.8)) == 89
+    for thr in (0.5, 0.6, 0.8, 0.9):
+        for n in (128, 256):
+            floor = est_floor(DedupConfig(num_perm=n, jaccard_threshold=thr))
+            p = est_bin_match_prob(thr)
+            sigma = (n * p * (1 - p)) ** 0.5
+            assert (n * p - floor) / sigma >= 4.7, (thr, n, floor)
+            assert 0 <= floor <= n
 
 
 def test_prefilter_keeps_true_pairs_drops_background(spark):
@@ -71,7 +90,7 @@ def test_prefilter_keeps_true_pairs_drops_background(spark):
     survive; unrelated texts (j ~ 0) are dropped. The pairs carry both
     sketches as payload columns, the shape the band join hands to
     est_filter_carried."""
-    cfg = DedupConfig(shingle_k=5, num_perm=128, jaccard_threshold=0.8, est_margin=0.2)
+    cfg = DedupConfig(shingle_k=5, num_perm=128, jaccard_threshold=0.8)
     rng = np.random.default_rng(11)
     base = [
         " ".join(rng.choice(list("abcdefghij"), size=200).tolist()) for _ in range(20)
@@ -145,15 +164,14 @@ def test_carried_est_matches_numpy(spark):
     assert len(rows) > 0
     for r in rows:
         assert r.est_matches == matches(r.id_a, r.id_b), (r.id_a, r.id_b)
-    floor = est_min_matches(cfg, cfg.jaccard_threshold - cfg.est_margin)
-    assert min(r.est_matches for r in rows) >= floor
+    assert min(r.est_matches for r in rows) >= est_floor(cfg)
 
 
 def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
     """num_perm=256 + band_bins=128 (the np256_b32 design point): the
     banding structure stays 32 bands x 4 rows -> same candidate-recall
     math as np128, while the est sketch doubles to 256 bins so the
-    prefilter margin can shrink to 0.141 at the same false-drop
+    derived floor sits closer to the threshold at the same false-drop
     probability. The tightened prefilter must still keep every
     candidate whose TRUE jaccard clears the threshold."""
     from fastqdedup_spark.corpus import generate_files
@@ -163,11 +181,11 @@ def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
         shingle_set,
     )
     from fastqdedup_spark.operators.exact_dedup import with_sha256
-    from fastqdedup_spark.operators.lsh import minhash_candidate_pairs
+    from fastqdedup_spark.operators.lsh import _pairs_from_bands, minhash_candidate_pairs
 
     cfg = DedupConfig(
         shingle_k=7, num_perm=256, bands=32, band_bins=128,
-        jaccard_threshold=0.6, est_margin=0.141,
+        jaccard_threshold=0.6,
     )
     assert cfg.rows_per_band == 4  # np128's structure, not 256/32=8
     files = generate_files(spark, 800, seed=13)
@@ -182,12 +200,12 @@ def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
     row = signed.select("band_hash", "sig_packed").first()
     assert len(row["band_hash"]) == 32
     assert len(row["sig_packed"]) == 256 // 32
-    unfiltered_cfg = DedupConfig(
-        shingle_k=7, num_perm=256, bands=32, band_bins=128,
-        jaccard_threshold=0.6, est_margin=0.0,
-    )
     kept = minhash_candidate_pairs(signed, cfg, id_col="sha")
-    raw = minhash_candidate_pairs(signed, unfiltered_cfg, id_col="sha")
+    # the same band join with no prefilter: the reference candidate set
+    raw = _pairs_from_bands(
+        signed.select("sha", F.explode("band_hash").alias("band_hash")),
+        "sha", cfg, cap=cfg.band_freq_cap,
+    )
     kept_set = {(r.id_a, r.id_b) for r in kept.collect()}
     raw_rows = raw.collect()
     assert kept_set <= {(r.id_a, r.id_b) for r in raw_rows}
@@ -202,46 +220,3 @@ def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
         >= cfg.jaccard_threshold
     ]
     assert dropped_true == []
-
-
-def test_margin_zero_drops_carried_sketch_from_band_plan(spark):
-    """est_margin=0 disables the prefilter, so candidate generation must
-    NOT ship the 8-long sketch through the band exchange (a ~2.3x
-    fattening nothing reads). The executed plan's band explode should
-    carry sig_packed only when the prefilter will consume it."""
-    from fastqdedup_spark.corpus import generate_files
-    from fastqdedup_spark.functions.minhash import (
-        add_signature_columns,
-        normalize_content,
-    )
-    from fastqdedup_spark.operators.exact_dedup import with_sha256
-    from fastqdedup_spark.operators.lsh import minhash_candidate_pairs
-
-    files = generate_files(spark, 200, seed=13)
-    distinct = (
-        with_sha256(files)
-        .groupBy("sha")
-        .agg(F.first("content").alias("content"))
-        .withColumn("content_norm", normalize_content("content"))
-        .select("sha", "content_norm")
-    )
-
-    def band_plan(margin):
-        cfg = DedupConfig(
-            shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6,
-            est_margin=margin,
-        )
-        signed = add_signature_columns(distinct, cfg)
-        pairs = minhash_candidate_pairs(signed, cfg, id_col="sha")
-        # optimized plan: column pruning has run, so an unread
-        # sig_packed survives only in the signer's FIXED MapInPandas
-        # output schema (a UDF's schema cannot be pruned) — any other
-        # line carrying it means the payload rides the band exchange
-        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-        return [
-            l for l in plan.splitlines()
-            if "sig_packed" in l and "MapInPandas" not in l
-        ]
-
-    assert band_plan(0.2)       # prefilter consumes it downstream
-    assert not band_plan(0.0), "dead sketch payload rides the band plan"

@@ -397,6 +397,42 @@ def test_oversized_increment_path_agrees(spark, split, built):
     assert small.metrics["incremental.broadcast_new"] == 1.0
 
 
+def test_index_batch_with_shingle_count_column_still_reads(spark, split, built, tmp_path):
+    """Index batches written before the signer stopped counting distinct
+    shingles carry a sixth column, `n_shingles`, between content_norm
+    and band_hash. The index reads pass the five-column schema, so an
+    increment against such a batch runs and finds the same tiers as
+    against a batch written today."""
+    import shutil
+
+    old, new = split
+    path = str(tmp_path / "ix")
+    build_index(spark, old, CFG, path, quality=False)
+    batch_dir = os.path.join(path, "index", "base")
+    legacy = spark.read.parquet(batch_dir).select(
+        "sha", "nid", "content_norm",
+        F.size("band_hash").cast("int").alias("n_shingles"),
+        "band_hash", "sig_packed",
+    )
+    staged = str(tmp_path / "legacy_batch")
+    legacy.write.parquet(staged)
+    shutil.rmtree(batch_dir)
+    shutil.move(staged, batch_dir)
+    assert "n_shingles" in spark.read.parquet(batch_dir).columns
+    idx = DedupIndex(spark, path, CFG)
+    assert "n_shingles" not in idx.signed_survivors().columns
+    got = dedup_files_incremental(
+        spark, new, CFG, idx, quality=False, update_index=False
+    )
+    want = dedup_files_incremental(
+        spark, new, CFG, built[1], quality=False, update_index=False
+    )
+    for attr in ("dropped_exact", "dropped_near", "deduped"):
+        a = sorted(r["sha"] for r in getattr(got, attr).select("sha").collect())
+        b = sorted(r["sha"] for r in getattr(want, attr).select("sha").collect())
+        assert a == b and a, attr
+
+
 def test_half_appended_batch_is_invisible_and_self_heals(spark, split, tmp_path):
     """A crash between append()'s two writes must leave the batch
     invisible (is_empty stays True for a partial base build and both

@@ -123,15 +123,9 @@ def q14_minhash_near_dup(spark, sf):
     from fastqdedup_spark.operators.lsh import minhash_candidate_pairs
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
-    # est_margin pinned to 0.2: at 128 bins the default 0.141 (tuned
-    # for the 256-bin default sketch) would thin the borderline
-    # false-drop guard from 4.75 to ~3.4 sigma — enough for a rare
-    # oracle-mismatch flake on boundary pairs. 0.2 keeps this query
-    # byte-identical to its long-green round-4 behavior.
     from fastqdedup_spark.functions.partitioning import widen_small_input
 
-    cfg = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.8,
-                      est_margin=0.2)
+    cfg = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.8)
     # normalize_content (regex chain) rides the 2-partition union scan;
     # widen first so it runs at session width (no-op at real scale) —
     # the signer downstream already fans out via the Arrow-task cap
@@ -147,7 +141,7 @@ def q14_minhash_near_dup(spark, sf):
     signed = add_signature_columns(files, cfg).localCheckpoint(eager=True)
     pairs = minhash_candidate_pairs(signed, cfg, id_col="id")
     verified = verify_pairs_jaccard(
-        pairs, signed.select("id", "content_norm", "n_shingles"), cfg, id_col="id", skip_est=True
+        pairs, signed.select("id", "content_norm"), cfg, id_col="id"
     )
     return verified.select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
@@ -210,7 +204,7 @@ def q24_incremental_near_dup(spark, sf):
 
     cfg = DedupConfig(
         shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.8,
-        est_margin=0.2, dissection="canonical",
+        dissection="canonical",
     )
     docs = _t(spark, sf, "documents")
     old_files = docs.select(

@@ -2,8 +2,10 @@
 must be reachable from `fastqdedup_spark.cli` by static imports, unless
 it is named below with the reason it stays. No module reaches into
 Spark's private Python-to-JVM handles beyond the sites named below. And
-every `DedupConfig` field has a reader. No Spark needed."""
+every `DedupConfig` field and every CLI flag has a reader. No Spark
+session needed."""
 
+import argparse
 import ast
 from pathlib import Path
 
@@ -128,3 +130,35 @@ def test_every_config_field_is_read():
                 read.add(node.attr)
     unread = [f for f in fields if f not in read]
     assert not unread, f"DedupConfig fields no package module reads: {unread}"
+
+
+def _args_reads(func: ast.FunctionDef) -> set[str]:
+    return {
+        node.attr for node in ast.walk(func)
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.ctx, ast.Load)
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "args"
+    }
+
+
+def test_every_cli_flag_is_read():
+    """A flag that its driver parses but never reads as `args.<dest>`
+    is an option that changes nothing. Each parser is checked against
+    the driver function that parses with it, so a dest the other driver
+    reads does not count."""
+    from fastqdedup_spark import cli
+
+    tree = ast.parse((PKG / "cli.py").read_text())
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    for parser, driver in (
+        (cli.argument_parser(), "main"),
+        (cli.parity_argument_parser(), "parity_main"),
+    ):
+        dests = {
+            a.dest for a in parser._actions
+            if not isinstance(a, argparse._HelpAction)
+        }
+        assert len(dests) > 5
+        unread = sorted(dests - _args_reads(funcs[driver]))
+        assert not unread, f"{parser.prog} flags {driver} never reads: {unread}"

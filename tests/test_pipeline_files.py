@@ -156,7 +156,9 @@ def test_est_broadcast_autogate_flips_on_resumed_count(spark, corpus, tmp_path_f
     out1 = sorted(r.sha for r in r1.deduped.select("sha").collect())
 
     # doctor the persisted metric to a >50M synthetic distinct count and
-    # drop everything downstream of signatures so the pair plan rebuilds
+    # drop everything downstream of signatures, with its lineage, so the
+    # pair plan rebuilds (the two kept stages keep theirs: a stage
+    # without its lineage is rebuilt, not resumed)
     base = os.path.join(ckdir, cfg.config_hash())
     mpath = os.path.join(base, "_metrics")
     mrows = [
@@ -170,8 +172,9 @@ def test_est_broadcast_autogate_flips_on_resumed_count(spark, corpus, tmp_path_f
     shutil.rmtree(mpath)
     os.rename(tmp_m, mpath)
     for stage in os.listdir(base):
-        if stage not in ("distinct_contents", "signatures", "_metrics"):
+        if stage not in ("distinct_contents", "signatures", "_metrics", "_lineage"):
             shutil.rmtree(os.path.join(base, stage))
+            shutil.rmtree(os.path.join(base, "_lineage", stage), ignore_errors=True)
 
     r2 = dedup_files(spark, small, cfg)
     assert r2.metrics["est.broadcast"] == 0.0      # gate flipped to shuffled

@@ -64,7 +64,7 @@ def test_verify_udf_evaluates_exactly_once(spark):
     from fastqdedup_spark.config import DedupConfig
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
-    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.5, est_margin=0.0)
+    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.5)
     contents = spark.createDataFrame(
         [(i, f"doc number {i} alpha beta") for i in range(20)],
         "id long, content_norm string",
@@ -72,9 +72,7 @@ def test_verify_udf_evaluates_exactly_once(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(19)], "id_a long, id_b long"
     )
-    out = verify_pairs_jaccard(
-        pairs, contents, cfg, id_col="id", size_col=None, skip_est=True
-    )
+    out = verify_pairs_jaccard(pairs, contents, cfg, id_col="id")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
 
@@ -128,25 +126,31 @@ def test_python_stage_tasks_cap_is_size_aware(spark):
 
 
 def test_verify_metadata_broadcast_override(spark):
-    """metadata_broadcast=False (the incremental path: contents include
-    index survivors, unbounded by the increment) must leave the size
-    relations UNHINTED so AQE sizes the join at runtime — a forced
-    broadcast hint overrides Spark's own size guard. The default (True)
-    hints them as broadcasts."""
+    """metadata_broadcast=False (the incremental path: its pairs reach
+    index survivors, unbounded by the increment) must leave the oriented
+    verify's label and key-count relations UNHINTED so AQE sizes the
+    joins at runtime — a forced broadcast hint overrides Spark's own
+    size guard. The default (True) hints them as broadcasts."""
     from fastqdedup_spark.config import DedupConfig
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
-    cfg = DedupConfig(est_margin=0)  # est off -> the size prune runs
+    # one row per full-width task is a long stage at min_rows_per_task=1,
+    # so verify takes the oriented (hash-min keyed) path
+    cfg = DedupConfig(python_stage_min_rows_per_task=1)
+    approx = spark.sparkContext.defaultParallelism
     contents = spark.createDataFrame(
-        [("a", "x y z", 3), ("b", "x y w", 3)],
-        "sha string, content_norm string, n_shingles int",
+        [("a", "x y z"), ("b", "x y w")], "sha string, content_norm string"
     )
     pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
-    hinted = plan_audit(verify_pairs_jaccard(pairs, contents, cfg))
-    unhinted = plan_audit(
-        verify_pairs_jaccard(pairs, contents, cfg, metadata_broadcast=False)
+    hinted = plan_audit(
+        verify_pairs_jaccard(pairs, contents, cfg, approx_rows=approx)
     )
-    assert hinted["broadcast_joins"] >= 2      # sz_a + sz_b relations
+    unhinted = plan_audit(
+        verify_pairs_jaccard(
+            pairs, contents, cfg, approx_rows=approx, metadata_broadcast=False
+        )
+    )
+    assert hinted["broadcast_joins"] >= 3      # _la, _lb, _kcnt relations
     assert unhinted["broadcast_joins"] == 0    # AQE decides at runtime
 
 
@@ -196,7 +200,7 @@ def test_arrow_stages_fan_out_unless_known_short(spark, known):
     from fastqdedup_spark.functions.minhash import add_signature_columns
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
-    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.5, est_margin=0.0)
+    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.5)
     approx = {
         "short": cfg.python_stage_min_rows_per_task - 1,
         "unknown": None,
@@ -214,8 +218,7 @@ def test_arrow_stages_fan_out_unless_known_short(spark, known):
     )
     signed = add_signature_columns(contents, cfg, approx_rows=approx)
     verified = verify_pairs_jaccard(
-        pairs, contents, cfg, id_col="id", size_col=None, skip_est=True,
-        approx_rows=approx,
+        pairs, contents, cfg, id_col="id", approx_rows=approx,
     )
     want = 0 if known == "short" else 1
     assert _fan_out_exchanges(signed) == want

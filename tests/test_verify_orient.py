@@ -38,12 +38,12 @@ def _pairs(spark, ids):
 
 def _verify(spark, corpus, pairs, orient: bool, hot_degree: int = 4096):
     cfg = DedupConfig(
-        shingle_k=5, jaccard_threshold=0.5, est_margin=0.0,
+        shingle_k=5, jaccard_threshold=0.5,
         verify_pairs_per_key=hot_degree, python_stage_min_rows_per_task=1,
     )
     out = verify_pairs_jaccard(
         pairs, corpus, cfg,
-        id_col="id", content_col="content_norm", size_col=None,
+        id_col="id", content_col="content_norm",
         # one row per full-width task is "long" at min_rows_per_task=1
         approx_rows=spark.sparkContext.defaultParallelism if orient else None,
     )
