@@ -10,8 +10,8 @@ clustering path: every candidate edge is verified exactly, and with a
 checkpoint dir every durable stage is lineage-checked on resume. Plan
 shapes are not flags: the band join has one form, the est prefilter
 always runs on the sketch that rides the band shuffle, with a floor
-derived from --num-perm and --threshold, and the metadata broadcast,
-Arrow-task count and verify keying are sized from the row counts the
+derived from --num-perm and --threshold, verify has one pair keying,
+and the Arrow-task count and fan-out are sized from the row counts the
 run observes.
 
 Usage (zip built by scripts/make_pyfiles.py; smoke-tested end-to-end in

@@ -88,32 +88,12 @@ class DedupConfig:
     # builds the sustained python+JVM oversubscription the cap
     # relieves; capping it just idles half the cores). Calibrated
     # between the measured 24k-files loss (~300 rows/task, uncapped
-    # wins 15%) and 192k win (~2.3k rows/task, capped wins 25%). The
-    # same rule, on a KNOWN row count only, switches verify to
-    # hash-min cluster keying (operators/verify.py). It also gates the
-    # fan-out itself: an Arrow stage whose KNOWN row count is below one
-    # task's worth (this many rows) skips the repartition and runs in
-    # the partitions its input already has (python_stage_fans_out).
+    # wins 15%) and 192k win (~2.3k rows/task, capped wins 25%). It
+    # also gates the fan-out itself: an Arrow stage whose KNOWN row
+    # count is below one task's worth (this many rows) skips the
+    # repartition and runs in the partitions its input already has
+    # (python_stage_fans_out).
     python_stage_min_rows_per_task: int = 1000
-    # broadcast per-distinct-doc METADATA tables (the hash-min verify
-    # labels and per-key pair counts) into the verify joins so keying
-    # happens map-side before any shuffle. ~150 B/doc: fine to ~50M
-    # distinct contents per executor heap; beyond that the same plans
-    # must run as shuffled equi-joins (a wrong broadcast there is a
-    # driver OOM).
-    # Resolved STATICALLY per run from the distinct-contents count (see
-    # resolved_est_broadcast): a resumed checkpoint's persisted metric,
-    # else the count observed on the distinct stage's materialization.
-    # The decision never forces a plan barrier.
-    est_broadcast_max_rows: int = 50_000_000
-    # Mega-component insurance: a key whose pair count exceeds this
-    # splits into ceil(cnt/budget) subtasks salted by id_a (a 10k-doc
-    # boilerplate clique is ~50M pairs — on ONE key that is the
-    # straggler shape that regressed 53 -> 94 s at 192k, and skew costs
-    # the most exactly where parallelism is widest). 32k pairs x ~80 us
-    # of python verify ~ 2.5 s per subtask. The 768k synthetic corpus
-    # never triggers it (max 183 pairs/key).
-    verify_pairs_per_key: int = 32768
     # physical form of the band self-join: "shuffle_hash" pins the
     # co-located shuffled hash join (scale-invariant — the corpus-sized
     # band table can never broadcast at 100 TB); "" lets AQE pick
@@ -162,23 +142,16 @@ class DedupConfig:
         task) keeps full width — halving its parallelism just idles
         cores. Interleaved A/B (fused pipeline, 32 pinned cores): cap
         won at 192k files (~2.3k distinct rows/task), LOST ~15% at 24k
-        (~300 rows/task, best 9.7 s uncapped vs 11.5 capped)."""
+        (~300 rows/task, best 9.7 s uncapped vs 11.5 capped). An
+        unknown count takes the cap (the safe default for medium and
+        large corpora)."""
         width = sc.defaultParallelism
-        if not self.python_stage_is_long(sc, approx_rows):
+        if (
+            approx_rows is not None
+            and approx_rows / max(width, 1) < self.python_stage_min_rows_per_task
+        ):
             return width
         return max(2, width // 2)
-
-    def python_stage_is_long(self, sc, approx_rows: float | None = None) -> bool:
-        """Is the python stage long enough for per-stage machinery (the
-        Arrow-task cap, the hash-min verify keying) to amortize? True
-        when the known row count exceeds python_stage_min_rows_per_task
-        per full-width task — or when the count is unknown (the cap's
-        safe default for medium/large corpora)."""
-        width = max(sc.defaultParallelism, 1)
-        return (
-            approx_rows is None
-            or approx_rows / width >= self.python_stage_min_rows_per_task
-        )
 
     def python_stage_fans_out(self, approx_rows: float | None = None) -> bool:
         """Should an Arrow stage repartition to python_stage_tasks
@@ -189,17 +162,6 @@ class DedupConfig:
         return (
             approx_rows is None
             or approx_rows >= self.python_stage_min_rows_per_task
-        )
-
-    def resolved_est_broadcast(self, known_distinct: float | None = None) -> bool:
-        """Static metadata-broadcast decision: broadcast iff the
-        distinct-contents count — when one is KNOWN without running a
-        job (a resumed checkpoint's persisted metric, or the count
-        observed on the distinct stage) — fits est_broadcast_max_rows.
-        Unknown count -> broadcast (small/medium corpora default)."""
-        return (
-            known_distinct is None
-            or known_distinct <= self.est_broadcast_max_rows
         )
 
     # Bump when the PERSISTED SHAPE of any checkpointed stage changes

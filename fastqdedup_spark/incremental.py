@@ -588,13 +588,10 @@ def dedup_files_incremental(
     )
     verify_cols = ["nid", "content_norm"]
     # every cross pair is (old, new): id_a's contents come from old_hit,
-    # id_b's from the signed batch. metadata_broadcast=False: the label
-    # relations inside verify derive from the cross pairs, whose old
-    # side is unbounded by the increment's size for the reason above.
-    # Let AQE decide from the runtime size.
+    # id_b's from the signed batch
     verified = verify_pairs_jaccard(
         cand, old_hit.select(*verify_cols), cfg, id_col="nid",
-        approx_rows=n_new, metadata_broadcast=False,
+        approx_rows=n_new,
         contents_b=signed_new.select(*verify_cols),
     )
     # tier 3's input, materialized once: the signed batch minus the

@@ -145,8 +145,7 @@ def _pairs_from_bands(
 
 
 def minhash_candidate_pairs(
-    signed: DataFrame, cfg: DedupConfig, id_col: str = "sha",
-    keep_est: bool = False,
+    signed: DataFrame, cfg: DedupConfig, id_col: str = "sha"
 ) -> DataFrame:
     """`signed` must carry `band_hash: array<bigint>` and `sig_packed:
     array<bigint>` (from functions.minhash.add_signature_columns). Band
@@ -164,13 +163,7 @@ def minhash_candidate_pairs(
     192k files), while joining the raw pairs against per-id sketch
     tables paid TWO random hash lookups per raw pair — the stage's
     dominant cost (cpuT 61.7 vs 23.4 core-s at 8 cores, 223.2 vs 46.4
-    at 32; BASELINE.md round 5, "Pair-probe verdict").
-
-    `keep_est=True` carries the matching-bin count through as an
-    `est_matches` column (deterministic per pair, so the distinct is
-    unaffected). No pipeline reads it: every candidate is verified
-    exactly. tests/test_est_prefilter.py reads it to check the carried
-    count against the sketch."""
+    at 32; BASELINE.md round 5, "Pair-probe verdict")."""
     bands = signed.select(
         F.col(id_col), F.explode("band_hash").alias("band_hash"), F.col("sig_packed")
     )
@@ -190,7 +183,7 @@ def minhash_candidate_pairs(
         extra_cols=["est_matches"],
         payload_cols=["sig_packed"],
     )
-    return pairs if keep_est else pairs.drop("est_matches")
+    return pairs.drop("est_matches")
 
 
 def pigeonhole_candidate_pairs(

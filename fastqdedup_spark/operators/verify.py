@@ -8,7 +8,9 @@ mirrors the reference's fast-fail style: for keys, length prune, then
 vectorized Hamming, then banded DP; for code content, the JVM-side
 2-bit est-sketch prefilter (est_filter_carried, run inside candidate
 generation with a floor derived from the sketch width and the
-threshold), then exact shingle intersection only for survivors.
+threshold), then exact shingle intersection only for survivors, in one
+plan shape: pairs keyed by (id_a, a 4-way id_b salt), fanned out to
+the Arrow-stage task count unless the caller knows the stage is short.
 """
 
 from __future__ import annotations
@@ -69,8 +71,9 @@ def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):
       without it (192k files): per-partition re-shingling made the
       verify stage's python work grow ~linearly with the partition
       count — 1135 executor-core-seconds at 32 partitions, flat wall
-      8->32 cores. Callers co-partition pairs by id_a so each document's
-      pairs concentrate in few tasks (verify_pairs_jaccard below);
+      8->32 cores. verify_pairs_jaccard (below) partitions pairs by
+      (id_a, a 4-way id_b salt) so each document's pairs concentrate
+      in few tasks;
     - intersections run via searchsorted on the pre-sorted unique arrays
       (no allocation, no re-sort) — the vectorized analog of the
       reference's fast-fail compare loop (distances.h:24-27).
@@ -159,6 +162,14 @@ def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):
 # The text kernel + per-task cache + id_a co-partitioning is the
 # winning combination; revisit packing only for corpora whose contents
 # are much larger than their shingle sets.
+#
+# Design note (measured, do not relearn): keying pairs by a one-round
+# hash-min COMPONENT label instead of (id_a, id_b salt) cut the
+# per-task shingle-cache misses from 1.01M to ~397k at 768k files and
+# halved the isolated verify stage, but read wall-neutral end to end and
+# ~10% slower at 24k files (BASELINE.md round 5, "Verify locality" and
+# "Knob A/B"). Its extra groupBys and label joins are not worth a second
+# plan shape below that scale.
 
 
 _PAIR_MASK = 0x5555555555555555  # low bit of every 2-bit lane
@@ -263,36 +274,10 @@ def est_filter_carried(
     return out.select(*cols)
 
 
-def mega_key_salt(pairs_per_key: int):
-    """Subtask salt for hash-min cluster keys whose pair count exceeds
-    the per-task budget (`_kcnt` > pairs_per_key): splits the key into
-    ceil(_kcnt / budget) granules so one mega-component cannot park its
-    whole pair list on a single python task.
-
-    Salts on BOTH endpoints: near-dup components are not always
-    cliques — band candidates are not transitive, so a boilerplate hub
-    can form a star whose stored pairs all share id_a (hub = the
-    component minimum). A single-endpoint salt is CONSTANT there and
-    the split silently collapses back into one task; hashing the
-    (id_a, id_b) pair always varies because the pair set is distinct.
-    Mega-key subtasks trade shingle-cache locality for spread —
-    straggler insurance is the point here.
-    """
-    budget = F.lit(pairs_per_key)
-    return F.when(
-        F.col("_kcnt") > budget,
-        F.pmod(
-            F.xxhash64("id_a", "id_b"),
-            F.ceil(F.col("_kcnt") / budget).cast("long"),
-        ),
-    ).otherwise(F.lit(0))
-
-
 def verify_pairs_jaccard(
     pairs: DataFrame, contents: DataFrame, cfg: DedupConfig,
     id_col: str = "sha", content_col: str = "content_norm",
     approx_rows: float | None = None,
-    metadata_broadcast: bool = True,
     contents_b: DataFrame | None = None,
 ) -> DataFrame:
     """Code-domain verification: exact Jaccard >= threshold on
@@ -304,28 +289,24 @@ def verify_pairs_jaccard(
     id_a's (the incremental probe: every pair is (old, new), so the
     index side and the batch side are never unioned into one table).
 
-    `metadata_broadcast` hints the oriented path's per-document label
-    and per-key count relations (below) as broadcasts. The batch
-    pipeline passes cfg.resolved_est_broadcast(n_distinct); pass False
-    when the caller cannot bound the pair set's documents (the
-    incremental path's pairs reach index survivors hit by the band join
-    — unbounded by the increment's size), so AQE picks the join
-    strategy from the REAL runtime size instead of a forced broadcast
-    hint overriding Spark's own size guard.
+    `approx_rows` (when the caller knows it) sizes the Arrow-stage task
+    count and, below one task's worth of rows, skips the fan-out (see
+    DedupConfig.python_stage_tasks and python_stage_fans_out).
 
     The kernel re-shingles content per batch with a per-task cache and
     id_a co-partitioning (see make_jaccard_udf and the packed-kernel
     design note above)."""
     jac = make_jaccard_udf(cfg.shingle_k)
-    # Small per-doc METADATA (the verify labels and key counts)
-    # broadcasts under metadata_broadcast so keying happens map-side.
+    if contents_b is None:
+        contents_b = contents
     # The CONTENT table never broadcasts — it exceeds any broadcast
     # budget at real scale and building the broadcast is driver-serial;
     # its join stays a shuffled equi-join on id (the scan-shaped plan
     # that survives 100x data).
-    hint = F.broadcast if metadata_broadcast else (lambda df: df)
-    if contents_b is None:
-        contents_b = contents
+    withv = _attach_pair_values(
+        pairs, contents.select(id_col, content_col), id_col, content_col,
+        values_b=contents_b.select(id_col, content_col),
+    )
     # CPU-bound verify: fan out to full parallelism (AQE's byte-based
     # coalescing would run the pair kernel on a handful of cores) — but
     # partition by DOCUMENT, not round-robin: near-dup pairs are
@@ -334,77 +315,17 @@ def verify_pairs_jaccard(
     # shingling across its pairs. Round-robin scattered every hot
     # document into every partition and the python re-shingling work
     # grew ~linearly with the partition count (the stage's 8->32-core
-    # scaling was FLAT).
+    # scaling was FLAT). The 4-way id_b salt spreads a hub document's
+    # pairs over a few tasks instead of one.
     #
-    # Cluster orientation: key each pair by a
-    # one-round hash-min label so each near-dup COMPONENT's pairs land
-    # on one key (components are cliques; a clique's labels collapse to
-    # its min id). The legacy (id_a, 4-way id_b salt) key measured a
-    # 90% per-task cache MISS rate at 768k files — 1.01M misses for
-    # 387k distinct docs — and shingling misses are 90% of verify's
-    # python time (398 of 444 core-s, BASELINE.md "Verify locality"). Degree
-    # orientation (higher-degree endpoint as key) was measured first
-    # and is NOT it: -18% misses, wall a wash — cliques have no hubs.
-    # Hash-min keying predicts 397k misses, 2.6% off the ideal. The
-    # labels come from the verified pair set itself; the ids-only lazy
-    # localCheckpoint pins the upstream band join to a single
-    # evaluation when `pairs` arrives unmaterialized (q14-style
-    # callers). Keys above cfg.verify_pairs_per_key pairs split into
-    # id_a-salted subtasks (mega-clique straggler insurance; skew costs
-    # the most exactly where parallelism is widest: 53 -> 94 s at 192k
-    # when one hot task landed at full width).
-    #
-    # The machinery (an ids-only localCheckpoint, two small groupBys,
-    # map-side label joins) only amortizes on LONG verify stages:
-    # interleaved 24k-corpus A/B (32 cores) measured the oriented
-    # pipeline ~10% SLOWER (best 10.98 vs 9.83 s), 768k ~2x FASTER on
-    # the isolated stage (best 7.74 vs 14.4 s; BASELINE.md round 5,
-    # "Verify locality: hash-min cluster keying"). So orient exactly
-    # when the row count is KNOWN and the Arrow-task cap's size rule
-    # says the stage is long; an unknown count (q14-style direct
-    # operator calls, which are small) keeps the (id_a, salt-4) key.
-    sc = pairs.sparkSession.sparkContext
-    ptasks = cfg.python_stage_tasks(sc, approx_rows)
-    orient = approx_rows is not None and cfg.python_stage_is_long(sc, approx_rows)
-    if orient:
-        pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
-        nb = pairs.select(
-            F.col("id_a").alias("_v"), F.col("id_b").alias("_n")
-        ).unionByName(pairs.select(F.col("id_b").alias("_v"), F.col("id_a").alias("_n")))
-        lab = nb.groupBy("_v").agg(F.min("_n").alias("_mn"))
-        lab = lab.select("_v", F.least("_mn", "_v").alias("_l"))
-        pairs = (
-            pairs.join(
-                hint(lab.select(F.col("_v").alias("id_a"), F.col("_l").alias("_la"))),
-                "id_a",
-            )
-            .join(
-                hint(lab.select(F.col("_v").alias("id_b"), F.col("_l").alias("_lb"))),
-                "id_b",
-            )
-            .withColumn("_key", F.least("_la", "_lb"))
-            # _la/_lb are dead once _key exists; dropping them keeps
-            # two 16-byte binaries per pair out of the content joins
-            # and the verify exchange (only _key/_kcnt steer the
-            # repartition below)
-            .drop("_la", "_lb")
-        )
-        kcnt = pairs.groupBy("_key").agg(F.count(F.lit(1)).alias("_kcnt"))
-        pairs = pairs.join(hint(kcnt), "_key")
-    withv = _attach_pair_values(
-        pairs, contents.select(id_col, content_col), id_col, content_col,
-        values_b=contents_b.select(id_col, content_col),
-    )
-    if orient:
+    # A known-short stage (fewer documents than one Arrow task's worth)
+    # verifies in the partitions its pairs already have: the exchange
+    # and its extra python workers cost more than the rows.
+    if cfg.python_stage_fans_out(approx_rows):
+        sc = pairs.sparkSession.sparkContext
         withv = withv.repartition(
-            ptasks, F.col("_key"), mega_key_salt(cfg.verify_pairs_per_key)
-        )
-    elif cfg.python_stage_fans_out(approx_rows):
-        # a known-short stage (fewer documents than one Arrow task's
-        # worth) verifies in the partitions its pairs already have: the
-        # exchange and its extra python workers cost more than the rows
-        withv = withv.repartition(
-            ptasks, "id_a", F.pmod(F.xxhash64("id_b"), F.lit(4))
+            cfg.python_stage_tasks(sc, approx_rows),
+            "id_a", F.pmod(F.xxhash64("id_b"), F.lit(4)),
         )
     return (
         withv.withColumn("jaccard", jac("value_a", "value_b"))

@@ -215,9 +215,9 @@ def dedup_files(
         files = content_quality_filter(files)
     files = with_sha256(files)
 
-    # The distinct-contents count sizes two static plan choices (the
-    # tail's metadata-broadcast gate, Arrow-stage task caps). It and the
-    # input row count ride the stage's own materialization via
+    # The distinct-contents count sizes the Arrow stages (the signer's
+    # and verify's task count and whether they fan out at all). It and
+    # the input row count ride the stage's own materialization via
     # Dataset.observe (CollectMetrics fires on BOTH materialization
     # paths: localCheckpoint is a withAction and so is the durable
     # parquet write) — zero extra jobs on a fresh run; a resumed stage
@@ -273,12 +273,6 @@ def cluster_signed(
     columns minus `sha`) orders the rebuilt output rows. Metrics land
     in `ck.metrics`: edges.n on the connected-components input,
     output.files and dissect.* on survivors."""
-    # Metadata-broadcast decision (static per run): past
-    # est_broadcast_max_rows verify's label joins must run shuffled
-    # (a forced broadcast there is a driver OOM at >50M distinct
-    # contents).
-    eff_broadcast = cfg.resolved_est_broadcast(n_distinct)
-    ck.metrics.add("est", "broadcast", float(eff_broadcast))
     # candidate generation runs on compact 16-byte binary ids (the first
     # 128 bits of the sha), not 64-char hex shas: the band self-join's
     # output is quadratic in band size and each row carries two ids, so
@@ -304,7 +298,6 @@ def cluster_signed(
             signed.select("nid", "content_norm"),
             cfg,
             id_col="nid",
-            metadata_broadcast=eff_broadcast,
             # proxy for the (unknown) candidate-pair count: the
             # whole-pipeline cap A/Bs that calibrated the threshold
             # capped/uncapped both Arrow stages together

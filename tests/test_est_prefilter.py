@@ -115,21 +115,12 @@ def test_prefilter_keeps_true_pairs_drops_background(spark):
     assert not (set(bg_pairs) & kept)
 
 
-def test_est_broadcast_auto_resolution():
-    """The metadata broadcast holds only while the known distinct count
-    fits est_broadcast_max_rows; an unknown count broadcasts
-    (VERDICT r4 #7)."""
-    cfg = DedupConfig()
-    assert cfg.resolved_est_broadcast() is True                  # unknown
-    assert cfg.resolved_est_broadcast(1_000_000) is True
-    assert cfg.resolved_est_broadcast(50_000_000) is True         # == max
-    assert cfg.resolved_est_broadcast(60_000_000) is False        # > 50M
-
-
 def test_carried_est_matches_numpy(spark):
-    """The sketch rides the band shuffle as a payload column: every
-    candidate pair's carried est_matches must equal the matching-bin
-    count recomputed in numpy from the two docs' 2-bit sketches."""
+    """The sketch rides the band shuffle as a payload column and the
+    prefilter keeps a pair on its matching-bin count: every candidate
+    pair's count, recomputed in numpy from the two docs' 2-bit
+    sketches, must reach est_floor, and est_jaccard_matches over the
+    pair's two sig_packed columns must equal that numpy count."""
     from fastqdedup_spark.corpus import generate_files
     from fastqdedup_spark.functions.minhash import (
         add_signature_columns,
@@ -159,12 +150,22 @@ def test_carried_est_matches_numpy(spark):
         diff = sum(bin(int(w)).count("1") for w in lane)
         return cfg.num_perm - diff
 
-    pairs = minhash_candidate_pairs(signed, cfg, id_col="sha", keep_est=True)
-    rows = pairs.collect()
+    pairs = minhash_candidate_pairs(signed, cfg, id_col="sha")
+    sigs = signed.select("sha", "sig_packed")
+    rows = (
+        pairs.join(sigs.toDF("id_a", "sig_packed_a"), "id_a")
+        .join(sigs.toDF("id_b", "sig_packed_b"), "id_b")
+        .select(
+            "id_a", "id_b",
+            est_jaccard_matches(cfg, "sig_packed_a", "sig_packed_b").alias("est"),
+        )
+        .collect()
+    )
     assert len(rows) > 0
     for r in rows:
-        assert r.est_matches == matches(r.id_a, r.id_b), (r.id_a, r.id_b)
-    assert min(r.est_matches for r in rows) >= est_floor(cfg)
+        m = matches(r.id_a, r.id_b)
+        assert m >= est_floor(cfg), (r.id_a, r.id_b)
+        assert r.est == m, (r.id_a, r.id_b)
 
 
 def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):

@@ -125,35 +125,6 @@ def test_python_stage_tasks_cap_is_size_aware(spark):
     assert cfg.python_stage_tasks(sc, approx_rows=None) == max(2, width // 2)
 
 
-def test_verify_metadata_broadcast_override(spark):
-    """metadata_broadcast=False (the incremental path: its pairs reach
-    index survivors, unbounded by the increment) must leave the oriented
-    verify's label and key-count relations UNHINTED so AQE sizes the
-    joins at runtime — a forced broadcast hint overrides Spark's own
-    size guard. The default (True) hints them as broadcasts."""
-    from fastqdedup_spark.config import DedupConfig
-    from fastqdedup_spark.operators.verify import verify_pairs_jaccard
-
-    # one row per full-width task is a long stage at min_rows_per_task=1,
-    # so verify takes the oriented (hash-min keyed) path
-    cfg = DedupConfig(python_stage_min_rows_per_task=1)
-    approx = spark.sparkContext.defaultParallelism
-    contents = spark.createDataFrame(
-        [("a", "x y z"), ("b", "x y w")], "sha string, content_norm string"
-    )
-    pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
-    hinted = plan_audit(
-        verify_pairs_jaccard(pairs, contents, cfg, approx_rows=approx)
-    )
-    unhinted = plan_audit(
-        verify_pairs_jaccard(
-            pairs, contents, cfg, approx_rows=approx, metadata_broadcast=False
-        )
-    )
-    assert hinted["broadcast_joins"] >= 3      # _la, _lb, _kcnt relations
-    assert unhinted["broadcast_joins"] == 0    # AQE decides at runtime
-
-
 def _survivor_semi_join_audit(spark, max_rows: int) -> tuple[dict, float]:
     from dataclasses import replace
 
@@ -190,12 +161,11 @@ def _fan_out_exchanges(df) -> int:
 
 @pytest.mark.parametrize("known", ["short", "unknown", "long"])
 def test_arrow_stages_fan_out_unless_known_short(spark, known):
-    """The signer and the non-oriented verify repartition to the Arrow
-    task count before running, except when the caller passes a known
-    row count below python_stage_min_rows_per_task: then they run in
-    the partitions their input already has. An unknown count, or one
-    at the threshold (still short of the oriented verify keying at
-    this width), keeps the exchange."""
+    """The signer and verify repartition to the Arrow task count
+    before running, except when the caller passes a known row count
+    below python_stage_min_rows_per_task: then they run in the
+    partitions their input already has. An unknown count, or one at
+    the threshold, keeps the exchange."""
     from fastqdedup_spark.config import DedupConfig
     from fastqdedup_spark.functions.minhash import add_signature_columns
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
@@ -206,9 +176,6 @@ def test_arrow_stages_fan_out_unless_known_short(spark, known):
         "unknown": None,
         "long": cfg.python_stage_min_rows_per_task,
     }[known]
-    assert not cfg.python_stage_is_long(
-        spark.sparkContext, cfg.python_stage_min_rows_per_task
-    )
     contents = spark.createDataFrame(
         [(i, f"doc number {i} alpha beta") for i in range(20)],
         "id long, content_norm string",
