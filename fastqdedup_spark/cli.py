@@ -130,11 +130,7 @@ def parity_main(argv: list[str] | None = None) -> None:
     gzipped FASTQ outputs (deduplicate_cluster + main,
     /root/reference/src/fastqdedup/__init__.py:209-288, 378-412)."""
     from fastqdedup_spark.functions.slices import length_string_to_slices
-    from fastqdedup_spark.sources.fastq import (
-        deduplicate_fastq,
-        read_fastq,
-        write_fastq,
-    )
+    from fastqdedup_spark.sources.fastq import deduplicate_fastq, write_fastq
 
     args = parity_argument_parser().parse_args(argv)
     level = logging.INFO - 10 * (args.verbose - args.quiet)
@@ -163,9 +159,8 @@ def parity_main(argv: list[str] | None = None) -> None:
     )
     spark = get_spark(master=args.master)
     t0 = time.monotonic()
-    tables = [read_fastq(spark, f) for f in input_files]
     surviving = deduplicate_fastq(
-        spark, tables, cfg, check_slices, args.max_average_error_rate
+        spark, input_files, cfg, check_slices, args.max_average_error_rate
     )
     n = write_fastq(surviving, output_files)
     logger.info(

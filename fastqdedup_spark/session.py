@@ -14,6 +14,16 @@ the cgroup limit, whichever is smaller), between 1g and 8g.
 `SPARK_GRAFT_CPUS` and `SPARK_DRIVER_MEMORY` override either. There is
 no off-heap arena: Tungsten's execution memory lives on that heap.
 
+Spark's codegen cache holds CODEGEN_CACHE_ENTRIES (1000) generated
+classes instead of its default 100. One perfbench operation's plans
+generate about 100 classes, and one run's distinct classes measured
+about 139 on fastq-umi and about 170 on code-incremental, so with the
+default every warm operation recompiled 84-105 classes with Janino;
+with the pin a warm operation compiles none. It is a launch default,
+as is the executors' throughput GC: a value submitted with the launch
+(`--conf`, spark-defaults.conf) wins, and under spark-submit neither is
+set.
+
 `driver_table` builds the small tables the driver computes (lineage,
 metrics, union-find labels, empty index views) from Arrow, so that no
 Python worker starts for them.
@@ -28,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 MAX_CORES = 32
+# generated classes Spark keeps compiled (see get_spark)
+CODEGEN_CACHE_ENTRIES = 1000
 MIN_DRIVER_MB, MAX_DRIVER_MB = 1024, 8 * 1024
 _MEMINFO = "/proc/meminfo"
 # cgroup v2, then v1; an unlimited v1 group reads as a huge number
@@ -118,7 +130,30 @@ def get_spark(
     # SPARK_SUBMIT_OPTS wins. No-op if the JVM is already up.
     opts = os.environ.get("SPARK_SUBMIT_OPTS", "")
     if "GC" not in opts:
-        os.environ["SPARK_SUBMIT_OPTS"] = f"{opts} -XX:+UseParallelGC".strip()
+        opts += " -XX:+UseParallelGC"
+    # Confs a user may submit get their defaults the same way, as JVM
+    # system properties: SparkSubmit applies the submitted values
+    # (PYSPARK_SUBMIT_ARGS --conf, spark-defaults.conf) over them, so a
+    # submitted value wins; a builder config would replace it. Under
+    # spark-submit the JVM is already up and these do nothing: the
+    # submitted value, or Spark's default, holds.
+    # - spark.executor.extraJavaOptions: the same throughput-GC choice
+    #   for cluster executors (no-op in local mode, where the driver
+    #   JVM hosts the executors).
+    # - spark.sql.codegen.cache.maxEntries (static): Spark's default of
+    #   100 generated classes is below one perfbench operation's plans,
+    #   so every warm operation recompiled 84-105 classes with Janino.
+    #   One run's distinct classes measured about 139 (fastq-umi's two
+    #   warm-up operations) and about 170 (code-incremental's seed
+    #   build plus its first increment); with room for all of them a
+    #   warm operation compiles none.
+    for key, value in (
+        ("spark.executor.extraJavaOptions", "-XX:+UseParallelGC"),
+        ("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)),
+    ):
+        if f"-D{key}=" not in opts:
+            opts += f" -D{key}={value}"
+    os.environ["SPARK_SUBMIT_OPTS"] = opts.strip()
     # Executor python workers must import this package BY NAME (every
     # pandas/Arrow UDF pickles by reference), but they only inherit the
     # launch environment — not the driver's sys.path. Launched from
@@ -168,24 +203,4 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # same throughput-GC choice for real cluster executors (no-op in
-    # local mode, where the driver JVM hosts the executors). Deference:
-    # a user-supplied spark.executor.extraJavaOptions must not be
-    # clobbered — builder.config would override the submitted value at
-    # session build. Read the resolved SparkConf (spark-submit --conf
-    # lands in JVM system properties), not PYSPARK_SUBMIT_ARGS: under
-    # spark-submit the driver python process does NOT see user --conf
-    # values in that env var (ADVICE r5). SparkConf() here is after the
-    # SPARK_SUBMIT_OPTS setup above, so a gateway launched by it still
-    # carries the GC flag.
-    from pyspark import SparkConf
-
-    try:
-        user_exec_opts = SparkConf().get("spark.executor.extraJavaOptions", None)
-    except Exception:  # noqa: BLE001 — no gateway/JVM: nothing submitted
-        user_exec_opts = None
-    if user_exec_opts is None:
-        builder = builder.config(
-            "spark.executor.extraJavaOptions", "-XX:+UseParallelGC"
-        )
     return builder.getOrCreate()

@@ -22,7 +22,10 @@ After each operation it also prints the process tree's memory, read
 from /proc: the RSS now and the peak RSS (VmHWM) in MB of the JVM, of
 the Python driver, and of each `pyspark.daemon` pool (the daemon and
 the workers it forked, with the worker count). A change that starts a
-second Python worker pool shows here.
+second Python worker pool shows here. The same line gives the Janino
+compilations the operation ran (the delta of Spark's
+`CodegenMetrics.METRIC_COMPILATION_TIME` count): a warm operation whose
+plans are all in the codegen cache compiles nothing.
 
 Output: one memory line per operation, one line per call site with
 jobs and seconds per operation, then the total jobs per operation and
@@ -177,6 +180,7 @@ def main(argv: list[str] | None = None) -> int:
         wl.prepare()
         wl.warm_up_op()
         wl.warm_up_check()
+        compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         per_op = []
         for i in range(args.ops):
             if not wl.has_op(i):
@@ -185,6 +189,7 @@ def main(argv: list[str] | None = None) -> int:
             counter.group = group
             sc.setJobGroup(group, group)
             t0 = time.perf_counter()
+            c0 = compiled.METRIC_COMPILATION_TIME().getCount()
             try:
                 wl.op(i)
             finally:
@@ -193,7 +198,8 @@ def main(argv: list[str] | None = None) -> int:
             op_s = time.perf_counter() - t0
             n = len(sc.statusTracker().getJobIdsForGroup(group))
             per_op.append((n, op_s))
-            print(f"op {i}: {rss_split()}", flush=True)
+            n_compiled = compiled.METRIC_COMPILATION_TIME().getCount() - c0
+            print(f"op {i}: {n_compiled} Janino compilations; {rss_split()}", flush=True)
             wl.check(i)
         n_ops = max(len(per_op), 1)
         total = sum(n for n, _ in per_op)

@@ -88,3 +88,33 @@ def test_session_size_follows_the_machine(tmp_path, monkeypatch):
     meminfo.unlink()
     cgroup.unlink()
     assert session.session_size({}) == (4, "8192m")
+
+
+_SUBMITTED = """\
+import sys
+sys.path.insert(0, {repo!r})
+from fastqdedup_spark.session import get_spark
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+print("CACHE", spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+spark.stop()
+"""
+
+
+def test_codegen_cache_pin_defers_to_a_submitted_value(spark, tmp_path):
+    """get_spark sizes Spark's codegen cache (a static conf) for the
+    package's plans, unless the launch submitted its own value."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_ENTRIES
+    )
+    script = tmp_path / "driver.py"
+    script.write_text(_SUBMITTED.format(repo=REPO))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.sql.codegen.cache.maxEntries=7 pyspark-shell"
+    )
+    proc = subprocess.run(
+        [sys.executable, str(script)], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, f"driver failed:\n{proc.stderr[-3000:]}"
+    assert "CACHE 7" in proc.stdout
