@@ -6,8 +6,11 @@ code domain: input table, Jaccard threshold, dissection method, plus
 the graft's shingle/signature/band, index and checkpoint knobs. The
 reference's Hamming/edit radius (`-d`, `--edit`) belongs to the parity
 driver only: code-domain clustering is exact Jaccard. There is one
-clustering path: every candidate edge is verified exactly, and with a
-checkpoint dir every durable stage is lineage-checked on resume. Plan
+front: every run goes through incremental.dedup_files_incremental, and
+without --index that is an increment against no index that appends
+nothing. There is one clustering path: every candidate edge is verified
+exactly, and with a checkpoint dir every durable stage is
+lineage-checked on resume. Plan
 shapes are not flags: the band join has one form, the est prefilter
 always runs on the sketch that rides the band shuffle, with a floor
 derived from --num-perm and --threshold, verify has one pair keying,
@@ -30,8 +33,8 @@ import logging
 import sys
 import time
 
+from fastqdedup_spark import incremental
 from fastqdedup_spark.config import DedupConfig
-from fastqdedup_spark.pipeline import dedup_files
 from fastqdedup_spark.session import get_spark
 from fastqdedup_spark.sources import input_fingerprint, read_files_table, write_table
 
@@ -195,35 +198,28 @@ def main(argv: list[str] | None = None) -> None:
     )
     t0 = time.monotonic()
     files = read_files_table(spark, args.input)
+    # one path for the batch run, the seed build, its rerun and every
+    # increment: without --index the input is deduped against no index
+    # and nothing is appended. Called through the module attribute, so a
+    # wrapper installed there (perfbench/workloads.py observes results
+    # that way) sees it.
+    index = None
     if args.index:
-        # one path for the seed build, its rerun and every increment: an
-        # index whose as-of view is empty reads as empty tables. Called
-        # through the module attribute, so a wrapper installed there
-        # (perfbench/workloads.py observes results that way) sees it.
-        from fastqdedup_spark import incremental
-
         index = incremental.DedupIndex(spark, args.index, cfg)
         if index.is_empty and not args.update_index:
             raise SystemExit(
                 "--no-update-index requires an existing index: an empty "
                 f"--index {args.index} has nothing to dedup against"
             )
-        inc = incremental.dedup_files_incremental(
-            spark, files, cfg, index,
-            update_index=args.update_index, batch_id=args.index_batch_id or None,
-        )
-        deduped, metrics = inc.deduped, inc.metrics
-        mode = "index"
-    else:
-        result = dedup_files(spark, files, cfg)
-        deduped, metrics = result.deduped, result.metrics
-        mode = "batch"
-    write_table(deduped, args.output)
-    dt = time.monotonic() - t0
-    n = metrics.get("output.files", metrics.get("incremental.kept", 0))
-    n_fallback = metrics.get(
-        "dissect.fallback_clusters", metrics.get("batch.dissect.fallback_clusters", 0)
+    inc = incremental.dedup_files_incremental(
+        spark, files, cfg, index,
+        update_index=index is not None and args.update_index,
+        batch_id=args.index_batch_id or None,
     )
+    write_table(inc.deduped, args.output)
+    dt = time.monotonic() - t0
+    n = inc.metrics["incremental.kept"]
+    n_fallback = inc.metrics.get("batch.dissect.fallback_clusters", 0)
     if n_fallback:
         logger.warning(
             "%d cluster(s) exceeded --max-cluster-size/--max-cluster-bytes "
@@ -231,7 +227,8 @@ def main(argv: list[str] | None = None) -> None:
             int(n_fallback), cfg.dissection,
         )
     logger.info(
-        "[%s] deduped to %s rows in %.1fs; metrics: %s", mode, n, dt, metrics
+        "[%s] deduped to %s rows in %.1fs; metrics: %s",
+        "index" if index else "batch", n, dt, inc.metrics,
     )
 
 

@@ -1,10 +1,11 @@
-"""Incremental dedup: new batches against a persisted dedup index.
+"""The code domain's one front: a batch deduped against a dedup index.
 
-The batch pipelines (pipeline.dedup_files) recluster the whole corpus
-each run. At 100 TB that is the wrong unit of work for a growing
+A batch run (the CLI without --index, `dedup_files`) reclusters the
+whole input. At 100 TB that is the wrong unit of work for a growing
 training corpus: a daily increment is ~0.1-1% of the store, and the
-retained corpus is immutable once published. This module adds the
-production shape for that regime:
+retained corpus is immutable once published. So every code-domain run
+is an increment against an index view, and the batch run is the
+increment against an empty view that appends nothing:
 
   index  = what one batch run (or a chain of increments) retained:
            per-survivor MinHash state (normalized content, shingle
@@ -22,18 +23,18 @@ against a pure-Python oracle):
   tier 2 (near):   a remaining file whose normalized-content k-gram
                    Jaccard >= threshold against ANY index survivor is
                    dropped — `dropped_near`.
-  tier 3 (batch):  the remainder runs the batch pipeline's clustering
-                   tail (pipeline.cluster_signed) among themselves —
-                   the result of pipeline.dedup_files over the
-                   remainder, without re-aggregating or re-signing it.
+  tier 3 (batch):  the remainder runs the clustering tail
+                   (pipeline.cluster_signed) among themselves — the
+                   batch run's result over the remainder, without
+                   re-aggregating or re-signing it.
   kept = tier-3 survivors; with update_index=True their signed state
   and the batch's fingerprints append to the index idempotently.
 
-There is one way into the index. An index with no batches in the
-as-of view reads as empty tables, so the seed build (`build_index`,
-the CLI's first `--index` run) is an increment against an empty
-index: tiers 1-2 drop nothing, tier 3 is the batch pipeline's tail
-over the whole input, and the append is the increment's append.
+There is one way into the index. The seed build (`build_index`, the
+CLI's first `--index` run) is an increment whose as-of view is empty:
+tiers 1-2 can drop nothing, so their probes are skipped, tier 3
+clusters the whole signed input, and the append is the increment's
+append. The batch run is the same run with no index and no append.
 The batch table and the signing pass are StageCheckpointer stages
 (`distinct_contents`, `signatures`): with a checkpoint dir they are
 durable and lineage-verified, and their checkpoint key covers the
@@ -44,8 +45,9 @@ Deviation from a full recluster, stated rather than hidden: matching
 is against SURVIVORS, so similarity does not chain through files the
 index already dropped (new B ~ dropped A ~ survivor S does not drop B
 unless B ~ S directly). That is the standard incremental trade-off —
-single-linkage chaining needs the global edge set — and the periodic
-full `dedup_files` recluster restores it. The reference has no
+single-linkage chaining needs the global edge set — and a periodic
+full recluster (the batch CLI, or `build_index` into a new path)
+restores it. The reference has no
 incremental mode at all (each run rebuilds its trie from scratch,
 /root/reference/src/fastqdedup/__init__.py:209-288); this is a
 graft-only capability mandated by the 100 TB regime, not a port.
@@ -115,22 +117,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from fastqdedup_spark.checkpoint import StageCheckpointer
 from fastqdedup_spark.config import DedupConfig
+from fastqdedup_spark.functions.minhash import add_signature_columns, normalize_content
 from fastqdedup_spark.functions.quality import content_quality_filter
 from fastqdedup_spark.operators.exact_dedup import with_sha256
 from fastqdedup_spark.operators.verify import est_filter_carried, verify_pairs_jaccard
-from fastqdedup_spark.pipeline import (
-    DedupResult,
-    cluster_signed,
-    distinct_contents,
-    require_files_columns,
-    sign_contents,
-    survivor_shas,
-)
+from fastqdedup_spark.pipeline import DedupResult, cluster_signed, survivor_shas
 from fastqdedup_spark.session import driver_table
-
-# not called here: perfbench/tracing.py wraps `incremental.dedup_files`
-# by attribute name, so the name stays importable from this module
-from fastqdedup_spark.pipeline import dedup_files  # noqa: F401
+from fastqdedup_spark.sources import FILES_COLUMNS
 
 # The index tables' on-disk schemas: append() writes exactly these
 # columns and types, and the readers hand the same schemas to
@@ -427,14 +420,26 @@ def build_index(
 ) -> tuple[DedupResult, DedupIndex]:
     """Seed the index at `path` with `files` as batch `batch_id`: an
     increment against an empty index, so its tier-3 result is the batch
-    pipeline's result over the whole input (pipeline.dedup_files). Also
-    the periodic-recluster path: rebuild into a new `path` from the
-    union of store + recent increments to restore global single-linkage."""
+    run's result over the whole input (dedup_files). Also the
+    periodic-recluster path: rebuild into a new `path` from the union
+    of store + recent increments to restore global single-linkage."""
     index = DedupIndex(spark, path, cfg)
     inc = dedup_files_incremental(
         spark, files, cfg, index, quality=quality, batch_id=batch_id
     )
     return inc.batch, index
+
+
+def dedup_files(
+    spark: SparkSession, files: DataFrame, cfg: DedupConfig, quality: bool = True
+) -> DedupResult:
+    """The batch run (the CLI without --index): an increment against no
+    index that appends nothing, so its tier-3 result is the near-dup
+    clustering of the whole input. Output rows keep the per-row sha256
+    invariant: each carries the `sha` of its untouched `content`."""
+    return dedup_files_incremental(
+        spark, files, cfg, None, quality=quality, update_index=False
+    ).batch
 
 
 def cross_candidate_pairs(
@@ -467,29 +472,146 @@ def cross_candidate_pairs(
     return est_filter_carried(raw, cfg).distinct()
 
 
+def require_files_columns(files: DataFrame) -> None:
+    """Raise when `files` lacks a column of the files-table contract."""
+    missing = set(FILES_COLUMNS) - set(files.columns)
+    if missing:
+        raise ValueError(f"files table missing columns: {sorted(missing)}")
+
+
+def distinct_contents(files: DataFrame) -> DataFrame:
+    """files (with `sha`) -> one row per distinct content:
+    (sha, cnt, content, rep).
+
+    P9 pre-aggregation: exact duplicates collapse BEFORE signatures,
+    mirroring the trie's count-in-node (_triemodule.c:233-239). The
+    first-wins representative (min (repo, path, commit), O13) is
+    computed in the SAME aggregation so the survivor tail never
+    rescans the full input. The rep struct carries EVERY non-content
+    column (orderable types required; repo/path/commit lead, so the
+    first-wins order is unchanged): the final `deduped` output is
+    reconstructed from it directly, which both removes a full join of
+    the corpus and guarantees one output row per surviving sha — the
+    old join-back on (sha, repo, path, commit) matched every input copy
+    of the representative row, so a fully-duplicated input row (two
+    ingestion batches unioned) leaked duplicate output rows for one
+    distinct content."""
+    rep_rest = [
+        c for c in files.columns
+        if c not in ("repo", "path", "commit", "content", "sha")
+    ]
+    return files.groupBy("sha").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.first("content").alias("content"),  # identical per sha
+        F.min(F.struct("repo", "path", "commit", *rep_rest)).alias("rep"),
+    )
+
+
+def sign_contents(
+    distinct: DataFrame, cfg: DedupConfig, approx_rows: float | None
+) -> DataFrame:
+    """(sha, cnt, content) -> (sha, cnt, content_norm, band_hash,
+    sig_packed, nid): one Arrow MinHash pass over the normalized
+    content."""
+    return add_signature_columns(
+        distinct.withColumn("content_norm", normalize_content("content")).select(
+            "sha", "cnt", "content_norm"
+        ),
+        cfg,
+        approx_rows=approx_rows,
+    ).withColumn("nid", F.unhex(F.substring("sha", 1, 32)))
+
+
+def _near_probe(
+    ck: StageCheckpointer,
+    cfg: DedupConfig,
+    old_index: DataFrame,
+    signed_new: DataFrame,
+    n_new: float,
+    broadcast_new: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """Tier 2 of dedup_files_incremental against a non-empty as-of
+    view: (remainder, near_shas). `remainder` is tier 3's input, the
+    signed batch minus its near-dups of `old_index`, materialized with
+    distinct.contents and input.files observed; `near_shas` holds the
+    shas it dropped."""
+    # materialized: the old-hit fetch and verify below both read it
+    cand = ck.metrics.observe(
+        cross_candidate_pairs(old_index, signed_new, cfg, broadcast_new),
+        {"incremental.cross_pairs": F.count(F.lit(1))},
+    ).localCheckpoint(eager=True)
+    # The id tables derived from cand (old hits, verified new ids) are
+    # NOT sized by n_batch: a small batch of boilerplate-heavy docs can
+    # hit millions of retained survivors. They are bounded by cand's
+    # observed row count instead, so the broadcast is gated on that
+    # count. Semi/anti joins ignore duplicate keys, so the ids broadcast
+    # without a distinct (no shuffle) and the index streams past them.
+    n_cross = ck.metrics.as_dict()["incremental.cross_pairs"]
+    bcast_cross = (
+        F.broadcast
+        if n_cross <= cfg.incremental_broadcast_max_rows
+        else (lambda df: df)
+    )
+    old_hit = old_index.join(
+        bcast_cross(cand.select(F.col("id_a").alias("nid"))), "nid", "left_semi"
+    )
+    verify_cols = ["nid", "content_norm"]
+    # every cross pair is (old, new): id_a's contents come from old_hit,
+    # id_b's from the signed batch
+    verified = verify_pairs_jaccard(
+        cand, old_hit.select(*verify_cols), cfg, id_col="nid",
+        approx_rows=n_new,
+        contents_b=signed_new.select(*verify_cols),
+    )
+    # tier 3's input, materialized once: the signed batch minus the
+    # near-dup nids. An anti join keeps
+    # the signed batch's size estimate, so the tail plans its
+    # joins as it would on the signatures stage. Its counts ride this
+    # job; dropped_near is the difference to the fresh counts.
+    remainder = ck.metrics.observe(
+        signed_new.join(
+            bcast_cross(verified.select(F.col("id_b").alias("nid"))),
+            "nid",
+            "left_anti",
+        ),
+        {
+            "distinct.contents": F.count(F.lit(1)),
+            "input.files": F.coalesce(F.sum("cnt"), F.lit(0)),
+        },
+    ).localCheckpoint(eager=True)
+    near_shas = signed_new.select("sha").join(
+        remainder.select("sha"), "sha", "left_anti"
+    )
+    return remainder, near_shas
+
+
 def dedup_files_incremental(
     spark: SparkSession,
     new_files: DataFrame,
     cfg: DedupConfig,
-    index: DedupIndex,
+    index: DedupIndex | None,
     quality: bool = True,
     update_index: bool = True,
     batch_id: str | None = None,
 ) -> IncrementalResult:
     """Dedup `new_files` against `index` (tiers 1-3, module docstring),
-    appending the batch's retained state when update_index=True.
+    appending the batch's retained state when update_index=True. With
+    no index (the batch run) nothing is appended, update_index=True
+    raises, and no batch id is derived.
 
     One aggregation and one signing pass per increment: the batch is
-    aggregated by sha once (pipeline.distinct_contents), only its fresh
-    rows are signed, once, and tier 3 clusters the signed contents
-    that tiers 1-2 let through with the batch pipeline's tail
-    (pipeline.cluster_signed). The near probe's band join runs once:
-    the candidate pairs are materialized, so the index's band columns
-    are scanned once and its contents once. The tier-1 hits are not
-    pinned: they broadcast inside the signer's plan. The survivor
-    semi-joins (the output rows and the append's survivor state)
-    broadcast the survivor keys when the observed survivor count fits
-    cfg.incremental_broadcast_max_rows.
+    aggregated by sha once (distinct_contents), only its fresh rows are
+    signed, once, and tier 3 clusters the signed contents that tiers
+    1-2 let through with the clustering tail (pipeline.cluster_signed).
+    The near probe's band join runs once: the candidate pairs are
+    materialized, so the index's band columns are scanned once and its
+    contents once. The tier-1 hits are not pinned: they broadcast
+    inside the signer's plan. The survivor semi-joins (the output rows
+    and the append's survivor state) broadcast the survivor keys when
+    the observed survivor count fits cfg.incremental_broadcast_max_rows.
+    An empty as-of view (no index, the seed build or its rerun) can
+    drop nothing, so tiers 1-2 are skipped: the signer takes the whole
+    batch table and tier 3 the signatures stage.
 
     The tier counts in `metrics` (incremental.dropped_exact,
     dropped_near, kept) are file rows, observed on tables that are
@@ -498,25 +620,32 @@ def dedup_files_incremental(
     tier-3 survivors; dropped_near is fresh files minus tier 3's input.
     incremental.cross_pairs rides the candidate table. A resumed front
     stage reports the counts a fresh run observes
-    (StageCheckpointer.counted_stage)."""
+    (StageCheckpointer.counted_stage). An empty view reports the same
+    keys: its tier-3 input is the signed batch, and its cross_pairs 0."""
+    if index is None and update_index:
+        raise ValueError("update_index=True needs an index to append to")
     require_files_columns(new_files)
     if quality:
         new_files = content_quality_filter(new_files)
     new_files = with_sha256(new_files)
-    # resolved up front: index reads below EXCLUDE this batch's own
-    # previously-appended state, so a resume of a crashed-after-append
-    # increment reproduces its first run bit-for-bit
-    bid = batch_id or derived_batch_id(cfg, new_files)
-    # the checkpoint key covers the as-of view (the visible batch dirs):
-    # the same input under another batch id, in another index, or after
-    # a batch landed between a crash before this append and its retry,
-    # reads other index state, so it must never resume these stages
-    as_of = [os.path.abspath(d) for d in index._batches("fingerprints", bid)]
-    ck = StageCheckpointer(spark, replace(
-        cfg,
-        input_id=f"{cfg.input_id}|index={os.path.abspath(index.path)}"
-                 f"|batch={bid}|as_of={as_of}",
-    ))
+    if index is None:
+        as_of, ck = [], StageCheckpointer(spark, cfg)
+    else:
+        # resolved up front: index reads below EXCLUDE this batch's own
+        # previously-appended state, so a resume of a crashed-after-append
+        # increment reproduces its first run bit-for-bit
+        bid = batch_id or derived_batch_id(cfg, new_files)
+        # the checkpoint key covers the as-of view (the visible batch
+        # dirs): the same input under another batch id, in another index,
+        # or after a batch landed between a crash before this append and
+        # its retry, reads other index state, so it must never resume
+        # these stages
+        as_of = [os.path.abspath(d) for d in index._batches("fingerprints", bid)]
+        ck = StageCheckpointer(spark, replace(
+            cfg,
+            input_id=f"{cfg.input_id}|index={os.path.abspath(index.path)}"
+                     f"|batch={bid}|as_of={as_of}",
+        ))
 
     # -- tier 1: exact, streaming the old fingerprints ONCE ----------------
     # The batch table (sha, cnt, content, rep) is materialized ONCE,
@@ -548,73 +677,41 @@ def dedup_files_incremental(
     n_batch = counts["incremental.input_distinct"]
     broadcast_new = n_batch <= cfg.incremental_broadcast_max_rows
     bcast = F.broadcast if broadcast_new else (lambda df: df)
-    hits = index.fingerprints(exclude=bid).join(
-        bcast(batch_table.select("sha")), "sha", "left_semi"
-    )
-    dropped_exact = new_files.join(bcast(hits), "sha", "left_semi")
+    # an empty as-of view (no index, the seed build or its rerun) can
+    # drop nothing: the tier-1 and tier-2 probes are skipped
+    fresh = batch_table
+    if as_of:
+        hits = index.fingerprints(exclude=bid).join(
+            bcast(batch_table.select("sha")), "sha", "left_semi"
+        )
+        fresh = batch_table.join(bcast(hits), "sha", "left_anti")
 
     # -- tier 2: near, one band scan and one content scan of the index ------
     signed_new, counts = ck.counted_stage(
         "signatures",
-        lambda: sign_contents(
-            batch_table.join(bcast(hits), "sha", "left_anti"), cfg, n_batch
-        ),
+        lambda: sign_contents(fresh, cfg, n_batch),
         {
             "incremental.new_distinct": F.count(F.lit(1)),
             "incremental.fresh_files": F.coalesce(F.sum("cnt"), F.lit(0)),
         },
     )
     n_new = counts["incremental.new_distinct"]
-    old_index = index.signed_survivors(exclude=bid)
-    # materialized: the old-hit fetch and verify below both read it
-    cand = ck.metrics.observe(
-        cross_candidate_pairs(old_index, signed_new, cfg, broadcast_new),
-        {"incremental.cross_pairs": F.count(F.lit(1))},
-    ).localCheckpoint(eager=True)
-    # The id tables derived from cand (old hits, verified new ids) are
-    # NOT sized by n_batch: a small batch of boilerplate-heavy docs can
-    # hit millions of retained survivors. They are bounded by cand's
-    # observed row count instead, so the broadcast is gated on that
-    # count. Semi/anti joins ignore duplicate keys, so the ids broadcast
-    # without a distinct (no shuffle) and the index streams past them.
-    n_cross = ck.metrics.as_dict()["incremental.cross_pairs"]
-    bcast_cross = (
-        F.broadcast
-        if n_cross <= cfg.incremental_broadcast_max_rows
-        else (lambda df: df)
-    )
-    old_hit = old_index.join(
-        bcast_cross(cand.select(F.col("id_a").alias("nid"))), "nid", "left_semi"
-    )
-    verify_cols = ["nid", "content_norm"]
-    # every cross pair is (old, new): id_a's contents come from old_hit,
-    # id_b's from the signed batch
-    verified = verify_pairs_jaccard(
-        cand, old_hit.select(*verify_cols), cfg, id_col="nid",
-        approx_rows=n_new,
-        contents_b=signed_new.select(*verify_cols),
-    )
-    # tier 3's input, materialized once: the signed batch minus the
-    # near-dup nids. An anti join keeps
-    # the signed batch's size estimate, so the tail below plans its
-    # joins as it would on the signatures stage. Its counts ride this
-    # job; dropped_near is the difference to the fresh counts.
-    remainder = ck.metrics.observe(
-        signed_new.join(
-            bcast_cross(verified.select(F.col("id_b").alias("nid"))),
-            "nid",
-            "left_anti",
-        ),
-        {
-            "distinct.contents": F.count(F.lit(1)),
-            "input.files": F.coalesce(F.sum("cnt"), F.lit(0)),
-        },
-    ).localCheckpoint(eager=True)
-    n_remainder = ck.metrics.as_dict()["distinct.contents"]
-    near_shas = signed_new.select("sha").join(
-        remainder.select("sha"), "sha", "left_anti"
-    )
-    dropped_near = new_files.join(bcast(near_shas), "sha", "left_semi")
+    if not as_of:
+        # tier 3's input is the signed batch, and the counts the near
+        # probe would observe are known
+        remainder, n_remainder = signed_new, n_new
+        ck.metrics.add("incremental", "cross_pairs", 0)
+        ck.metrics.add("distinct", "contents", n_new)
+        ck.metrics.add("input", "files", counts["incremental.fresh_files"])
+        dropped_exact = dropped_near = new_files.where(F.lit(False))
+    else:
+        dropped_exact = new_files.join(bcast(hits), "sha", "left_semi")
+        remainder, near_shas = _near_probe(
+            ck, cfg, index.signed_survivors(exclude=bid), signed_new, n_new,
+            broadcast_new,
+        )
+        n_remainder = ck.metrics.as_dict()["distinct.contents"]
+        dropped_near = new_files.join(bcast(near_shas), "sha", "left_semi")
 
     # -- tier 3: within-batch clustering of the remainder --------------------
     batch = cluster_signed(

@@ -1,36 +1,33 @@
-"""End-to-end near-duplicate pipelines (SURVEY.md §3 graft lifecycle).
+"""End-to-end near-duplicate clustering tails (SURVEY.md §3 graft lifecycle).
 
-Two entry points built from the same operators (banded candidate
-pairs, verify, connected components, dissect) and the same stage
-shapes: candidate pairs and verified edges fuse into the
-connected-components input unless a durable checkpoint dir persists
-them, and every metric rides a materialization that runs anyway.
+Two tails built from the same operators (banded candidate pairs, verify,
+connected components, dissect) and the same stage shapes: candidate
+pairs and verified edges fuse into the connected-components input
+unless a durable checkpoint dir persists them, and every metric rides a
+materialization that runs anyway.
 
-- `dedup_keys`    — reference-parity mode: short fixed-alphabet keys,
+- `dedup_keys`     — reference-parity mode: short fixed-alphabet keys,
   EXACT Hamming/edit-radius clustering via pigeonhole / deletion
   banding. Reproduces the reference's `deduplicate_cluster`
   (/root/reference/src/fastqdedup/__init__.py:209-288) semantics 1:1 —
   the golden trie fixtures pass through this path.
-- `dedup_files`   — code-domain mode per BASELINE.json north_rule:
-  normalize -> shingle -> MinHash sign -> LSH band -> capped/salted
-  band join -> exact-Jaccard verify -> connected components ->
-  dissect -> survivor semi-join, with per-stage metrics and keyed
-  checkpoints.
+- `cluster_signed` — code-domain mode per BASELINE.json north_rule:
+  LSH band -> capped/salted band join -> exact-Jaccard verify ->
+  connected components -> dissect -> survivor semi-join, with
+  per-stage metrics and keyed checkpoints.
 
-`dedup_keys` and `cluster_signed` below stay two tails rather than one
+The code domain has one front, incremental.dedup_files_incremental. It
+aggregates the input by sha (`distinct_contents`: count, content and
+first-wins rep in one pass), signs each distinct content once
+(`sign_contents`), probes a persisted index (tiers 1-2) and hands the
+signed contents the probes let through to `cluster_signed`. The batch
+CLI is that front against an empty index view that appends nothing, so
+it skips the probes and clusters the whole signed input.
+
+`dedup_keys` and `cluster_signed` stay two tails rather than one
 function with a caller switch: they differ in id translation (nid ->
 sha), verifier (radius UDF vs exact Jaccard), dissection inputs and
 the output rebuild.
-
-`dedup_files` is a front plus a tail. The front aggregates the input
-by sha (`distinct_contents`: count, content and first-wins rep in one
-pass) and signs each distinct content once (`sign_contents`). The tail,
-`cluster_signed`, takes those two tables and runs pairs, edges,
-connected components, clusters, survivors and the first-wins output.
-The incremental path (incremental.py) builds the same two tables for
-its whole batch once, and its tier 3 calls the same tail on the signed
-contents that tiers 1-2 let through, so nothing is aggregated or
-signed twice.
 
 Stage graph (code mode), every arrow a Catalyst-planned exchange:
 
@@ -49,18 +46,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from fastqdedup_spark.checkpoint import StageCheckpointer
 from fastqdedup_spark.config import DedupConfig
-from fastqdedup_spark.functions.minhash import add_signature_columns, normalize_content
-from fastqdedup_spark.functions.quality import content_quality_filter
 from fastqdedup_spark.operators.connected_components import connected_components
 from fastqdedup_spark.operators.dissect import dissect_clusters
-from fastqdedup_spark.operators.exact_dedup import with_sha256
 from fastqdedup_spark.operators.lsh import (
     deletion_candidate_pairs,
     minhash_candidate_pairs,
     pigeonhole_candidate_pairs,
 )
 from fastqdedup_spark.operators.verify import verify_pairs_distance, verify_pairs_jaccard
-from fastqdedup_spark.sources import FILES_COLUMNS
 
 
 @dataclass
@@ -132,113 +125,6 @@ def dedup_keys(
     return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict())
 
 
-def require_files_columns(files: DataFrame) -> None:
-    """Raise when `files` lacks a column of the files-table contract."""
-    missing = set(FILES_COLUMNS) - set(files.columns)
-    if missing:
-        raise ValueError(f"files table missing columns: {sorted(missing)}")
-
-
-def distinct_contents(files: DataFrame) -> DataFrame:
-    """files (with `sha`) -> one row per distinct content:
-    (sha, cnt, content, rep).
-
-    P9 pre-aggregation: exact duplicates collapse BEFORE signatures,
-    mirroring the trie's count-in-node (_triemodule.c:233-239). The
-    first-wins representative (min (repo, path, commit), O13) is
-    computed in the SAME aggregation so the survivor tail never
-    rescans the full input. The rep struct carries EVERY non-content
-    column (orderable types required; repo/path/commit lead, so the
-    first-wins order is unchanged): the final `deduped` output is
-    reconstructed from it directly, which both removes a full join of
-    the corpus and guarantees one output row per surviving sha — the
-    old join-back on (sha, repo, path, commit) matched every input copy
-    of the representative row, so a fully-duplicated input row (two
-    ingestion batches unioned) leaked duplicate output rows for one
-    distinct content."""
-    rep_rest = [
-        c for c in files.columns
-        if c not in ("repo", "path", "commit", "content", "sha")
-    ]
-    return files.groupBy("sha").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.first("content").alias("content"),  # identical per sha
-        F.min(F.struct("repo", "path", "commit", *rep_rest)).alias("rep"),
-    )
-
-
-def sign_contents(
-    distinct: DataFrame, cfg: DedupConfig, approx_rows: float | None
-) -> DataFrame:
-    """(sha, cnt, content) -> (sha, cnt, content_norm, band_hash,
-    sig_packed, nid): one Arrow MinHash pass over the normalized
-    content."""
-    return add_signature_columns(
-        distinct.withColumn("content_norm", normalize_content("content")).select(
-            "sha", "cnt", "content_norm"
-        ),
-        cfg,
-        approx_rows=approx_rows,
-    ).withColumn("nid", F.unhex(F.substring("sha", 1, 32)))
-
-
-def dedup_files(
-    spark: SparkSession,
-    files: DataFrame,
-    cfg: DedupConfig,
-    quality: bool = True,
-) -> DedupResult:
-    """Code-domain near-dup clustering per BASELINE.json north_rule.
-
-    Input: files(id?, repo, path, commit, lang, content). Output keeps
-    the per-row sha256 invariant: `deduped` rows carry the `sha` of
-    their untouched `content` (equality testable end-to-end).
-
-    This is the front (the distinct_contents and signatures stages);
-    cluster_signed is the tail. Every metric rides a stage
-    materialization that runs anyway (MetricsCollector.observe):
-    input.files and distinct.contents on distinct_contents, the rest in
-    the tail. A resumed stage reports the previous run's persisted
-    values instead; the counts that size plans (these two and
-    output.files) are recounted on the resumed stage when the previous
-    run died before persisting them.
-    """
-    require_files_columns(files)
-    ck = StageCheckpointer(spark, cfg)
-    # a tiny single-row-group input scans as 1-2 partitions, so the
-    # quality regexes + sha256 + the distinct stage's partial agg would
-    # run near-serially; no-op at real scale / for checkpointed inputs
-    from fastqdedup_spark.functions.partitioning import widen_small_input
-
-    files = widen_small_input(files)
-    if quality:
-        files = content_quality_filter(files)
-    files = with_sha256(files)
-
-    # The distinct-contents count sizes the Arrow stages (the signer's
-    # and verify's task count and whether they fan out at all). It and
-    # the input row count ride the stage's own materialization via
-    # Dataset.observe (CollectMetrics fires on BOTH materialization
-    # paths: localCheckpoint is a withAction and so is the durable
-    # parquet write) — zero extra jobs on a fresh run; a resumed stage
-    # reports them as StageCheckpointer.counted_stage describes.
-    distinct, counts = ck.counted_stage(
-        "distinct_contents",
-        lambda: distinct_contents(files),
-        {
-            "distinct.contents": F.count(F.lit(1)),
-            "input.files": F.coalesce(F.sum("cnt"), F.lit(0)),
-        },
-    )
-    n_distinct = counts["distinct.contents"]
-
-    signed = ck.stage(
-        "signatures", lambda: sign_contents(distinct, cfg, n_distinct)
-    )
-    out_cols = [c for c in files.columns if c != "sha"]
-    return cluster_signed(ck, cfg, distinct, signed, n_distinct, out_cols)
-
-
 def survivor_shas(
     cfg: DedupConfig, survivors: DataFrame, n_survivors: float
 ) -> DataFrame:
@@ -263,9 +149,10 @@ def cluster_signed(
     n_distinct: int,
     out_cols: list[str],
 ) -> DedupResult:
-    """The clustering tail shared by dedup_files and the incremental
-    path's tier 3: candidate pairs, verified edges, connected
-    components, clusters, survivors and the first-wins output.
+    """The code domain's clustering tail, tier 3 of
+    incremental.dedup_files_incremental: candidate pairs, verified
+    edges, connected components, clusters, survivors and the first-wins
+    output.
 
     `signed` holds the contents to cluster (sign_contents' columns, one
     row per sha, `n_distinct` rows); `distinct` is a distinct_contents

@@ -11,6 +11,7 @@ contract is the same either way.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pyspark.sql.functions as F
@@ -19,11 +20,29 @@ from pyspark.sql import DataFrame, SparkSession
 FILES_COLUMNS = ["repo", "path", "commit", "lang", "content"]
 
 
+def local_files_identity(files: list[str]) -> str:
+    """Identity of local files from metadata only (no data read): their
+    count, total bytes and a digest of each file's `path|size|mtime_ns`
+    (os.stat), in the given order. A file rewritten in place at the same
+    size keeps its name and length but not its mtime, so it changes the
+    identity. A file that vanished before its stat is left out."""
+    n, total, digest = 0, 0, hashlib.sha256()
+    for f in files:
+        try:
+            st = os.stat(f)
+        except OSError:
+            continue
+        n, total = n + 1, total + st.st_size
+        digest.update(f"{f}|{st.st_size}|{st.st_mtime_ns}\n".encode())
+    return f"{n}|{total}|{digest.hexdigest()[:16]}"
+
+
 def input_fingerprint(location: str, spark: "SparkSession | None" = None) -> str:
-    """Cheap dataset identity for checkpoint keying: the path plus file
-    count and total bytes (metadata only, no data read). Folded into
-    DedupConfig.input_id so a rerun with the same knobs but a DIFFERENT
-    input never resumes another dataset's checkpoints.
+    """Cheap dataset identity for checkpoint keying: the path plus, for
+    a local input, local_files_identity of every file under it. Folded
+    into DedupConfig.input_id so a rerun with the same knobs but a
+    DIFFERENT input, or the same input rewritten, never resumes another
+    dataset's checkpoints.
 
     Non-local locations (hdfs://, s3a://, ...) go through the Hadoop
     FileSystem ContentSummary API; if no session/filesystem can resolve
@@ -45,18 +64,12 @@ def input_fingerprint(location: str, spark: "SparkSession | None" = None) -> str
 
         return f"{location}|unfingerprintable|{time.time_ns()}"
     path = location[len("file://"):] if location.startswith("file://") else location
-    n, total = 0, 0
+    files = [path]
     if os.path.isdir(path):
-        for root, _, names in os.walk(path):
-            for name in names:
-                try:
-                    total += os.path.getsize(os.path.join(root, name))
-                    n += 1
-                except OSError:
-                    pass
-    elif os.path.exists(path):
-        n, total = 1, os.path.getsize(path)
-    return f"{location}|{n}|{total}"
+        files = sorted(
+            os.path.join(root, name) for root, _, names in os.walk(path) for name in names
+        )
+    return f"{location}|{local_files_identity(files)}"
 
 
 def _is_path(location: str) -> bool:

@@ -51,6 +51,7 @@ from fastqdedup_spark.functions.quality import average_error_rate_udf
 from fastqdedup_spark.functions.slices import key_projection
 from fastqdedup_spark.pipeline import dedup_keys
 from fastqdedup_spark.session import driver_table
+from fastqdedup_spark.sources import local_files_identity
 
 FASTQ_SCHEMA = (
     "file_name string, record_idx long, name string, sequence string, "
@@ -298,12 +299,9 @@ def deduplicate_fastq(
         # invariant: same knobs + different data must never resume
         # each other's stages). The name alone is not enough: a file
         # overwritten in place keeps it, so size and mtime fold in.
-        ids = []
-        for p in paths:
-            f = _one_file(p)
-            st = os.stat(f)
-            ids.append(f"{f}|{st.st_size}|{st.st_mtime_ns}")
-        cfg = replace(cfg, input_id="fastq|" + "|".join(ids))
+        cfg = replace(cfg, input_id="fastq|" + local_files_identity(
+            [_one_file(p) for p in paths]
+        ))
     seq_cols = [c for c in zipped_raw.columns if c.startswith("sequence_")]
     qual_cols = [c.replace("sequence_", "qualities_") for c in seq_cols]
     zipped_raw = zipped_raw.withColumn(

@@ -10,7 +10,7 @@ from fastqdedup_spark.oracle import (
     cluster_dissection_directional,
     jaccard_within,
 )
-from fastqdedup_spark.pipeline import dedup_files
+from fastqdedup_spark.incremental import dedup_files
 
 
 def test_jaccard_within_kernel():

@@ -159,7 +159,7 @@ def test_tier3_matches_dedup_files_on_remainder(spark, split, built):
     output must equal dedup_files over the oracle's remainder in every
     column (the first-wins rep of duplicated copies included), and its
     input/distinct/output counts must equal that run's metrics."""
-    from fastqdedup_spark.pipeline import dedup_files
+    from fastqdedup_spark.incremental import dedup_files
 
     old, new = split
     _, idx = built
@@ -260,10 +260,12 @@ def test_chaining_across_increments(spark, split, tmp_path):
 # new action on this path fails the guard.
 INCREMENT_JOB_FLOOR = 24
 # Spark jobs of the seed build (build_index into an empty index): the
-# same path, whose tier-1/2 reads are empty tables built from Arrow.
-# Spark prunes the near-probe plans over them: `cand` runs no job and
-# `remainder` one.
-BUILD_JOB_FLOOR = 18
+# same path, whose empty as-of view skips the tier-1/2 probes (no
+# `cand` or `remainder`), so tier 3 takes the signatures stage as is.
+BUILD_JOB_FLOOR = 17
+# Spark jobs of the batch run (dedup_files, no index): the seed build
+# without the append.
+BATCH_JOB_FLOOR = 14
 
 
 def _jobs_of(spark, group: str, fn):
@@ -279,8 +281,15 @@ def _jobs_of(spark, group: str, fn):
 
 def test_increment_job_floor(spark, split, tmp_path):
     """Counts ride materializations that run anyway: no count() or
-    collect() comes back on the seed build or the increment unnoticed."""
+    collect() comes back on the batch run, the seed build or the
+    increment unnoticed."""
+    from fastqdedup_spark.incremental import dedup_files
+
     old, new = split
+    batch, n_batch = _jobs_of(
+        spark, "test-batch-job-floor",
+        lambda: dedup_files(spark, old, CFG, quality=False),
+    )
     (res, idx), n_build = _jobs_of(
         spark, "test-build-job-floor",
         lambda: build_index(spark, old, CFG, str(tmp_path / "ix"), quality=False),
@@ -291,8 +300,9 @@ def test_increment_job_floor(spark, split, tmp_path):
             spark, new, CFG, idx, quality=False, batch_id="b1"
         ),
     )
-    assert res.metrics["output.files"] > 0
+    assert batch.metrics["output.files"] == res.metrics["output.files"] > 0
     assert inc.metrics["incremental.kept"] > 0
+    assert n_batch <= BATCH_JOB_FLOOR
     assert n_build <= BUILD_JOB_FLOOR
     assert n_jobs <= INCREMENT_JOB_FLOOR
 

@@ -20,6 +20,10 @@ ALLOWED_UNREACHED = {
         "SQL-replicable kernels: the reference path of the SimHash and "
         "substring oracle checks"
     ),
+    "fastqdedup_spark.functions.partitioning": (
+        "small-input widening read by simhash.py, suffix_array.py and two "
+        "oracle queries"
+    ),
 }
 
 # Private PySpark attributes that reach the JVM directly. They are not
@@ -31,7 +35,7 @@ PRIVATE_SPARK_SITES = {
         "the remote `_SUCCESS` probe (Hadoop FileSystem.exists)"
     ),
     "fastqdedup_spark.sources": (
-        "the Iceberg-or-parquet probe (Hadoop FileSystem.exists)"
+        "input_fingerprint of a remote input (Hadoop ContentSummary)"
     ),
     "fastqdedup_spark.functions.partitioning": (
         "the guarded optimizer size estimate of a plan"

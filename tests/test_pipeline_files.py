@@ -16,7 +16,7 @@ from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.corpus import generate_files
 from fastqdedup_spark.functions.minhash import shingle_set
 from fastqdedup_spark.oracle import _UnionFind, oracle_jaccard_pairs
-from fastqdedup_spark.pipeline import dedup_files
+from fastqdedup_spark.incremental import dedup_files
 
 N_FILES = 400
 CFG = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6)
@@ -138,7 +138,7 @@ def test_resume_without_persisted_metrics(spark, corpus, tmp_path_factory):
 
 
 def test_resumed_distinct_count_sizes_the_tail(spark, corpus, tmp_path_factory):
-    """A resumed distinct_contents stage reports its PERSISTED count,
+    """A resumed signatures stage reports its PERSISTED distinct count,
     and that count sizes the rebuilt tail: doctored to 9e9 it reaches
     the run's metrics (verify then plans as a long Arrow stage), and
     the output is identical, since a plan size choice changes no
@@ -163,7 +163,7 @@ def test_resumed_distinct_count_sizes_the_tail(spark, corpus, tmp_path_factory):
     mpath = os.path.join(base, "_metrics")
     mrows = [
         (r.stage, r.metric,
-         9e9 if (r.stage, r.metric) == ("distinct", "contents") else r.value)
+         9e9 if (r.stage, r.metric) == ("incremental", "new_distinct") else r.value)
         for r in spark.read.parquet(mpath).collect()
     ]
     doctored = spark.createDataFrame(mrows, "stage string, metric string, value double")
@@ -177,9 +177,64 @@ def test_resumed_distinct_count_sizes_the_tail(spark, corpus, tmp_path_factory):
             shutil.rmtree(os.path.join(base, "_lineage", stage), ignore_errors=True)
 
     r2 = dedup_files(spark, small, cfg)
-    assert r2.metrics["distinct.contents"] == 9e9  # the persisted count
+    assert r2.metrics["incremental.new_distinct"] == 9e9  # the persisted count
+    assert r2.metrics["distinct.contents"] == 9e9         # sized the tail
     out2 = sorted(r.sha for r in r2.deduped.select("sha").collect())
     assert out1 == out2                            # plan choice, not semantics
+
+
+def test_equal_size_input_rewrite_is_not_resumed(spark, tmp_path):
+    """The batch CLI rerun with the same --checkpoint-dir on an input
+    rewritten in place at equal size (one content byte changed; the
+    path, file count and total bytes unchanged) must rebuild, not
+    resume the old input's stages: the output holds the new content's
+    sha and not the old one."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fastqdedup_spark import cli
+
+    contents = [
+        " ".join(hashlib.sha512(f"{s}{i}".encode()).hexdigest() for s in "abcd")
+        for i in range(12)
+    ]
+    src = tmp_path / "in"
+    src.mkdir()
+    part = str(src / "part-0.parquet")
+
+    def write(texts):
+        table = pa.table({
+            "repo": ["r"] * len(texts),
+            "path": [f"p{i}.py" for i in range(len(texts))],
+            "commit": ["c"] * len(texts),
+            "lang": ["py"] * len(texts),
+            "content": texts,
+        })
+        pq.write_table(
+            table, part, compression="NONE", use_dictionary=False,
+            write_statistics=False,
+        )
+
+    def out_shas(out):
+        return {r.sha for r in spark.read.parquet(out).select("sha").collect()}
+
+    write(contents)
+    size = os.path.getsize(part)
+    ck = str(tmp_path / "ck")
+    args = ["--input", str(src), "--checkpoint-dir", ck, "--threshold", "0.8", "-q"]
+    old = hashlib.sha256(contents[3].encode()).hexdigest()
+    cli.main([*args, "--output", str(tmp_path / "o1")])
+    assert old in out_shas(str(tmp_path / "o1"))
+
+    rewritten = contents[3][:10] + "X" + contents[3][11:]  # hex digits only
+    write(contents[:3] + [rewritten] + contents[4:])
+    assert os.path.getsize(part) == size and os.listdir(src) == ["part-0.parquet"]
+    cli.main([*args, "--output", str(tmp_path / "o2")])
+    shas = out_shas(str(tmp_path / "o2"))
+    assert hashlib.sha256(rewritten.encode()).hexdigest() in shas
+    assert old not in shas
 
 
 def test_missing_columns_raises_value_error(spark):
@@ -233,7 +288,7 @@ def test_fully_duplicated_input_rows_emit_one_survivor(spark):
     representative and leaked duplicates into `deduped`."""
     from fastqdedup_spark.config import DedupConfig
     from fastqdedup_spark.operators.exact_dedup import exact_dedup, with_sha256
-    from fastqdedup_spark.pipeline import dedup_files
+    from fastqdedup_spark.incremental import dedup_files
 
     schema = "id long, repo string, path string, commit string, lang string, content string"
     rows = [

@@ -130,7 +130,7 @@ def _survivor_semi_join_audit(spark, max_rows: int) -> tuple[dict, float]:
 
     from fastqdedup_spark.config import DedupConfig
     from fastqdedup_spark.corpus import generate_files
-    from fastqdedup_spark.pipeline import dedup_files
+    from fastqdedup_spark.incremental import dedup_files
 
     cfg = replace(
         DedupConfig(shingle_k=5, jaccard_threshold=0.6),
