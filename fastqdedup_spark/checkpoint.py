@@ -11,21 +11,21 @@ not in this image, so the same keyed-stage contract is implemented on
 parquet (swap `_write`/`_read` to `writeTo(...)` when the catalog
 exists).
 
-Metrics: each stage appends rows (stage, metric, value) — the analog of
-the reference's trie stats / per-stage timing
-(/root/reference/src/fastqdedup/__init__.py:133-157, 410-412).
-
-Lineage: every durable stage also persists a per-partition-file
-fingerprint table (`<base>/_lineage/<stage>`: file, rows, xor/sum-folded
-xxhash64 of all hashable columns). Every resume recomputes the
-fingerprints from the stage it is about to trust and fails loudly on
-mismatch — "resumes idempotently" is verified, not assumed: a
+Metrics are rows (stage, metric, value), the analog of the reference's
+trie stats and per-stage timing (fastqdedup/__init__.py:133-157,
+410-412). One record per durable stage (`<base>/_lineage/<stage>`, one
+row) holds the per-partition-file fingerprints (file, rows, xor/sum-
+folded xxhash64 of all hashable columns) and every metric the stage's
+build produced (its observations and its `metrics.add` calls). Every
+resume recomputes the fingerprints from the stage it is about to trust and fails loudly
+on mismatch — "resumes idempotently" is verified, not assumed: a
 half-overwritten or bit-rotted stage cannot silently flow downstream
-past the _SUCCESS marker. A stage counts as complete only once its
-lineage has landed too, so a run killed between the stage write and
-the lineage write rebuilds that stage instead of resuming it
-unverified. Persisted `_metrics` that carry a _SUCCESS marker but
-cannot be read fail loudly too.
+past the _SUCCESS marker. The same read restores the build's metrics,
+so a resumed stage reports what its build observed. A stage counts as
+complete only once its record has landed too, so a run killed between
+the stage write and the record write rebuilds that stage instead of
+resuming it unverified or without its counts. The run-level `_metrics`
+table (write_metrics) is the run's report; no resume reads it.
 """
 
 from __future__ import annotations
@@ -40,12 +40,17 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.session import driver_table
+from fastqdedup_spark.sources import listing
 
-_LINEAGE_SCHEMA = T.StructType([
+_FILE_SCHEMA = T.StructType([
     T.StructField("file", T.StringType()),
     T.StructField("rows", T.LongType()),
     T.StructField("xor_fp", T.LongType()),
     T.StructField("sum_fp", T.LongType()),
+])
+_RECORD_SCHEMA = T.StructType([
+    T.StructField("files", T.ArrayType(_FILE_SCHEMA)),
+    T.StructField("metrics", T.MapType(T.StringType(), T.DoubleType())),
 ])
 _METRICS_SCHEMA = T.StructType([
     T.StructField("stage", T.StringType()),
@@ -76,8 +81,8 @@ class MetricsCollector:
         keeps that contract for observations made while building a
         stage: it reads them right after materializing the stage and
         discards them when the stage fuses into its consumer. A resumed
-        stage never builds, so nothing is observed; its persisted
-        _metrics stand in."""
+        stage never builds, so nothing is observed; the values its
+        build observed come back from the stage's record."""
         obs = Observation()
         names = {f"m{i}": key for i, key in enumerate(metrics)}
         cols = [c.alias(a) for a, c in zip(names, metrics.values())]
@@ -111,7 +116,6 @@ class StageCheckpointer:
             else ""
         )
         self.metrics = MetricsCollector()
-        self._persisted: dict[str, list[tuple[str, float]]] | None = None
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.base, stage)
@@ -125,15 +129,13 @@ class StageCheckpointer:
         paths, which silently disabled resume (and lineage verify)
         while still paying every stage write — the north rule's
         "resumable" claim void on exactly the deployments that need
-        it. Local paths keep the cheap os.stat."""
+        it. Local paths keep the cheap os.stat; a remote marker is
+        looked up with the public binaryFile listing (no job)."""
         marker = os.path.join(path, "_SUCCESS")
         if "://" not in path or path.startswith("file://"):
             local = marker[len("file://"):] if marker.startswith("file://") else marker
             return os.path.exists(local)
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(marker)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
+        return listing(self.spark, marker) is not None
 
     def _lineage_rows(self, df: DataFrame) -> list[tuple[str, int, int, int]]:
         """Per-partition-file lineage of a materialized stage: for each
@@ -165,23 +167,30 @@ class StageCheckpointer:
             (r["file"], r["rows"], r["xor_fp"] or 0, r["sum_fp"] or 0) for r in agg
         )
 
-    def _write_lineage(self, stage: str, df: DataFrame) -> None:
-        rows = self._lineage_rows(df)
-        table = driver_table(self.spark, _LINEAGE_SCHEMA, list(zip(*rows)))
-        table.coalesce(1).write.mode("overwrite").parquet(self._lineage_path(stage))
-        self.metrics.add(stage, "lineage_files", len(rows))
+    def _write_lineage(self, stage: str, df: DataFrame, since: int) -> None:
+        """The stage's record: its file fingerprints and the metric rows
+        added since `since` (its build's, and lineage_files)."""
+        files = self._lineage_rows(df)
+        self.metrics.add(stage, "lineage_files", len(files))
+        metrics = {f"{s}.{m}": v for s, m, v in self.metrics.rows[since:]}
+        record = driver_table(self.spark, _RECORD_SCHEMA, [
+            [[dict(zip(_FILE_SCHEMA.names, f)) for f in files]],
+            [list(metrics.items())],
+        ])
+        record.coalesce(1).write.mode("overwrite").parquet(self._lineage_path(stage))
 
     def _verify_lineage(self, stage: str, df: DataFrame) -> None:
         """On resume, recompute the per-file fingerprints and compare to
-        the ones persisted at write time — a partial overwrite or
-        corrupted part file fails loudly instead of flowing downstream.
-        has() already required the lineage's _SUCCESS marker."""
-        stored = sorted(
-            (r["file"], r["rows"], r["xor_fp"], r["sum_fp"])
-            for r in self.spark.read.schema(_LINEAGE_SCHEMA)
+        the ones in the stage's record — a partial overwrite or
+        corrupted part file fails loudly instead of flowing downstream —
+        then restore the metrics the build recorded. has() already
+        required the record's _SUCCESS marker."""
+        (record,) = (
+            self.spark.read.schema(_RECORD_SCHEMA)
             .parquet(self._lineage_path(stage))
             .collect()
         )
+        stored = sorted(tuple(f) for f in record["files"])
         current = self._lineage_rows(df)
         if stored != current:
             raise RuntimeError(
@@ -191,51 +200,15 @@ class StageCheckpointer:
                 f"(first diff: {next((a, b) for a, b in zip(stored, current) if a != b) if len(stored) == len(current) else 'file-set changed'}). "
                 f"Delete the stage directory to rebuild."
             )
+        for key, value in record["metrics"].items():
+            self.metrics.add(*key.split(".", 1), value)
         self.metrics.add(stage, "lineage_verified", 1)
 
-    def read_lineage(self, stage: str) -> DataFrame | None:
-        lpath = self._lineage_path(stage)
-        if not self._success_exists(lpath):
-            return None
-        return self.spark.read.schema(_LINEAGE_SCHEMA).parquet(lpath)
-
-    def _persisted_stage_metrics(self, stage: str) -> list[tuple[str, float]]:
-        """Metrics persisted by a PREVIOUS run's write_metrics. Observed
-        counters (MetricsCollector.observe) never fire on a resumed
-        stage — the observed plan is replaced by a parquet scan — so
-        without this reload the CLI's fallback-cluster warning and
-        output count would be silently absent on resumed runs. Loaded
-        once per checkpointer. A run killed before write_metrics left no
-        _SUCCESS marker, which yields nothing; a marked table that
-        cannot be read fails loudly, as a lineage mismatch does, since
-        the resumed run would otherwise drop its dissect.* counters and
-        then overwrite the evidence."""
-        if self._persisted is None:
-            self._persisted = {}
-            mpath = os.path.join(self.base, "_metrics")
-            if self.base and self._success_exists(mpath):
-                try:
-                    rows = (
-                        self.spark.read.schema(_METRICS_SCHEMA)
-                        .parquet(mpath)
-                        .collect()
-                    )
-                except Exception as e:
-                    raise RuntimeError(
-                        f"persisted checkpoint metrics at {mpath} cannot be "
-                        f"read ({type(e).__name__}). Delete it to rebuild."
-                    ) from e
-                for r in rows:
-                    self._persisted.setdefault(r["stage"], []).append(
-                        (r["metric"], r["value"])
-                    )
-        return self._persisted.get(stage, [])
-
     def has(self, stage: str) -> bool:
-        """A durable stage is complete once its lineage has landed: the
+        """A durable stage is complete once its record has landed: the
         stage's own _SUCCESS comes first, and a run killed before the
-        lineage write left a stage no resume could verify, so it is
-        rebuilt."""
+        record write left a stage no resume could verify or count, so
+        it is rebuilt."""
         return (
             bool(self.base)
             and self._success_exists(self._path(stage))
@@ -243,11 +216,7 @@ class StageCheckpointer:
         )
 
     def stage(
-        self,
-        name: str,
-        build: Callable[[], DataFrame],
-        fuse: bool = False,
-        reload_metrics: tuple[str, ...] = (),
+        self, name: str, build: Callable[[], DataFrame], fuse: bool = False
     ) -> DataFrame:
         """Build-or-load. Materialized by default: parquet when a
         checkpoint dir is configured (durable resume), eager
@@ -260,32 +229,18 @@ class StageCheckpointer:
 
         Observations made during build() (MetricsCollector.observe) are
         read right after the stage materializes; a fused stage's are
-        discarded unread, since its plan has not run yet."""
+        discarded unread, since its plan has not run yet. A durable
+        stage's record keeps them, with the build's other metrics, for
+        its resumes. `seconds` is this run's cost of the stage (on
+        resume: the load and the lineage verify)."""
         t0 = time.monotonic()
         if self.has(name):
             df = self.spark.read.parquet(self._path(name))
             self.metrics.add(name, "resumed", 1)
             self._verify_lineage(name, df)
-            # `reload_metrics` names metric-stages whose counters were
-            # observed while BUILDING this stage (e.g. "dissect" rides
-            # the "survivors" build) — they never fire on resume.
-            # seconds/resumed/lineage_verified are re-emitted fresh by
-            # every resumed run — re-adding their persisted copies too
-            # would grow one duplicate row per resume GENERATION (run N
-            # persists N copies of lineage_verified, run N+1 reloads
-            # them all and adds its own)
-            for mstage in (name, *reload_metrics):
-                for metric, value in self._persisted_stage_metrics(mstage):
-                    if metric not in ("seconds", "resumed", "lineage_verified"):
-                        self.metrics.add(mstage, metric, value)
-            # this run's cost of the stage is the load (+ lineage
-            # verify) time — emitted fresh so per-stage timings survive
-            # resume chains (the reload filter above excludes the
-            # persisted copy; without this add, `seconds` silently
-            # vanished from _metrics after the first resume)
             self.metrics.add(name, "seconds", time.monotonic() - t0)
             return df
-        mark = len(self.metrics._pending)
+        mark, since = len(self.metrics._pending), len(self.metrics.rows)
         df = build()
         if self.base:
             df.write.mode("overwrite").parquet(self._path(name))
@@ -297,49 +252,24 @@ class StageCheckpointer:
             del self.metrics._pending[mark:]
         self.metrics._settle(mark)
         if self.base:
-            self._write_lineage(name, df)
+            self._write_lineage(name, df, since)
         self.metrics.add(name, "seconds", time.monotonic() - t0)
         return df
 
     def counted_stage(
-        self,
-        name: str,
-        build: Callable[[], DataFrame],
-        counts: dict[str, Column],
-        **stage_kwargs,
+        self, name: str, build: Callable[[], DataFrame], counts: dict[str, Column]
     ) -> tuple[DataFrame, dict[str, float]]:
-        """stage() plus `counts` ("stage.metric" -> aggregate Column)
-        over its rows. A fresh build observes them (zero extra jobs); a
-        resumed stage takes them from the persisted _metrics, else (the
-        previous run died before write_metrics) from one aggregation
-        over the resumed stage. Either way the same counts are reported."""
-        df = self.stage(name, lambda: self.metrics.observe(build(), counts), **stage_kwargs)
-        got = self.metrics.as_dict()
-        missing = []
-        for key in counts:
-            if key in got:
-                continue
-            stage, metric = key.split(".", 1)
-            persisted = dict(self._persisted_stage_metrics(stage))
-            if metric in persisted:
-                self.metrics.add(stage, metric, persisted[metric])
-            else:
-                missing.append(key)
-        if missing:
-            row = df.agg(
-                *[counts[k].alias(f"m{i}") for i, k in enumerate(missing)]
-            ).collect()[0]
-            for i, key in enumerate(missing):
-                self.metrics.add(*key.split(".", 1), row[f"m{i}"])
+        """stage() over a build that observes `counts` ("stage.metric"
+        -> aggregate Column over its rows, zero extra jobs), and those
+        counts: observed by a fresh build, restored from the record by a
+        resume."""
+        df = self.stage(name, lambda: self.metrics.observe(build(), counts))
         got = self.metrics.as_dict()
         return df, {k: got[k] for k in counts}
 
     def write_metrics(self) -> None:
         if self.base:
-            # last-wins per (stage, metric): a resumed run holds both
-            # the reloaded copy and any freshly recomputed one of the
-            # same counter — persisting the raw list would compound
-            # duplicates across resume chains
+            # last-wins per (stage, metric), one row each
             rows = [
                 (*key.split(".", 1), value)
                 for key, value in self.metrics.as_dict().items()

@@ -173,7 +173,13 @@ def parity_main(argv: list[str] | None = None) -> None:
 
 
 def main(argv: list[str] | None = None) -> None:
-    args = argument_parser().parse_args(argv)
+    parser = argument_parser()
+    args = parser.parse_args(argv)
+    if not args.index:
+        if args.index_batch_id:
+            parser.error("--index-batch-id requires --index")
+        if not args.update_index:
+            parser.error("--no-update-index requires --index")
     logging.basicConfig(level=logging.WARNING if args.quiet else logging.INFO)
     spark = get_spark(master=args.master)
     cfg = DedupConfig(

@@ -17,6 +17,31 @@ import json
 from dataclasses import dataclass, field, asdict
 
 
+# Arrow/python stage task count (OPH signer mapInPandas, exact-
+# Jaccard verify) is AUTO: half of defaultParallelism for long
+# stages, full width for short ones (see python_stage_tasks below).
+# Each concurrent Arrow task costs a python worker PLUS a JVM
+# serialization thread, so running cores-many tasks oversubscribes
+# the box ~1.4x (measured: signer per-doc cost 0.17 -> 0.9 ms at
+# full width). Interleaved A/B of the fused pipeline at 192k files
+# (BASELINE.md round 5, "Python-stage task cap"): cores//2 won
+# best-of at width 32 in both load regimes (32.4 vs 44.1 s
+# quiet-ish, 35.1 vs 43.7 stormy; cap 24 worse than both) and at
+# width 8 (56.0 vs 66.7; weaker evidence).
+#
+# AUTO cap threshold: stages with fewer rows than this per
+# FULL-WIDTH task stay at full width (a short Arrow stage never
+# builds the sustained python+JVM oversubscription the cap
+# relieves; capping it just idles half the cores). Calibrated
+# between the measured 24k-files loss (~300 rows/task, uncapped
+# wins 15%) and 192k win (~2.3k rows/task, capped wins 25%). It
+# also gates the fan-out itself: an Arrow stage whose KNOWN row
+# count is below one task's worth (this many rows) skips the
+# repartition and runs in the partitions its input already has
+# (python_stage_fans_out).
+PYTHON_STAGE_MIN_ROWS_PER_TASK = 1000
+
+
 @dataclass(frozen=True)
 class DedupConfig:
     # -- similarity model --------------------------------------------------
@@ -71,29 +96,6 @@ class DedupConfig:
     # practical ceiling for a 8-16 GB executor. Bigger increments
     # degrade to the shuffled band equi-join automatically.
     incremental_broadcast_max_rows: int = 1_000_000
-    # Arrow/python stage task count (OPH signer mapInPandas, exact-
-    # Jaccard verify) is AUTO: half of defaultParallelism for long
-    # stages, full width for short ones (see python_stage_tasks below).
-    # Each concurrent Arrow task costs a python worker PLUS a JVM
-    # serialization thread, so running cores-many tasks oversubscribes
-    # the box ~1.4x (measured: signer per-doc cost 0.17 -> 0.9 ms at
-    # full width). Interleaved A/B of the fused pipeline at 192k files
-    # (BASELINE.md round 5, "Python-stage task cap"): cores//2 won
-    # best-of at width 32 in both load regimes (32.4 vs 44.1 s
-    # quiet-ish, 35.1 vs 43.7 stormy; cap 24 worse than both) and at
-    # width 8 (56.0 vs 66.7; weaker evidence).
-    #
-    # AUTO cap threshold: stages with fewer rows than this per
-    # FULL-WIDTH task stay at full width (a short Arrow stage never
-    # builds the sustained python+JVM oversubscription the cap
-    # relieves; capping it just idles half the cores). Calibrated
-    # between the measured 24k-files loss (~300 rows/task, uncapped
-    # wins 15%) and 192k win (~2.3k rows/task, capped wins 25%). It
-    # also gates the fan-out itself: an Arrow stage whose KNOWN row
-    # count is below one task's worth (this many rows) skips the
-    # repartition and runs in the partitions its input already has
-    # (python_stage_fans_out).
-    python_stage_min_rows_per_task: int = 1000
     # physical form of the band self-join: "shuffle_hash" pins the
     # co-located shuffled hash join (scale-invariant — the corpus-sized
     # band table can never broadcast at 100 TB); "" lets AQE pick
@@ -112,7 +114,6 @@ class DedupConfig:
                                     # rerun on different data never resumes from
                                     # another dataset's checkpoints
     seed: int = 42
-    cc_max_iterations: int = 50
 
     @property
     def resolved_band_bins(self) -> int:
@@ -132,13 +133,13 @@ class DedupConfig:
         """Resolved Arrow/python-stage task count: half the cluster's
         task slots (min 2) — each Arrow task is a python worker plus a
         JVM serialization thread, so slot-many tasks oversubscribe
-        ~1.4x (see the python_stage_min_rows_per_task comment above for
+        ~1.4x (see the PYTHON_STAGE_MIN_ROWS_PER_TASK comment above for
         the measured A/B).
 
         The cap is SIZE-AWARE when the caller knows the stage's row
         count: oversubscription only costs when python workers hold
         their cores long enough to fight the JVM threads, so a SHORT
-        stage (under python_stage_min_rows_per_task rows per full-width
+        stage (under PYTHON_STAGE_MIN_ROWS_PER_TASK rows per full-width
         task) keeps full width — halving its parallelism just idles
         cores. Interleaved A/B (fused pipeline, 32 pinned cores): cap
         won at 192k files (~2.3k distinct rows/task), LOST ~15% at 24k
@@ -148,7 +149,7 @@ class DedupConfig:
         width = sc.defaultParallelism
         if (
             approx_rows is not None
-            and approx_rows / max(width, 1) < self.python_stage_min_rows_per_task
+            and approx_rows / max(width, 1) < PYTHON_STAGE_MIN_ROWS_PER_TASK
         ):
             return width
         return max(2, width // 2)
@@ -156,22 +157,23 @@ class DedupConfig:
     def python_stage_fans_out(self, approx_rows: float | None = None) -> bool:
         """Should an Arrow stage repartition to python_stage_tasks
         before it runs? Not when its known row count is below one
-        task's worth (python_stage_min_rows_per_task): the exchange and
+        task's worth (PYTHON_STAGE_MIN_ROWS_PER_TASK): the exchange and
         the python workers it feeds then cost more than the rows. An
         unknown count keeps the fan-out."""
         return (
             approx_rows is None
-            or approx_rows >= self.python_stage_min_rows_per_task
+            or approx_rows >= PYTHON_STAGE_MIN_ROWS_PER_TASK
         )
 
     # Bump when the PERSISTED SHAPE of any checkpointed stage changes
     # (e.g. round 5 widened distinct_contents' rep struct; version 3
-    # dropped the signatures stage's distinct-shingle count): a stale
+    # dropped the signatures stage's distinct-shingle count; version 4
+    # folded each stage's metrics into its lineage record): a stale
     # checkpoint from older code must key differently so a resume
     # rebuilds it instead of failing on missing/renamed columns at
     # load time (ADVICE r5: config_hash did not version stage schemas,
     # so cross-upgrade resumes broke instead of rebuilding).
-    STAGE_SCHEMA_VERSION = 3
+    STAGE_SCHEMA_VERSION = 4
 
     def config_hash(self) -> str:
         """Stable hash identifying checkpoint compatibility (north_rule:

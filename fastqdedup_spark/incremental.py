@@ -619,8 +619,8 @@ def dedup_files_incremental(
     tier 3's input (batch.input.files, batch.distinct.contents) and the
     tier-3 survivors; dropped_near is fresh files minus tier 3's input.
     incremental.cross_pairs rides the candidate table. A resumed front
-    stage reports the counts a fresh run observes
-    (StageCheckpointer.counted_stage). An empty view reports the same
+    stage reports the counts its build observed, kept in the stage's
+    record (StageCheckpointer.counted_stage). An empty view reports the same
     keys: its tier-3 input is the signed batch, and its cross_pairs 0."""
     if index is None and update_index:
         raise ValueError("update_index=True needs an index to append to")

@@ -97,9 +97,7 @@ def dedup_keys(
     edges = ck.stage(
         "edges", lambda: verify_pairs_distance(pairs, counted, cfg), fuse=True
     )
-    labels, rounds = connected_components(
-        edges, cfg.cc_max_iterations, checkpointer=ck
-    )
+    labels, rounds = connected_components(edges, checkpointer=ck)
     clusters = _fill_singletons(counted, labels, "key")
     survivors = ck.stage(
         "survivors",
@@ -114,7 +112,6 @@ def dedup_keys(
             # Dataset.observe, so metrics cost zero extra actions here
             metrics=ck.metrics,
         ),
-        reload_metrics=("dissect",),
     )
     surv = survivors.select(F.col("key").alias("__surv_key"))
     deduped = keys.join(
@@ -200,7 +197,7 @@ def cluster_signed(
     # strategy left to AQE).
     nid_map = signed.select("nid", "sha")
     labels_nid, rounds = connected_components(
-        edges_nid.select("id_a", "id_b"), cfg.cc_max_iterations, checkpointer=ck
+        edges_nid.select("id_a", "id_b"), checkpointer=ck
     )
     # cluster table in TWO joins instead of three: `signed` already
     # carries (nid, sha, cnt) one row per distinct content, so the
@@ -261,7 +258,6 @@ def cluster_signed(
         "survivors",
         lambda: dissect_clusters(surv_input, cfg.dissection, **surv_kwargs),
         {"output.files": F.count(F.lit(1))},
-        reload_metrics=("dissect",),
     )
     # O13 survivor semi-join + first-wins: one surviving FILE per
     # surviving content, deterministic by (repo, path, commit). The

@@ -98,14 +98,17 @@ def driver_table(
     spark: SparkSession, schema: StructType, columns: Sequence[Sequence]
 ) -> DataFrame:
     """A DataFrame of driver-side `columns` (one sequence per field of
-    `schema`, in order; empty for a table with no rows). It travels to
-    the JVM as one Arrow table, which starts no Python worker. A list
-    of rows, and a pandas frame with zero rows, go through a Python RDD
-    instead, and the first such job starts a second pool of Python
-    workers beside the one the Arrow UDFs use, held for the session."""
+    `schema`, in order and typed by it; empty for a table with no rows).
+    It travels to the JVM as one Arrow table, which starts no Python
+    worker. A list of rows, and a pandas frame with zero rows, go
+    through a Python RDD instead, and the first such job starts a second
+    pool of Python workers beside the one the Arrow UDFs use, held for
+    the session."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    arrays = [pa.array(c) for c in columns] or [pa.array([])] * len(schema)
+    cols = zip(columns or [[]] * len(schema), schema)
+    arrays = [pa.array(c, type=to_arrow_type(f.dataType)) for c, f in cols]
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema.names), schema)
 
 

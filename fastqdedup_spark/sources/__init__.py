@@ -15,49 +15,81 @@ import hashlib
 import os
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 FILES_COLUMNS = ["repo", "path", "commit", "lang", "content"]
 
 
-def local_files_identity(files: list[str]) -> str:
-    """Identity of local files from metadata only (no data read): their
-    count, total bytes and a digest of each file's `path|size|mtime_ns`
-    (os.stat), in the given order. A file rewritten in place at the same
-    size keeps its name and length but not its mtime, so it changes the
-    identity. A file that vanished before its stat is left out."""
+def files_identity(entries) -> str:
+    """Identity of files from metadata only (no data read): their count,
+    total bytes and a digest of each `(path, size, mtime)` entry, in the
+    given order. A file rewritten in place at the same size keeps its
+    name and length but not its mtime, so it changes the identity."""
     n, total, digest = 0, 0, hashlib.sha256()
+    for path, size, mtime in entries:
+        n, total = n + 1, total + size
+        digest.update(f"{path}|{size}|{mtime}\n".encode())
+    return f"{n}|{total}|{digest.hexdigest()[:16]}"
+
+
+def local_files_identity(files: list[str]) -> str:
+    """files_identity from os.stat (mtime in ns). A file that vanished
+    before its stat is left out."""
+    stats = []
     for f in files:
         try:
             st = os.stat(f)
         except OSError:
             continue
-        n, total = n + 1, total + st.st_size
-        digest.update(f"{f}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-    return f"{n}|{total}|{digest.hexdigest()[:16]}"
+        stats.append((f, st.st_size, st.st_mtime_ns))
+    return files_identity(stats)
+
+
+def listing(spark: SparkSession, location: str) -> "DataFrame | None":
+    """The files under `location` (any Hadoop URI) as a public
+    binaryFile listing of (path, length, mtime in microseconds; content
+    is never read), or None when nothing is there: the load raises
+    PATH_NOT_FOUND at analysis, before any job runs."""
+    try:
+        df = (
+            spark.read.format("binaryFile")
+            .option("recursiveFileLookup", "true")
+            .load(location)
+        )
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+    return df.select("path", "length", F.unix_micros("modificationTime"))
+
+
+def listed_files_identity(spark: SparkSession, location: str) -> str:
+    """files_identity of a remote `location` from its listing (one
+    metadata job)."""
+    files = listing(spark, location)
+    if files is None:
+        raise FileNotFoundError(location)
+    return files_identity(sorted(map(tuple, files.collect())))
 
 
 def input_fingerprint(location: str, spark: "SparkSession | None" = None) -> str:
-    """Cheap dataset identity for checkpoint keying: the path plus, for
-    a local input, local_files_identity of every file under it. Folded
-    into DedupConfig.input_id so a rerun with the same knobs but a
-    DIFFERENT input, or the same input rewritten, never resumes another
-    dataset's checkpoints.
+    """Cheap dataset identity for checkpoint keying: the path plus the
+    count, total bytes and `path|size|mtime` digest of every file under
+    it (local_files_identity for a local input, listed_files_identity
+    otherwise). Folded into DedupConfig.input_id so a rerun with the
+    same knobs but a DIFFERENT input, or the same input rewritten, never
+    resumes another dataset's checkpoints.
 
-    Non-local locations (hdfs://, s3a://, ...) go through the Hadoop
-    FileSystem ContentSummary API; if no session/filesystem can resolve
-    them, the fingerprint folds in a nanosecond timestamp so the run
-    NEVER silently resumes a prior (possibly overwritten) dataset's
+    If no session can list a non-local location (hdfs://, s3a://, ...),
+    the fingerprint folds in a nanosecond timestamp so the run NEVER
+    silently resumes a prior (possibly overwritten) dataset's
     checkpoints — resume is refused rather than wrong."""
     if "://" in location and not location.startswith("file://"):
         spark = spark or SparkSession.getActiveSession()
         if spark is not None:
             try:
-                jvm = spark._jvm
-                p = jvm.org.apache.hadoop.fs.Path(location)
-                fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-                cs = fs.getContentSummary(p)
-                return f"{location}|{cs.getFileCount()}|{cs.getLength()}"
+                return f"{location}|{listed_files_identity(spark, location)}"
             except Exception:
                 pass
         import time

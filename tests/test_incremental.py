@@ -664,7 +664,8 @@ def test_durable_increment_resumes(spark, split, tmp_path):
     """An increment with a checkpoint dir, rerun under the same batch id
     (and again with the persisted _metrics deleted), resumes its front
     stages and reproduces the first run: the same rows, each with
-    sha256(content) == sha, and the same tier counts. The checkpoint key
+    sha256(content) == sha, the same tier counts, and the same number of
+    Spark jobs with and without _metrics. The checkpoint key
     covers the batch id: the same input under another id resumes
     nothing."""
     import glob
@@ -688,14 +689,21 @@ def test_durable_increment_resumes(spark, split, tmp_path):
     assert rows1 and all(_sha(r[4]) == r[0] for r in rows1)
     assert "batch.distinct_contents.resumed" not in one.metrics
     (metrics_dir,) = glob.glob(os.path.join(ckdir, "*", "_metrics"))
+    jobs = []
     for drop_metrics in (False, True):
         if drop_metrics:
             shutil.rmtree(metrics_dir)
-        again, rows = run()
+        (again, rows), n_jobs = _jobs_of(
+            spark, f"test-durable-resume-{drop_metrics}", run
+        )
+        jobs.append(n_jobs)
         assert again.metrics["batch.distinct_contents.resumed"] == 1
         assert again.metrics["batch.signatures.resumed"] == 1
         assert rows == rows1
         assert _tier_rows(again.metrics) == _tier_rows(one.metrics)
+    # the resumed stages' counts come from their own records, so the
+    # resume needs no _metrics and runs no job in its place
+    assert jobs[0] == jobs[1]
     other, rows = run("b2", update_index=False)
     assert "batch.distinct_contents.resumed" not in other.metrics
     assert idx._ledger() == ["base", "b1"]

@@ -31,12 +31,6 @@ ALLOWED_UNREACHED = {
 # with its reason; a new one fails the test.
 PRIVATE_SPARK_ATTRS = {"_jvm", "_jsc", "_jdf", "_jo"}
 PRIVATE_SPARK_SITES = {
-    "fastqdedup_spark.checkpoint": (
-        "the remote `_SUCCESS` probe (Hadoop FileSystem.exists)"
-    ),
-    "fastqdedup_spark.sources": (
-        "input_fingerprint of a remote input (Hadoop ContentSummary)"
-    ),
     "fastqdedup_spark.functions.partitioning": (
         "the guarded optimizer size estimate of a plan"
     ),

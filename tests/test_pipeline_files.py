@@ -110,38 +110,51 @@ def test_resume_idempotent(spark, corpus, tmp_path_factory):
 def test_resume_without_persisted_metrics(spark, corpus, tmp_path_factory):
     """A run that died before write_metrics leaves its stage checkpoints
     but no _metrics. The resume must not raise (the resumed stages'
-    observations never ran and must not be read) and must return the
-    first run's output rows, each with sha256(content) == sha."""
+    observations never ran and must not be read), must return the first
+    run's output rows, each with sha256(content) == sha, and must report
+    the counts the first run's builds observed, from the stages' own
+    records: under a cluster-size bound that forces the canonical
+    fallback, dissect.fallback_clusters (the CLI's fallback warning)
+    and output.files."""
     import os
     import shutil
 
-    ckdir = str(tmp_path_factory.mktemp("ck_nometrics"))
-    cfg = DedupConfig(
-        shingle_k=7, num_perm=64, bands=16, jaccard_threshold=0.6,
-        checkpoint_dir=ckdir,
-    )
-    small = corpus.limit(120).cache()
     cols = ["sha", "repo", "path", "commit", "content"]
-    r1 = dedup_files(spark, small, cfg)
-    rows1 = sorted(tuple(r) for r in r1.deduped.select(*cols).collect())
-    # the observed counts equal the counts of what they observed
-    assert r1.metrics["input.files"] == 120
-    assert r1.metrics["distinct.contents"] == small.select("content").distinct().count()
-    assert r1.metrics["output.files"] == len(rows1)
-    shutil.rmtree(os.path.join(ckdir, cfg.config_hash(), "_metrics"))
+    small = corpus.limit(120).cache()
+    for case, extra in (
+        ("plain", {}),
+        ("fallback", {"dissection": "directional", "max_cluster_size": 2}),
+    ):
+        ckdir = str(tmp_path_factory.mktemp(f"ck_nometrics_{case}"))
+        cfg = DedupConfig(
+            shingle_k=7, num_perm=64, bands=16, jaccard_threshold=0.6,
+            checkpoint_dir=ckdir, **extra,
+        )
+        r1 = dedup_files(spark, small, cfg)
+        rows1 = sorted(tuple(r) for r in r1.deduped.select(*cols).collect())
+        # the observed counts equal the counts of what they observed
+        assert r1.metrics["input.files"] == 120
+        assert r1.metrics["distinct.contents"] == small.select("content").distinct().count()
+        assert r1.metrics["output.files"] == len(rows1)
+        if extra:
+            assert r1.metrics["dissect.fallback_clusters"] > 0
+        shutil.rmtree(os.path.join(ckdir, cfg.config_hash(), "_metrics"))
 
-    r2 = dedup_files(spark, small, cfg)
-    rows2 = sorted(tuple(r) for r in r2.deduped.select(*cols).collect())
-    assert r2.metrics["distinct_contents.resumed"] == 1
-    assert rows2 == rows1
-    assert all(hashlib.sha256(r[4].encode()).hexdigest() == r[0] for r in rows2)
+        r2 = dedup_files(spark, small, cfg)
+        rows2 = sorted(tuple(r) for r in r2.deduped.select(*cols).collect())
+        assert r2.metrics["distinct_contents.resumed"] == 1
+        assert r2.metrics["survivors.resumed"] == 1
+        assert rows2 == rows1
+        assert all(hashlib.sha256(r[4].encode()).hexdigest() == r[0] for r in rows2)
+        for key in ("output.files", "dissect.fallback_clusters"):
+            assert r2.metrics.get(key) == r1.metrics.get(key), key
 
 
 def test_resumed_distinct_count_sizes_the_tail(spark, corpus, tmp_path_factory):
-    """A resumed signatures stage reports its PERSISTED distinct count,
-    and that count sizes the rebuilt tail: doctored to 9e9 it reaches
-    the run's metrics (verify then plans as a long Arrow stage), and
-    the output is identical, since a plan size choice changes no
+    """A resumed signatures stage reports the distinct count in its
+    record, and that count sizes the rebuilt tail: doctored to 9e9 it
+    reaches the run's metrics (verify then plans as a long Arrow stage),
+    and the output is identical, since a plan size choice changes no
     semantics."""
     import os
     import shutil
@@ -155,29 +168,33 @@ def test_resumed_distinct_count_sizes_the_tail(spark, corpus, tmp_path_factory):
     r1 = dedup_files(spark, small, cfg)
     out1 = sorted(r.sha for r in r1.deduped.select("sha").collect())
 
-    # doctor the persisted metric to a 9e9 synthetic distinct count and
-    # drop everything downstream of signatures, with its lineage, so the
+    # doctor the signatures record to a 9e9 synthetic distinct count and
+    # drop everything downstream of signatures, with its records, so the
     # pair plan rebuilds (the two kept stages keep theirs: a stage
-    # without its lineage is rebuilt, not resumed)
+    # without its record is rebuilt, not resumed)
     base = os.path.join(ckdir, cfg.config_hash())
-    mpath = os.path.join(base, "_metrics")
-    mrows = [
-        (r.stage, r.metric,
-         9e9 if (r.stage, r.metric) == ("incremental", "new_distinct") else r.value)
-        for r in spark.read.parquet(mpath).collect()
-    ]
-    doctored = spark.createDataFrame(mrows, "stage string, metric string, value double")
-    tmp_m = mpath + "_tmp"
-    doctored.coalesce(1).write.mode("overwrite").parquet(tmp_m)
-    shutil.rmtree(mpath)
-    os.rename(tmp_m, mpath)
+    rpath = os.path.join(base, "_lineage", "signatures")
+    record = spark.read.parquet(rpath)
+    doctored = record.withColumn(
+        "metrics",
+        F.map_concat(
+            F.map_filter("metrics", lambda k, v: k != "incremental.new_distinct"),
+            F.create_map(F.lit("incremental.new_distinct"), F.lit(9e9)),
+        ),
+    ).collect()
+    tmp_r = rpath + "_tmp"
+    spark.createDataFrame(doctored, record.schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(tmp_r)
+    shutil.rmtree(rpath)
+    os.rename(tmp_r, rpath)
     for stage in os.listdir(base):
         if stage not in ("distinct_contents", "signatures", "_metrics", "_lineage"):
             shutil.rmtree(os.path.join(base, stage))
             shutil.rmtree(os.path.join(base, "_lineage", stage), ignore_errors=True)
 
     r2 = dedup_files(spark, small, cfg)
-    assert r2.metrics["incremental.new_distinct"] == 9e9  # the persisted count
+    assert r2.metrics["incremental.new_distinct"] == 9e9  # the recorded count
     assert r2.metrics["distinct.contents"] == 9e9         # sized the tail
     out2 = sorted(r.sha for r in r2.deduped.select("sha").collect())
     assert out1 == out2                            # plan choice, not semantics
@@ -235,6 +252,48 @@ def test_equal_size_input_rewrite_is_not_resumed(spark, tmp_path):
     shas = out_shas(str(tmp_path / "o2"))
     assert hashlib.sha256(rewritten.encode()).hexdigest() in shas
     assert old not in shas
+
+
+def test_remote_listing_branches_on_file_uri(spark, tmp_path):
+    """The remote branches of the `_SUCCESS` probe and of the input
+    fingerprint, driven on a `file://` URI through their public
+    binaryFile listing: a missing marker is None with no Spark job, and
+    the listed identity has the local identity's count and bytes and
+    changes on a same-size rewrite with a new mtime."""
+    import os
+
+    from fastqdedup_spark.sources import (
+        listed_files_identity, listing, local_files_identity,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    files = [src / "a.bin", src / "b.bin"]
+    for i, f in enumerate(files):
+        f.write_bytes(bytes([i]) * (10 + i))
+    uri = "file://" + str(src)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("remote-probe", "remote-probe")
+    try:
+        assert listing(spark, uri + "/_SUCCESS") is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("remote-probe") == []
+    marker = tmp_path / "_SUCCESS"
+    marker.write_bytes(b"")
+    assert listing(spark, "file://" + str(marker)) is not None
+
+    ident = listed_files_identity(spark, uri)
+    local = local_files_identity([str(f) for f in files])
+    assert ident.split("|")[:2] == local.split("|")[:2] == ["2", "21"]
+    st = os.stat(files[0])
+    files[0].write_bytes(b"\xff" * 10)
+    os.utime(files[0], ns=(st.st_atime_ns, st.st_mtime_ns + 5 * 10**9))
+    rewritten = listed_files_identity(spark, uri)
+    assert rewritten.split("|")[:2] == ["2", "21"] and rewritten != ident
+    with pytest.raises(FileNotFoundError):
+        listed_files_identity(spark, "file://" + str(tmp_path / "gone"))
 
 
 def test_missing_columns_raises_value_error(spark):
@@ -321,3 +380,22 @@ def test_code_cli_has_no_parity_only_flags():
             cli.argument_parser().parse_args([*base, *flags])
     args = cli.parity_argument_parser().parse_args(["r1.fq", "-d", "2", "--edit"])
     assert (args.max_distance, args.edit) == (2, True)
+
+
+def test_code_cli_refuses_index_only_flags_without_index(tmp_path, monkeypatch):
+    """`--index-batch-id` and `--no-update-index` only mean something
+    with `--index`; without it the code CLI refuses each (exit 2)
+    before any Spark work, and no output is written."""
+    from fastqdedup_spark import cli
+
+    def no_spark(**_):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    out = tmp_path / "out"
+    base = ["--input", str(tmp_path / "in"), "--output", str(out)]
+    for flags in (["--index-batch-id", "b7"], ["--no-update-index"]):
+        with pytest.raises(SystemExit) as e:
+            cli.main([*base, *flags])
+        assert e.value.code == 2
+        assert not out.exists()

@@ -109,12 +109,12 @@ def test_python_stage_tasks_cap_is_size_aware(spark):
     """The AUTO cap only engages for stages long enough to sustain
     python+JVM oversubscription; short stages keep full width (measured:
     capping a ~300-rows-per-task stage cost 15% wall — BASELINE.md r5)."""
-    from fastqdedup_spark.config import DedupConfig
+    from fastqdedup_spark.config import PYTHON_STAGE_MIN_ROWS_PER_TASK, DedupConfig
 
     sc = spark.sparkContext
     width = sc.defaultParallelism
     cfg = DedupConfig()
-    threshold = cfg.python_stage_min_rows_per_task
+    threshold = PYTHON_STAGE_MIN_ROWS_PER_TASK
     # short stage -> full width
     assert cfg.python_stage_tasks(sc, approx_rows=width * threshold - 1) == width
     # long stage -> capped to half
@@ -163,18 +163,18 @@ def _fan_out_exchanges(df) -> int:
 def test_arrow_stages_fan_out_unless_known_short(spark, known):
     """The signer and verify repartition to the Arrow task count
     before running, except when the caller passes a known row count
-    below python_stage_min_rows_per_task: then they run in the
+    below PYTHON_STAGE_MIN_ROWS_PER_TASK: then they run in the
     partitions their input already has. An unknown count, or one at
     the threshold, keeps the exchange."""
-    from fastqdedup_spark.config import DedupConfig
+    from fastqdedup_spark.config import PYTHON_STAGE_MIN_ROWS_PER_TASK, DedupConfig
     from fastqdedup_spark.functions.minhash import add_signature_columns
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
     cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.5)
     approx = {
-        "short": cfg.python_stage_min_rows_per_task - 1,
+        "short": PYTHON_STAGE_MIN_ROWS_PER_TASK - 1,
         "unknown": None,
-        "long": cfg.python_stage_min_rows_per_task,
+        "long": PYTHON_STAGE_MIN_ROWS_PER_TASK,
     }[known]
     contents = spark.createDataFrame(
         [(i, f"doc number {i} alpha beta") for i in range(20)],

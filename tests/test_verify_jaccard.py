@@ -10,7 +10,7 @@ across tasks, which is what the per-task shingle cache and the
 
 import pytest
 
-from fastqdedup_spark.config import DedupConfig
+from fastqdedup_spark.config import PYTHON_STAGE_MIN_ROWS_PER_TASK, DedupConfig
 from fastqdedup_spark.functions.minhash import shingle_set
 from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 from fastqdedup_spark.plans import formatted_plan
@@ -45,7 +45,7 @@ def _reference(docs) -> list:
 
 @pytest.mark.parametrize(
     "approx_rows, fan_outs",
-    [(None, 1), (CFG.python_stage_min_rows_per_task - 1, 0)],
+    [(None, 1), (PYTHON_STAGE_MIN_ROWS_PER_TASK - 1, 0)],
     ids=["fan_out", "no_fan_out"],
 )
 def test_verify_matches_python_reference(spark, approx_rows, fan_outs):
