@@ -13,9 +13,18 @@ This engine re-grounds the same semantics Spark-first:
 - dissection       = applyInPandas per cluster      (ref: __init__.py:60-130)
 - survivor output  = left-semi + first-wins window  (ref: filter_fastq_files_on_set, __init__.py:189-206)
 
-Everything is DataFrame API + Arrow-vectorized pandas UDFs; no per-row
-Python in any hot path.
+Key-pair verification is a Catalyst predicate (a levenshtein threshold
+or a zip_with mismatch count). Exact-Jaccard verification, signing,
+quality filtering, dissection and FASTQ I/O are Arrow-vectorized pandas
+UDFs: rows cross into Python in Arrow batches, not one by one. Importing the package
+installs its one worker-side hook, the zipimport re-read guard
+(`zipguard`), so a Python task pays for its rows, not for re-parsing
+pyspark.zip.
 """
+
+from fastqdedup_spark import zipguard
+
+zipguard.install()
 
 from fastqdedup_spark.functions.distances import (
     within_distance,

@@ -16,9 +16,10 @@ trie stats and per-stage timing (fastqdedup/__init__.py:133-157,
 410-412). One record per durable stage (`<base>/_lineage/<stage>`, one
 row) holds the per-partition-file fingerprints (file, rows, xor/sum-
 folded xxhash64 of all hashable columns) and every metric the stage's
-build produced (its observations and its `metrics.add` calls). Every
-resume recomputes the fingerprints from the stage it is about to trust and fails loudly
-on mismatch — "resumes idempotently" is verified, not assumed: a
+build produced (its observations and its `metrics.add` calls), with the
+stage's schema, so a resume reads the stage without a parquet
+schema-inference job. Every resume recomputes the fingerprints from the
+stage it is about to trust and fails loudly on mismatch — "resumes idempotently" is verified, not assumed: a
 half-overwritten or bit-rotted stage cannot silently flow downstream
 past the _SUCCESS marker. The same read restores the build's metrics,
 so a resumed stage reports what its build observed. A stage counts as
@@ -30,6 +31,7 @@ table (write_metrics) is the run's report; no resume reads it.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from typing import Callable
@@ -51,6 +53,9 @@ _FILE_SCHEMA = T.StructType([
 _RECORD_SCHEMA = T.StructType([
     T.StructField("files", T.ArrayType(_FILE_SCHEMA)),
     T.StructField("metrics", T.MapType(T.StringType(), T.DoubleType())),
+    # the stage's written schema (StructType.json()): a resume reads the
+    # stage with it instead of running a parquet schema-inference job
+    T.StructField("schema", T.StringType()),
 ])
 _METRICS_SCHEMA = T.StructType([
     T.StructField("stage", T.StringType()),
@@ -168,28 +173,33 @@ class StageCheckpointer:
         )
 
     def _write_lineage(self, stage: str, df: DataFrame, since: int) -> None:
-        """The stage's record: its file fingerprints and the metric rows
-        added since `since` (its build's, and lineage_files)."""
+        """The stage's record: its file fingerprints, the metric rows
+        added since `since` (its build's, and lineage_files) and its
+        schema."""
         files = self._lineage_rows(df)
         self.metrics.add(stage, "lineage_files", len(files))
         metrics = {f"{s}.{m}": v for s, m, v in self.metrics.rows[since:]}
         record = driver_table(self.spark, _RECORD_SCHEMA, [
             [[dict(zip(_FILE_SCHEMA.names, f)) for f in files]],
             [list(metrics.items())],
+            [df.schema.json()],
         ])
         record.coalesce(1).write.mode("overwrite").parquet(self._lineage_path(stage))
 
-    def _verify_lineage(self, stage: str, df: DataFrame) -> None:
-        """On resume, recompute the per-file fingerprints and compare to
-        the ones in the stage's record — a partial overwrite or
-        corrupted part file fails loudly instead of flowing downstream —
-        then restore the metrics the build recorded. has() already
-        required the record's _SUCCESS marker."""
+    def _verify_lineage(self, stage: str) -> DataFrame:
+        """Load a complete stage: read its record, read the stage with
+        the schema the record carries (no inference job), recompute the
+        per-file fingerprints and compare them to the record's — a
+        partial overwrite or corrupted part file fails loudly instead of
+        flowing downstream — then restore the metrics the build
+        recorded. has() already required the record's _SUCCESS marker."""
         (record,) = (
             self.spark.read.schema(_RECORD_SCHEMA)
             .parquet(self._lineage_path(stage))
             .collect()
         )
+        schema = T.StructType.fromJson(json.loads(record["schema"]))
+        df = self.spark.read.schema(schema).parquet(self._path(stage))
         stored = sorted(tuple(f) for f in record["files"])
         current = self._lineage_rows(df)
         if stored != current:
@@ -203,6 +213,7 @@ class StageCheckpointer:
         for key, value in record["metrics"].items():
             self.metrics.add(*key.split(".", 1), value)
         self.metrics.add(stage, "lineage_verified", 1)
+        return df
 
     def has(self, stage: str) -> bool:
         """A durable stage is complete once its record has landed: the
@@ -235,9 +246,8 @@ class StageCheckpointer:
         resume: the load and the lineage verify)."""
         t0 = time.monotonic()
         if self.has(name):
-            df = self.spark.read.parquet(self._path(name))
             self.metrics.add(name, "resumed", 1)
-            self._verify_lineage(name, df)
+            df = self._verify_lineage(name)
             self.metrics.add(name, "seconds", time.monotonic() - t0)
             return df
         mark, since = len(self.metrics._pending), len(self.metrics.rows)

@@ -168,12 +168,13 @@ class DedupConfig:
     # Bump when the PERSISTED SHAPE of any checkpointed stage changes
     # (e.g. round 5 widened distinct_contents' rep struct; version 3
     # dropped the signatures stage's distinct-shingle count; version 4
-    # folded each stage's metrics into its lineage record): a stale
+    # folded each stage's metrics into its lineage record; version 5
+    # added the stage's schema to that record): a stale
     # checkpoint from older code must key differently so a resume
     # rebuilds it instead of failing on missing/renamed columns at
     # load time (ADVICE r5: config_hash did not version stage schemas,
     # so cross-upgrade resumes broke instead of rebuilding).
-    STAGE_SCHEMA_VERSION = 4
+    STAGE_SCHEMA_VERSION = 5
 
     def config_hash(self) -> str:
         """Stable hash identifying checkpoint compatibility (north_rule:

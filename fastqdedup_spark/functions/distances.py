@@ -2,11 +2,12 @@
 
 Re-implements the semantics of the reference's C kernels
 (/root/reference/src/fastqdedup/distances.h:8-31 Hamming with fast-fail,
-:33-88 bounded Levenshtein with length-difference prune) as:
-
-1. pure-Python/numpy kernels (used by the oracle and the dissection
-   pandas UDF), and
-2. an Arrow-vectorized pandas UDF for pair verification on DataFrames.
+:33-88 bounded Levenshtein with length-difference prune) as pure-Python
+scalar kernels. The oracle calls them, and so does the dissection pandas
+UDF through the oracle's dissection functions. Pair verification on
+DataFrames does not: it is the Catalyst predicate
+`operators.verify.within_distance_column`, which
+tests/test_verify_distance.py holds equal to `within_distance`.
 
 Semantics pinned by the reference tests
 (/root/reference/tests/test__distance.py):
@@ -17,16 +18,11 @@ Semantics pinned by the reference tests
 
 Implementation is deliberately different from the reference: the
 reference uses a recursive branch-and-bound; we use an iterative banded
-dynamic program (Ukkonen band of width 2d+1), which is O(n*d) and
-allocation-free per row — better suited to vectorized batch execution.
+dynamic program (Ukkonen band of width 2d+1), O(n*d) per pair, with an
+early exit once the whole band exceeds the budget.
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
-import pyspark.sql.types as T
 
 
 def within_hamming_distance(s1: str, s2: str, max_distance: int) -> bool:
@@ -85,55 +81,3 @@ def within_distance(
     if use_edit_distance:
         return within_edit_distance(s1, s2, max_distance)
     return within_hamming_distance(s1, s2, max_distance)
-
-
-def _hamming_batch(a: pd.Series, b: pd.Series, max_distance: int) -> pd.Series:
-    """Vectorized equal-length Hamming check over a pandas batch.
-
-    Groups rows by string length so each group becomes one 2-D uint8
-    numpy comparison — no per-row Python on the equal-length fast path.
-    """
-    out = np.zeros(len(a), dtype=bool)
-    la = a.str.len().to_numpy()
-    lb = b.str.len().to_numpy()
-    eq = la == lb
-    if not eq.any():
-        return pd.Series(out)
-    idx = np.nonzero(eq)[0]
-    lengths = la[idx]
-    for length in np.unique(lengths):
-        sel = idx[lengths == length]
-        if length == 0:
-            out[sel] = True
-            continue
-        arr_a = np.frombuffer(
-            "".join(a.iloc[sel]).encode("utf-32-le"), dtype=np.uint32
-        ).reshape(len(sel), length)
-        arr_b = np.frombuffer(
-            "".join(b.iloc[sel]).encode("utf-32-le"), dtype=np.uint32
-        ).reshape(len(sel), length)
-        out[sel] = (arr_a != arr_b).sum(axis=1) <= max_distance
-    return pd.Series(out)
-
-
-def make_within_distance_udf(max_distance: int, use_edit_distance: bool):
-    """Pair-verification pandas UDF: (key_a, key_b) -> bool.
-
-    Mirrors the reference's cheap-to-expensive ordering
-    (distances.h:24-27 fast-fail, :41-47 length prune): the whole batch
-    takes the vectorized Hamming path; only length-unequal rows in edit
-    mode fall back to the banded DP.
-    """
-
-    @F.pandas_udf(T.BooleanType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        res = _hamming_batch(a, b, max_distance)
-        if use_edit_distance:
-            # Equal-length rows that passed Hamming are already within
-            # edit distance; the rest need the DP.
-            need = ~res.to_numpy()
-            for i in np.nonzero(need)[0]:
-                res.iat[i] = within_edit_distance(a.iat[i], b.iat[i], max_distance)
-        return res
-
-    return _udf

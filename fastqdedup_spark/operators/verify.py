@@ -1,16 +1,20 @@
 """Candidate-pair verification (SURVEY.md M4) — keeps precision exact.
 
-Re-grounds the reference's per-pair distance kernels
-(/root/reference/src/fastqdedup/distances.h:8-88, exposed as
-`within_distance`, _distancemodule.c:46-93) as Arrow-vectorized pandas
-UDFs over candidate-pair DataFrames. Cheap-to-expensive ordering
-mirrors the reference's fast-fail style: for keys, length prune, then
-vectorized Hamming, then banded DP; for code content, the JVM-side
-2-bit est-sketch prefilter (est_filter_carried, run inside candidate
-generation with a floor derived from the sketch width and the
-threshold), then exact shingle intersection only for survivors, in one
-plan shape: pairs keyed by (id_a, a 4-way id_b salt), fanned out to
-the Arrow-stage task count unless the caller knows the stage is short.
+Two verifiers, one per domain:
+
+- keys (the parity CLI): the reference's per-pair distance kernels
+  (/root/reference/src/fastqdedup/distances.h:8-88, exposed as
+  `within_distance`, _distancemodule.c:46-93) as one Catalyst predicate,
+  `within_distance_column`: Spark's thresholded `levenshtein` for edit
+  distance, a `zip_with`/`aggregate` mismatch count for Hamming. The
+  pairs never leave the JVM, so verification adds no Python stage.
+- code content: the JVM-side 2-bit est-sketch prefilter
+  (est_filter_carried, run inside candidate generation with a floor
+  derived from the sketch width and the threshold), then exact shingle
+  intersection in an Arrow-vectorized pandas UDF for survivors only, in
+  one plan shape: pairs keyed by (id_a, a 4-way id_b salt), fanned out
+  to the Arrow-stage task count unless the caller knows the stage is
+  short.
 """
 
 from __future__ import annotations
@@ -21,10 +25,9 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from fastqdedup_spark.config import DedupConfig
-from fastqdedup_spark.functions.distances import make_within_distance_udf
 from fastqdedup_spark.functions.minhash import (
     content_chunk_bounds,
     shingle_window_hashes,
@@ -48,15 +51,44 @@ def _attach_pair_values(
     return pairs.join(va, "id_a").join(vb, "id_b")
 
 
+def within_distance_column(
+    a: str, b: str, max_distance: int, use_edit_distance: bool
+) -> Column:
+    """Catalyst form of functions.distances.within_distance over the
+    string columns named `a` and `b`. Edit distance: `levenshtein` with
+    a threshold returns -1 once the distance exceeds it. Hamming:
+    zip_with pads the shorter character array with nulls, so the
+    null-safe mismatch count covers the length gap too, and the gap is
+    weighted past the budget so that unequal lengths never pass
+    (distances.h:16-20).
+
+    The Hamming length test is folded into the one arithmetic
+    expression on purpose: a separate `length(a) = length(b)` conjunct
+    is an equality between the two sides of the id_b join, so Catalyst
+    made it a join key and re-keyed that join's exchange on
+    (length(value_a), id_b), one more job per run."""
+    # one SQL string is one py4j round trip; building the same lambdas
+    # through the Column API cost ~200 more per plan build
+    if use_edit_distance:
+        return F.expr(f"levenshtein({a}, {b}, {max_distance}) >= 0")
+    return F.expr(
+        f"aggregate(zip_with(split({a}, ''), split({b}, ''),"
+        f" (x, y) -> if(x <=> y, 0, 1)), 0, (n, m) -> n + m)"
+        f" + abs(length({a}) - length({b})) * {max_distance} <= {max_distance}"
+    )
+
+
 def verify_pairs_distance(
     pairs: DataFrame, keys: DataFrame, cfg: DedupConfig,
     id_col: str = "key", key_col: str = "key",
 ) -> DataFrame:
     """Reference-parity verification: keep pairs within
     Hamming/Levenshtein radius. Returns (id_a, id_b)."""
-    udf = make_within_distance_udf(cfg.max_distance, cfg.use_edit_distance)
     withv = _attach_pair_values(pairs, keys, id_col, key_col)
-    return withv.filter(udf("value_a", "value_b")).select("id_a", "id_b")
+    within = within_distance_column(
+        "value_a", "value_b", cfg.max_distance, cfg.use_edit_distance
+    )
+    return withv.filter(within).select("id_a", "id_b")
 
 
 def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):

@@ -26,7 +26,7 @@ it skips the probes and clusters the whole signed input.
 
 `dedup_keys` and `cluster_signed` stay two tails rather than one
 function with a caller switch: they differ in id translation (nid ->
-sha), verifier (radius UDF vs exact Jaccard), dissection inputs and
+sha), verifier (radius predicate vs exact-Jaccard UDF), dissection inputs and
 the output rebuild.
 
 Stage graph (code mode), every arrow a Catalyst-planned exchange:

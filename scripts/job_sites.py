@@ -22,14 +22,19 @@ After each operation it also prints the process tree's memory, read
 from /proc: the RSS now and the peak RSS (VmHWM) in MB of the JVM, of
 the Python driver, and of each `pyspark.daemon` pool (the daemon and
 the workers it forked, with the worker count). A change that starts a
-second Python worker pool shows here. The same line gives the Janino
-compilations the operation ran (the delta of Spark's
-`CodegenMetrics.METRIC_COMPILATION_TIME` count): a warm operation whose
-plans are all in the codegen cache compiles nothing.
+second Python worker pool shows here. The same line gives the
+operation's job count; the CPU seconds its `pyspark.daemon` pools spent
+(utime + stime of the daemons and their live workers, plus the workers
+they already reaped, from /proc/<pid>/stat), where a fixed cost each
+Python task pays before its rows shows, such as a worker re-reading its
+zip imports; and the Janino compilations the operation ran (the delta
+of Spark's `CodegenMetrics.METRIC_COMPILATION_TIME` count): a warm
+operation whose plans are all in the codegen cache compiles nothing.
 
-Output: one memory line per operation, one line per call site with
-jobs and seconds per operation, then the total jobs per operation and
-the per-operation job counts.
+Output: one line per operation (jobs, pool CPU, compilations, memory),
+one line per call site with jobs and seconds per operation, then the
+total jobs per operation and the per-operation (jobs, seconds, pool CPU
+seconds).
 """
 
 from __future__ import annotations
@@ -63,21 +68,33 @@ def _cmdline(pid: int) -> str:
         return ""
 
 
-def rss_split() -> str:
-    """One line: (RSS now / peak RSS) in MB per part of this process's
-    tree: the JVM, the Python driver, each pyspark.daemon pool (daemon +
+def _cpu_s(pid: int, reaped: bool) -> float:
+    """utime + stime of `pid` in seconds, plus those of the children it
+    reaped when `reaped`."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            raw = f.read()
+    except OSError:
+        return 0.0
+    # the command name (field 2) may hold spaces; fields restart after ')'
+    fields = raw[raw.rindex(")") + 2:].split()
+    # utime, stime, cutime, cstime are stat fields 14-17
+    ticks = sum(int(x) for x in fields[11:15 if reaped else 13])
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def _tree_parts() -> dict[int, tuple[dict[str, str], str, bool]]:
+    """pid -> (status, part, is a pool worker) for this process's tree:
+    the JVM, the Python driver, each pyspark.daemon pool (daemon +
     forked workers) and anything else."""
     from probes import descendants
 
-    def mb(status: dict[str, str], key: str) -> float:
-        return int(status.get(key, "0 kB").split()[0]) / 1024
-
-    parts: dict[str, list[float]] = collections.defaultdict(lambda: [0.0, 0.0])
-    workers: collections.Counter = collections.Counter()
     procs = {pid: (_status(pid), _cmdline(pid)) for pid in descendants(os.getpid())}
+    out = {}
     for pid, (status, cmd) in procs.items():
         if not status:
             continue
+        is_worker = False
         if pid == os.getpid():
             part = "python driver"
         elif "pyspark.daemon" in cmd:
@@ -85,11 +102,35 @@ def rss_split() -> str:
             ppid = int(status["PPid"])
             is_worker = "pyspark.daemon" in procs.get(ppid, ({}, ""))[1]
             part = f"pyspark.daemon pool {ppid if is_worker else pid}"
-            workers[part] += is_worker
         elif status.get("Name", "").strip() == "java":
             part = "jvm"
         else:
             part = "other"
+        out[pid] = (status, part, is_worker)
+    return out
+
+
+def pool_cpu_s() -> float:
+    """CPU seconds of every pyspark.daemon pool so far: the daemons and
+    their live workers, and the workers the daemons already reaped."""
+    return sum(
+        _cpu_s(pid, reaped=not is_worker)
+        for pid, (_, part, is_worker) in _tree_parts().items()
+        if part.startswith("pyspark.daemon")
+    )
+
+
+def rss_split() -> str:
+    """One line: (RSS now / peak RSS) in MB per part of this process's
+    tree (see _tree_parts), with each pool's worker count."""
+
+    def mb(status: dict[str, str], key: str) -> float:
+        return int(status.get(key, "0 kB").split()[0]) / 1024
+
+    parts: dict[str, list[float]] = collections.defaultdict(lambda: [0.0, 0.0])
+    workers: collections.Counter = collections.Counter()
+    for status, part, is_worker in _tree_parts().values():
+        workers[part] += is_worker
         parts[part][0] += mb(status, "VmRSS")
         parts[part][1] += mb(status, "VmHWM")
     now = sum(v[0] for v in parts.values())
@@ -190,19 +231,22 @@ def main(argv: list[str] | None = None) -> int:
             sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             c0 = compiled.METRIC_COMPILATION_TIME().getCount()
+            cpu0 = pool_cpu_s()
             try:
                 wl.op(i)
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 counter.group = None
             op_s = time.perf_counter() - t0
+            pool_s = pool_cpu_s() - cpu0
             n = len(sc.statusTracker().getJobIdsForGroup(group))
-            per_op.append((n, op_s))
+            per_op.append((n, op_s, pool_s))
             n_compiled = compiled.METRIC_COMPILATION_TIME().getCount() - c0
-            print(f"op {i}: {n_compiled} Janino compilations; {rss_split()}", flush=True)
+            print(f"op {i}: {n} jobs, pyspark.daemon pool CPU {pool_s:.2f} s; "
+                  f"{n_compiled} Janino compilations; {rss_split()}", flush=True)
             wl.check(i)
         n_ops = max(len(per_op), 1)
-        total = sum(n for n, _ in per_op)
+        total = sum(n for n, _, _ in per_op)
         counter.jobs["(unattributed)"] = total - sum(counter.jobs.values())
         print(f"{args.workload} seed {args.seed}: {len(per_op)} operations")
         print(f"{'jobs/op':>8} {'s/op':>7}  call site")
@@ -210,8 +254,8 @@ def main(argv: list[str] | None = None) -> int:
             if jobs or counter.seconds[site]:
                 print(f"{jobs / n_ops:8.2f} {counter.seconds[site] / n_ops:7.3f}  {site}")
         print(f"total jobs per operation: {total / n_ops:.2f}")
-        print("per operation (jobs, s): "
-              + " ".join(f"({n}, {s:.2f})" for n, s in per_op))
+        print("per operation (jobs, s, pool CPU s): "
+              + " ".join(f"({n}, {s:.2f}, {c:.2f})" for n, s, c in per_op))
     finally:
         if spark is not None:
             _stop_session(spark)

@@ -46,6 +46,30 @@ def test_lineage_written_and_verified_on_resume(spark, tmp_path):
     assert m["stage_a.lineage_verified"] == 1
 
 
+def test_resume_runs_no_schema_inference_job(spark, tmp_path):
+    """A resumed stage runs three Spark jobs: the record read, and the
+    fingerprint aggregation's map and result stages (AQE submits each as
+    a job). It reads the stage with the schema its record carries, so no
+    parquet schema-inference job runs (that made four), and it comes
+    back with the schema the fresh build read back."""
+    df = spark.range(0, 100).select(
+        F.col("id"), F.concat(F.lit("row-"), F.col("id")).alias("content")
+    )
+    out1 = _ck(spark, tmp_path).stage("stage_s", lambda: df.repartition(3))
+    sc = spark.sparkContext
+    group = "test-resume-schema"
+    sc.setJobGroup(group, group)
+    try:
+        out2 = _ck(spark, tmp_path).stage(
+            "stage_s", lambda: (_ for _ in ()).throw(AssertionError)
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert out2.schema == out1.schema
+    assert sorted(out2.collect()) == sorted(out1.collect())
+
+
 def test_lineage_mismatch_fails_loudly(spark, tmp_path):
     """A stage directory whose bytes no longer match the lineage written
     with it (half-overwritten run, manual tampering) must refuse to
@@ -157,14 +181,16 @@ def test_empty_stage_writes_typed_empty_lineage_and_resumes(spark, tmp_path):
         F.col("id").alias("id_a"), F.col("id").alias("id_b")
     )
     ck1 = _ck(spark, tmp_path)
-    assert ck1.stage("stage_e", lambda: empty).count() == 0
+    out1 = ck1.stage("stage_e", lambda: empty)
+    assert out1.count() == 0
     rec = _record(spark, ck1, "stage_e")
     assert rec.schema.simpleString() == (
         "struct<files:array<struct<file:string,rows:bigint,xor_fp:bigint,"
-        "sum_fp:bigint>>,metrics:map<string,double>>"
+        "sum_fp:bigint>>,metrics:map<string,double>,schema:string>"
     )
-    ((files, metrics),) = rec.collect()
+    ((files, metrics, schema),) = rec.collect()
     assert files == [] and metrics == {"stage_e.lineage_files": 0.0}
+    assert schema == out1.schema.json()  # the schema read back
     assert ck1.metrics.as_dict()["stage_e.lineage_files"] == 0
 
     ck2 = _ck(spark, tmp_path)

@@ -77,6 +77,37 @@ def test_verify_udf_evaluates_exactly_once(spark):
     assert plan.count("ArrowEvalPython") == 1, plan
 
 
+@pytest.mark.parametrize("edit", [False, True])
+def test_parity_verify_stays_in_the_jvm(spark, edit):
+    """The parity edges plan (verify_pairs_distance over
+    pigeonhole_candidate_pairs) runs no Python: no ArrowEvalPython node.
+    And the two joins that attach the key values to a pair join on the
+    id columns alone: a predicate term equating the two sides (e.g.
+    length(value_a) = length(value_b)) would become a key of the id_b
+    join and re-key its exchange."""
+    import re
+
+    from fastqdedup_spark.config import DedupConfig
+    from fastqdedup_spark.operators.lsh import pigeonhole_candidate_pairs
+    from fastqdedup_spark.operators.verify import verify_pairs_distance
+
+    cfg = DedupConfig(max_distance=1, use_edit_distance=edit)
+    keys = spark.createDataFrame(
+        [(k, 1) for k in ("AAAA", "AAAT", "AATT", "TTTT", "AAA")],
+        "key string, cnt long",
+    )
+    edges = verify_pairs_distance(pigeonhole_candidate_pairs(keys, cfg), keys, cfg)
+    plan = formatted_plan(edges)
+    assert "ArrowEvalPython" not in plan, plan
+    key_lists = re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", plan)
+    attach = [k for k in key_lists if "id_a" in k or "id_b" in k]
+    assert len(attach) == 4, key_lists
+    assert all(re.fullmatch(r"id_[ab]#\d+L?", k) for k in attach), key_lists
+    assert sorted(tuple(r) for r in edges.collect()) == [
+        ("AAAA", "AAAT"), ("AAAT", "AATT"),
+    ]
+
+
 def test_est_expression_stays_bit_count_sized(spark):
     """The est-prefilter expression must stay O(num_perm/32) lanes —
     the 128-term byte-compare ancestor overflowed janino's 64 KB method
